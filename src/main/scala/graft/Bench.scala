@@ -92,8 +92,7 @@ object Bench {
     * load-immune twin of each time law: if shuffle volume is linear in
     * the scale factor and time is not, the residual is the box, not the
     * plan. Listener-bus delivery is async; readers poll-stabilize via
-    * [[Bench.main]]'s drain helper rather than touching private bus
-    * APIs. */
+    * [[drain]] rather than touching private bus APIs. */
   private[graft] final class ShuffleTally
       extends org.apache.spark.scheduler.SparkListener {
     val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -120,6 +119,27 @@ object Bench {
       * drain guarantees quiescence), so the map attributes per query. */
     val maxTask = new java.util.concurrent.atomic.AtomicLong(0L)
     def resetMaxTask(): Unit = maxTask.set(0L)
+    /** Drains that exited on the 2 s cap instead of stability: the main
+      * line's `drain_timeouts`. Trailing bytes from one point would
+      * silently land on the next point's volume twin, so a nonzero
+      * count names that run's volume attribution as suspect. */
+    val drainTimeouts = new java.util.concurrent.atomic.AtomicInteger(0)
+    /** Cumulative write bytes once the async bus is quiet: two
+      * consecutive equal TASK-END counts 50 ms apart (not the byte
+      * counter: spill-only trailing events never move bytes), 2 s cap
+      * (task-end events drain in ms; the cap only bounds a wedged bus). */
+    def drain(): Long = {
+      var prev = taskEnds.get()
+      var stable = 0
+      var waited = 0
+      while (stable < 2 && waited < 2000) {
+        Thread.sleep(50); waited += 50
+        val cur = taskEnds.get()
+        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
+      }
+      if (stable < 2) drainTimeouts.incrementAndGet()
+      bytes.get()
+    }
     override def onTaskEnd(
         t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
       val m = t.taskMetrics
@@ -187,14 +207,7 @@ object Bench {
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "1500").toDouble
     def secondsLeft(): Double = budgetSec - (System.nanoTime() - tWall0) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Silence org.apache.spark.rdd's per-RDD "locally checkpointed" WARNs:
     // the iterative scaling legs emit thousands of them, and in the r11
@@ -245,27 +258,6 @@ object Bench {
     }
     def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
       timedIn(sfDir)(fn)
-    // deltas read by poll-stabilizing the async listener TASK-END count
-    // (not the byte counter: spill-only trailing events never move
-    // bytes) — two consecutive equal reads 50 ms apart, 2 s cap
-    // (task-end events drain in ms; the cap only bounds a wedged bus).
-    // A cap exit is COUNTED (r15 ADVICE): trailing bytes from one point
-    // would silently land on the next point's volume twin, so the main
-    // line carries `drain_timeouts` — nonzero means volume attribution
-    // that run is suspect, named instead of silent.
-    var drainTimeouts = 0
-    def drainShuffleBytes(): Long = {
-      var prev = shuffleTally.taskEnds.get()
-      var stable = 0
-      var waited = 0
-      while (stable < 2 && waited < 2000) {
-        Thread.sleep(50); waited += 50
-        val cur = shuffleTally.taskEnds.get()
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-      }
-      if (stable < 2) drainTimeouts += 1
-      shuffleTally.bytes.get()
-    }
     // Per-query STEADY shuffle-write volume (r15 verdict task #1): the
     // r15 round proved volume is deterministic to 0.1% across runs while
     // time wobbles 10-20% under the host multiplier — yet cross-round
@@ -282,13 +274,13 @@ object Bench {
       .filterNot { case (name, _) => benchExempt(name) }
       .map { case (name, fn) =>
         val c = timed(fn)
-        val b0 = drainShuffleBytes()
+        val b0 = shuffleTally.drain()
         // per-query MAX single-task shuffle write rides the same drained
         // window (r17): capacity ÷ this = the growth factor at which the
         // query spills first — the per-query spill-headroom law
         shuffleTally.resetMaxTask()
         val s = timed(fn)
-        val b1 = drainShuffleBytes()
+        val b1 = shuffleTally.drain()
         (name, fn, c, s, (b1 - b0).toDouble / 1e6,
           shuffleTally.maxTask.get().toDouble / 1e6)
       }
@@ -609,9 +601,9 @@ object Bench {
       // reads only, never their one-time builds.
       val shufMb = scala.collection.mutable.ListBuffer[(String, String, Double)]()
       def volPoint(row: String, xn: String)(body: => Double): Double = {
-        val b0 = drainShuffleBytes()
+        val b0 = shuffleTally.drain()
         val t = body
-        val b1 = drainShuffleBytes()
+        val b1 = shuffleTally.drain()
         val attempts = 1 + scalingRetimed
           .collectFirst { case (k, a) if k == s"$row.$xn" => a.toInt }
           .getOrElse(0)
@@ -959,7 +951,7 @@ object Bench {
                 .sortWithinPartitions(col("p1"))
                 .write.format("noop").mode("overwrite").save()
             }
-            drainShuffleBytes()
+            shuffleTally.drain()
             val sp = (shuffleTally.spilled.get() - s0).toDouble / 1e6
             pts += (s"x$m" -> sp)
             secs += (s"x$m" -> t)
@@ -1013,7 +1005,7 @@ object Bench {
         benchExempt.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
       // drain first: the last scaling leg's task-end events may still be
       // in flight on the listener bus
-      drainShuffleBytes()
+      shuffleTally.drain()
       // suite spill EXCLUDES the spill_probe leg's deliberately induced
       // spill (probeSpillMb prices itself in its own scaling rows):
       // spill_mb stays the suite's "partitions fit in executor memory at
@@ -1021,7 +1013,7 @@ object Bench {
       // round that outgrew its shuffle-partition count.
       val spillMb =
         shuffleTally.spilled.get().toDouble / 1e6 - probeSpillMb
-      val line = s"""{"metric":"total","value":${r3(coldTotal)},"unit":"sec","sf":"$sfDir","queries":$cold,"steady":$steady,"steady_shuf_mb":${jmap(steadyShuf)},"steady_task_max_mb":${jmap(steadyTaskMax)},"retimed":$retimed,"steady_total":${r3(steadyTotal)},"floor":$floorJson,"incremental":${jmap(incremental)},"scaling":$scalingJson,"scaling_retimed":${jmap(scalingRetimed)},"scaling_dropped":$droppedJson,"bench_exempt":$exemptJson,"drain_timeouts":$drainTimeouts,"spill_mb":${r3(spillMb)}}"""
+      val line = s"""{"metric":"total","value":${r3(coldTotal)},"unit":"sec","sf":"$sfDir","queries":$cold,"steady":$steady,"steady_shuf_mb":${jmap(steadyShuf)},"steady_task_max_mb":${jmap(steadyTaskMax)},"retimed":$retimed,"steady_total":${r3(steadyTotal)},"floor":$floorJson,"incremental":${jmap(incremental)},"scaling":$scalingJson,"scaling_retimed":${jmap(scalingRetimed)},"scaling_dropped":$droppedJson,"bench_exempt":$exemptJson,"drain_timeouts":${shuffleTally.drainTimeouts.get},"spill_mb":${r3(spillMb)}}"""
       println(line)
       // bench_full.json is the BUILDER's artifact of record (BenchPrior
       // and the README perf row derive from it) — a possibly-contended

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Targeted re-timer for bench triage: times the named queries (cold +
   * three steady passes) with exactly [[Bench]]'s measurement discipline
   * (noop-sink materialization, entry-query warmup, same session conf) so
@@ -18,14 +16,7 @@ object BenchOne {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: BenchOne <queryName> [more...]")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     def materialize(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
@@ -35,30 +26,20 @@ object BenchOne {
     // first and only then argues about seconds
     val tally = new Bench.ShuffleTally
     spark.sparkContext.addSparkListener(tally)
-    def drain(): Long = {
-      var prev = tally.taskEnds.get(); var stable = 0; var waited = 0
-      while (stable < 2 && waited < 2000) {
-        Thread.sleep(50); waited += 50
-        val cur = tally.taskEnds.get()
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-      }
-      tally.bytes.get()
-    }
     try { materialize(SparkEntry.entry(spark)) } catch { case _: Throwable => () }
     // args may repeat — "q control q control q" interleaves a suspect
     // with its control for a repeated-median measurement on one window
     args.foreach { q =>
-      val fn = SparkEntry.queries.getOrElse(q,
-        sys.error(s"unknown query '$q' — not in SparkEntry.queries"))
+      val fn = SparkEntry.query(q)
       def t(): Double = {
         val t0 = System.nanoTime()
         materialize(fn(spark, sfDir))
         (System.nanoTime() - t0) / 1e9
       }
       val cold = t()
-      val b0 = drain()
+      val b0 = tally.drain()
       val s = Seq(t(), t(), t())
-      val shufMb = (drain() - b0).toDouble / 3e6 // per-steady-run MB
+      val shufMb = (tally.drain() - b0).toDouble / 3e6 // per-steady-run MB
       // post-AQE join-strategy fingerprint (Bench.planFingerprint): a
       // triage re-time must distinguish "same plan, so contention" from
       // "a broadcast fell off" — times alone can't (the r10 lesson)

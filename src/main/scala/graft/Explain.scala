@@ -1,10 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Plan-audit tool: prints the physical plan of the named queries (all
-  * headline plan-audited queries when no args given).
+/** Plan-audit tool: prints the physical plan of the named queries.
   *
-  * Usage: runMain graft.Explain [queryName ...]
+  * Usage: runMain graft.Explain <queryName> [more...]
   * Env:
   *   SPARK_GRAFT_EXPLAIN_MODE=formatted|simple   (default simple)
   *   SPARK_GRAFT_EXPLAIN_OUT=<dir>  write one <dir>/<query>.txt per query
@@ -13,9 +11,8 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    require(args.nonEmpty, "usage: Explain <queryName> [more...]")
+    val spark = LocalSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val mode = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_MODE", "simple") match {
@@ -24,19 +21,8 @@ object Explain {
     }
     val outDir = sys.env.get("SPARK_GRAFT_EXPLAIN_OUT")
     outDir.foreach(p => new java.io.File(p).mkdirs())
-    val names = if (args.nonEmpty) args.toSeq
-      else Seq("o2_range_scan", "q1_pricing_summary", "j1_lookup_join",
-        "w1_latest_event_per_user", "dedup_minhash_pairs", "sim_bruteforce_topk",
-        "decontaminate", "mix_temperature", "sim_adc_topk", "corpus_build",
-        "dedup_semantic", "text_hash_embed", "quality_top_fraction",
-        "assign_dense_ids", "search_bm25", "text_bigram_lm",
-        "mine_hard_negatives", "mix_epochs", "rollup_maintain",
-        "mm_frame_sample", "sketch_cms_incremental", "dedup_lsh_indexed",
-        "graph_pagerank", "dedup_canonical", "graph_triangles",
-        "dq_expectations", "j10_fuzzy_link", "j11_interval_join",
-        "a19_mad_outliers")
-    for (name <- names) {
-      val plan = SparkEntry.queries(name)(spark, d)
+    for (name <- args) {
+      val plan = SparkEntry.query(name)(spark, d)
         .queryExecution.explainString(mode)
       outDir match {
         case Some(dir) =>

@@ -8,15 +8,22 @@ object SparkEntry {
     * (api/main.py:248-320) as a single-shuffle max(struct) aggregation. */
   def entry(spark: SparkSession): DataFrame =
     CoreQueries.w1LatestEventPerUser(spark, "/root/testdata/sf0.001")
+  /** Every query, declared once per pack; a repeated name fails here. */
+  private lazy val registry: Map[String, QueryDef] = QueryDef.registry(
+    CoreQueries.queries ++ InventoryQueries.queries ++ InventoryQueries2.queries ++
+      SteamQueries.queries ++ WireQueries.queries ++ TrainingQueries.queries ++
+      SimilarityQueries.queries ++ TextQueries.queries ++ MultimodalQueries.queries ++
+      SequenceQueries.queries ++ SearchQueries.queries ++ GraphQueries.queries ++
+      DataQualityQueries.queries ++ TimeSeriesQueries.queries ++ JourneyQueries.queries)
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    CoreQueries.defs ++ InventoryQueries.defs ++ InventoryQueries2.defs ++ SteamQueries.defs ++ WireQueries.defs ++
-      TrainingQueries.defs ++ SimilarityQueries.defs ++ TextQueries.defs ++ MultimodalQueries.defs ++ SequenceQueries.defs ++
-      SearchQueries.defs ++ GraphQueries.defs ++ DataQualityQueries.defs ++ TimeSeriesQueries.defs ++ JourneyQueries.defs
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, d) => n -> d.run }
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    CoreQueries.oracle ++ InventoryQueries.oracle ++ InventoryQueries2.oracle ++ SteamQueries.oracle ++ WireQueries.oracle ++
-      TrainingQueries.oracle ++ SimilarityQueries.oracle ++ TextQueries.oracle ++ MultimodalQueries.oracle ++ SequenceQueries.oracle ++
-      SearchQueries.oracle ++ GraphQueries.oracle ++ DataQualityQueries.oracle ++ TimeSeriesQueries.oracle ++ JourneyQueries.oracle
+    * the same parquet tables. */
+  lazy val oracleSql: Map[String, String] =
+    registry.map { case (n, d) => n -> d.oracleSql }
+  /** `queries(name)`, failing loudly on an unknown name. */
+  def query(name: String): (SparkSession, String) => DataFrame =
+    queries.getOrElse(name,
+      sys.error(s"unknown query '$name' — not in SparkEntry.queries"))
 }

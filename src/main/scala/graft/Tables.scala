@@ -28,33 +28,18 @@ object Tables {
     * (dir, table) keys, but a long-lived multi-session service would
     * otherwise accumulate resolved plans (each pinning its session)
     * without limit. LRU by ACCESS order so the hot suite keys survive
-    * churn; java LinkedHashMap's removeEldestEntry is the eviction
-    * hook, and every read goes through one lock — planning-path
-    * frequency (a few hundred lookups per suite), not per-row. */
+    * churn; planning-path frequency (a few hundred lookups per suite),
+    * not per-row. */
   private[graft] val MaxResolved = 256
   private val resolved =
-    new java.util.LinkedHashMap[(SparkSession, String, String), DataFrame](
-      64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String, String), DataFrame]): Boolean =
-        size() > MaxResolved
-    }
-  graft.operators.CacheRegistry.register("tables.resolved", MaxResolved,
-    () => resolved.synchronized(resolved.size()))
+    new graft.operators.BoundedMemo[(SparkSession, String, String), DataFrame](
+      "tables.resolved", MaxResolved)
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    resolved.synchronized {
-      val k = (spark, dir, name)
-      val hit = resolved.get(k)
-      if (hit != null) hit
-      else {
-        val df = spark.read.parquet(s"$dir/$name.parquet")
-        resolved.put(k, df)
-        df
-      }
-    }
+    resolved.computeIfAbsent((spark, dir, name),
+      _ => spark.read.parquet(s"$dir/$name.parquet"))
 
-  private[graft] def cachedCount: Int = resolved.synchronized(resolved.size())
+  private[graft] def cachedCount: Int = resolved.size
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

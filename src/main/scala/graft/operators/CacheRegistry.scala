@@ -10,9 +10,8 @@ package graft.operators
   *  - every cache implementation self-registers here with its name, hard
   *    entry bound, and a live sizer;
   *  - `CacheAuditSpec` greps main source for raw cache constructors and
-  *    fails on any site that is neither one of the registered
-  *    implementations ([[DirMemo]], [[CheckpointMemo]],
-  *    [[graft.Tables]]) nor carries an explicit `cache-exempt:` marker
+  *    fails on any site that is neither the registered implementation
+  *    ([[BoundedMemo]]) nor carries an explicit `cache-exempt:` marker
   *    stating why its lifetime is not the process's;
   *  - the same spec asserts, at runtime, size ≤ bound for every entry.
   *

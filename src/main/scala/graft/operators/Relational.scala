@@ -362,12 +362,14 @@ object Relational {
     // bk exchange is the same one the self-join needs, so both sides
     // share it (ReusedExchange) and bn is byte-identical. The guard
     // still gates the LIVE name column, so column pruning can never
-    // eliminate the raise_error.
+    // eliminate the raise_error. bn counts only non-null keys: the
+    // equi-join never pairs the null-bk partition, so its size must
+    // not trip the budget.
     val guarded =
       if (failOnCap) {
         side
           .withColumn("bn",
-            count(lit(1)).over(Window.partitionBy(col("bk"))))
+            count(col("bk")).over(Window.partitionBy(col("bk"))))
           .withColumn("name",
             when(col("bn") * (col("bn") - 1L) / 2L > lit(maxPairs),
               raise_error(concat(
@@ -572,9 +574,9 @@ object Relational {
     // inputs aren't shuffle stages), a shape that OOMs at real scale;
     // (2) exchange reuse did not fire for the self-join's two identical
     // subtrees, so the whole explode+hash+guard pipeline EXECUTED TWICE;
-    // (3) with the declared (seg, h) partitioning, the counts aggregate,
-    // the guard join, and both self-join sides are all satisfied in
-    // place — the block-key exchange is paid exactly once. Skew on the
+    // (3) with the declared (seg, h) partitioning, the count window and
+    // both self-join sides are all satisfied in place — the block-key
+    // exchange is paid exactly once. Skew on the
     // key is alphabet-bounded by construction. The checkpoint blocks are
     // released by Spark's ContextCleaner when the returned plan is
     // dropped (same lifecycle as Dataset.localCheckpoint); ~(len+1)
@@ -598,11 +600,13 @@ object Relational {
     // groupBy + merge-join guard re-aggregated and re-joined the
     // variant table once per self-join side; the window is one sorted
     // pass per side with zero new exchanges (the declared partitioning
-    // satisfies its distribution), and bn is byte-identical.
+    // satisfies its distribution), and bn is byte-identical. bn counts
+    // only rows whose (seg, h) key is fully non-null, the rows the
+    // equi-join can pair.
     val guarded =
       if (failOnCap) {
         variants
-          .withColumn("bn", count(lit(1)).over(
+          .withColumn("bn", count(when(col("seg").isNotNull, col("h"))).over(
             Window.partitionBy(col("seg"), col("h"))))
           .withColumn("name",
             when(col("bn") * (col("bn") - 1L) / 2L > lit(maxPairs),
@@ -655,17 +659,16 @@ object Relational {
   def sessionOverlapPairs(sess: DataFrame, binUs: Long,
                           maxPairsPerBin: Long = MaxPairsDefault,
                           failOnCap: Boolean = false): DataFrame = {
-    // The binned table feeds FOUR consumers (the per-bin counts
-    // aggregate, the guard join's probe side, and both self-join sides)
-    // and its lineage embeds the caller's whole session derivation — at
-    // j18 that is the full events scan + two sessionization windows, so
-    // an unpersisted sub-plan re-ran the chain once per consumer (only
-    // the bottom exchange was sharable via ReusedExchange). One declared
-    // (bin)-partitioned checkpoint (r17, the fuzzyLinkSymDel discipline:
-    // EAGER at construction, blocks released by ContextCleaner when the
-    // returned plan is dropped) computes the chain once and satisfies
-    // the counts aggregate, the guard join and the self-join in place —
-    // the bin-key exchange is paid exactly once.
+    // The binned table feeds THREE consumers (the per-bin count window
+    // and both self-join sides) and its lineage embeds the caller's
+    // whole session derivation — at j18 that is the full events scan +
+    // two sessionization windows, so an unpersisted sub-plan re-ran the
+    // chain once per consumer (only the bottom exchange was sharable via
+    // ReusedExchange). One declared (bin)-partitioned checkpoint (r17,
+    // the fuzzyLinkSymDel discipline: EAGER at construction, blocks
+    // released by ContextCleaner when the returned plan is dropped)
+    // computes the chain once and satisfies the count window and the
+    // self-join in place — the bin-key exchange is paid exactly once.
     val binned = org.apache.spark.sql.graftRdd.localCheckpointPartitioned(
       sess.select(col("user_id"), col("session_no"),
           col("s_us"), col("e_us"))
@@ -683,7 +686,7 @@ object Relational {
       if (failOnCap) {
         binned
           .withColumn("bn",
-            count(lit(1)).over(Window.partitionBy(col("bin"))))
+            count(col("bin")).over(Window.partitionBy(col("bin"))))
           .withColumn("s_us",
             when(col("bn") * (col("bn") - 1L) / 2L > lit(maxPairsPerBin),
               raise_error(concat(

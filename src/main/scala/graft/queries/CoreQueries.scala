@@ -16,8 +16,6 @@ import graft.operators.Relational
   *  - time-relative predicates use an explicit as-of literal (SURVEY §7.4.5).
   */
 object CoreQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   /** events table ends 2024-01-30T23:57; fixed "now" for range queries. */
   val AsOf = "2024-01-31 00:00:00"
 
@@ -33,9 +31,11 @@ object CoreQueries {
     * DECIMAL these sums replace rounds, so floor would change results).
     * The per-row product cents·(100−disc%) is an exact ≤1.05e9 integer;
     * the long sum is exact up to ~8.8e9 rows PER GROUP (the same
-    * documented envelope as the repo's floor(x·1e6) convention — beyond
-    * it, widen the sum to DECIMAL(38,0); Spark's old decimal(22,2) sum
-    * overflowed to NULL past ITS envelope just as silently). The final
+    * documented envelope as the repo's floor(x·1e6) convention). Past
+    * it the sum fails loudly: ANSI mode, pinned by
+    * [[graft.LocalSession]], raises ARITHMETIC_OVERFLOW instead of
+    * wrapping (ContractSpec trips it); a group that large needs the sum
+    * widened to DECIMAL(38,0). The final
     * CAST(sum AS DOUBLE)/1e4 (or /1e2) is one correctly-rounded
     * conversion of the same exact rational the decimal internals
     * carried, so the emitted doubles are IDENTICAL bit for bit (both
@@ -44,12 +44,12 @@ object CoreQueries {
     * twin: CAST(round(x * 1.0e2) AS BIGINT) — round-half-away vs rint's
     * half-even never disagree off ties, and ties cannot arise from
     * 2-decimal inputs. */
-  private def cents(c: String): Column =
+  private[graft] def cents(c: String): Column =
     expr(s"cast(rint($c * 1.0e2) as long)")
   /** sum of exact 4-decimal-fixed-point revenue units:
     * cents(price) · (100 − cents(discount)); divide by 1.0e4 as double
     * at the very end. */
-  private def revenueQ: Column =
+  private[graft] def revenueQ: Column =
     sum(cents("l_extendedprice") * (lit(100L) - cents("l_discount")))
 
   // ---- flagship: TPC-H-Q1-shaped pricing summary (A8/A9 agg family) ------
@@ -1422,7 +1422,7 @@ object CoreQueries {
     * round-trips, footer reads — from growing with APPEND COUNT while
     * content stays fixed. */
   private val snapCompactCache =
-    new graft.operators.DirMemo[String]("core.snapCompactCache")
+    new graft.operators.BoundedMemo[String, String]("core.snapCompactCache")
 
   def snapshotCompact(s: SparkSession, d: String): DataFrame = {
     import graft.sources.PartitionedStore
@@ -1474,7 +1474,7 @@ object CoreQueries {
     * holds. At 100 TB this is reading a rectangle instead of a
     * stripe. */
   private val zorderCache =
-    new graft.operators.DirMemo[String]("core.zorderCache")
+    new graft.operators.BoundedMemo[String, String]("core.zorderCache")
 
   def o9ZorderScan(s: SparkSession, d: String): DataFrame = {
     import graft.sources.PartitionedStore
@@ -1572,7 +1572,7 @@ object CoreQueries {
     * hash-mismatch. Commits memoized per corpus (a snapshot is
     * committed once by definition). */
   private val snapDiffCache =
-    new graft.operators.DirMemo[String]("core.snapDiffCache")
+    new graft.operators.BoundedMemo[String, String]("core.snapDiffCache")
 
   /** RESTORE served through the read path: v1 = the stable doc bulk,
     * v2 = an appended delta, v3 = `restoreVersion(v1)` — a metadata-only
@@ -1583,7 +1583,7 @@ object CoreQueries {
     * hash-mismatches. Rolled-over history stays readable
     * (VersionedStoreSpec pins that plus vacuum safety). */
   private val snapRestoreCache =
-    new graft.operators.DirMemo[String]("core.snapRestoreCache")
+    new graft.operators.BoundedMemo[String, String]("core.snapRestoreCache")
 
   def snapshotRestore(s: SparkSession, d: String): DataFrame = {
     import graft.sources.PartitionedStore
@@ -1626,7 +1626,7 @@ object CoreQueries {
     * the dirty dir, kept a matching row, or leaked the pre-delete dir
     * hash-mismatches. */
   private val snapDeleteCache =
-    new graft.operators.DirMemo[String]("core.snapDeleteCache")
+    new graft.operators.BoundedMemo[String, String]("core.snapDeleteCache")
 
   private def snapDeleteStore(s: SparkSession, d: String): String =
     snapDeleteCache.computeIfAbsent(d, _ => {
@@ -1705,7 +1705,7 @@ object CoreQueries {
     * hash-mismatches. VersionedStoreSpec pins time travel, the
     * insert-only-rewrites-nothing contract, and empty-delta no-op. */
   private val snapUpsertCache =
-    new graft.operators.DirMemo[String]("core.snapUpsertCache")
+    new graft.operators.BoundedMemo[String, String]("core.snapUpsertCache")
 
   private def snapUpsertStore(s: SparkSession, d: String): String =
     snapUpsertCache.computeIfAbsent(d, _ => {
@@ -1884,96 +1884,49 @@ object CoreQueries {
       |FROM q JOIN lo USING (event_type) JOIN hi USING (event_type)
       |ORDER BY event_id""".stripMargin
 
-  val defs: Map[String, Q] = Map(
-    "a19_mad_outliers" -> (a19MadOutliers _),
-    "a20_winsorize" -> (a20Winsorize _),
-    "j11_interval_join" -> (j11IntervalJoin _),
-    "q1_pricing_summary" -> (q1PricingSummary _),
-    "q3_shipping_priority" -> (q3ShippingPriority _),
-    "q18_large_volume" -> (q18LargeVolume _),
-    "q5_local_supplier" -> (q5LocalSupplier _),
-    "q7_volume_shipping" -> (q7VolumeShipping _),
-    "q10_returned_items" -> (q10ReturnedItems _),
-    "q4_order_priority" -> (q4OrderPriority _),
-    "q21_suppliers_waiting" -> (q21SuppliersWaiting _),
-    "q14_promo_share" -> (q14PromoShare _),
-    "q22_dormant_balance" -> (q22DormantBalance _),
-    "q6_forecast_revenue" -> (q6ForecastRevenue _),
-    "q12_priority_classes" -> (q12PriorityClasses _),
-    "q13_custdist" -> (q13CustDist _),
-    "q15_top_supplier" -> (q15TopSupplier _),
-    "q19_discounted_parts" -> (q19DiscountedParts _),
-    "q17_small_qty_revenue" ->
-      ((s: SparkSession, d: String) => q17SmallQtyRevenue(s, d)),
-    "q2_min_cost_supplier" -> (q2MinCostSupplier _),
-    "q16_supplier_counts" -> (q16SupplierCounts _),
-    "q11_important_parts" -> (q11ImportantParts _),
-    "q8_market_share" -> (q8MarketShare _),
-    "q9_product_profit" -> (q9ProductProfit _),
-    "q20_dominant_suppliers" -> (q20DominantSuppliers _),
-    "snapshot_diff" -> (snapshotDiff _),
-    "snapshot_restore" -> (snapshotRestore _),
-    "snapshot_delete_rows" -> (snapshotDeleteRows _),
-    "snapshot_upsert" -> (snapshotUpsert _),
-    "snapshot_delete_audit" -> (snapshotDeleteAudit _),
-    "o9_zorder_scan" -> (o9ZorderScan _),
-    "snapshot_compact" -> (snapshotCompact _),
-    "skew_join_plain" -> (skewJoinPlain _),
-    "skew_join_salted" -> (skewJoinSalted _),
-    "w1_latest_event_per_user" -> (w1LatestEventPerUser _),
-    "o1_recent_user_events" -> (o1RecentUserEvents _),
-    "o2_range_scan" -> (o2RangeScan _),
-    "a8_daily_rollup" -> (a8DailyRollup _),
-    "scd2_intervals" -> (scd2Intervals _),
-    "rollup_maintain" -> (rollupMaintain _),
-    "view_join_maintain" -> (viewJoinMaintain _),
-    "cohort_retention" -> (cohortRetention _),
-    "cohort_ltv" -> (cohortLtv _),
-    "cohort_ltv_decayed" -> (cohortLtvDecayed _))
-
-  val oracle: Map[String, String] = Map(
-    "a19_mad_outliers" -> a19MadOutliersSql,
-    "a20_winsorize" -> a20WinsorizeSql,
-    "j11_interval_join" -> j11IntervalJoinSql,
-    "q1_pricing_summary" -> q1PricingSummarySql,
-    "q3_shipping_priority" -> q3ShippingPrioritySql,
-    "q18_large_volume" -> q18LargeVolumeSql,
-    "q5_local_supplier" -> q5LocalSupplierSql,
-    "q7_volume_shipping" -> q7VolumeShippingSql,
-    "q10_returned_items" -> q10ReturnedItemsSql,
-    "q4_order_priority" -> q4OrderPrioritySql,
-    "q21_suppliers_waiting" -> q21SuppliersWaitingSql,
-    "q14_promo_share" -> q14PromoShareSql,
-    "q22_dormant_balance" -> q22DormantBalanceSql,
-    "q6_forecast_revenue" -> q6ForecastRevenueSql,
-    "q12_priority_classes" -> q12PriorityClassesSql,
-    "q13_custdist" -> q13CustDistSql,
-    "q15_top_supplier" -> q15TopSupplierSql,
-    "q19_discounted_parts" -> q19DiscountedPartsSql,
-    "q17_small_qty_revenue" -> q17SmallQtyRevenueSql,
-    "q2_min_cost_supplier" -> q2MinCostSupplierSql,
-    "q16_supplier_counts" -> q16SupplierCountsSql,
-    "q11_important_parts" -> q11ImportantPartsSql,
-    "q8_market_share" -> q8MarketShareSql,
-    "q9_product_profit" -> q9ProductProfitSql,
-    "q20_dominant_suppliers" -> q20DominantSuppliersSql,
-    "snapshot_diff" -> snapshotDiffSql,
-    "snapshot_restore" -> snapshotRestoreSql,
-    "snapshot_delete_rows" -> snapshotDeleteRowsSql,
-    "snapshot_upsert" -> snapshotUpsertSql,
-    "snapshot_delete_audit" -> snapshotDeleteAuditSql,
-    "o9_zorder_scan" -> o9ZorderScanSql,
-    "snapshot_compact" -> snapshotCompactSql,
-    "skew_join_plain" -> skewJoinSql,
-    "skew_join_salted" -> skewJoinSql,
-    "w1_latest_event_per_user" -> w1LatestEventPerUserSql,
-    "o1_recent_user_events" -> o1RecentUserEventsSql,
-    "o2_range_scan" -> o2RangeScanSql,
-    "a8_daily_rollup" -> a8DailyRollupSql,
-    "scd2_intervals" -> scd2IntervalsSql,
-    "rollup_maintain" -> rollupMaintainSql,
-    "view_join_maintain" -> viewJoinMaintainSql,
-    "cohort_retention" -> cohortRetentionSql,
-    "cohort_ltv" -> cohortLtvSql,
-    "cohort_ltv_decayed" -> cohortLtvDecayedSql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("a19_mad_outliers", a19MadOutliers, a19MadOutliersSql),
+    QueryDef("a20_winsorize", a20Winsorize, a20WinsorizeSql),
+    QueryDef("j11_interval_join", j11IntervalJoin, j11IntervalJoinSql),
+    QueryDef("q1_pricing_summary", q1PricingSummary, q1PricingSummarySql),
+    QueryDef("q3_shipping_priority", q3ShippingPriority, q3ShippingPrioritySql),
+    QueryDef("q18_large_volume", q18LargeVolume, q18LargeVolumeSql),
+    QueryDef("q5_local_supplier", q5LocalSupplier, q5LocalSupplierSql),
+    QueryDef("q7_volume_shipping", q7VolumeShipping, q7VolumeShippingSql),
+    QueryDef("q10_returned_items", q10ReturnedItems, q10ReturnedItemsSql),
+    QueryDef("q4_order_priority", q4OrderPriority, q4OrderPrioritySql),
+    QueryDef("q21_suppliers_waiting", q21SuppliersWaiting, q21SuppliersWaitingSql),
+    QueryDef("q14_promo_share", q14PromoShare, q14PromoShareSql),
+    QueryDef("q22_dormant_balance", q22DormantBalance, q22DormantBalanceSql),
+    QueryDef("q6_forecast_revenue", q6ForecastRevenue, q6ForecastRevenueSql),
+    QueryDef("q12_priority_classes", q12PriorityClasses, q12PriorityClassesSql),
+    QueryDef("q13_custdist", q13CustDist, q13CustDistSql),
+    QueryDef("q15_top_supplier", q15TopSupplier, q15TopSupplierSql),
+    QueryDef("q19_discounted_parts", q19DiscountedParts, q19DiscountedPartsSql),
+    QueryDef("q17_small_qty_revenue", q17SmallQtyRevenue(_, _), q17SmallQtyRevenueSql),
+    QueryDef("q2_min_cost_supplier", q2MinCostSupplier, q2MinCostSupplierSql),
+    QueryDef("q16_supplier_counts", q16SupplierCounts, q16SupplierCountsSql),
+    QueryDef("q11_important_parts", q11ImportantParts, q11ImportantPartsSql),
+    QueryDef("q8_market_share", q8MarketShare, q8MarketShareSql),
+    QueryDef("q9_product_profit", q9ProductProfit, q9ProductProfitSql),
+    QueryDef("q20_dominant_suppliers", q20DominantSuppliers, q20DominantSuppliersSql),
+    QueryDef("snapshot_diff", snapshotDiff, snapshotDiffSql),
+    QueryDef("snapshot_restore", snapshotRestore, snapshotRestoreSql),
+    QueryDef("snapshot_delete_rows", snapshotDeleteRows, snapshotDeleteRowsSql),
+    QueryDef("snapshot_upsert", snapshotUpsert, snapshotUpsertSql),
+    QueryDef("snapshot_delete_audit", snapshotDeleteAudit, snapshotDeleteAuditSql),
+    QueryDef("o9_zorder_scan", o9ZorderScan, o9ZorderScanSql),
+    QueryDef("snapshot_compact", snapshotCompact, snapshotCompactSql),
+    QueryDef("skew_join_plain", skewJoinPlain, skewJoinSql),
+    QueryDef("skew_join_salted", skewJoinSalted, skewJoinSql),
+    QueryDef("w1_latest_event_per_user", w1LatestEventPerUser, w1LatestEventPerUserSql),
+    QueryDef("o1_recent_user_events", o1RecentUserEvents, o1RecentUserEventsSql),
+    QueryDef("o2_range_scan", o2RangeScan, o2RangeScanSql),
+    QueryDef("a8_daily_rollup", a8DailyRollup, a8DailyRollupSql),
+    QueryDef("scd2_intervals", scd2Intervals, scd2IntervalsSql),
+    QueryDef("rollup_maintain", rollupMaintain, rollupMaintainSql),
+    QueryDef("view_join_maintain", viewJoinMaintain, viewJoinMaintainSql),
+    QueryDef("cohort_retention", cohortRetention, cohortRetentionSql),
+    QueryDef("cohort_ltv", cohortLtv, cohortLtvSql),
+    QueryDef("cohort_ltv_decayed", cohortLtvDecayed, cohortLtvDecayedSql))
 }

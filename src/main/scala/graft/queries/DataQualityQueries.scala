@@ -17,8 +17,6 @@ import graft.operators.DataQuality._
   * data (events.user_id is not unique; events.value exceeds the 400.00 cap)
   * — a report that can only say "passed" tests nothing. */
 object DataQualityQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Allowed event vocabulary (sorted; mirrors the generator's five kinds). */
   private val EventKinds = Seq("click", "error", "purchase", "signup", "view")
 
@@ -930,7 +928,7 @@ object DataQualityQueries {
     * memoized per dir; sums in DECIMAL(12,2), cast to double at the
     * end (q1's parity discipline). */
   private val bloomReduceCache =
-    new graft.operators.DirMemo[Array[Byte]]("dq.bloomReduceCache")
+    new graft.operators.BoundedMemo[String, Array[Byte]]("dq.bloomReduceCache")
 
   def j16BloomReduce(s: SparkSession, d: String): DataFrame = {
     val dim = Tables.orders(s, d)
@@ -961,41 +959,22 @@ object DataQualityQueries {
        |GROUP BY l_returnflag
        |ORDER BY l_returnflag""".stripMargin
 
-  val defs: Map[String, Q] = Map(
-    "j15_sorted_neighborhood" -> (j15SortedNeighborhood _),
-    "j15_snm_multipass" -> (j15SnmMultipass _),
-    "eval_snm_recall" -> (evalSnmRecall _),
-    "eval_snm_recall_sampled" -> (evalSnmRecallSampled _),
-    "j16_bloom_reduce" -> (j16BloomReduce _),
-    "j13_golden_record" -> (j13GoldenRecord _),
-    "dq_benford" -> (dqBenford _),
-    "dq_expectations" -> (dqExpectations _),
-    "dq_id_gaps" -> (dqIdGaps _),
-    "dq_drift_tvd" -> (dqDriftTvd _),
-    "dq_partition_skew" -> (dqPartitionSkew _),
-    "dq_independence" -> (dqIndependence _),
-    "dq_k_anonymity" -> (dqKAnonymity _),
-    "j10_fuzzy_link" -> (j10FuzzyLink _),
-    "j12_entity_resolve" -> (j12EntityResolve _),
-    "j14_entity_dual" -> (j14EntityDual _),
-    "j17_entity_symdel" -> (j17EntitySymdel _))
-
-  val oracle: Map[String, String] = Map(
-    "j15_sorted_neighborhood" -> j15Sql,
-    "j15_snm_multipass" -> j15MultipassSql,
-    "eval_snm_recall" -> evalSnmRecallSql,
-    "eval_snm_recall_sampled" -> evalSnmRecallSampledSql,
-    "j16_bloom_reduce" -> j16Sql,
-    "j13_golden_record" -> j13Sql,
-    "dq_benford" -> dqBenfordSql,
-    "dq_expectations" -> dqSql,
-    "dq_id_gaps" -> dqIdGapsSql,
-    "dq_drift_tvd" -> dqDriftTvdSql,
-    "dq_partition_skew" -> dqPartitionSkewSql,
-    "dq_independence" -> dqIndependenceSql,
-    "dq_k_anonymity" -> dqKAnonymitySql,
-    "j10_fuzzy_link" -> j10Sql,
-    "j12_entity_resolve" -> j12Sql,
-    "j14_entity_dual" -> j14Sql,
-    "j17_entity_symdel" -> j17Sql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("j15_sorted_neighborhood", j15SortedNeighborhood, j15Sql),
+    QueryDef("j15_snm_multipass", j15SnmMultipass, j15MultipassSql),
+    QueryDef("eval_snm_recall", evalSnmRecall, evalSnmRecallSql),
+    QueryDef("eval_snm_recall_sampled", evalSnmRecallSampled, evalSnmRecallSampledSql),
+    QueryDef("j16_bloom_reduce", j16BloomReduce, j16Sql),
+    QueryDef("j13_golden_record", j13GoldenRecord, j13Sql),
+    QueryDef("dq_benford", dqBenford, dqBenfordSql),
+    QueryDef("dq_expectations", dqExpectations, dqSql),
+    QueryDef("dq_id_gaps", dqIdGaps, dqIdGapsSql),
+    QueryDef("dq_drift_tvd", dqDriftTvd, dqDriftTvdSql),
+    QueryDef("dq_partition_skew", dqPartitionSkew, dqPartitionSkewSql),
+    QueryDef("dq_independence", dqIndependence, dqIndependenceSql),
+    QueryDef("dq_k_anonymity", dqKAnonymity, dqKAnonymitySql),
+    QueryDef("j10_fuzzy_link", j10FuzzyLink, j10Sql),
+    QueryDef("j12_entity_resolve", j12EntityResolve, j12Sql),
+    QueryDef("j14_entity_dual", j14EntityDual, j14Sql),
+    QueryDef("j17_entity_symdel", j17EntitySymdel, j17Sql))
 }

@@ -21,7 +21,7 @@ import graft.operators.Dedup
   * memo key is the session INSTANCE, so a restarted session can never
   * serve another session's dropped checkpoint blocks.
   *
-  * Lifecycle: a BOUNDED [[graft.operators.CheckpointMemo]] (the r12
+  * Lifecycle: a BOUNDED [[graft.operators.BoundedMemo]] (the r12
   * `overlapCache` lesson applied to its own elder: LRU by access,
   * eviction releases the evicted frame's checkpoint blocks). The edge
   * list is narrow rows of id pairs (O(dup pairs), a vanishing fraction
@@ -32,10 +32,12 @@ import graft.operators.Dedup
   * index ([[graft.operators.Dedup.writeLshIndex]]): derive once,
   * serve many. */
 object DupEdges {
-  private val cache = new graft.operators.CheckpointMemo("queries.dupEdges")
+  private val cache =
+    new graft.operators.BoundedMemo[(SparkSession, String), DataFrame](
+      "queries.dupEdges", onEvict = graft.operators.Checkpoints.release)
 
   def of(s: SparkSession, d: String): DataFrame =
-    cache.getOrElseUpdate(s, d, {
+    cache.computeIfAbsent((s, d), _ => {
       val docs = Tables.documents(s, d)
       val exactEdges = Dedup.exactDedup(docs, "doc_id", "text")
         .filter(col("is_dup"))
@@ -68,7 +70,7 @@ object DupEdges {
     * then runs stages as wide as the data warrants — 1-task rounds on
     * sf0.1's 264-edge graph, full conf width at scale. */
   def symSrc(s: SparkSession, d: String): DataFrame =
-    cache.getOrElseUpdate(s, d + "#sym-src", {
+    cache.computeIfAbsent((s, d + "#sym-src"), _ => {
       val e = of(s, d)
       graft.operators.Graph.symEdges(e, "src",
         graft.operators.Graph.partitionsForRows(s, 2L * e.count()))
@@ -80,7 +82,7 @@ object DupEdges {
     * [[symSrc]] (LPA is dst-keyed, so it cannot share the src
     * checkpoint without re-exchanging it every round). */
   def lpaVotes(s: SparkSession, d: String): DataFrame =
-    cache.getOrElseUpdate(s, d + "#lpa-votes", {
+    cache.computeIfAbsent((s, d + "#lpa-votes"), _ => {
       val e = of(s, d)
       graft.operators.Graph.lpaVotes(e,
         graft.operators.Graph.partitionsForRows(s, 2L * e.count()))

@@ -15,8 +15,6 @@ import graft.operators.{Dedup, Graph}
   * iteration CTEs — every step is BIGINT floor division (`DIV` / `//`),
   * so the two engines agree bit for bit with no float tolerance. */
 object GraphQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   private val Iters = 5
   private val Quantum = Graph.Quantum
 
@@ -281,14 +279,15 @@ object GraphQueries {
     * discipline applied to the link-prediction substrate now that TWO
     * graded queries (`graph_common_neighbors`, `graph_resource_alloc`)
     * consume the identical derivation. BOUNDED (r12 ADVICE): the memo is
-    * a [[graft.operators.CheckpointMemo]] — LRU by access with the
+    * a [[graft.operators.BoundedMemo]] — LRU by access with the
     * evicted entry's checkpoint blocks released — so a long-lived
     * multi-dir service cannot accumulate checkpointed edge tables
     * without limit (the leak class Tables' LRU bounds for plans). */
   private[graft] val overlapCache =
-    new graft.operators.CheckpointMemo("graph.overlapCache")
+    new graft.operators.BoundedMemo[(SparkSession, String), DataFrame](
+      "graph.overlapCache", onEvict = graft.operators.Checkpoints.release)
   private def overlapEdges(s: SparkSession, d: String): DataFrame =
-    overlapCache.getOrElseUpdate(s, d,
+    overlapCache.computeIfAbsent((s, d), _ =>
       Dedup.overlapPairs(Tables.documents(s, d), "doc_id", "text",
         minShared = CnMinShared, dfMin = CnDfMin, dfMax = CnDfMax)
         .localCheckpoint())
@@ -391,23 +390,13 @@ object GraphQueries {
        |ORDER BY ra_ppm DESC, doc_a, doc_b
        |LIMIT $TopLinks""".stripMargin
 
-  val defs: Map[String, Q] = Map(
-    "graph_common_neighbors" -> (graphCommonNeighbors _),
-    "graph_resource_alloc" -> (graphResourceAlloc _),
-    "graph_pagerank" -> (graphPagerank _),
-    "graph_lpa" -> (graphLpa _),
-    "dedup_canonical" -> (dedupCanonical _),
-    "graph_triangles" -> (graphTriangles _),
-    "graph_bfs_hops" -> (graphBfsHops _),
-    "graph_kcore" -> (graphKcore _))
-
-  val oracle: Map[String, String] = Map(
-    "graph_common_neighbors" -> graphCommonNeighborsSql,
-    "graph_resource_alloc" -> graphResourceAllocSql,
-    "graph_pagerank" -> graphPagerankSql,
-    "graph_lpa" -> graphLpaSql,
-    "dedup_canonical" -> dedupCanonicalSql,
-    "graph_triangles" -> graphTrianglesSql,
-    "graph_bfs_hops" -> graphBfsHopsSql,
-    "graph_kcore" -> graphKcoreSql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("graph_common_neighbors", graphCommonNeighbors, graphCommonNeighborsSql),
+    QueryDef("graph_resource_alloc", graphResourceAlloc, graphResourceAllocSql),
+    QueryDef("graph_pagerank", graphPagerank, graphPagerankSql),
+    QueryDef("graph_lpa", graphLpa, graphLpaSql),
+    QueryDef("dedup_canonical", dedupCanonical, dedupCanonicalSql),
+    QueryDef("graph_triangles", graphTriangles, graphTrianglesSql),
+    QueryDef("graph_bfs_hops", graphBfsHops, graphBfsHopsSql),
+    QueryDef("graph_kcore", graphKcore, graphKcoreSql))
 }

@@ -15,8 +15,6 @@ import graft.operators.Relational
   * the single-shuffle max(struct) form.
   */
 object InventoryQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   private val AsOf = CoreQueries.AsOf
   /** DuckDB view of events with ts truncated to micros (Spark parity). */
   private val EV = "(SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events) events"
@@ -376,47 +374,25 @@ object InventoryQueries {
 
   // -------------------------------------------------------------------------
 
-  val defs: Map[String, Q] = Map(
-    "o3_status_filter" -> (o3StatusFilter _),
-    "o6_semi_probe" -> (o6SemiProbe _),
-    "j1_lookup_join" -> (j1LookupJoin _),
-    "j2_reconcile" -> (j2Reconcile _),
-    "j3_anti_join" -> (j3AntiJoin _),
-    "j7_spike_detect" -> (j7SpikeDetect _),
-    "j8_dup_guard" -> (j8DupGuard _),
-    "a1_watermarks" -> (a1Watermarks _),
-    "a4_meta_summary" -> (a4MetaSummary _),
-    "a5_windowed_counts" -> (a5WindowedCounts _),
-    "a6_feasibility" -> (a6Feasibility _),
-    "a9_volatility" -> (a9Volatility _),
-    "a11_latest_compare" -> (a11LatestCompare _),
-    "a12_health" -> (a12Health _),
-    "w2_top200_orders" -> (w2Top200Orders _),
-    "w3_tail_slice" -> (w3TailSlice _),
-    "u2_except" -> (u2Except _),
-    "u4_intersect" -> (u4Intersect _),
-    "t1_delta_append" -> (t1DeltaAppend _),
-    "t2_staleness" -> (t2Staleness _))
-
-  val oracle: Map[String, String] = Map(
-    "o3_status_filter" -> o3Sql,
-    "o6_semi_probe" -> o6Sql,
-    "j1_lookup_join" -> j1Sql,
-    "j2_reconcile" -> j2Sql,
-    "j3_anti_join" -> j3Sql,
-    "j7_spike_detect" -> j7Sql,
-    "j8_dup_guard" -> j8Sql,
-    "a1_watermarks" -> a1Sql,
-    "a4_meta_summary" -> a4Sql,
-    "a5_windowed_counts" -> a5Sql,
-    "a6_feasibility" -> a6Sql,
-    "a9_volatility" -> a9Sql,
-    "a11_latest_compare" -> a11Sql,
-    "a12_health" -> a12Sql,
-    "w2_top200_orders" -> w2Sql,
-    "w3_tail_slice" -> w3Sql,
-    "u2_except" -> u2Sql,
-    "u4_intersect" -> u4Sql,
-    "t1_delta_append" -> t1Sql,
-    "t2_staleness" -> t2Sql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("o3_status_filter", o3StatusFilter, o3Sql),
+    QueryDef("o6_semi_probe", o6SemiProbe, o6Sql),
+    QueryDef("j1_lookup_join", j1LookupJoin, j1Sql),
+    QueryDef("j2_reconcile", j2Reconcile, j2Sql),
+    QueryDef("j3_anti_join", j3AntiJoin, j3Sql),
+    QueryDef("j7_spike_detect", j7SpikeDetect, j7Sql),
+    QueryDef("j8_dup_guard", j8DupGuard, j8Sql),
+    QueryDef("a1_watermarks", a1Watermarks, a1Sql),
+    QueryDef("a4_meta_summary", a4MetaSummary, a4Sql),
+    QueryDef("a5_windowed_counts", a5WindowedCounts, a5Sql),
+    QueryDef("a6_feasibility", a6Feasibility, a6Sql),
+    QueryDef("a9_volatility", a9Volatility, a9Sql),
+    QueryDef("a11_latest_compare", a11LatestCompare, a11Sql),
+    QueryDef("a12_health", a12Health, a12Sql),
+    QueryDef("w2_top200_orders", w2Top200Orders, w2Sql),
+    QueryDef("w3_tail_slice", w3TailSlice, w3Sql),
+    QueryDef("u2_except", u2Except, u2Sql),
+    QueryDef("u4_intersect", u4Intersect, u4Sql),
+    QueryDef("t1_delta_append", t1DeltaAppend, t1Sql),
+    QueryDef("t2_staleness", t2Staleness, t2Sql))
 }

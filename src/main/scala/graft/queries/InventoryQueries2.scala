@@ -12,8 +12,6 @@ import graft.operators.Relational
   * CoreQueries (total ORDER BY, exact integer/decimal math, explicit
   * as-of). */
 object InventoryQueries2 {
-  type Q = (SparkSession, String) => DataFrame
-
   private val AsOf = CoreQueries.AsOf
 
   /** DuckDB view of events with the NANOS→micros cast (see Tables.events). */
@@ -1196,81 +1194,42 @@ object InventoryQueries2 {
 
   // -------------------------------------------------------------------------
 
-  val defs: Map[String, Q] = Map(
-    "a17_pivot" -> (a17Pivot _),
-    "a24_unpivot" -> (a24Unpivot _),
-    "j9_cross_modal" -> (j9CrossModal _),
-    "a15_rollup" -> (a15Rollup _),
-    "a21_cube" -> (a21Cube _),
-    "ab_lift" -> (abLift _),
-    "a22_grouping_sets" -> (a22GroupingSets _),
-    "w11_rolling_wau" -> (w11RollingWau _),
-    "w18_cumulative_actives" -> (w18CumulativeActives _),
-    "j18_session_overlap" -> (j18SessionOverlap _),
-    "w19_peak_concurrency" -> (w19PeakConcurrency _),
-    "a16_approx_distinct" -> (a16ApproxDistinct _),
-    "a18_approx_quantiles" -> (a18ApproxQuantiles _),
-    "a14_quantiles" -> (a14Quantiles _),
-    "w8_sessionize" -> (w8Sessionize _),
-    "w10_funnel" -> (w10Funnel _),
-    "funnel_ttc" -> (funnelTtc _),
-    "w13_top_movers" -> (w13TopMovers _),
-    "text_vocab_topk" -> (textVocabTopk _),
-    "w7_asof_join" -> (w7AsofJoin _),
-    "w9_asof_nearest" -> (w9AsofNearest _),
-    "j19_pit_features" -> (j19PitFeatures _),
-    "a2_max_watermark" -> (a2MaxWatermark _),
-    "a13_invariants" -> (a13Invariants _),
-    "f10_currency_map" -> (f10CurrencyMap _),
-    "f11_hash" -> (f11Hash _),
-    "f12_json_build" -> (f12JsonBuild _),
-    "f13_json_extract" -> (f13JsonExtract _),
-    "f15_date_bucket" -> (f15DateBucket _),
-    "f16_iso_format" -> (f16IsoFormat _),
-    "j4_seed_verify" -> (j4SeedVerify _),
-    "j6_iso_lookup" -> (j6IsoLookup _),
-    "o4_stream_split" -> (o4StreamSplit _),
-    "o7_cooldown" -> (o7Cooldown _),
-    "w5_registry_sort" -> (w5RegistrySort _),
-    "w6_urgency" -> (w6Urgency _),
-    "t14_noop_suppression" -> (t14NoopSuppression _))
-
-  val oracle: Map[String, String] = Map(
-    "a17_pivot" -> a17Sql,
-    "a24_unpivot" -> a24Sql,
-    "j9_cross_modal" -> j9Sql,
-    "a15_rollup" -> a15Sql,
-    "a21_cube" -> a21Sql,
-    "ab_lift" -> abLiftSql,
-    "a22_grouping_sets" -> a22Sql,
-    "w11_rolling_wau" -> w11Sql,
-    "w18_cumulative_actives" -> w18Sql,
-    "j18_session_overlap" -> j18Sql,
-    "w19_peak_concurrency" -> w19Sql,
-    "a16_approx_distinct" -> a16Sql,
-    "a18_approx_quantiles" -> a18Sql,
-    "a14_quantiles" -> a14Sql,
-    "w8_sessionize" -> w8Sql,
-    "w10_funnel" -> w10Sql,
-    "funnel_ttc" -> funnelTtcSql,
-    "w13_top_movers" -> w13Sql,
-    "text_vocab_topk" -> textVocabTopkSql,
-    "w7_asof_join" -> w7Sql,
-    "w9_asof_nearest" -> w9Sql,
-    "j19_pit_features" -> j19Sql,
-    "a2_max_watermark" -> a2Sql,
-    "a13_invariants" -> a13Sql,
-    "f10_currency_map" -> f10Sql,
-    "f11_hash" -> f11Sql,
-    "f12_json_build" -> f12Sql,
-    "f13_json_extract" -> f13Sql,
-    "f15_date_bucket" -> f15Sql,
-    "f16_iso_format" -> f16Sql,
-    "j4_seed_verify" -> j4Sql,
-    "j6_iso_lookup" -> j6Sql,
-    "o4_stream_split" -> o4Sql,
-    "o7_cooldown" -> o7Sql,
-    "w5_registry_sort" -> w5Sql,
-    "w6_urgency" -> w6Sql,
-    "t14_noop_suppression" -> t14Sql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("a17_pivot", a17Pivot, a17Sql),
+    QueryDef("a24_unpivot", a24Unpivot, a24Sql),
+    QueryDef("j9_cross_modal", j9CrossModal, j9Sql),
+    QueryDef("a15_rollup", a15Rollup, a15Sql),
+    QueryDef("a21_cube", a21Cube, a21Sql),
+    QueryDef("ab_lift", abLift, abLiftSql),
+    QueryDef("a22_grouping_sets", a22GroupingSets, a22Sql),
+    QueryDef("w11_rolling_wau", w11RollingWau, w11Sql),
+    QueryDef("w18_cumulative_actives", w18CumulativeActives, w18Sql),
+    QueryDef("j18_session_overlap", j18SessionOverlap, j18Sql),
+    QueryDef("w19_peak_concurrency", w19PeakConcurrency, w19Sql),
+    QueryDef("a16_approx_distinct", a16ApproxDistinct, a16Sql),
+    QueryDef("a18_approx_quantiles", a18ApproxQuantiles, a18Sql),
+    QueryDef("a14_quantiles", a14Quantiles, a14Sql),
+    QueryDef("w8_sessionize", w8Sessionize, w8Sql),
+    QueryDef("w10_funnel", w10Funnel, w10Sql),
+    QueryDef("funnel_ttc", funnelTtc, funnelTtcSql),
+    QueryDef("w13_top_movers", w13TopMovers, w13Sql),
+    QueryDef("text_vocab_topk", textVocabTopk, textVocabTopkSql),
+    QueryDef("w7_asof_join", w7AsofJoin, w7Sql),
+    QueryDef("w9_asof_nearest", w9AsofNearest, w9Sql),
+    QueryDef("j19_pit_features", j19PitFeatures, j19Sql),
+    QueryDef("a2_max_watermark", a2MaxWatermark, a2Sql),
+    QueryDef("a13_invariants", a13Invariants, a13Sql),
+    QueryDef("f10_currency_map", f10CurrencyMap, f10Sql),
+    QueryDef("f11_hash", f11Hash, f11Sql),
+    QueryDef("f12_json_build", f12JsonBuild, f12Sql),
+    QueryDef("f13_json_extract", f13JsonExtract, f13Sql),
+    QueryDef("f15_date_bucket", f15DateBucket, f15Sql),
+    QueryDef("f16_iso_format", f16IsoFormat, f16Sql),
+    QueryDef("j4_seed_verify", j4SeedVerify, j4Sql),
+    QueryDef("j6_iso_lookup", j6IsoLookup, j6Sql),
+    QueryDef("o4_stream_split", o4StreamSplit, o4Sql),
+    QueryDef("o7_cooldown", o7Cooldown, o7Sql),
+    QueryDef("w5_registry_sort", w5RegistrySort, w5Sql),
+    QueryDef("w6_urgency", w6Urgency, w6Sql),
+    QueryDef("t14_noop_suppression", t14NoopSuppression, t14Sql))
 }

@@ -32,8 +32,6 @@ import graft.Tables
   *    operands non-negative so DIV ≡ floor on both engines).
   */
 object JourneyQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   private val EventsSql =
     "(SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events) events"
 
@@ -551,21 +549,12 @@ object JourneyQueries {
        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin
   }
 
-  val defs: Map[String, Q] = Map(
-    "w16_return_times" -> (w16ReturnTimes _),
-    "w15_window_funnel" -> (w15WindowFunnel _),
-    "w14_attribution" -> (w14Attribution _),
-    "w17_multitouch" -> (w17Multitouch _),
-    "seq_transitions" -> (seqTransitions _),
-    "assoc_lift" -> (assocLift _),
-    "seq_top_paths" -> (seqTopPaths _))
-
-  val oracle: Map[String, String] = Map(
-    "w16_return_times" -> w16Sql,
-    "w15_window_funnel" -> w15Sql,
-    "w14_attribution" -> w14Sql,
-    "w17_multitouch" -> w17Sql,
-    "seq_transitions" -> seqTransitionsSql,
-    "assoc_lift" -> assocLiftSql,
-    "seq_top_paths" -> seqTopPathsSql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("w16_return_times", w16ReturnTimes, w16Sql),
+    QueryDef("w15_window_funnel", w15WindowFunnel, w15Sql),
+    QueryDef("w14_attribution", w14Attribution, w14Sql),
+    QueryDef("w17_multitouch", w17Multitouch, w17Sql),
+    QueryDef("seq_transitions", seqTransitions, seqTransitionsSql),
+    QueryDef("assoc_lift", assocLift, assocLiftSql),
+    QueryDef("seq_top_paths", seqTopPaths, seqTopPathsSql))
 }

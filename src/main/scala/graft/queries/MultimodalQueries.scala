@@ -12,8 +12,6 @@ import graft.operators.Multimodal
   * frame sampling, and byte-level feature math, all DuckDB-replayable
   * (ASCII text → identical bytes in both engines). */
 object MultimodalQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---- ingest: payload + typed meta + content hash -------------------------
   def mmIngestStats(s: SparkSession, d: String): DataFrame =
     Multimodal.ingestFromText(Tables.documents(s, d))
@@ -427,29 +425,16 @@ object MultimodalQueries {
 
   // -------------------------------------------------------------------------
 
-  val defs: Map[String, Q] = Map(
-    "mm_dedup_payload" -> (mmDedupPayload _),
-    "mm_modality_meta" -> (mmModalityMeta _),
-    "mm_ingest_stats" -> (mmIngestStats _),
-    "mm_frame_sample" -> (mmFrameSample _),
-    "mm_decode_features" -> (mmDecodeFeatures _),
-    "mm_decode_ppm" -> (mmDecodePpm _),
-    "mm_phash_dedup" -> (mmPhashDedup _),
-    "mm_decode_wav" -> (mmDecodeWav _),
-    "mm_wav_energy" -> (mmWavEnergy _),
-    "mm_decode_video" -> (mmDecodeVideo _),
-    "mm_frame_dedup" -> (mmFrameDedup _))
-
-  val oracle: Map[String, String] = Map(
-    "mm_dedup_payload" -> mmDedupPayloadSql,
-    "mm_modality_meta" -> mmModalityMetaSql,
-    "mm_ingest_stats" -> mmIngestStatsSql,
-    "mm_frame_sample" -> mmFrameSampleSql,
-    "mm_decode_features" -> mmDecodeFeaturesSql,
-    "mm_decode_ppm" -> mmDecodePpmSql,
-    "mm_phash_dedup" -> mmPhashDedupSql,
-    "mm_decode_wav" -> mmDecodeWavSql,
-    "mm_wav_energy" -> mmWavEnergySql,
-    "mm_decode_video" -> mmDecodeVideoSql,
-    "mm_frame_dedup" -> mmFrameDedupSql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("mm_dedup_payload", mmDedupPayload, mmDedupPayloadSql),
+    QueryDef("mm_modality_meta", mmModalityMeta, mmModalityMetaSql),
+    QueryDef("mm_ingest_stats", mmIngestStats, mmIngestStatsSql),
+    QueryDef("mm_frame_sample", mmFrameSample, mmFrameSampleSql),
+    QueryDef("mm_decode_features", mmDecodeFeatures, mmDecodeFeaturesSql),
+    QueryDef("mm_decode_ppm", mmDecodePpm, mmDecodePpmSql),
+    QueryDef("mm_phash_dedup", mmPhashDedup, mmPhashDedupSql),
+    QueryDef("mm_decode_wav", mmDecodeWav, mmDecodeWavSql),
+    QueryDef("mm_wav_energy", mmWavEnergy, mmWavEnergySql),
+    QueryDef("mm_decode_video", mmDecodeVideo, mmDecodeVideoSql),
+    QueryDef("mm_frame_dedup", mmFrameDedup, mmFrameDedupSql))
 }

@@ -12,8 +12,6 @@ import graft.operators.{Search, Similarity, TextAnalysis}
   * with their own text; self-matches excluded. All scores are quantized
   * integer sums or fixed-shape double trees → bitwise oracle parity. */
 object SearchQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   private val K = 10       // results per query
   private val NQ = 5       // query docs: doc_id < NQ
   private val EmbedD = 16  // hash-embedding dimension (matches TextQueries)
@@ -104,7 +102,7 @@ object SearchQueries {
     * pruned directory reads. The in-run temp-dir write exists to exercise
     * that path end-to-end against the same oracle as search_bm25. */
   private val bm25IndexCache =
-    new graft.operators.DirMemo[String]("search.bm25IndexCache")
+    new graft.operators.BoundedMemo[String, String]("search.bm25IndexCache")
 
   def searchBm25Indexed(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
@@ -402,7 +400,7 @@ object SearchQueries {
     * identical to the derive-in-run variant, so they share one oracle;
     * the artifact build is memoized per corpus like the index queries. */
   private val ragIndexCache =
-    new graft.operators.DirMemo[(String, String)]("search.ragIndexCache")
+    new graft.operators.BoundedMemo[String, (String, String)]("search.ragIndexCache")
 
   def ragRetrieveIndexed(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
@@ -456,7 +454,7 @@ object SearchQueries {
     * class avoids doc_id < NQ so the query set is the standard one.
     * Build+delete memoized per corpus: repeat calls measure serving. */
   private val bm25DelCache =
-    new graft.operators.DirMemo[String]("search.bm25DelCache")
+    new graft.operators.BoundedMemo[String, String]("search.bm25DelCache")
   private val DelMod = 20
   private val DelRes = 13
 
@@ -520,7 +518,7 @@ object SearchQueries {
 
   // ---- phrase search through the stored positional index -------------------
   private val phraseIndexCache =
-    new graft.operators.DirMemo[String]("search.phraseIndexCache")
+    new graft.operators.BoundedMemo[String, String]("search.phraseIndexCache")
 
   /** [[searchPhrase]] through the SERVING path: the positional inverted
     * index ([[Search.writePhraseIndex]] — one (id, pos, term) row per
@@ -549,7 +547,7 @@ object SearchQueries {
   private val PhraseDelMod = 20
   private val PhraseDelRes = 11
   private val phraseDelCache =
-    new graft.operators.DirMemo[String]("search.phraseDelCache")
+    new graft.operators.BoundedMemo[String, String]("search.phraseDelCache")
 
   /** The takedown verb on the POSITIONAL index: build, tombstone the
     * `doc_id ≡ 11 (mod 20)` residue class (which removes a doc the base
@@ -634,7 +632,7 @@ object SearchQueries {
   // ---- typo-tolerant term lookup via the symmetric-delete index ------------
   private val FuzzyTerm = "streem"
   private val symDelCache =
-    new graft.operators.DirMemo[String]("search.symDelCache")
+    new graft.operators.BoundedMemo[String, String]("search.symDelCache")
 
   /** Spell-correction candidates for a misspelled query term ("streem"),
     * served from the stored symmetric-delete vocabulary index
@@ -692,7 +690,7 @@ object SearchQueries {
        |ORDER BY doc_id""".stripMargin
 
   private val trigramIndexCache =
-    new graft.operators.DirMemo[String]("search.trigramIndexCache")
+    new graft.operators.BoundedMemo[String, String]("search.trigramIndexCache")
   private def trigramIndexPath(s: SparkSession, d: String): String =
     trigramIndexCache.computeIfAbsent(d, _ => {
       val p = graft.Scratch.dir("graft_trgm_idx")
@@ -719,7 +717,7 @@ object SearchQueries {
   private val TrgmDelMod = 20
   private val TrgmDelRes = 8 // removes a doc the base needle query returns
   private val trigramDelCache =
-    new graft.operators.DirMemo[String]("search.trigramDelCache")
+    new graft.operators.BoundedMemo[String, String]("search.trigramDelCache")
 
   /** The takedown verb on the trigram store: build, tombstone the
     * `doc_id ≡ 8 (mod 20)` residue class (which removes a doc the base
@@ -748,50 +746,30 @@ object SearchQueries {
     "FROM documents",
     s"FROM (SELECT * FROM documents WHERE doc_id % $TrgmDelMod <> $TrgmDelRes) documents")
 
-  val defs: Map[String, Q] = Map(
-    "search_substring_scan" -> (searchSubstringScan _),
-    "search_substring_indexed" -> (searchSubstringIndexed _),
-    "search_substring_deleted" -> (searchSubstringDeleted _),
-    "search_fuzzy_term" -> (searchFuzzyTerm _),
-    "search_phrase" -> (searchPhrase _),
-    "search_phrase_indexed" -> (searchPhraseIndexed _),
-    "search_proximity_indexed" -> (searchProximityIndexed _),
-    "search_phrase_deleted" -> (searchPhraseDeleted _),
-    "search_bm25_deleted" -> (searchBm25Deleted _),
-    "search_bm25_filtered" -> (searchBm25Filtered _),
-    "search_bm25_filtered_indexed" -> (searchBm25FilteredIndexed _),
-    "search_bm25" -> (searchBm25 _),
-    "search_bm25_indexed" -> (searchBm25Indexed _),
-    "search_boolean" -> (searchBoolean _),
-    "search_bm25_prf" -> (searchBm25Prf _),
-    "search_hybrid_rrf" -> (searchHybridRrf _),
-    "rag_retrieve" -> (ragRetrieve _),
-    "rag_retrieve_indexed" -> (ragRetrieveIndexed _))
-
-  val oracle: Map[String, String] = Map(
-    "search_substring_scan" -> searchSubstringScanSql,
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("search_substring_scan", searchSubstringScan, searchSubstringScanSql),
     // serving-path twin: stored trigram index, identical answers — the
     // same independent substring-containment oracle
-    "search_substring_indexed" -> searchSubstringScanSql,
-    "search_substring_deleted" -> searchSubstringDeletedSql,
-    "search_fuzzy_term" -> searchFuzzyTermSql,
-    "search_phrase" -> searchPhraseSql,
+    QueryDef("search_substring_indexed", searchSubstringIndexed, searchSubstringScanSql),
+    QueryDef("search_substring_deleted", searchSubstringDeleted, searchSubstringDeletedSql),
+    QueryDef("search_fuzzy_term", searchFuzzyTerm, searchFuzzyTermSql),
+    QueryDef("search_phrase", searchPhrase, searchPhraseSql),
     // serving-path twin: stored positional index, identical answers —
     // the same independent substring-containment oracle
-    "search_phrase_indexed" -> searchPhraseSql,
-    "search_proximity_indexed" -> searchProximitySql,
-    "search_phrase_deleted" -> searchPhraseDeletedSql,
-    "search_bm25_deleted" -> searchBm25DeletedSql,
-    "search_bm25_filtered" -> searchBm25FilteredSql,
+    QueryDef("search_phrase_indexed", searchPhraseIndexed, searchPhraseSql),
+    QueryDef("search_proximity_indexed", searchProximityIndexed, searchProximitySql),
+    QueryDef("search_phrase_deleted", searchPhraseDeleted, searchPhraseDeletedSql),
+    QueryDef("search_bm25_deleted", searchBm25Deleted, searchBm25DeletedSql),
+    QueryDef("search_bm25_filtered", searchBm25Filtered, searchBm25FilteredSql),
     // serving-path twin: same filtered semantics, one shared oracle
-    "search_bm25_filtered_indexed" -> searchBm25FilteredSql,
-    "search_bm25" -> searchBm25Sql,
+    QueryDef("search_bm25_filtered_indexed", searchBm25FilteredIndexed, searchBm25FilteredSql),
+    QueryDef("search_bm25", searchBm25, searchBm25Sql),
     // the index is pure I/O layout — semantics ARE search_bm25's
-    "search_bm25_indexed" -> searchBm25Sql,
-    "search_boolean" -> searchBooleanSql,
-    "search_bm25_prf" -> searchBm25PrfSql,
-    "search_hybrid_rrf" -> searchHybridRrfSql,
-    "rag_retrieve" -> ragRetrieveSql,
+    QueryDef("search_bm25_indexed", searchBm25Indexed, searchBm25Sql),
+    QueryDef("search_boolean", searchBoolean, searchBooleanSql),
+    QueryDef("search_bm25_prf", searchBm25Prf, searchBm25PrfSql),
+    QueryDef("search_hybrid_rrf", searchHybridRrf, searchHybridRrfSql),
+    QueryDef("rag_retrieve", ragRetrieve, ragRetrieveSql),
     // serving-path twin: stored artifacts, identical answers — one oracle
-    "rag_retrieve_indexed" -> ragRetrieveSql)
+    QueryDef("rag_retrieve_indexed", ragRetrieveIndexed, ragRetrieveSql))
 }

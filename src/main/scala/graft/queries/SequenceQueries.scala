@@ -12,8 +12,6 @@ import graft.operators.{Dedup, Mix, Sequence, TextAnalysis}
   * All deterministic integer math; the DuckDB oracles replay the same
   * formulas (list slicing, window cumsum, recursive closure). */
 object SequenceQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   private val P = Dedup.HashMod // 1e9+7
   private val polyHashLambda =
     s"s -> list_reduce(list_transform(string_split(s,''), c -> CAST(ascii(c) AS BIGINT)), (acc, x) -> (acc*31 + x) % $P)"
@@ -990,47 +988,25 @@ object SequenceQueries {
        |GROUP BY a.worker ORDER BY worker""".stripMargin
   }
 
-  val defs: Map[String, Q] = Map(
-    "assign_rendezvous" -> (assignRendezvous _),
-    "assign_dense_ids" -> (assignDenseIds _),
-    "corpus_ingest" -> (corpusIngest _),
-    "corpus_build" -> (corpusBuild _),
-    "chunk_windows" -> (chunkWindows _),
-    "pack_sequences" -> (packSequences _),
-    "pack_stats" -> (packStats _),
-    "text_repetition" -> (textRepetition _),
-    "quality_gopher" -> (qualityGopher _),
-    "dedup_chunks" -> (dedupChunks _),
-    "decontaminate" -> (decontaminate _),
-    "shuffle_shards" -> (shuffleShards _),
-    "mix_epochs" -> (mixEpochs _),
-    "budget_select" -> (budgetSelect _),
-    "budget_select_weighted" -> (budgetSelectWeighted _),
-    "dedup_clusters" -> (dedupClusters _),
-    "dedup_soft_weights" -> (dedupSoftWeights _),
-    "dedup_clusters_incremental" -> (dedupClustersIncremental _),
-    "split_leakage_safe" -> (splitLeakageSafe _),
-    "split_cv_folds" -> (splitCvFolds _))
-
-  val oracle: Map[String, String] = Map(
-    "assign_rendezvous" -> assignRendezvousSql,
-    "assign_dense_ids" -> assignDenseIdsSql,
-    "corpus_ingest" -> corpusIngestSql,
-    "corpus_build" -> corpusBuildSql,
-    "chunk_windows" -> chunkWindowsSql,
-    "pack_sequences" -> packSequencesSql,
-    "pack_stats" -> packStatsSql,
-    "text_repetition" -> textRepetitionSql,
-    "quality_gopher" -> qualityGopherSql,
-    "dedup_chunks" -> dedupChunksSql,
-    "decontaminate" -> decontaminateSql,
-    "shuffle_shards" -> shuffleShardsSql,
-    "mix_epochs" -> mixEpochsSql,
-    "budget_select" -> budgetSelectSql,
-    "budget_select_weighted" -> budgetSelectWeightedSql,
-    "dedup_clusters" -> dedupClustersSql,
-    "dedup_soft_weights" -> dedupSoftWeightsSql,
-    "dedup_clusters_incremental" -> dedupClustersSql,
-    "split_leakage_safe" -> splitLeakageSafeSql,
-    "split_cv_folds" -> splitCvFoldsSql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("assign_rendezvous", assignRendezvous, assignRendezvousSql),
+    QueryDef("assign_dense_ids", assignDenseIds, assignDenseIdsSql),
+    QueryDef("corpus_ingest", corpusIngest, corpusIngestSql),
+    QueryDef("corpus_build", corpusBuild, corpusBuildSql),
+    QueryDef("chunk_windows", chunkWindows, chunkWindowsSql),
+    QueryDef("pack_sequences", packSequences, packSequencesSql),
+    QueryDef("pack_stats", packStats, packStatsSql),
+    QueryDef("text_repetition", textRepetition, textRepetitionSql),
+    QueryDef("quality_gopher", qualityGopher, qualityGopherSql),
+    QueryDef("dedup_chunks", dedupChunks, dedupChunksSql),
+    QueryDef("decontaminate", decontaminate, decontaminateSql),
+    QueryDef("shuffle_shards", shuffleShards, shuffleShardsSql),
+    QueryDef("mix_epochs", mixEpochs, mixEpochsSql),
+    QueryDef("budget_select", budgetSelect, budgetSelectSql),
+    QueryDef("budget_select_weighted", budgetSelectWeighted, budgetSelectWeightedSql),
+    QueryDef("dedup_clusters", dedupClusters, dedupClustersSql),
+    QueryDef("dedup_soft_weights", dedupSoftWeights, dedupSoftWeightsSql),
+    QueryDef("dedup_clusters_incremental", dedupClustersIncremental, dedupClustersSql),
+    QueryDef("split_leakage_safe", splitLeakageSafe, splitLeakageSafeSql),
+    QueryDef("split_cv_folds", splitCvFolds, splitCvFoldsSql))
 }

@@ -13,8 +13,6 @@ import graft.operators.Similarity
   * fold) over the same index order, so the doubles are bitwise identical
   * and row_number ranking agrees exactly. */
 object SimilarityQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   /** queries = vec_id < 10 (10 query vectors), k = 5. */
   private val K = 5
   private val NQ = 10
@@ -559,7 +557,7 @@ object SimilarityQueries {
     * hash-mismatches. Build+delete memoized per corpus like the other
     * index queries: repeat calls measure the serving probe. */
   private val ivfDelCache =
-    new graft.operators.DirMemo[String]("sim.ivfDelCache")
+    new graft.operators.BoundedMemo[String, String]("sim.ivfDelCache")
   private val DelMod = 20
   private val DelRes = 3
 
@@ -585,39 +583,21 @@ object SimilarityQueries {
 
   // -------------------------------------------------------------------------
 
-  val defs: Map[String, Q] = Map(
-    "sim_ivf_deleted" -> (simIvfDeleted _),
-    "dedup_semantic_incremental" -> (dedupSemanticIncremental _),
-    "sim_ivf_trained_topk" -> (simIvfTrainedTopk _),
-    "dedup_semantic" -> (dedupSemantic _),
-    "sim_pq_codes" -> (simPqCodes _),
-    "sim_adc_topk" -> (simAdcTopk _),
-    "sim_bruteforce_topk" -> (simBruteforceTopk _),
-    "eval_ann_recall" -> (evalAnnRecall _),
-    "mine_aligned_pairs" -> (mineAlignedPairs _),
-    "mine_hard_negatives" -> (mineHardNegatives _),
-    "sim_lsh_topk" -> (simLshTopk _),
-    "sim_ivf_topk" -> (simIvfTopk _),
-    "sim_ivf_filtered" -> (simIvfFiltered _),
-    "sim_kmeans_refine" -> (simKmeansRefine _),
-    "sim_cluster_stats" -> (simClusterStats _),
-    "dedup_embedding_pairs" -> (dedupEmbeddingPairs _))
-
-  val oracle: Map[String, String] = Map(
-    "sim_ivf_deleted" -> simIvfDeletedSql,
-    "dedup_semantic_incremental" -> dedupSemanticIncrementalSql,
-    "sim_ivf_trained_topk" -> simIvfTrainedTopkSql,
-    "dedup_semantic" -> dedupSemanticSql,
-    "sim_pq_codes" -> simPqCodesSql,
-    "sim_adc_topk" -> simAdcTopkSql,
-    "sim_bruteforce_topk" -> simBruteforceTopkSql,
-    "eval_ann_recall" -> evalAnnRecallSql,
-    "mine_aligned_pairs" -> mineAlignedPairsSql,
-    "mine_hard_negatives" -> mineHardNegativesSql,
-    "sim_lsh_topk" -> simLshTopkSql,
-    "sim_ivf_topk" -> simIvfTopkSql,
-    "sim_ivf_filtered" -> simIvfFilteredSql,
-    "sim_kmeans_refine" -> simKmeansRefineSql,
-    "sim_cluster_stats" -> simClusterStatsSql,
-    "dedup_embedding_pairs" -> dedupEmbeddingPairsSql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("sim_ivf_deleted", simIvfDeleted, simIvfDeletedSql),
+    QueryDef("dedup_semantic_incremental", dedupSemanticIncremental, dedupSemanticIncrementalSql),
+    QueryDef("sim_ivf_trained_topk", simIvfTrainedTopk, simIvfTrainedTopkSql),
+    QueryDef("dedup_semantic", dedupSemantic, dedupSemanticSql),
+    QueryDef("sim_pq_codes", simPqCodes, simPqCodesSql),
+    QueryDef("sim_adc_topk", simAdcTopk, simAdcTopkSql),
+    QueryDef("sim_bruteforce_topk", simBruteforceTopk, simBruteforceTopkSql),
+    QueryDef("eval_ann_recall", evalAnnRecall, evalAnnRecallSql),
+    QueryDef("mine_aligned_pairs", mineAlignedPairs, mineAlignedPairsSql),
+    QueryDef("mine_hard_negatives", mineHardNegatives, mineHardNegativesSql),
+    QueryDef("sim_lsh_topk", simLshTopk, simLshTopkSql),
+    QueryDef("sim_ivf_topk", simIvfTopk, simIvfTopkSql),
+    QueryDef("sim_ivf_filtered", simIvfFiltered, simIvfFilteredSql),
+    QueryDef("sim_kmeans_refine", simKmeansRefine, simKmeansRefineSql),
+    QueryDef("sim_cluster_stats", simClusterStats, simClusterStatsSql),
+    QueryDef("dedup_embedding_pairs", dedupEmbeddingPairs, dedupEmbeddingPairsSql))
 }

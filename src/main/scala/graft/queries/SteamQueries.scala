@@ -14,8 +14,6 @@ import graft.functions.SteamParsers
   * are therefore true two-implementation checks, not fixture echoes.
   */
 object SteamQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   // The SQL side generates from SteamParsers' OWN ordered tables — one
   // source of truth for the order-sensitive 19-symbol strip and the
   // first-match currency scan; the two implementations cannot drift.
@@ -283,19 +281,11 @@ object SteamQueries {
 
   // -------------------------------------------------------------------------
 
-  val defs: Map[String, Q] = Map(
-    "f1_parse_price" -> (f1ParsePrice _),
-    "f2_minor_units" -> (f2MinorUnits _),
-    "f3_parse_volume" -> (f3ParseVolume _),
-    "f5_parse_datetime" -> (f5ParseDatetime _),
-    "f7_parse_activity" -> (f7ParseActivity _),
-    "f9_price_to_float" -> (f9PriceToFloat _))
-
-  val oracle: Map[String, String] = Map(
-    "f1_parse_price" -> f1Sql,
-    "f2_minor_units" -> f2Sql,
-    "f3_parse_volume" -> f3Sql,
-    "f5_parse_datetime" -> f5Sql,
-    "f7_parse_activity" -> f7Sql,
-    "f9_price_to_float" -> f9Sql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("f1_parse_price", f1ParsePrice, f1Sql),
+    QueryDef("f2_minor_units", f2MinorUnits, f2Sql),
+    QueryDef("f3_parse_volume", f3ParseVolume, f3Sql),
+    QueryDef("f5_parse_datetime", f5ParseDatetime, f5Sql),
+    QueryDef("f7_parse_activity", f7ParseActivity, f7Sql),
+    QueryDef("f9_price_to_float", f9PriceToFloat, f9Sql))
 }

@@ -10,8 +10,6 @@ import graft.operators.{Dedup, Mix, Relational, TextAnalysis}
   * document fingerprinting. Integer counts + single double divisions →
   * bitwise oracle parity. */
 object TextQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   private val stopList = TextAnalysis.Stopwords.map(s => s"'$s'").mkString("[", ", ", "]")
 
   // ---- per-doc stats + quality gate ----------------------------------------
@@ -399,7 +397,7 @@ object TextQueries {
 
   // ---- stored daily CMS sketches: span frequencies without fact re-reads ---
   private val cmsStoreCache =
-    new graft.operators.DirMemo[String]("text.cmsStoreCache")
+    new graft.operators.BoundedMemo[String, String]("text.cmsStoreCache")
 
   /** The STORED-sketch serving path of [[sketchCmsTopk]] and the
     * frequency leg of the persisted-sketch lifecycle (Bloom membership,
@@ -709,7 +707,7 @@ object TextQueries {
 
   // ---- stored daily KMV sketches: span cardinality without fact re-reads ---
   private val kmvStoreCache =
-    new graft.operators.DirMemo[String]("text.kmvStoreCache")
+    new graft.operators.BoundedMemo[String, String]("text.kmvStoreCache")
 
   /** Distinct active (user, event_type) combos served from STORED daily
     * KMV partials — the cardinality twin of [[sketchCmsIncremental]]:
@@ -794,7 +792,7 @@ object TextQueries {
     * events because span-of-dailies ≡ span build exactly. */
   // ---- rolling-window distinct from stored daily KMV sketches --------------
   private val kmvUserStoreCache =
-    new graft.operators.DirMemo[String]("text.kmvUserStoreCache")
+    new graft.operators.BoundedMemo[String, String]("text.kmvUserStoreCache")
 
   /** Stored per-day KMV user sketches — the rolling read's serving
     * state. Built once per corpus ([[Relational.kmvDailySketches]] on
@@ -894,7 +892,7 @@ object TextQueries {
 
   // ---- stored daily quantile histograms: span percentiles, oracle-exact ----
   private val qhStoreCache =
-    new graft.operators.DirMemo[String]("text.qhStoreCache")
+    new graft.operators.BoundedMemo[String, String]("text.qhStoreCache")
 
   /** The QUANTILE leg of the persisted-sketch family — the read an
     * A9-style volatility dashboard actually serves ("p95 value per
@@ -1652,7 +1650,7 @@ object TextQueries {
     * memoized per corpus like the other index queries: steady runs
     * measure scoring against the stored model, the production cost. */
   private val lmModelCache =
-    new graft.operators.DirMemo[String]("text.lmModelCache")
+    new graft.operators.BoundedMemo[String, String]("text.lmModelCache")
 
   def textLmCross(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
@@ -2244,111 +2242,59 @@ object TextQueries {
        |FROM p""".stripMargin
   }
 
-  val defs: Map[String, Q] = Map(
-    "quality_ensemble_rrf" -> (qualityEnsembleRrf _),
-    "eval_langid_confusion" -> (evalLangidConfusion _),
-    "eval_quality_kappa" -> (evalQualityKappa _),
-    "vocab_coverage" -> (vocabCoverage _),
-    "quality_calibration" -> (qualityCalibration _),
-    "select_pareto" -> (selectPareto _),
-    "sim_text_topk" -> (simTextTopk _),
-    "quality_top_fraction" -> (qualityTopFraction _),
-    "quality_top_fraction_by_domain" -> (qualityTopFractionByDomain _),
-    "quality_dsir" -> (qualityDsir _),
-    "overlap_ngram_matrix" -> (overlapNgramMatrix _),
-    "sketch_cms_topk" -> (sketchCmsTopk _),
-    "sketch_cms_incremental" -> (sketchCmsIncremental _),
-    "sketch_cms_span" -> (sketchCmsSpan _),
-    "sketch_kmv_distinct" -> (sketchKmvDistinct _),
-    "sketch_kmv_jaccard" -> (sketchKmvJaccard _),
-    "sketch_kmv_incremental" -> (sketchKmvIncremental _),
-    "sketch_kmv_span" -> (sketchKmvSpan _),
-    "sketch_kmv_rolling" -> (sketchKmvRolling _),
-    "sketch_quantile_span" -> (sketchQuantileSpan _),
-    "sketch_quantile_rolling" -> (sketchQuantileRolling _),
-    "sketch_quantile_incremental" -> (sketchQuantileIncremental _),
-    "sketch_quantile_drift" -> (sketchQuantileDrift _),
-    "sketch_cms_join_size" -> (sketchCmsJoinSize _),
-    "stats_equidepth" -> (statsEquidepth _),
-    "vocab_oov_by_domain" -> (vocabOovByDomain _),
-    "sample_fixed_k" -> (sampleFixedK _),
-    "sample_weighted_priority" -> (sampleWeightedPriority _),
-    "sample_systematic_w" -> (sampleSystematicW _),
-    "text_hash_embed" -> (textHashEmbed _),
-    "quality_classifier" -> (qualityClassifier _),
-    "text_tfidf_topk" -> (textTfidfTopk _),
-    "text_novelty" -> (textNovelty _),
-    "text_winnow" -> (textWinnow _),
-    "text_pii_scrub" -> (textPiiScrub _),
-    "mix_temperature" -> (mixTemperature _),
-    "vocab_bpe_pairs" -> (vocabBpePairs _),
-    "mix_schedule" -> (mixSchedule _),
-    "mix_curriculum" -> (mixCurriculum _),
-    "text_commonness" -> (textCommonness _),
-    "text_bigram_lm" -> (textBigramLm _),
-    "text_collocations" -> (textCollocations _),
-    "text_lm_cross" -> (textLmCross _),
-    "corpus_report" -> (corpusReport _),
-    "tokenize_ids" -> (tokenizeIds _),
-    "sample_stratified" -> (sampleStratified _),
-    "text_langid_chargram" -> (textLangidChargram _),
-    "curation_pipeline" -> (curationPipeline _),
-    "text_stats" -> (textStats _),
-    "text_langid" -> (textLangid _),
-    "text_token_counts" -> (textTokenCounts _),
-    "text_fingerprint" -> (textFingerprint _))
-
-  val oracle: Map[String, String] = Map(
-    "quality_ensemble_rrf" -> qualityEnsembleRrfSql,
-    "eval_langid_confusion" -> evalLangidConfusionSql,
-    "eval_quality_kappa" -> evalQualityKappaSql,
-    "quality_calibration" -> qualityCalibrationSql,
-    "vocab_coverage" -> vocabCoverageSql,
-    "select_pareto" -> selectParetoSql,
-    "sim_text_topk" -> simTextTopkSql,
-    "quality_top_fraction" -> qualityTopFractionSql,
-    "quality_top_fraction_by_domain" -> qualityTopFractionByDomainSql,
-    "quality_dsir" -> qualityDsirSql,
-    "overlap_ngram_matrix" -> overlapNgramMatrixSql,
-    "sketch_cms_topk" -> sketchCmsTopkSql,
-    "sketch_cms_incremental" -> sketchCmsIncrementalSql,
-    "sketch_cms_span" -> sketchCmsSpanSql,
-    "sketch_kmv_distinct" -> sketchKmvDistinctSql,
-    "sketch_kmv_jaccard" -> sketchKmvJaccardSql,
-    "sketch_kmv_incremental" -> sketchKmvIncrementalSql,
-    "sketch_kmv_span" -> sketchKmvSpanSql,
-    "sketch_kmv_rolling" -> sketchKmvRollingSql,
-    "sketch_quantile_span" -> sketchQuantileSpanSql,
-    "sketch_quantile_rolling" -> sketchQuantileRollingSql,
-    "sketch_quantile_incremental" -> sketchQuantileIncrementalSql,
-    "sketch_quantile_drift" -> sketchQuantileDriftSql,
-    "sketch_cms_join_size" -> sketchCmsJoinSizeSql,
-    "stats_equidepth" -> statsEquidepthSql,
-    "vocab_oov_by_domain" -> vocabOovByDomainSql,
-    "sample_fixed_k" -> sampleFixedKSql,
-    "sample_weighted_priority" -> sampleWeightedPrioritySql,
-    "sample_systematic_w" -> sampleSystematicWSql,
-    "text_hash_embed" -> textHashEmbedSql,
-    "quality_classifier" -> qualityClassifierSql,
-    "text_tfidf_topk" -> textTfidfTopkSql,
-    "text_novelty" -> textNoveltySql,
-    "text_winnow" -> textWinnowSql,
-    "text_pii_scrub" -> textPiiScrubSql,
-    "mix_temperature" -> mixTemperatureSql,
-    "vocab_bpe_pairs" -> vocabBpePairsSql,
-    "mix_schedule" -> mixScheduleSql,
-    "mix_curriculum" -> mixCurriculumSql,
-    "text_commonness" -> textCommonnessSql,
-    "text_bigram_lm" -> textBigramLmSql,
-    "text_collocations" -> textCollocationsSql,
-    "text_lm_cross" -> textLmCrossSql,
-    "corpus_report" -> corpusReportSql,
-    "tokenize_ids" -> tokenizeIdsSql,
-    "sample_stratified" -> sampleStratifiedSql,
-    "text_langid_chargram" -> textLangidChargramSql,
-    "curation_pipeline" -> curationPipelineSql,
-    "text_stats" -> textStatsSql,
-    "text_langid" -> textLangidSql,
-    "text_token_counts" -> textTokenCountsSql,
-    "text_fingerprint" -> textFingerprintSql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("quality_ensemble_rrf", qualityEnsembleRrf, qualityEnsembleRrfSql),
+    QueryDef("eval_langid_confusion", evalLangidConfusion, evalLangidConfusionSql),
+    QueryDef("eval_quality_kappa", evalQualityKappa, evalQualityKappaSql),
+    QueryDef("vocab_coverage", vocabCoverage, vocabCoverageSql),
+    QueryDef("quality_calibration", qualityCalibration, qualityCalibrationSql),
+    QueryDef("select_pareto", selectPareto, selectParetoSql),
+    QueryDef("sim_text_topk", simTextTopk, simTextTopkSql),
+    QueryDef("quality_top_fraction", qualityTopFraction, qualityTopFractionSql),
+    QueryDef("quality_top_fraction_by_domain",
+      qualityTopFractionByDomain, qualityTopFractionByDomainSql),
+    QueryDef("quality_dsir", qualityDsir, qualityDsirSql),
+    QueryDef("overlap_ngram_matrix", overlapNgramMatrix, overlapNgramMatrixSql),
+    QueryDef("sketch_cms_topk", sketchCmsTopk, sketchCmsTopkSql),
+    QueryDef("sketch_cms_incremental", sketchCmsIncremental, sketchCmsIncrementalSql),
+    QueryDef("sketch_cms_span", sketchCmsSpan, sketchCmsSpanSql),
+    QueryDef("sketch_kmv_distinct", sketchKmvDistinct, sketchKmvDistinctSql),
+    QueryDef("sketch_kmv_jaccard", sketchKmvJaccard, sketchKmvJaccardSql),
+    QueryDef("sketch_kmv_incremental", sketchKmvIncremental, sketchKmvIncrementalSql),
+    QueryDef("sketch_kmv_span", sketchKmvSpan, sketchKmvSpanSql),
+    QueryDef("sketch_kmv_rolling", sketchKmvRolling, sketchKmvRollingSql),
+    QueryDef("sketch_quantile_span", sketchQuantileSpan, sketchQuantileSpanSql),
+    QueryDef("sketch_quantile_rolling", sketchQuantileRolling, sketchQuantileRollingSql),
+    QueryDef("sketch_quantile_incremental",
+      sketchQuantileIncremental, sketchQuantileIncrementalSql),
+    QueryDef("sketch_quantile_drift", sketchQuantileDrift, sketchQuantileDriftSql),
+    QueryDef("sketch_cms_join_size", sketchCmsJoinSize, sketchCmsJoinSizeSql),
+    QueryDef("stats_equidepth", statsEquidepth, statsEquidepthSql),
+    QueryDef("vocab_oov_by_domain", vocabOovByDomain, vocabOovByDomainSql),
+    QueryDef("sample_fixed_k", sampleFixedK, sampleFixedKSql),
+    QueryDef("sample_weighted_priority", sampleWeightedPriority, sampleWeightedPrioritySql),
+    QueryDef("sample_systematic_w", sampleSystematicW, sampleSystematicWSql),
+    QueryDef("text_hash_embed", textHashEmbed, textHashEmbedSql),
+    QueryDef("quality_classifier", qualityClassifier, qualityClassifierSql),
+    QueryDef("text_tfidf_topk", textTfidfTopk, textTfidfTopkSql),
+    QueryDef("text_novelty", textNovelty, textNoveltySql),
+    QueryDef("text_winnow", textWinnow, textWinnowSql),
+    QueryDef("text_pii_scrub", textPiiScrub, textPiiScrubSql),
+    QueryDef("mix_temperature", mixTemperature, mixTemperatureSql),
+    QueryDef("vocab_bpe_pairs", vocabBpePairs, vocabBpePairsSql),
+    QueryDef("mix_schedule", mixSchedule, mixScheduleSql),
+    QueryDef("mix_curriculum", mixCurriculum, mixCurriculumSql),
+    QueryDef("text_commonness", textCommonness, textCommonnessSql),
+    QueryDef("text_bigram_lm", textBigramLm, textBigramLmSql),
+    QueryDef("text_collocations", textCollocations, textCollocationsSql),
+    QueryDef("text_lm_cross", textLmCross, textLmCrossSql),
+    QueryDef("corpus_report", corpusReport, corpusReportSql),
+    QueryDef("tokenize_ids", tokenizeIds, tokenizeIdsSql),
+    QueryDef("sample_stratified", sampleStratified, sampleStratifiedSql),
+    QueryDef("text_langid_chargram", textLangidChargram, textLangidChargramSql),
+    QueryDef("curation_pipeline", curationPipeline, curationPipelineSql),
+    QueryDef("text_stats", textStats, textStatsSql),
+    QueryDef("text_langid", textLangid, textLangidSql),
+    QueryDef("text_token_counts", textTokenCounts, textTokenCountsSql),
+    QueryDef("text_fingerprint", textFingerprint, textFingerprintSql))
 }

@@ -19,8 +19,6 @@ import graft.operators.TimeSeries
   * per-run `max`) on BOTH sides instead of engine-specific
   * `IGNORE NULLS`. */
 object TimeSeriesQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   private val evWrap =
     "(SELECT * REPLACE (CAST(ts AS TIMESTAMP) AS ts) FROM events) events"
 
@@ -668,45 +666,24 @@ object TimeSeriesQueries {
        |GROUP BY d.key
        |ORDER BY event_type""".stripMargin
 
-  val defs: Map[String, Q] = Map(
-    "ts_snaive_eval" -> (tsSnaiveEval _),
-    "ts_ohlc" -> (tsOhlc _),
-    "ts_theil_sen" -> (tsTheilSen _),
-    "ts_resample_ffill" -> (tsResampleFfill _),
-    "ts_interp" -> (tsInterp _),
-    "ts_moving_avg" -> (tsMovingAvg _),
-    "ts_ewma" -> (tsEwma _),
-    "ts_dow_profile" -> (tsDowProfile _),
-    "ts_deseasonalize" -> (tsDeseasonalize _),
-    "ts_anomaly_robust" -> (tsAnomalyRobust _),
-    "ts_anomaly" -> (tsAnomaly _),
-    "ts_cusum" -> (tsCusum _),
-    "ts_holt" -> (tsHolt _),
-    "ts_acf" -> (tsAcf _),
-    "ts_xcorr" -> (tsXcorr _),
-    "ts_holt_eval" -> (tsHoltEval _),
-    "a23_percentile_rank" -> (a23PercentileRank _),
-    "ts_trend" -> (tsTrend _),
-    "ts_mk_trend" -> (tsMkTrend _))
-
-  val oracle: Map[String, String] = Map(
-    "ts_snaive_eval" -> tsSnaiveEvalSql,
-    "ts_ohlc" -> tsOhlcSql,
-    "ts_theil_sen" -> tsTheilSenSql,
-    "ts_resample_ffill" -> tsResampleFfillSql,
-    "ts_interp" -> tsInterpSql,
-    "ts_moving_avg" -> tsMovingAvgSql,
-    "ts_ewma" -> tsEwmaSql,
-    "ts_dow_profile" -> tsDowProfileSql,
-    "ts_deseasonalize" -> tsDeseasonalizeSql,
-    "ts_anomaly_robust" -> tsAnomalyRobustSql,
-    "ts_anomaly" -> tsAnomalySql,
-    "ts_cusum" -> tsCusumSql,
-    "ts_holt" -> tsHoltSql,
-    "ts_acf" -> tsAcfSql,
-    "ts_xcorr" -> tsXcorrSql,
-    "ts_holt_eval" -> tsHoltEvalSql,
-    "a23_percentile_rank" -> a23Sql,
-    "ts_trend" -> tsTrendSql,
-    "ts_mk_trend" -> tsMkTrendSql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("ts_snaive_eval", tsSnaiveEval, tsSnaiveEvalSql),
+    QueryDef("ts_ohlc", tsOhlc, tsOhlcSql),
+    QueryDef("ts_theil_sen", tsTheilSen, tsTheilSenSql),
+    QueryDef("ts_resample_ffill", tsResampleFfill, tsResampleFfillSql),
+    QueryDef("ts_interp", tsInterp, tsInterpSql),
+    QueryDef("ts_moving_avg", tsMovingAvg, tsMovingAvgSql),
+    QueryDef("ts_ewma", tsEwma, tsEwmaSql),
+    QueryDef("ts_dow_profile", tsDowProfile, tsDowProfileSql),
+    QueryDef("ts_deseasonalize", tsDeseasonalize, tsDeseasonalizeSql),
+    QueryDef("ts_anomaly_robust", tsAnomalyRobust, tsAnomalyRobustSql),
+    QueryDef("ts_anomaly", tsAnomaly, tsAnomalySql),
+    QueryDef("ts_cusum", tsCusum, tsCusumSql),
+    QueryDef("ts_holt", tsHolt, tsHoltSql),
+    QueryDef("ts_acf", tsAcf, tsAcfSql),
+    QueryDef("ts_xcorr", tsXcorr, tsXcorrSql),
+    QueryDef("ts_holt_eval", tsHoltEval, tsHoltEvalSql),
+    QueryDef("a23_percentile_rank", a23PercentileRank, a23Sql),
+    QueryDef("ts_trend", tsTrend, tsTrendSql),
+    QueryDef("ts_mk_trend", tsMkTrend, tsMkTrendSql))
 }

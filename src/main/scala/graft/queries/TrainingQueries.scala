@@ -15,8 +15,6 @@ import graft.operators.Dedup
   * IEEE-identical in both engines, so no rounding fudge is needed.
   */
 object TrainingQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   private val P = Dedup.HashMod // 1e9+7
 
   private val polyHashLambda =
@@ -303,7 +301,8 @@ object TrainingQueries {
     * banding + agreement arithmetic, so a stale or torn index read would
     * hash-mismatch. Index build memoized per corpus like the BM25/IVF
     * queries: repeat calls measure the probe, which is the serving cost. */
-  private val lshIndexCache = new graft.operators.DirMemo[String]("training.lshIndexCache")
+  private val lshIndexCache =
+    new graft.operators.BoundedMemo[String, String]("training.lshIndexCache")
 
   def dedupLshIndexed(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
@@ -490,7 +489,7 @@ object TrainingQueries {
     * [[graft.Scratch]]'s shutdown hook), and ANY session can read it, so
     * plain `computeIfAbsent` suffices — no staleness predicate at all. */
   private val bloomStanding =
-    new graft.operators.DirMemo[(String, Array[Byte])]("training.bloomStanding")
+    new graft.operators.BoundedMemo[String, (String, Array[Byte])]("training.bloomStanding")
 
   def dedupBloomIncremental(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
@@ -584,7 +583,7 @@ object TrainingQueries {
     * standing (7 mod 30 is never 0 mod 10). Build+delete memoized per
     * corpus: repeat calls measure the probe. */
   private val lshDelCache =
-    new graft.operators.DirMemo[String]("training.lshDelCache")
+    new graft.operators.BoundedMemo[String, String]("training.lshDelCache")
   private val LshDelMod = 30
   private val LshDelRes = 7
 
@@ -688,39 +687,21 @@ object TrainingQueries {
        |FROM documents d LEFT JOIN m2 USING (doc_id) LEFT JOIN m3 USING (doc_id)
        |ORDER BY doc_id""".stripMargin
 
-  val defs: Map[String, Q] = Map(
-    "quality_rep_ngrams" -> (qualityRepNgrams _),
-    "dedup_lsh_deleted" -> (dedupLshDeleted _),
-    "dedup_exact" -> (dedupExact _),
-    "dedup_normalized" -> (dedupNormalized _),
-    "dedup_lsh_indexed" -> (dedupLshIndexed _),
-    "dedup_minhash_pairs" -> (dedupMinhashPairs _),
-    "dedup_containment" -> (dedupContainment _),
-    "dedup_containment_capped" -> (dedupContainmentCapped _),
-    "eval_neardup_pr" -> (evalNeardupPr _),
-    "eval_neardup_pr_sampled" -> (evalNeardupPrSampled _),
-    "dedup_simhash" -> (dedupSimhash _),
-    "dedup_incremental" -> (dedupIncremental _),
-    "dedup_spans" -> (dedupSpans _),
-    "dedup_span_rewrite" -> (dedupSpanRewrite _),
-    "dedup_bloom_incremental" -> (dedupBloomIncremental _),
-    "dedup_ngram_pairs" -> (dedupNgramPairs _))
-
-  val oracle: Map[String, String] = Map(
-    "quality_rep_ngrams" -> qualityRepNgramsSql,
-    "dedup_lsh_deleted" -> dedupLshDeletedSql,
-    "dedup_exact" -> dedupExactSql,
-    "dedup_normalized" -> dedupNormalizedSql,
-    "dedup_lsh_indexed" -> dedupLshIndexedSql,
-    "dedup_minhash_pairs" -> dedupMinhashPairsSql,
-    "dedup_containment" -> dedupContainmentSql,
-    "dedup_containment_capped" -> dedupContainmentCappedSql,
-    "eval_neardup_pr" -> evalNeardupPrSql,
-    "eval_neardup_pr_sampled" -> evalNeardupPrSampledSql,
-    "dedup_simhash" -> dedupSimhashSql,
-    "dedup_incremental" -> dedupIncrementalSql,
-    "dedup_spans" -> dedupSpansSql,
-    "dedup_span_rewrite" -> dedupSpanRewriteSql,
-    "dedup_bloom_incremental" -> dedupBloomIncrementalSql,
-    "dedup_ngram_pairs" -> dedupNgramPairsSql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("quality_rep_ngrams", qualityRepNgrams, qualityRepNgramsSql),
+    QueryDef("dedup_lsh_deleted", dedupLshDeleted, dedupLshDeletedSql),
+    QueryDef("dedup_exact", dedupExact, dedupExactSql),
+    QueryDef("dedup_normalized", dedupNormalized, dedupNormalizedSql),
+    QueryDef("dedup_lsh_indexed", dedupLshIndexed, dedupLshIndexedSql),
+    QueryDef("dedup_minhash_pairs", dedupMinhashPairs, dedupMinhashPairsSql),
+    QueryDef("dedup_containment", dedupContainment, dedupContainmentSql),
+    QueryDef("dedup_containment_capped", dedupContainmentCapped, dedupContainmentCappedSql),
+    QueryDef("eval_neardup_pr", evalNeardupPr, evalNeardupPrSql),
+    QueryDef("eval_neardup_pr_sampled", evalNeardupPrSampled, evalNeardupPrSampledSql),
+    QueryDef("dedup_simhash", dedupSimhash, dedupSimhashSql),
+    QueryDef("dedup_incremental", dedupIncremental, dedupIncrementalSql),
+    QueryDef("dedup_spans", dedupSpans, dedupSpansSql),
+    QueryDef("dedup_span_rewrite", dedupSpanRewrite, dedupSpanRewriteSql),
+    QueryDef("dedup_bloom_incremental", dedupBloomIncremental, dedupBloomIncrementalSql),
+    QueryDef("dedup_ngram_pairs", dedupNgramPairs, dedupNgramPairsSql))
 }

@@ -10,8 +10,6 @@ import graft.sources.Wire
   * its JSON operators and re-implements the F1-F5 scalar algorithms in
   * SQL — a full two-engine pipeline check, not a fixture echo. */
 object WireQueries {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---- literal helpers -----------------------------------------------------
 
   /** JSON string escape (control chars + quote + backslash). */
@@ -243,15 +241,9 @@ object WireQueries {
 
   // -------------------------------------------------------------------------
 
-  val defs: Map[String, Q] = Map(
-    "s8_silver_overview" -> (s8SilverOverview _),
-    "s9_silver_histogram" -> (s9SilverHistogram _),
-    "s10_activity_events" -> (s10ActivityEvents _),
-    "s11_silver_history" -> (s11SilverHistory _))
-
-  val oracle: Map[String, String] = Map(
-    "s8_silver_overview" -> s8Sql,
-    "s9_silver_histogram" -> s9Sql,
-    "s10_activity_events" -> s10Sql,
-    "s11_silver_history" -> s11Sql)
+  val queries: Seq[QueryDef] = Seq(
+    QueryDef("s8_silver_overview", s8SilverOverview, s8Sql),
+    QueryDef("s9_silver_histogram", s9SilverHistogram, s9Sql),
+    QueryDef("s10_activity_events", s10ActivityEvents, s10Sql),
+    QueryDef("s11_silver_history", s11SilverHistory, s11Sql))
 }

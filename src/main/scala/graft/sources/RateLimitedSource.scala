@@ -82,7 +82,7 @@ object GraftClocks {
   // manual(key) on EVERY read, never caching the AtomicLong); test
   // drivers touching >256 clock keys in one JVM must do the same.
   private val clocks =
-    new graft.operators.DirMemo[AtomicLong]("sources.graftClocks", 256)
+    new graft.operators.BoundedMemo[String, AtomicLong]("sources.graftClocks", 256)
   def manual(key: String): AtomicLong =
     clocks.computeIfAbsent(key, _ => new AtomicLong(0L))
 }

@@ -152,29 +152,14 @@ class BenchSpec extends AnyFunSuite {
     import spark.implicits._
     val tally = new Bench.ShuffleTally
     spark.sparkContext.addSparkListener(tally)
-    // the same poll-stabilize discipline Bench.main uses: stabilize on
-    // the monotone TASK-END count, not on bytes (r15 ADVICE: bytes
-    // starts at 0, so two 0==0 reads before the groupBy's async events
-    // deliver would exit early under load — a flaky false failure, and
-    // it contradicted the taskEnds discipline the production drain
-    // documents), then read bytes once stable
-    def drain(): Long = {
-      var prev = tally.taskEnds.get(); var stable = 0; var waited = 0
-      while (stable < 2 && waited < 4000) {
-        Thread.sleep(50); waited += 50
-        val cur = tally.taskEnds.get()
-        if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-      }
-      tally.bytes.get()
-    }
     (1 to 10000).toDF("x")
       .groupBy((org.apache.spark.sql.functions.col("x") % 7).as("k"))
       .count().collect()
-    val afterShuffle = drain()
+    val afterShuffle = tally.drain()
     assert(afterShuffle > 0L, "a groupBy must write shuffle bytes")
     (1 to 1000).toDF("y")
       .select(org.apache.spark.sql.functions.col("y") * 2).collect()
-    assert(drain() == afterShuffle,
+    assert(tally.drain() == afterShuffle,
       "a narrow map job must not move the shuffle tally")
     assert(tally.spilled.get() == 0L,
       "tiny in-memory jobs must not spill (the artifact's spill_mb field)")
@@ -189,11 +174,11 @@ class BenchSpec extends AnyFunSuite {
     def q = (1 to 20000).toDF("x")
       .groupBy((org.apache.spark.sql.functions.col("x") % 97).as("k"))
       .agg(org.apache.spark.sql.functions.sum("x"))
-    val base = drain()
+    val base = tally.drain()
     q.collect()
-    val d1 = drain() - base
+    val d1 = tally.drain() - base
     q.collect()
-    val d2 = drain() - base - d1
+    val d2 = tally.drain() - base - d1
     assert(d1 > 0L, "the volume query must shuffle")
     assert(d1 == d2,
       s"same plan + same data must shuffle identical bytes: $d1 vs $d2")

@@ -8,11 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * than as a silent rows-only downgrade in the next correctness report. */
 class ContractSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = LocalSession(2)
 
   test("every query has an oracle twin — no rows-only downgrades") {
     // even the HLL sketch query carries an oracle now: its contract is
@@ -25,6 +21,37 @@ class ContractSpec extends AnyFunSuite {
   test("no oracle without a query; names are well-formed") {
     assert((SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet).isEmpty)
     assert(SparkEntry.queries.keySet.forall(_.matches("[a-z][a-z0-9_]*")))
+  }
+
+  test("QueryDef.registry rejects a repeated name instead of letting one " +
+    "pack shadow another") {
+    import graft.queries.QueryDef
+    val run: QueryDef.Q = (s, _) => s.emptyDataFrame
+    val e = intercept[IllegalArgumentException] {
+      QueryDef.registry(Seq(QueryDef("dup_q", run, "SELECT 1"),
+        QueryDef("other_q", run, "SELECT 2"), QueryDef("dup_q", run, "SELECT 3")))
+    }
+    assert(e.getMessage.contains("duplicate query names: dup_q"), e.getMessage)
+  }
+
+  test("LocalSession pins ANSI: an integer-cents sum past the long range " +
+    "raises ARITHMETIC_OVERFLOW instead of wrapping") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.sum
+    import graft.queries.CoreQueries.{cents, revenueQ}
+    assert(s.conf.get("spark.sql.ansi.enabled") == "true")
+    // cents(4e14)·(100 − cents(0)) = 4e18 revenue units per row: two rows
+    // fit in a long, three pass Long.MaxValue ≈ 9.22e18 in the sum
+    val li = Seq.fill(3)((4.0e14, 0.0)).toDF("l_extendedprice", "l_discount")
+    assert(li.limit(2).agg(revenueQ).head().getLong(0) == 8000000000000000000L)
+    // cents(6e16) = 6e18 per row: two rows pass the long range
+    val qty = Seq.fill(2)(6.0e16).toDF("l_quantity")
+    for (over <- Seq(li.agg(revenueQ), qty.agg(sum(cents("l_quantity"))))) {
+      val e = intercept[Exception](over.collect())
+      assert(String.valueOf(e.getMessage).contains("ARITHMETIC_OVERFLOW"),
+        e.getMessage)
+    }
   }
 
   test("flagship entry returns rows at the smoke scale factor") {

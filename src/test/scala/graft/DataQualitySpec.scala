@@ -322,6 +322,37 @@ class DataQualitySpec extends AnyFunSuite {
     assert(ex.getMessage.contains("maxPairs"), ex.getMessage)
   }
 
+  test("failOnCap counts only non-null block keys: an oversized null-key " +
+    "block (never paired by the equi-join) does not raise, whether or " +
+    "not Catalyst prunes it first; the real blocks still link") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.col
+    import graft.operators.Relational
+    // 10 null-key rows = 45 would-be pairs, over maxPairs; each real
+    // block holds one distance-1 pair, under it
+    val rows = (1L to 10L).map(i => (i, "SameName#0001", Option.empty[String])) ++
+      Seq((101L, "abc", Some("S1")), (102L, "abd", Some("S1")),
+        (201L, "xyz", Some("S2")), (202L, "xyzq", Some("S2")))
+    val df = rows.toDF("cid", "c_name", "seg")
+    def pairs(out: org.apache.spark.sql.DataFrame) =
+      out.select(col("id_a"), col("id_b")).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val want = Set((101L, 102L), (201L, 202L))
+    // the join's inferred isnotnull(key) filter is pushed below the
+    // count window by default; the guard must not depend on that rule
+    val rules = "spark.sql.optimizer.excludedRules"
+    for (excluded <- Seq("",
+      "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromConstraints"))
+      try {
+        s.conf.set(rules, excluded)
+        assert(pairs(Relational.fuzzyLink(df, "cid", "c_name", col("seg"),
+          maxDist = 1, maxPairs = 6L, failOnCap = true)) == want)
+        assert(pairs(Relational.fuzzyLinkSymDel(df, "cid", "c_name",
+          col("seg"), maxPairs = 6L, failOnCap = true)) == want)
+      } finally s.conf.unset(rules)
+  }
+
   test("fuzzyLinkSymDel: delimiter-bearing segments/names cannot collide " +
     "across segments (r11 ADVICE: a '|'-concat block key would link " +
     "seg=S,name=x|q to seg=S|x,name=|q — distance 1, different segments)") {

@@ -44,7 +44,7 @@ class TablesSpec extends AnyFunSuite {
     assert(Tables.table(s, dirs(1), "t").count() == 1L)
   }
 
-  test("CheckpointMemo: bounded LRU of checkpointed frames, eviction " +
+  test("BoundedMemo of checkpointed frames: bounded LRU, eviction " +
     "RELEASES the evicted checkpoint's blocks (the overlapCache leak " +
     "class from the r12 ADVICE), hot key survives churn, memo hits " +
     "return the same frame without rebuilding") {
@@ -53,21 +53,24 @@ class TablesSpec extends AnyFunSuite {
     def ckptRdd(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.analyzed
         .asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd
-    val memo = new graft.operators.CheckpointMemo("spec.tablesFixture", maxEntries = 2)
+    val memo = new graft.operators.BoundedMemo[(SparkSession, String),
+      org.apache.spark.sql.DataFrame]("spec.tablesFixture", maxEntries = 2,
+      onEvict = graft.operators.Checkpoints.release)
     var builds = 0
     def build(n: Int) = { builds += 1; Seq((n.toLong, "v")).toDF("id", "v").localCheckpoint() }
-    val hot = memo.getOrElseUpdate(s, "hot", build(0))
-    val cold = memo.getOrElseUpdate(s, "cold", build(1))
+    def get(k: String, n: Int) = memo.computeIfAbsent((s, k), _ => build(n))
+    val hot = get("hot", 0)
+    val cold = get("cold", 1)
     assert(ckptRdd(cold).getStorageLevel.useMemory, "checkpoint not persisted")
     // hit: same instance, no rebuild
-    assert(memo.getOrElseUpdate(s, "hot", build(0)) eq hot)
+    assert(get("hot", 0) eq hot)
     assert(builds == 2)
     // third key evicts LRU ("cold" — "hot" was re-touched) and releases it
-    memo.getOrElseUpdate(s, "third", build(2))
+    get("third", 2)
     assert(memo.size == 2)
     assert(ckptRdd(cold).getStorageLevel ==
       org.apache.spark.storage.StorageLevel.NONE,
       "evicted checkpoint's blocks were not released")
-    assert(memo.getOrElseUpdate(s, "hot", build(9)) eq hot, "hot key evicted")
+    assert(get("hot", 9) eq hot, "hot key evicted")
   }
 }
