@@ -10,12 +10,7 @@ import graft.sources.{Backfill, SlidingWindowLog}
   * re-planning, and the rate gate bounding total fetch cadence. */
 class BackfillSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = LocalSession(2)
 
   private val asOf = Timestamp.valueOf("2024-06-10 12:00:00")
   private val fresh = Timestamp.valueOf("2024-06-10 06:00:00")  // < 1 day old

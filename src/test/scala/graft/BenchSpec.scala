@@ -6,8 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * against the exact blind spot the r10 driver artifact exposed: a query
   * uniformly slow in BOTH passes passes the steady-vs-cold and
   * 1.5×-median triggers and lands in the artifact unchallenged. The
-  * cross-round prior (committed [[BenchPrior]] steady) is the anchor
-  * that catches it. */
+  * cross-round prior ([[Bench.Prior]], decoded from the committed
+  * bench_full.json) is the anchor that catches it. */
 class BenchSpec extends AnyFunSuite {
 
   test("r10 blind spot: j12-shaped slowdown (slow in BOTH passes) is " +
@@ -144,11 +144,7 @@ class BenchSpec extends AnyFunSuite {
   test("ShuffleTally: a shuffling job accrues write bytes; a narrow job " +
     "accrues none (the load-immune volume twin the scaling rows emit " +
     "as <row>_shuf_mb)") {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(2)
     import spark.implicits._
     val tally = new Bench.ShuffleTally
     spark.sparkContext.addSparkListener(tally)
@@ -184,67 +180,111 @@ class BenchSpec extends AnyFunSuite {
       s"same plan + same data must shuffle identical bytes: $d1 vs $d2")
   }
 
-  test("BenchPrior.scaling is the committed scaling block (artifact of " +
-    "record, full curve incl. the corpus-write rows); non-timing rows " +
-    "excluded; the minhash-cliff anchor present") {
-    val sc = BenchPrior.scaling
-    assert(sc.size == 25, sc.size.toString)
-    // r16: the interval family is anchored (w19 full curve). j18 was
-    // trimmed to x4 through r17; r18 extends it to x10 (verdict item 3:
-    // the checkpoint volume trade needs an x10 bytes-per-pair bound) —
-    // this committed prior still predates that run, so x4 is the top
-    // anchored point; the round-close regen flips the x10 assert below.
-    assert(sc("w19_peak_concurrency").contains("x10"))
-    assert(sc("j18_session_overlap").contains("x4"))
-    // r15: the feature-store curve + its corpus-write row are anchored
-    assert(sc("j19_pit_features").contains("x10") &&
-      sc.contains("scale_corpus_write_pit"))
-    assert(!sc.contains("cc_rounds") && !sc.contains("j14_suffix_block_rows") &&
-      !sc.contains("j14_split_suffix_len"),
-      "counts/lengths are not seconds — retrying on them would be meaningless")
+  /** The committed run of record, decoded exactly as Bench.main reads it. */
+  private lazy val prior: Bench.Prior = Bench.Prior.read("bench_full.json").get
+
+  test("Prior.scaling is the committed scaling block (artifact of " +
+    "record, full curve incl. the corpus-write rows): every timing row " +
+    "keeps its x-keys; the minhash-cliff anchor present") {
+    val sc = prior.scaling
+    val x4 = Seq("x1", "x4"); val x10 = x4 :+ "x10"; val x20 = x4 :+ "x20"
+    // every row a scaling retry looks up by the name of a point it times.
+    // Anchored curves: the interval family (w19; j18 through x4), the
+    // feature-store curve with its corpus-write row (r15), the corpus
+    // writes (r13), and the two legs missing from the r12 DRIVER artifact
+    // (search_substring_indexed_serve, lsh_rebuild). Linkage: j17 (the
+    // linear-law production arm) carries the x10 top scale; j14 and j12
+    // (the quadratic and single-pass contrast arms) top out at x4.
+    val timing = Map(
+      "scale_corpus_write" -> x20, "scale_corpus_write_link" -> Seq("x10"),
+      "scale_corpus_write_pit" -> x10, "j19_pit_features" -> x10,
+      "w19_peak_concurrency" -> x10, "j18_session_overlap" -> x4,
+      "search_substring_indexed_build" -> x20,
+      "search_substring_indexed_serve" -> x20,
+      "lsh_rebuild" -> x20, "lsh_append_1pct" -> x20,
+      "dup_edge_mining" -> x20, "dedup_minhash_pairs" -> x20,
+      "dedup_clusters_incremental" -> x20, "sim_ivf_topk" -> x20,
+      "corpus_build" -> x20, "j17_entity_symdel" -> x10,
+      "j14_entity_dual" -> x4, "dedup_clusters" -> x20,
+      "graph_pagerank" -> x20, "graph_lpa" -> x20,
+      "graph_bfs_hops" -> x20, "graph_kcore" -> x20,
+      "j12_entity_resolve" -> x4, "search_bm25_indexed_build" -> x20,
+      "search_bm25_indexed_serve" -> x20)
+    assert(timing.size == 25)
+    timing.foreach { case (row, xs) =>
+      assert(sc.contains(row) && xs.forall(sc(row).contains),
+        s"$row: ${sc.get(row)} lacks some of $xs")
+    }
+    // j18 reaches x10 in code that also emits its `_true_pairs` twin
+    // (r18): a run of record from such code must carry the x10 anchor,
+    // and one from older code carries neither
+    assert(sc.contains("j18_session_overlap_true_pairs") ==
+      sc("j18_session_overlap").contains("x10"),
+      "j18 x10 anchor and its _true_pairs twin come from the same leg")
     // the r12-cliff property: the contended driver number (50.268 s)
     // must trip the 3x trigger against any clean-box committed anchor
     val mh = sc("dedup_minhash_pairs")("x20")
     assert(mh > 1.0 && mh < 12.0 && 50.268 > 3.0 * mh, mh.toString)
-    // the two legs missing from the r12 DRIVER artifact stay anchored
-    assert(sc.contains("search_substring_indexed_serve") &&
-      sc.contains("lsh_rebuild"))
-    // the corpus writes are priced (and retry-anchored) since r13
-    assert(sc.contains("scale_corpus_write"))
-    // linkage priors: j17 (the linear-law production arm) carries the
-    // x10 top scale; j14 (the quadratic contrast arm) tops out at x4
-    // since r14 — its x10 point was the single priciest bench row
-    // (60.4 s committed / 88.8 s driver) and the blocking-law crossover
-    // is already visible at x4
-    assert(sc("j17_entity_symdel").contains("x10"))
-    assert(sc("j14_entity_dual").contains("x4") &&
-      !sc("j14_entity_dual").contains("x10"),
+    // j14's x10 point (60.4 s committed / 88.8 s driver, the single
+    // priciest bench row) and j12's x20 point (the block's second
+    // priciest) stay retired: both laws are visible at x4
+    assert(!sc("j14_entity_dual").contains("x10"),
       "the j14 x10 point must stay retired (budget insurance)")
-    // r16: j12 (the single-pass contrast arm to j15_snm_multipass) got
-    // the same trim — its superlinear windowed-pair law is visible at
-    // x4; the x20 point was the block's second-priciest row
-    assert(sc("j12_entity_resolve").contains("x4") &&
-      !sc("j12_entity_resolve").contains("x20"),
+    assert(!sc("j12_entity_resolve").contains("x20"),
       "the j12 x20 point must stay retired (budget insurance)")
-    // r16 spill-probe rows never anchor a retry
-    assert(!sc.contains("spill_probe") && !sc.contains("spill_probe_sec") &&
-      !sc.contains("spill_probe_capacity_mb"),
-      "probe diagnostics are not retry anchors")
   }
 
-  test("BenchPrior resource is the committed r16-close steady map: 292 " +
-    "entries (295 graded minus the 3 bench-exempt contrast arms), " +
+  test("Prior.steady is the committed run of record's steady map: " +
+    "exactly the graded queries minus the bench-exempt contrast arms, " +
     "median in the committed envelope, j12 prior present") {
-    assert(BenchPrior.steady.size == 292, BenchPrior.steady.size.toString)
-    assert(Bench.benchExempt.forall(q => !BenchPrior.steady.contains(q)),
-      "exempt arms must not anchor a retime trigger they never run")
-    assert(BenchPrior.median > 0.1 && BenchPrior.median < 2.0,
-      BenchPrior.median.toString)
-    assert(BenchPrior.steady.contains("j12_entity_resolve"))
+    assert(prior.sfDir == "/root/testdata/sf0.1",
+      "measured on Bench's default SF dir, else the prior never applies")
+    // exempt arms must not anchor a retime trigger they never run
+    val timed = SparkEntry.queries.keySet -- Bench.benchExempt
+    assert(prior.steady.keySet == timed,
+      s"missing ${timed -- prior.steady.keySet}, extra ${prior.steady.keySet -- timed}")
+    assert(prior.median > 0.1 && prior.median < 2.0, prior.median.toString)
+    assert(prior.steady.contains("j12_entity_resolve"))
     // the anchor property: median base can only tighten, never loosen,
     // the trigger vs a load-inflated in-run median
-    val inflatedMed = BenchPrior.median * 1.23 // r10's observed multiplier
-    assert(math.max(inflatedMed, BenchPrior.median) == inflatedMed &&
-      math.max(0.1, BenchPrior.median) == BenchPrior.median)
+    val inflatedMed = prior.median * 1.23 // r10's observed multiplier
+    assert(math.max(inflatedMed, prior.median) == inflatedMed &&
+      math.max(0.1, prior.median) == prior.median)
+  }
+
+  test("Prior.read: a missing file is None (no prior, in-run triggers " +
+    "only); a file that exists but lacks a field fails instead of " +
+    "silently disarming the prior; integer seconds decode as doubles") {
+    assert(Bench.Prior.read("no_such_dir/bench_full.json").isEmpty)
+    val f = java.nio.file.Files.createTempFile("prior", ".json")
+    try {
+      def write(s: String) = java.nio.file.Files.writeString(f, s)
+      write("""{"sf":"d","scaling":{}}""")
+      intercept[IllegalArgumentException](Bench.Prior.read(f.toString))
+      write("""{"sf":"d","steady":{"a":1,"b":2.5,"c":0.5},""" +
+        """"scaling":{"r":{"x1":3}}}""")
+      val p = Bench.Prior.read(f.toString).get
+      assert(p == Bench.Prior("d", Map("a" -> 1.0, "b" -> 2.5, "c" -> 0.5),
+        Map("r" -> Map("x1" -> 3.0))), p.toString)
+      assert(p.median == 1.0)
+    } finally java.nio.file.Files.delete(f)
+  }
+
+  test("retime: at most two retries, the trigger sees the best so far, " +
+    "it stops once the trigger is false, and every observation returns") {
+    // fake clock: each re-run returns the next scripted time
+    def run(times: Double*)(trigger: Double => Boolean) = {
+      val clock = times.iterator
+      val seen = scala.collection.mutable.ListBuffer[Double]()
+      val obs = Bench.retime(10.0, () => clock.next()) { t => seen += t; trigger(t) }
+      (obs, seen.toList)
+    }
+    val (capped, seen) = run(12.0, 11.0, 1.0)(_ => true)
+    assert(capped == Seq(10.0, 12.0, 11.0) && capped.min == 10.0, capped)
+    assert(seen == List(10.0, 10.0), "trigger reads the minimum, not the last")
+    val (stopped, _) = run(4.0, 1.0)(_ > 5.0)
+    assert(stopped == Seq(10.0, 4.0) && stopped.min == 4.0, stopped)
+    val (quiet, _) = run(1.0)(_ => false)
+    assert(quiet == Seq(10.0), quiet)
   }
 }

@@ -16,12 +16,7 @@ class BucketingSpec extends AnyFunSuite {
   // so the test sets what it needs per-query and scrubs stale table
   // locations left by earlier JVMs (the in-memory catalog forgets them,
   // the filesystem does not).
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = LocalSession(2)
 
   private def scrub(s: SparkSession, table: String): Unit = {
     s.sql(s"DROP TABLE IF EXISTS $table")

@@ -10,11 +10,7 @@ import graft.sources.ConfigPlane.{GraftConfig, Limits, TrackingItem}
   * sha-256 loop guard. */
 class ConfigPlaneSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = LocalSession(2)
 
   private val sample =
     """# config.yaml

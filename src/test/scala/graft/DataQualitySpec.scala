@@ -10,12 +10,7 @@ import graft.operators.DataQuality._
   * plan contract (N checks ≠ N scans — one table scan per suite). */
 class DataQualitySpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = LocalSession(2)
 
   // 4 rows: one NULL name, duplicate kind, price 7.5 .. 99.99
   private def frame = {

@@ -10,12 +10,7 @@ import graft.operators.Dedup
   * and blocked n-gram pair discovery. */
 class DedupSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = LocalSession(2)
 
   private def docs = {
     val s = spark

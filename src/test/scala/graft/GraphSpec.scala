@@ -11,12 +11,7 @@ import graft.operators.Graph
   * (hubs above leaves; uniform at zero iterations). */
 class GraphSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = LocalSession(2)
 
   // star: 0 is the hub of 1,2,3; 4-5 an isolated pair; 6 never appears
   private def edges = {

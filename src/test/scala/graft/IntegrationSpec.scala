@@ -14,12 +14,7 @@ import graft.sources.{PartitionedStore, Wire}
   * ingest-store-query loop on this engine. */
 class IntegrationSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = LocalSession(2)
 
   test("A16 approx_count_distinct: every group's sketch is inside the 5% bound") {
     val out = graft.queries.InventoryQueries2.a16ApproxDistinct(

@@ -12,12 +12,7 @@ import graft.queries.JourneyQueries
   * the operator-level edge cases the sf tables can't isolate. */
 class JourneySpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = LocalSession(2)
 
   private def ts(s: String) = Timestamp.valueOf(s)
 

@@ -10,12 +10,7 @@ import graft.operators.Multimodal
   * decoder. */
 class MultimodalSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = LocalSession(2)
 
   /** 2×2 P6 with a comment line: pixels (R,G,B) = (10,20,30) (40,50,60)
     * (70,80,90) (100,110,120) → means (55, 65, 75). */

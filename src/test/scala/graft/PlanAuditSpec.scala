@@ -11,14 +11,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * SF-independent; sf0.001 keeps planning instant. */
 class PlanAuditSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
+  private lazy val spark: SparkSession = {
+    val s = LocalSession(2)
     // don't let the FileScan metadata line truncate away PushedFilters
-    .config("spark.sql.maxMetadataStringLength", "2000")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+    s.conf.set("spark.sql.maxMetadataStringLength", "2000")
+    s
+  }
 
   private val d = "/root/testdata/sf0.001"
 

@@ -9,12 +9,7 @@ import graft.sources.{GraftClocks, SlidingWindowLog}
   * under a manual clock — no sleeps, fully deterministic. */
 class RateLimitedSourceSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = LocalSession(2)
 
   test("SlidingWindowLog: burst grants, denies inside window, frees as grants expire") {
     val log = new SlidingWindowLog(maxGrants = 3, windowMillis = 60000L)

@@ -10,12 +10,7 @@ import graft.api.ReadApi
   * shapes (limits, ordering, 404 seam, no-op suppression). */
 class ReadApiSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = LocalSession(2)
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 

@@ -10,12 +10,7 @@ import org.apache.spark.sql.functions.col
   * bin), no duplicate pairs, and the no-cartesian plan contract. */
 class RelationalOpsSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = LocalSession(2)
 
   private def pts(ts: Long*) = {
     val s = spark

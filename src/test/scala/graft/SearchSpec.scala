@@ -9,12 +9,7 @@ import graft.operators.Search
   * fixtures. */
 class SearchSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = LocalSession(2)
 
   /** Corpus planted so term rarity decides: "zebra" appears in exactly one
     * non-query doc, "the" in every doc. A BM25 search for "zebra the" must

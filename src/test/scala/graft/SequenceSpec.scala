@@ -9,11 +9,7 @@ import graft.operators.{Dedup, Sequence}
   * planted fixtures. */
 class SequenceSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = LocalSession(2)
 
   test("chunkTokens: stride windows cover every token; short docs yield one clipped chunk") {
     val s = spark

@@ -15,12 +15,7 @@ import graft.operators.Dedup
   * T7 backoff state machine. */
 class StreamingSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = LocalSession(2)
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 

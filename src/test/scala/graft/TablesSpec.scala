@@ -8,11 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * pinning its session — in a long-lived multi-session service). */
 class TablesSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = LocalSession(2)
 
   test("resolved-plan memo is a bounded access-order LRU: filling past " +
     "MaxResolved evicts instead of growing; a key kept hot by access " +

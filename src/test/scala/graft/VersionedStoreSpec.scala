@@ -9,12 +9,7 @@ import graft.sources.PartitionedStore
   * append commits, orphan invisibility, vacuum. */
 class VersionedStoreSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = LocalSession(2)
 
   private def df(ids: Range) = {
     val s = spark

@@ -9,12 +9,7 @@ import graft.sources.{PartitionedStore, Wire}
   * store with retention (S12/T12). */
 class WireSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = LocalSession(2)
 
   test("silverPriceOverview: golden EUR row parses (0.03, 0.01, 435, EUR)") {
     val s = spark

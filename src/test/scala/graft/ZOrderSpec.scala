@@ -10,13 +10,11 @@ import graft.sources.PartitionedStore
   * intersecting Morton cells, and find clamped out-of-domain rows. */
 class ZOrderSpec extends AnyFunSuite {
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.maxMetadataStringLength", "2000")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  private lazy val spark: SparkSession = {
+    val s = LocalSession(2)
+    s.conf.set("spark.sql.maxMetadataStringLength", "2000")
+    s
+  }
 
   private def grid = {
     val s = spark
