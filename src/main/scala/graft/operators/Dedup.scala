@@ -514,7 +514,6 @@ object Dedup {
                     path: String, k: Int = 16, bands: Int = 4,
                     nBuckets: Int = 32, bloomCap: Long = 1L << 22): Unit = {
     import graft.sources.PartitionedStore
-    val spark = docs.sparkSession
     val rows = k / bands
     val sig = shingleTable(docs, idCol, textCol)
       .filter(size(col("sh")) > 0)
@@ -542,20 +541,22 @@ object Dedup {
     // (sketch capacity) is stored alongside the bytes because OR-merge
     // requires identical layouts; size it for the corpus's LIFETIME id
     // count (~0.9 bytes/id at 3% fpp — 4M default ≈ 3.6 MB resident).
-    val blv = PartitionedStore.commitVersion(
-      lshBloomFrame(spark, bloomBuild(sig, idCol, bloomCap), bloomCap),
-      s"$path/bloom")
+    val blv = commitLshBloom(sig, idCol, bloomCap, path)
     PartitionedStore.publishComposite(path,
       Map("sig" -> sv, "bands" -> bv, "stats" -> stv, "bloom" -> blv))
     Checkpoints.release(sig)
   }
 
-  /** The 1-row (sketch, cap) frame the `bloom/` component stores. */
-  private def lshBloomFrame(spark: org.apache.spark.sql.SparkSession,
-                            sketch: Array[Byte], cap: Long): DataFrame = {
-    import spark.implicits._
-    Seq((Option(sketch), cap)).toDF("sketch", "cap").repartition(1)
-  }
+  /** Commits the 1-row (sketch, cap) `bloom/` component over `keyed`'s
+    * ids. The sketch aggregates and is written on the executors, so its
+    * bytes never ride a task (a 4M-id sketch is ~3.7 MB). */
+  private def commitLshBloom(keyed: DataFrame, idCol: String, cap: Long,
+                             path: String): Long =
+    withBloomCaps(keyed.sparkSession, cap) {
+      graft.sources.PartitionedStore.commitVersion(
+        keyed.select(bloomAgg(idCol, cap).as("sketch"), lit(cap).as("cap")),
+        s"$path/bloom")
+    }
 
   /** Probe a [[writeLshIndex]] artifact with a delta: candidates from the
     * stored band table (bucket-pruned by the delta's own key set — the
@@ -715,8 +716,15 @@ object Dedup {
         val cap = br.getAs[Long]("cap")
         val merged = bloomMergeSketches(br.getAs[Array[Byte]]("sketch"),
           bloomBuild(sig, idCol, cap))
-        Map("bloom" -> PartitionedStore.commitVersion(
-          lshBloomFrame(spark, merged, cap), s"$path/bloom"))
+        // the driver-merged sketch reaches the one writing task through
+        // a broadcast, never inside the task itself
+        import spark.implicits._
+        val bc = spark.sparkContext.broadcast(merged)
+        val blv = try PartitionedStore.commitVersion(
+            spark.range(0, 1, 1, 1).map(_ => (Option(bc.value), cap)).toDF("sketch", "cap"),
+            s"$path/bloom")
+          finally bc.destroy()
+        Map("bloom" -> blv)
       case None => Map.empty[String, Long]
     }
     PartitionedStore.publishComposite(path,
@@ -813,9 +821,7 @@ object Dedup {
           .readVersion(spark, s"$path/bloom", Some(blv))
           .collect()(0).getAs[Long]("cap")
         val sigNew = PartitionedStore.readVersion(spark, s"$path/sig", Some(sv))
-        Map("bloom" -> PartitionedStore.commitVersion(
-          lshBloomFrame(spark, bloomBuild(sigNew, idCol, cap), cap),
-          s"$path/bloom"))
+        Map("bloom" -> commitLshBloom(sigNew, idCol, cap, path))
       case _ => Map.empty[String, Long]
     }
     PartitionedStore.publishComposite(path,
@@ -880,9 +886,26 @@ object Dedup {
     * `expectedItems` for the duration of the build and RESTORED after
     * (try/finally): one build's sizing never leaks into the session.
     * Returns null for an empty corpus (no rows → no sketch). */
-  def bloomBuild(keyed: DataFrame, keyCol: String, expectedItems: Long): Array[Byte] = {
+  def bloomBuild(keyed: DataFrame, keyCol: String, expectedItems: Long): Array[Byte] =
+    withBloomCaps(keyed.sparkSession, expectedItems) {
+      keyed.select(bloomAgg(keyCol, expectedItems)).collect()(0).getAs[Array[Byte]](0)
+    }
+
+  /** The [[bloomBuild]] aggregate: one serialized sketch of `keyCol`'s
+    * xxhash64, null over no rows. Run it inside [[withBloomCaps]]. */
+  private def bloomAgg(keyCol: String, expectedItems: Long): Column =
+    graftExpr.column(
+      new BloomFilterAggregate(
+        graftExpr.expression(xxhash64(col(keyCol))), expectedItems)
+        .toAggregateExpression())
+
+  /** Runs `body` (which must run every job that evaluates a
+    * [[bloomAgg]]) with the session's runtime-bloom-filter caps raised to
+    * admit `expectedItems`, restoring them after. */
+  private def withBloomCaps[T](spark: org.apache.spark.sql.SparkSession,
+                               expectedItems: Long)(body: => T): T = {
     require(expectedItems > 0, s"expectedItems must be positive: $expectedItems")
-    val conf = keyed.sparkSession.conf
+    val conf = spark.conf
     // optimal m for p = 0.03: −n·ln p / ln²2 ≈ 7.3 n (the aggregate's own
     // sizing formula) — the caps must admit it or the clamp is silent
     val neededBits = math.ceil(
@@ -893,11 +916,7 @@ object Dedup {
     try {
       if (items0.toLong < expectedItems) conf.set(itemsKey, expectedItems.toString)
       if (bits0.toLong < neededBits) conf.set(bitsKey, neededBits.toString)
-      val bloomAgg = graftExpr.column(
-        new BloomFilterAggregate(
-          graftExpr.expression(xxhash64(col(keyCol))), expectedItems)
-          .toAggregateExpression())
-      keyed.select(bloomAgg.as("bf")).collect()(0).getAs[Array[Byte]](0)
+      body
     } finally { conf.set(itemsKey, items0); conf.set(bitsKey, bits0) }
   }
 

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout,
+  ListState, MapState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode,
+  TimerValues, Trigger, ValueState}
 
 /** Structured Streaming re-expression of the reference's incremental
   * chains (SURVEY §2.8). The append table IS the change stream — Spark's
@@ -339,54 +341,70 @@ object Streams {
       .start()
   }
 
-  // ---- trending top-k, state-store-backed (transformWithState) -----------
+  // ---- event-time bucket keepers (transformWithState) --------------------
+
+  /** The contract the five windowed processors below share: one key is
+    * one event-time bucket, final once the watermark passes `end(key)`.
+    *  - Drop boundary: a row whose bucket has `end(key) <= watermark` is
+    *    dropped; `end(key) > watermark` admits it. This is the boundary
+    *    and strictness of Spark's own watermarked aggregation (pinned for
+    *    [[trendingTopKState]] and [[quantileDailyStream]] in
+    *    StreamingSpec).
+    *  - The first admitted row of a bucket registers its one event-time
+    *    timer at `end(key)`; the `timer_set` ValueState records it.
+    *  - On expiry `flush` returns the bucket's final rows and clears the
+    *    subclass state, then `timer_set` clears: no bucket outlives its
+    *    end, so live state is bounded by the buckets the watermark still
+    *    holds open, never by stream history.
+    * Subclasses declare their state in `declare`, which runs before
+    * `timer_set` is declared (the declaration order checkpoints hold),
+    * and fold admitted rows in `absorb`. */
+  abstract class BucketKeeper[K, I, O] extends StatefulProcessor[K, I, O] {
+    @transient private var timerSet: ValueState[Boolean] = _
+    protected def declare(): Unit
+    protected def end(key: K): Long
+    protected def absorb(key: K, rows: Iterator[I]): Iterator[O]
+    protected def flush(key: K): Iterator[O]
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+      declare()
+      timerSet = getHandle.getValueState("timer_set", Encoders.scalaBoolean, TTLConfig.NONE)
+    }
+    override def handleInputRows(key: K, rows: Iterator[I],
+                                 timerValues: TimerValues): Iterator[O] = {
+      val e = end(key)
+      if (e <= timerValues.getCurrentWatermarkInMs()) Iterator.empty
+      else {
+        if (!timerSet.exists()) { getHandle.registerTimer(e); timerSet.update(true) }
+        absorb(key, rows)
+      }
+    }
+    override def handleExpiredTimer(key: K, timerValues: TimerValues,
+                                    expiredTimerInfo: ExpiredTimerInfo): Iterator[O] = {
+      val out = flush(key)
+      timerSet.clear()
+      out
+    }
+  }
+
+  // ---- trending top-k, state-store-backed --------------------------------
 
   case class WindowedHit(w_start: Long, item: String)
   case class TrendRow(w_start: java.sql.Timestamp, item: String, n: Long, rank: Int)
 
-  /** Per-window item counter + ranker: MapState[item → count] merges each
-    * batch's increments, and the ranking for a touched window reads the
-    * FULL state — the same merge-then-rank contract as [[trendingTopK]]'s
-    * driver panel, so the two variants emit identical panels (pinned by
-    * the parity spec).
-    *
-    * Event-time hygiene (what makes `lateness` LIVE here): rows whose
-    * window END has fallen behind the watermark are DROPPED, and each
-    * window registers an event-time timer at its end, so its MapState is
-    * cleared the moment the watermark guarantees no further update can
-    * arrive. State size is live windows × items, not stream history.
-    * The `wEnd <= watermark` drop guard is REQUIRED independent of what
-    * the aggregation variant does: the timer has already cleared the
-    * window's counts once the watermark passes its end, and admitting a
-    * row there would resurrect a partial panel. MEASURED (and spec-
-    * pinned, not assumed): the guard introduces no divergence — Spark's
-    * aggregation filters late rows at the same boundary with the same
-    * strictness (drop end <= wm, admit end > wm), so the two variants
-    * agree on every late row; the boundary spec brackets the watermark
-    * with window ends <, ==, and > it and asserts identical admission,
-    * and would catch a Spark upgrade moving either side's filter
-    * watermark or strictness. */
-  class TrendKeeper(k: Int, windowMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, WindowedHit, TrendRow] {
-    @transient private var counts: org.apache.spark.sql.streaming.MapState[String, Long] = _
-    @transient private var timerSet: org.apache.spark.sql.streaming.ValueState[Boolean] = _
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      counts = getHandle.getMapState[String, Long]("counts",
-        org.apache.spark.sql.Encoders.STRING,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      timerSet = getHandle.getValueState[Boolean]("timer_set",
-        org.apache.spark.sql.Encoders.scalaBoolean,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    }
-    override def handleInputRows(key: Long, rows: Iterator[WindowedHit],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[TrendRow] = {
-      val wEnd = key + windowMs
-      // the watermarked aggregation's drop rule: a window whose end the
-      // watermark has passed accepts no more rows
-      if (wEnd <= timerValues.getCurrentWatermarkInMs()) return Iterator.empty
-      if (!timerSet.exists()) { getHandle.registerTimer(wEnd); timerSet.update(true) }
+  /** Per-window item counter and ranker. MapState[item → count] merges
+    * each batch's increments, and the ranking of a touched window reads
+    * the FULL state: the merge-then-rank contract of [[trendingTopK]]'s
+    * driver panel, so both variants emit identical panels (pinned by the
+    * parity spec). Emits the refreshed panel on every admitted batch. The
+    * counts clear once the watermark passes the window's end, which is
+    * why a late row must drop there: admitting it would resurrect a
+    * partial panel. State: live windows × items. */
+  class TrendKeeper(k: Int, windowMs: Long) extends BucketKeeper[Long, WindowedHit, TrendRow] {
+    @transient private var counts: MapState[String, Long] = _
+    protected def declare(): Unit =
+      counts = getHandle.getMapState("counts", Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
+    protected def end(key: Long): Long = key + windowMs
+    protected def absorb(key: Long, rows: Iterator[WindowedHit]): Iterator[TrendRow] = {
       rows.toSeq.groupBy(_.item).foreach { case (item, hits) =>
         val prev = if (counts.containsKey(item)) counts.getValue(item) else 0L
         counts.updateValue(item, prev + hits.size)
@@ -397,12 +415,7 @@ object Streams {
         .map { case ((item, n), i) => TrendRow(new java.sql.Timestamp(key), item, n, i + 1) }
         .iterator
     }
-    override def handleExpiredTimer(key: Long,
-        timerValues: org.apache.spark.sql.streaming.TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[TrendRow] = {
-      counts.clear(); timerSet.clear()
-      Iterator.empty
-    }
+    protected def flush(key: Long): Iterator[TrendRow] = { counts.clear(); Iterator.empty }
   }
 
   /** [[trendingTopK]] with the panel moved OFF the driver into the
@@ -415,7 +428,7 @@ object Streams {
     * across executors, and each batch emits the refreshed panel of every
     * touched window. Late rows drop against the eviction watermark and
     * each window's state is cleared by an event-time timer once the
-    * watermark passes its end (see [[TrendKeeper]]: the drop boundary is
+    * watermark passes its end (see [[BucketKeeper]]: the drop boundary is
     * spec-pinned to agree with the aggregation variant's exactly). */
   def trendingTopKState(stream: DataFrame, tsCol: String, itemCol: String,
                         windowLen: String, slide: String, lateness: String,
@@ -435,9 +448,7 @@ object Streams {
       .select(expr(s"(m * ${sUs}L) div 1000L").as("w_start"), col("item"))
       .as[WindowedHit]
       .groupByKey(_.w_start)
-      .transformWithState(new TrendKeeper(k, wUs / 1000L),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
+      .transformWithState(new TrendKeeper(k, wUs / 1000L), TimeMode.EventTime(), OutputMode.Append())
   }
 
   // ---- rolling 7-day active users, state-store-backed --------------------
@@ -445,56 +456,35 @@ object Streams {
   case class DayUser(d0_ms: Long, user_id: Long, same_day: Boolean)
   case class WauRow(day_start: java.sql.Timestamp, dau: Long, wau: Long)
 
-  /** Per-target-day distinct-user state for [[rollingWauStream]]: two
-    * MapStates (the distinct sets sliding DISTINCT cannot partial-
-    * aggregate — the exact reason the batch read re-counts the
-    * deduplicated pair table), an event-time timer at the day's END
-    * (the last instant an event can still contribute to this day's
-    * trailing window), and the same late-row drop rule the watermarked
-    * aggregations apply. On expiry the FINAL (day, dau, wau) row emits
-    * once — append semantics, so stream output ≡ batch row-for-row —
-    * and the state clears: live state is bounded by 7 days × daily
-    * actives per key range, never stream history. Days with no
-    * same-day activity emit nothing (the batch read only reports
-    * observed days). */
-  class WauKeeper(dayMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, DayUser, WauRow] {
-    @transient private var dauSet: org.apache.spark.sql.streaming.MapState[Long, Boolean] = _
-    @transient private var wauSet: org.apache.spark.sql.streaming.MapState[Long, Boolean] = _
-    @transient private var timerSet: org.apache.spark.sql.streaming.ValueState[Boolean] = _
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      dauSet = getHandle.getMapState[Long, Boolean]("dau_set",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaBoolean,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      wauSet = getHandle.getMapState[Long, Boolean]("wau_set",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaBoolean,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      timerSet = getHandle.getValueState[Boolean]("timer_set",
-        org.apache.spark.sql.Encoders.scalaBoolean,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+  /** Per-target-day distinct-user sets for [[rollingWauStream]]: one
+    * MapState of the day's own users (DAU) and one of its trailing-window
+    * users (WAU), the distinct sets sliding DISTINCT cannot partially
+    * aggregate. The day ends at the last instant an event can still
+    * feed its trailing window. On expiry the FINAL (day, dau, wau) row
+    * emits once (append semantics: stream ≡ batch row for row) and both
+    * sets clear; a day with no same-day activity emits nothing, as the
+    * batch read reports only observed days. State: 7 days × daily
+    * actives per key range. */
+  class WauKeeper(dayMs: Long) extends BucketKeeper[Long, DayUser, WauRow] {
+    @transient private var dauSet: MapState[Long, Boolean] = _
+    @transient private var wauSet: MapState[Long, Boolean] = _
+    protected def declare(): Unit = {
+      dauSet = getHandle.getMapState("dau_set", Encoders.scalaLong, Encoders.scalaBoolean, TTLConfig.NONE)
+      wauSet = getHandle.getMapState("wau_set", Encoders.scalaLong, Encoders.scalaBoolean, TTLConfig.NONE)
     }
-    override def handleInputRows(key: Long, rows: Iterator[DayUser],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[WauRow] = {
-      val dayEnd = key + dayMs
-      if (dayEnd <= timerValues.getCurrentWatermarkInMs()) return Iterator.empty
-      if (!timerSet.exists()) { getHandle.registerTimer(dayEnd); timerSet.update(true) }
+    protected def end(key: Long): Long = key + dayMs
+    protected def absorb(key: Long, rows: Iterator[DayUser]): Iterator[WauRow] = {
       rows.foreach { r =>
         wauSet.updateValue(r.user_id, true)
         if (r.same_day) dauSet.updateValue(r.user_id, true)
       }
       Iterator.empty
     }
-    override def handleExpiredTimer(key: Long,
-        timerValues: org.apache.spark.sql.streaming.TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[WauRow] = {
+    protected def flush(key: Long): Iterator[WauRow] = {
       val dau = dauSet.iterator().size.toLong
       val wau = wauSet.iterator().size.toLong
-      dauSet.clear(); wauSet.clear(); timerSet.clear()
-      if (dau > 0L)
-        Iterator.single(WauRow(new java.sql.Timestamp(key), dau, wau))
+      dauSet.clear(); wauSet.clear()
+      if (dau > 0L) Iterator.single(WauRow(new java.sql.Timestamp(key), dau, wau))
       else Iterator.empty
     }
   }
@@ -525,82 +515,58 @@ object Streams {
         col("user_id"), (col("k") === 0L).as("same_day"))
       .as[DayUser]
       .groupByKey(_.d0_ms)
-      .transformWithState(new WauKeeper(dayMs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
+      .transformWithState(new WauKeeper(dayMs), TimeMode.EventTime(), OutputMode.Append())
   }
 
-  // ---- quantile-histogram daily maintainer (transformWithState) ----------
+  // ---- quantile-histogram daily maintainer -------------------------------
 
   case class QcEvent(d0_ms: Long, qkey: String, qc: Long)
   case class QhStreamRow(day_start: java.sql.Timestamp, qkey: String,
                          qc: Long, cnt: Long)
 
-  /** Per-(day, key) bucket-count state for [[quantileDailyStream]]: one
-    * MapState (qc bucket → running count — the integer-histogram
-    * partial aggregation the store's nightly batch job computes in one
-    * groupBy), an event-time timer at the day's end, the same
-    * late-row drop rule as [[WauKeeper]]. On expiry the FINAL daily
-    * histogram rows for this (day, key) emit once — append semantics,
-    * row-for-row what [[graft.operators.Relational.quantileDailySketches]]
-    * produces for that day — and the state clears: live state is
-    * bounded by live days × keys × distinct buckets, never stream
-    * history. */
-  class QhKeeper(dayMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[(Long, String), QcEvent, QhStreamRow] {
-    @transient private var buckets: org.apache.spark.sql.streaming.MapState[Long, Long] = _
-    @transient private var timerSet: org.apache.spark.sql.streaming.ValueState[Boolean] = _
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      buckets = getHandle.getMapState[Long, Long]("qc_counts",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      timerSet = getHandle.getValueState[Boolean]("timer_set",
-        org.apache.spark.sql.Encoders.scalaBoolean,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    }
-    override def handleInputRows(key: (Long, String), rows: Iterator[QcEvent],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[QhStreamRow] = {
-      val dayEnd = key._1 + dayMs
-      if (dayEnd <= timerValues.getCurrentWatermarkInMs()) return Iterator.empty
-      if (!timerSet.exists()) { getHandle.registerTimer(dayEnd); timerSet.update(true) }
+  /** Per-(day, key) bucket counts for [[quantileDailyStream]]: one
+    * MapState qc bucket → running count, the integer-histogram partial
+    * aggregation the store's nightly batch job computes in one groupBy.
+    * On expiry the FINAL histogram rows of this (day, key) emit once —
+    * row for row what [[graft.operators.Relational.quantileDailySketches]]
+    * produces for that day — and the state clears. State: live days ×
+    * keys × distinct buckets. */
+  class QhKeeper(dayMs: Long) extends BucketKeeper[(Long, String), QcEvent, QhStreamRow] {
+    @transient private var buckets: MapState[Long, Long] = _
+    protected def declare(): Unit =
+      buckets = getHandle.getMapState("qc_counts", Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
+    protected def end(key: (Long, String)): Long = key._1 + dayMs
+    protected def absorb(key: (Long, String), rows: Iterator[QcEvent]): Iterator[QhStreamRow] = {
       rows.foreach { r =>
         val prev = if (buckets.containsKey(r.qc)) buckets.getValue(r.qc) else 0L
         buckets.updateValue(r.qc, prev + 1L)
       }
       Iterator.empty
     }
-    override def handleExpiredTimer(key: (Long, String),
-        timerValues: org.apache.spark.sql.streaming.TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[QhStreamRow] = {
-      val out = buckets.iterator().map { p =>
-        QhStreamRow(new java.sql.Timestamp(key._1), key._2, p._1, p._2)
+    protected def flush(key: (Long, String)): Iterator[QhStreamRow] = {
+      val out = buckets.iterator().map { case (qc, n) =>
+        QhStreamRow(new java.sql.Timestamp(key._1), key._2, qc, n)
       }.toList
-      buckets.clear(); timerSet.clear()
+      buckets.clear()
       out.iterator
     }
   }
 
-  /** The STREAMING maintainer of the quantile-histogram sketch store —
-    * the missing twin the r10 verdict named: [[quantileAppendStream]]
-    * appends per-MICRO-BATCH partials (correct because serve sums per
-    * (key, qc) across dirs, but a day split over k batches lands k
-    * partial rows), while this accumulates each (day, key)'s buckets in
-    * state and emits the day's FINAL histogram exactly once when the
-    * watermark passes its end — row-for-row
-    * [[graft.operators.Relational.quantileDailySketches]] output, the
-    * same single-row-per-(day, key, qc) shape `qh_append_night` commits,
-    * so the emitted rows can feed [[idempotentSink]] +
-    * `PartitionedStore.commitVersion(append = true)` directly. Same
-    * eviction discipline as [[rollingWauStream]]: late rows behind the
-    * watermark drop (the watermarked batch rule), state is bounded by
-    * live days × |keys| × |distinct cents| and clears on emit. The
-    * cents quantization is [[graft.operators.Relational]]'s qcents
-    * contract (non-negative; negative values would have raised in the
-    * batch path and are filtered to the same effect here by the
-    * generator projection raising on FLOOR of a negative — kept as
-    * floor(value·100) on already-validated streams). */
+  /** The STREAMING maintainer of the quantile-histogram sketch store,
+    * the twin of [[quantileAppendStream]]: that appender lands
+    * per-MICRO-BATCH partials (correct because serve sums per (key, qc)
+    * across dirs, but a day split over k batches lands k partial rows),
+    * while this accumulates each (day, key)'s buckets in state and emits
+    * the day's FINAL histogram exactly once when the watermark passes its
+    * end — row-for-row [[graft.operators.Relational.quantileDailySketches]]
+    * output, the same single-row-per-(day, key, qc) shape
+    * `qh_append_night` commits, so the emitted rows can feed
+    * [[idempotentSink]] + `PartitionedStore.commitVersion(append = true)`
+    * directly. Late rows behind the watermark drop (the watermarked
+    * batch rule); state is bounded by live days × |keys| × |distinct
+    * cents| and clears on emit. The cents quantization is
+    * [[graft.operators.Relational]]'s qcents contract (non-negative;
+    * kept as floor(value·100) on already-validated streams). */
   def quantileDailyStream(stream: DataFrame, tsCol: String, keyCol: String,
                           valCol: String, lateness: String): Dataset[QhStreamRow] = {
     val s = stream.sparkSession
@@ -612,9 +578,7 @@ object Streams {
         floor(col(valCol) * lit(1e2)).cast("long").as("qc"))
       .as[QcEvent]
       .groupByKey(e => (e.d0_ms, e.qkey))
-      .transformWithState(new QhKeeper(dayMs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
+      .transformWithState(new QhKeeper(dayMs), TimeMode.EventTime(), OutputMode.Append())
   }
 
   // ---- peak concurrency, state-store-backed (streaming sweep line) -------
@@ -622,46 +586,29 @@ object Streams {
   case class SessSlice(day_ms: Long, cs_us: Long, ce_us: Long)
   case class PeakRow(day_start: java.sql.Timestamp, peak_concurrency: Long)
 
-  /** Per-day sweep-point state for [[peakConcurrencyStream]]: one
-    * MapState (instant µs → net ±1 delta — the collapsed sweep points
-    * the batch read builds with a groupBy), an event-time timer at the
-    * day's end, the [[WauKeeper]] late-row drop rule. On expiry the
-    * day's points replay in instant order (an in-memory sort of ≤
-    * 2·sessions-touching-the-day collapsed instants — the same per-day
-    * state envelope WauKeeper's distinct sets accept; the batch read's
-    * two-phase prefix sum is the extreme-volume arm) and the running
-    * sum's max emits ONCE as the day's peak. */
-  class PeakKeeper(dayMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, SessSlice, PeakRow] {
-    @transient private var net: org.apache.spark.sql.streaming.MapState[Long, Long] = _
-    @transient private var timerSet: org.apache.spark.sql.streaming.ValueState[Boolean] = _
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      net = getHandle.getMapState[Long, Long]("sweep_net",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      timerSet = getHandle.getValueState[Boolean]("timer_set",
-        org.apache.spark.sql.Encoders.scalaBoolean,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    }
+  /** Per-day sweep points for [[peakConcurrencyStream]]: one MapState
+    * instant µs → net ±1 delta, the collapsed sweep points the batch
+    * read builds with a groupBy. On expiry the day's points replay in
+    * instant order (an in-memory sort of ≤ 2 · sessions touching the
+    * day; the batch read's two-phase prefix sum is the extreme-volume
+    * arm), the running sum's max emits ONCE as the day's peak, and the
+    * points clear. */
+  class PeakKeeper(dayMs: Long) extends BucketKeeper[Long, SessSlice, PeakRow] {
+    @transient private var net: MapState[Long, Long] = _
+    protected def declare(): Unit =
+      net = getHandle.getMapState("sweep_net", Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
+    protected def end(key: Long): Long = key + dayMs
     private def bump(t: Long, d: Long): Unit = {
       val prev = if (net.containsKey(t)) net.getValue(t) else 0L
       net.updateValue(t, prev + d)
     }
-    override def handleInputRows(key: Long, rows: Iterator[SessSlice],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[PeakRow] = {
-      val dayEnd = key + dayMs
-      if (dayEnd <= timerValues.getCurrentWatermarkInMs()) return Iterator.empty
-      if (!timerSet.exists()) { getHandle.registerTimer(dayEnd); timerSet.update(true) }
+    protected def absorb(key: Long, rows: Iterator[SessSlice]): Iterator[PeakRow] = {
       rows.foreach { r => bump(r.cs_us, 1L); bump(r.ce_us + 1L, -1L) }
       Iterator.empty
     }
-    override def handleExpiredTimer(key: Long,
-        timerValues: org.apache.spark.sql.streaming.TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[PeakRow] = {
-      val pts = net.iterator().map(p => (p._1, p._2)).toArray.sortBy(_._1)
-      net.clear(); timerSet.clear()
+    protected def flush(key: Long): Iterator[PeakRow] = {
+      val pts = net.iterator().toArray.sortBy(_._1)
+      net.clear()
       if (pts.isEmpty) Iterator.empty
       else {
         var open = 0L; var peak = 0L
@@ -709,9 +656,7 @@ object Streams {
         least(col("e_us"), col("ds") + lit(dayUs - 1L)).as("ce_us"))
       .as[SessSlice]
       .groupByKey(_.day_ms)
-      .transformWithState(new PeakKeeper(dayMs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
+      .transformWithState(new PeakKeeper(dayMs), TimeMode.EventTime(), OutputMode.Append())
   }
 
   // ---- cross-session overlap pairs, state-store-backed -------------------
@@ -721,41 +666,26 @@ object Streams {
   case class OverlapPair(user_a: Long, session_a: Long, user_b: Long,
                          session_b: Long, overlap_us: Long)
 
-  /** Per-bin open-session state for [[sessionOverlapStream]]: a
-    * ListState of the sessions covering this bin (bounded by bin
-    * concurrency — the same envelope the batch operator's per-bin
-    * fan-out has), a session counter driving the SAME hot-bin pair
-    * budget the batch verb raises in-plan (n·(n−1)/2 > maxPairs throws
-    * — a viral bin fails the query loudly, never silently quadratic),
-    * and an event-time timer at the bin's end. On expiry the bin's
-    * C(n,2) cross-user pairs enumerate ONCE, keep exact overlap ≥ 0,
-    * and a pair EMITS ONLY FROM THE BIN CONTAINING ITS OVERLAP-START
-    * INSTANT (max(s_a, s_b) lies in exactly one bin, and both sessions
-    * cover it) — exactly-once per pair by construction, with no
-    * dedup exchange at all, where the batch plan pays a
-    * dropDuplicates shuffle for the same guarantee. */
+  /** Per-bin open sessions for [[sessionOverlapStream]]: a ListState of
+    * the sessions covering this bin (bounded by bin concurrency, the
+    * envelope the batch operator's per-bin fan-out has) and a session
+    * counter that enforces the batch verb's hot-bin pair budget
+    * (n·(n−1)/2 > maxPairsPerBin throws: a viral bin fails the query
+    * loudly, never silently quadratic). On expiry the bin's C(n,2)
+    * cross-user pairs enumerate ONCE, keep exact overlap ≥ 0, and a pair
+    * EMITS ONLY FROM THE BIN CONTAINING ITS OVERLAP-START INSTANT
+    * (max(s_a, s_b) lies in exactly one bin, and both sessions cover it):
+    * exactly once per pair with no dedup exchange. Both states clear. */
   class OverlapKeeper(binUs: Long, maxPairsPerBin: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, BinnedSess, OverlapPair] {
-    @transient private var open: org.apache.spark.sql.streaming.ListState[BinnedSess] = _
-    @transient private var nOpen: org.apache.spark.sql.streaming.ValueState[Long] = _
-    @transient private var timerSet: org.apache.spark.sql.streaming.ValueState[Boolean] = _
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      open = getHandle.getListState[BinnedSess]("open_sessions",
-        org.apache.spark.sql.Encoders.product[BinnedSess],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      nOpen = getHandle.getValueState[Long]("n_open",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      timerSet = getHandle.getValueState[Boolean]("timer_set",
-        org.apache.spark.sql.Encoders.scalaBoolean,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+      extends BucketKeeper[Long, BinnedSess, OverlapPair] {
+    @transient private var open: ListState[BinnedSess] = _
+    @transient private var nOpen: ValueState[Long] = _
+    protected def declare(): Unit = {
+      open = getHandle.getListState("open_sessions", Encoders.product[BinnedSess], TTLConfig.NONE)
+      nOpen = getHandle.getValueState("n_open", Encoders.scalaLong, TTLConfig.NONE)
     }
-    override def handleInputRows(key: Long, rows: Iterator[BinnedSess],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[OverlapPair] = {
-      val binEndMs = (key + 1L) * (binUs / 1000L)
-      if (binEndMs <= timerValues.getCurrentWatermarkInMs()) return Iterator.empty
-      if (!timerSet.exists()) { getHandle.registerTimer(binEndMs); timerSet.update(true) }
+    protected def end(key: Long): Long = (key + 1L) * (binUs / 1000L)
+    protected def absorb(key: Long, rows: Iterator[BinnedSess]): Iterator[OverlapPair] = {
       var n = if (nOpen.exists()) nOpen.get() else 0L
       rows.foreach { r => open.appendValue(r); n += 1L }
       if (n * (n - 1L) / 2L > maxPairsPerBin)
@@ -766,11 +696,9 @@ object Streams {
       nOpen.update(n)
       Iterator.empty
     }
-    override def handleExpiredTimer(key: Long,
-        timerValues: org.apache.spark.sql.streaming.TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[OverlapPair] = {
+    protected def flush(key: Long): Iterator[OverlapPair] = {
       val ss = open.get().toArray
-      open.clear(); nOpen.clear(); timerSet.clear()
+      open.clear(); nOpen.clear()
       val out = scala.collection.mutable.ListBuffer[OverlapPair]()
       var i = 0
       while (i < ss.length) {
@@ -828,8 +756,7 @@ object Streams {
         col("s_us"), col("e_us"))
       .as[BinnedSess]
       .groupByKey(_.bin)
-      .transformWithState(new OverlapKeeper(binUs, maxPairsPerBin),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
+      .transformWithState(new OverlapKeeper(binUs, maxPairsPerBin), TimeMode.EventTime(),
         OutputMode.Append())
   }
 
@@ -849,24 +776,19 @@ object Streams {
     * — any later event for an earlier day would be behind the watermark
     * — and exactly one (day_end, day, +1) row emits, after which the
     * user's rows are ignored for good. */
-  class FirstSeenKeeper(dayMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, UserDay, DayCount] {
-    @transient private var minDay: org.apache.spark.sql.streaming.ValueState[Long] = _
-    @transient private var emitted: org.apache.spark.sql.streaming.ValueState[Boolean] = _
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      minDay = getHandle.getValueState[Long]("min_day",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      emitted = getHandle.getValueState[Boolean]("emitted",
-        org.apache.spark.sql.Encoders.scalaBoolean,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+  class FirstSeenKeeper(dayMs: Long) extends StatefulProcessor[Long, UserDay, DayCount] {
+    @transient private var minDay: ValueState[Long] = _
+    @transient private var emitted: ValueState[Boolean] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+      minDay = getHandle.getValueState("min_day", Encoders.scalaLong, TTLConfig.NONE)
+      emitted = getHandle.getValueState("emitted", Encoders.scalaBoolean, TTLConfig.NONE)
     }
     override def handleInputRows(key: Long, rows: Iterator[UserDay],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[DayCount] = {
+                                 timerValues: TimerValues): Iterator[DayCount] = {
       if (emitted.exists()) return Iterator.empty // first-seen already final
       val wm = timerValues.getCurrentWatermarkInMs()
-      val live = rows.map(_.day_ms).filter(_ + dayMs > wm) // WauKeeper late rule
+      // the BucketKeeper drop boundary, applied per row's day
+      val live = rows.map(_.day_ms).filter(_ + dayMs > wm)
       if (live.isEmpty) return Iterator.empty
       val dmin = live.min
       if (!minDay.exists()) {
@@ -877,9 +799,8 @@ object Streams {
       }
       Iterator.empty
     }
-    override def handleExpiredTimer(key: Long,
-        timerValues: org.apache.spark.sql.streaming.TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[DayCount] = {
+    override def handleExpiredTimer(key: Long, timerValues: TimerValues,
+                                    expiredTimerInfo: ExpiredTimerInfo): Iterator[DayCount] = {
       val d = minDay.get()
       emitted.update(true)
       Iterator.single(DayCount(new java.sql.Timestamp(d + dayMs), d, 1L))
@@ -896,22 +817,15 @@ object Streams {
     * in day order through the cum ValueState, each emitting exactly
     * once — firing-order-independent when a watermark jump expires
     * several days in one batch. */
-  class CumKeeper(dayMs: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, DayCount, CumRow] {
-    @transient private var pending: org.apache.spark.sql.streaming.MapState[Long, Long] = _
-    @transient private var cum: org.apache.spark.sql.streaming.ValueState[Long] = _
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      pending = getHandle.getMapState[Long, Long]("pending_days",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      cum = getHandle.getValueState[Long]("cum_actives",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+  class CumKeeper(dayMs: Long) extends StatefulProcessor[Long, DayCount, CumRow] {
+    @transient private var pending: MapState[Long, Long] = _
+    @transient private var cum: ValueState[Long] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+      pending = getHandle.getMapState("pending_days", Encoders.scalaLong, Encoders.scalaLong, TTLConfig.NONE)
+      cum = getHandle.getValueState("cum_actives", Encoders.scalaLong, TTLConfig.NONE)
     }
     override def handleInputRows(key: Long, rows: Iterator[DayCount],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[CumRow] = {
+                                 timerValues: TimerValues): Iterator[CumRow] = {
       rows.foreach { r =>
         if (!pending.containsKey(r.day_ms)) {
           pending.updateValue(r.day_ms, r.add)
@@ -920,9 +834,8 @@ object Streams {
       }
       Iterator.empty
     }
-    override def handleExpiredTimer(key: Long,
-        timerValues: org.apache.spark.sql.streaming.TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[CumRow] = {
+    override def handleExpiredTimer(key: Long, timerValues: TimerValues,
+                                    expiredTimerInfo: ExpiredTimerInfo): Iterator[CumRow] = {
       val fireMs = expiredTimerInfo.getExpiryTimeInMs()
       val matured = pending.iterator().map(p => (p._1, p._2)).toArray
         .filter(_._1 + dayMs <= fireMs).sortBy(_._1)
@@ -962,8 +875,7 @@ object Streams {
         unix_millis(date_trunc("DAY", col(tsCol))).as("day_ms"))
       .as[UserDay]
       .groupByKey(_.user_id)
-      .transformWithState(new FirstSeenKeeper(dayMs), "day_end",
-        OutputMode.Append())
+      .transformWithState(new FirstSeenKeeper(dayMs), "day_end", OutputMode.Append())
     val daySpine = wmarked
       .groupBy(window(col(tsCol), "1 day")).agg(count(lit(1)))
       .select(col("window.end").as("day_end"),
@@ -971,9 +883,7 @@ object Streams {
       .as[DayCount]
     firstSeen.unionByName(daySpine)
       .groupByKey(_ => 0L)
-      .transformWithState(new CumKeeper(dayMs),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        OutputMode.Append())
+      .transformWithState(new CumKeeper(dayMs), TimeMode.EventTime(), OutputMode.Append())
   }
 
   /** T5 — LIVE REPLAN between micro-batches, no stream restart
@@ -1203,15 +1113,12 @@ object Streams {
     * arithmetic, but state lives in the checkpointed store and scales
     * with the key shuffle instead of one process's memory. */
   class TokenBucketProcessor(rate: Double, burst: Double)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, Request, RateDecision] {
-    @transient private var bucket: org.apache.spark.sql.streaming.ValueState[BucketState] = _
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      bucket = getHandle.getValueState[BucketState]("bucket",
-        org.apache.spark.sql.Encoders.product[BucketState],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+      extends StatefulProcessor[String, Request, RateDecision] {
+    @transient private var bucket: ValueState[BucketState] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      bucket = getHandle.getValueState("bucket", Encoders.product[BucketState], TTLConfig.NONE)
     override def handleInputRows(key: String, rows: Iterator[Request],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[RateDecision] = {
+                                 timerValues: TimerValues): Iterator[RateDecision] = {
       var st = if (bucket.exists()) bucket.get()
         else BucketState(burst, Long.MinValue)
       val out = rows.toSeq.sortBy(_.ts.getTime).map { r =>
@@ -1235,9 +1142,7 @@ object Streams {
                 burst: Double): Dataset[RateDecision] = {
     import requests.sparkSession.implicits._
     requests.groupByKey(_.item)
-      .transformWithState(new TokenBucketProcessor(rate, burst),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
+      .transformWithState(new TokenBucketProcessor(rate, burst), TimeMode.None(), OutputMode.Append())
   }
 
   // ---- bounded activity tail as ListState (transformWithState) -----------
@@ -1254,16 +1159,12 @@ object Streams {
     * State per item is exactly k rows — the eviction the ListState API
     * exists for; at cluster scale state partitions with the key shuffle
     * and the store holds k·|items| small rows, not history. */
-  class TailKeeper(k: Int)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, Activity, TailSnapshot] {
-    @transient private var tail: org.apache.spark.sql.streaming.ListState[Double] = _
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      tail = getHandle.getListState[Double]("tail",
-        org.apache.spark.sql.Encoders.scalaDouble,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+  class TailKeeper(k: Int) extends StatefulProcessor[String, Activity, TailSnapshot] {
+    @transient private var tail: ListState[Double] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      tail = getHandle.getListState("tail", Encoders.scalaDouble, TTLConfig.NONE)
     override def handleInputRows(key: String, rows: Iterator[Activity],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[TailSnapshot] = {
+                                 timerValues: TimerValues): Iterator[TailSnapshot] = {
       var cur = tail.get().toSeq
       // payload tie-break: iterator order across shuffle/retry is not
       // deterministic, so equal-ts events need a content total order
@@ -1280,9 +1181,7 @@ object Streams {
   def activityTail(events: Dataset[Activity], k: Int): Dataset[TailSnapshot] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.item)
-      .transformWithState(new TailKeeper(k),
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
+      .transformWithState(new TailKeeper(k), TimeMode.None(), OutputMode.Append())
   }
 
   // ---- per-item multi-currency price book (MapState) ---------------------
@@ -1298,17 +1197,12 @@ object Streams {
     * MapState gives per-currency point upserts without rewriting a whole
     * per-item struct: state size is |currencies| entries per item, and a
     * single-currency update touches one key in the store. */
-  class PriceBookKeeper
-      extends org.apache.spark.sql.streaming.StatefulProcessor[String, Quote, BookSnapshot] {
-    @transient private var book: org.apache.spark.sql.streaming.MapState[String, Double] = _
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      book = getHandle.getMapState[String, Double]("book",
-        org.apache.spark.sql.Encoders.STRING,
-        org.apache.spark.sql.Encoders.scalaDouble,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+  class PriceBookKeeper extends StatefulProcessor[String, Quote, BookSnapshot] {
+    @transient private var book: MapState[String, Double] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      book = getHandle.getMapState("book", Encoders.STRING, Encoders.scalaDouble, TTLConfig.NONE)
     override def handleInputRows(key: String, rows: Iterator[Quote],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[BookSnapshot] = {
+                                 timerValues: TimerValues): Iterator[BookSnapshot] = {
       // (ts, currency, price) total order: same-instant updates replay
       // identically across shuffle retries
       rows.toSeq.sortBy(q => (q.ts.getTime, q.currency, q.price)).map { q =>
@@ -1323,14 +1217,9 @@ object Streams {
   def priceBook(quotes: Dataset[Quote]): Dataset[BookSnapshot] = {
     import quotes.sparkSession.implicits._
     quotes.groupByKey(_.item)
-      .transformWithState(new PriceBookKeeper,
-        org.apache.spark.sql.streaming.TimeMode.None(),
-        OutputMode.Append())
+      .transformWithState(new PriceBookKeeper, TimeMode.None(), OutputMode.Append())
   }
 
-  /** Exponential backoff bookkeeping (snoozerScheduler.py:192-222): per
-    * item, consecutive failures double the cooldown multiplier (cap 8);
-    * any success resets. Emits the post-batch state per key. */
   /** Execute `action` at most once per (ledger, batchId) across
     * SEQUENTIAL attempts — the Structured Streaming replay case: a marker
     * file commits the batch AFTER the action succeeds, so a crash
@@ -1374,10 +1263,7 @@ object Streams {
       val cand = graft.operators.Mix
         .sampleFixedK(batch, grpCol, idCol, textCol, k)
         .select(col(grpCol), col(idCol), col("h"))
-      import graft.sources.PartitionedStore
-      if (PartitionedStore.versions(storePath).isEmpty)
-        PartitionedStore.commitVersion(cand, storePath)
-      else PartitionedStore.commitVersion(cand, storePath, append = true)
+      graft.sources.PartitionedStore.commitVersion(cand, storePath, append = true)
       ()
     }
 
@@ -1415,28 +1301,28 @@ object Streams {
         commitOnce(ledgerDir, id) {
           val b = batch.localCheckpoint()
           try {
-            if (!b.isEmpty) {
-              import graft.sources.PartitionedStore
-              val daily = graft.operators.Relational
-                .quantileDailySketches(b, tsCol, keyCol, valCol)
-              if (PartitionedStore.versions(storePath).isEmpty)
-                PartitionedStore.commitVersion(daily, storePath)
-              else
-                PartitionedStore.commitVersion(daily, storePath, append = true)
-            }
+            if (!b.isEmpty)
+              graft.sources.PartitionedStore.commitVersion(
+                graft.operators.Relational.quantileDailySketches(b, tsCol, keyCol, valCol),
+                storePath, append = true)
           } finally graft.operators.Checkpoints.release(b)
         }
         ()
       }
       .start()
 
-  /** Idempotent foreachBatch sink: Structured Streaming replays the LAST
-    * micro-batch after a restart whose write finished but whose offset
-    * commit didn't — a plain foreachBatch sink then writes it twice.
-    * Guarding the write with [[commitOnce]] on the sink's own batch-id
-    * ledger turns the at-least-once replay into exactly-once output —
-    * the reference's ON CONFLICT DO NOTHING insert idempotence
-    * (src/SQLinserts.py:515-587), lifted to whole-batch granularity. */
+  /** Replay-guarded foreachBatch sink: Structured Streaming replays the
+    * LAST micro-batch after a restart whose write finished but whose
+    * offset commit didn't — a plain foreachBatch sink then writes it
+    * twice. Guarding the write with [[commitOnce]] on the sink's own
+    * batch-id ledger skips a replayed batch whose marker exists — the
+    * reference's ON CONFLICT DO NOTHING insert idempotence
+    * (src/SQLinserts.py:515-587), lifted to whole-batch granularity.
+    * Output is exactly-once only when `write` lands atomically:
+    * [[commitOnce]] runs the write BEFORE it creates the marker, so a
+    * crash mid-write re-runs it on replay, and a non-atomic write (e.g.
+    * `PartitionedStore.append`) can then leave the first attempt's
+    * partial output beside the second's — at-least-once. */
   def idempotentSink(stream: DataFrame, ledgerDir: String,
                      trigger: Trigger)(write: (DataFrame, Long) => Unit): StreamingQuery =
     stream.writeStream
@@ -1465,6 +1351,9 @@ object Streams {
       min(col(valCol)).as("val_min"),
       max(col(valCol)).as("val_max"))
 
+  /** Exponential backoff bookkeeping (snoozerScheduler.py:192-222): per
+    * item, consecutive failures double the cooldown multiplier (cap 8);
+    * any success resets. Emits the post-batch state per key. */
   def backoffState(events: Dataset[PollEvent]): Dataset[PollerStatus] = {
     import events.sparkSession.implicits._
     events.groupByKey(_.item)
@@ -1511,36 +1400,27 @@ object Streams {
     *  - PENDING labels, each with an event-time timer one ms past its
     *    instant: a label only assembles once the watermark passes it,
     *    so every feature row at-or-before the label has arrived
-    *    (rows later than the watermark are dropped — the WauKeeper
-    *    rule; the batch read is the complete-history arm).
+    *    (rows behind the watermark are dropped, as in
+    *    [[BucketKeeper]]; the batch read is the complete-history arm).
     * Emission replays the batch rule exactly: latest (ts, view_id)
     * view at-or-before the label; latest click day whose END ≤ the
     * label instant (same-day partials stay invisible — the nightly-job
     * contract); missing history emits NULL, never a zero-fill. */
   class PitKeeper(dayUs: Long, maxViewTail: Long = 65536L)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[Long, PitEvent, PitRow] {
-    @transient private var views: org.apache.spark.sql.streaming.ListState[PitViewRec] = _
-    @transient private var nViews: org.apache.spark.sql.streaming.ValueState[Long] = _
-    @transient private var days: org.apache.spark.sql.streaming.MapState[Long, PitClickAcc] = _
-    @transient private var pending: org.apache.spark.sql.streaming.ListState[PitPend] = _
-    override def init(outputMode: OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit = {
-      views = getHandle.getListState[PitViewRec]("views",
-        org.apache.spark.sql.Encoders.product[PitViewRec],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      nViews = getHandle.getValueState[Long]("n_views",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      days = getHandle.getMapState[Long, PitClickAcc]("day_clicks",
-        org.apache.spark.sql.Encoders.scalaLong,
-        org.apache.spark.sql.Encoders.product[PitClickAcc],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-      pending = getHandle.getListState[PitPend]("pending_labels",
-        org.apache.spark.sql.Encoders.product[PitPend],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
+      extends StatefulProcessor[Long, PitEvent, PitRow] {
+    @transient private var views: ListState[PitViewRec] = _
+    @transient private var nViews: ValueState[Long] = _
+    @transient private var days: MapState[Long, PitClickAcc] = _
+    @transient private var pending: ListState[PitPend] = _
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
+      views = getHandle.getListState("views", Encoders.product[PitViewRec], TTLConfig.NONE)
+      nViews = getHandle.getValueState("n_views", Encoders.scalaLong, TTLConfig.NONE)
+      days = getHandle.getMapState("day_clicks", Encoders.scalaLong, Encoders.product[PitClickAcc],
+        TTLConfig.NONE)
+      pending = getHandle.getListState("pending_labels", Encoders.product[PitPend], TTLConfig.NONE)
     }
     override def handleInputRows(key: Long, rows: Iterator[PitEvent],
-        timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[PitRow] = {
+                                 timerValues: TimerValues): Iterator[PitRow] = {
       var n = if (nViews.exists()) nViews.get() else 0L
       rows.foreach { e =>
         e.etype match {
@@ -1571,7 +1451,7 @@ object Streams {
         }
       }
       nViews.update(n)
-      // Label-less keys must prune too (r15): most real users never
+      // Label-less keys must prune too: most real users never
       // purchase, and without this a label-less key accumulates views
       // and days FOREVER — the per-key state leak the maxViewTail
       // budget exists to reject, just slower. When nothing is pending
@@ -1612,9 +1492,8 @@ object Streams {
           .foreach { case (k2, v2) => days.updateValue(k2, v2) }
       }
     }
-    override def handleExpiredTimer(key: Long,
-        timerValues: org.apache.spark.sql.streaming.TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[PitRow] = {
+    override def handleExpiredTimer(key: Long, timerValues: TimerValues,
+                                    expiredTimerInfo: ExpiredTimerInfo): Iterator[PitRow] = {
       val t = expiredTimerInfo.getExpiryTimeInMs()
       val pend = pending.get().toArray
       val (fire, keep) = pend.partition(p => p.ts_us / 1000L + 1L <= t)
@@ -1674,8 +1553,7 @@ object Streams {
         col("event_type").as("etype"), col("value").cast("double").as("value"))
       .as[PitEvent]
       .groupByKey(_.user_id)
-      .transformWithState(new PitKeeper(86400L * 1000000L, maxViewTail),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
+      .transformWithState(new PitKeeper(86400L * 1000000L, maxViewTail), TimeMode.EventTime(),
         OutputMode.Append())
       .toDF()
       .select(col("event_id"), col("user_id"), col("view_value"),

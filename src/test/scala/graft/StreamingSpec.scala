@@ -936,6 +936,109 @@ class StreamingSpec extends AnyFunSuite {
       r(1).asInstanceOf[Long]), "some trailing window exceeds its DAU")
   }
 
+  /** Writes each of `stages` as one JSON-lines file into the source dir of
+    * a file-source query built by `start`, one `processAllAvailable` per
+    * stage. `stopAfter` stops the
+    * query after that stage and restarts it on the same checkpoint
+    * before the next one. Returns every row the sink saw, sorted. */
+  private def fileStagedRun(schema: String, stages: Seq[Seq[String]],
+                            stopAfter: Option[Int])(
+      start: (org.apache.spark.sql.DataFrame, String,
+        scala.collection.mutable.ArrayBuffer[String]) =>
+        org.apache.spark.sql.streaming.StreamingQuery): Seq[String] = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_staged_src").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_staged_ckpt").toString
+    val seen = scala.collection.mutable.ArrayBuffer[String]()
+    def run() = start(spark.readStream.schema(schema).json(dir), ckpt, seen)
+    withRocksDb {
+      var q = run()
+      try stages.zipWithIndex.foreach { case (lines, i) =>
+        java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/stage$i.json"),
+          lines.mkString("\n").getBytes("UTF-8"))
+        q.processAllAvailable()
+        if (stopAfter.contains(i)) { q.stop(); q = run() }
+      } finally q.stop()
+    }
+    seen.synchronized(seen.toSeq.sorted)
+  }
+
+  private def withRocksDb[T](body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prev = spark.conf.get(key, "")
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body
+    finally if (prev.isEmpty) spark.conf.unset(key) else spark.conf.set(key, prev)
+  }
+
+  test("rollingWauStream: a mid-day stop and checkpoint restart emits exactly " +
+    "the rows of an uninterrupted run") {
+    def ev(u: Long, t: String) = s"""{"user_id": $u, "time": "$t"}"""
+    // stage 0 ends mid-way through 2024-01-01; stage 1 adds more of the
+    // same day (u1 again, u3 new) after the restart; stage 2 drives the
+    // watermark past every day the fixture touches
+    val stages = Seq(
+      Seq(ev(4, "2023-12-31 12:00:00"), ev(1, "2024-01-01 09:00:00"),
+        ev(2, "2024-01-01 10:00:00")),
+      Seq(ev(3, "2024-01-01 15:00:00"), ev(1, "2024-01-01 16:00:00"),
+        ev(5, "2024-01-02 08:00:00")),
+      Seq(ev(9, "2024-01-20 00:00:00")))
+    def runWau(stopAfter: Option[Int]) =
+      fileStagedRun("user_id LONG, time TIMESTAMP", stages, stopAfter) {
+        (src, ckpt, seen) =>
+          Streams.rollingWauStream(src, "time", "user_id", "1 hour")
+            .writeStream.outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .foreachBatch { (b: org.apache.spark.sql.Dataset[Streams.WauRow], _: Long) =>
+              val rows = b.collect().map(r => s"${r.day_start.toInstant} ${r.dau} ${r.wau}")
+              seen.synchronized(seen ++= rows); ()
+            }
+            .start()
+      }
+    val restarted = runWau(stopAfter = Some(0))
+    val uninterrupted = runWau(stopAfter = None)
+    assert(restarted == uninterrupted,
+      s"restart changed the output: $restarted vs $uninterrupted")
+    // the day split by the restart counts users from both sides of it
+    assert(uninterrupted == Seq(
+      "2023-12-31T00:00:00Z 1 1",
+      "2024-01-01T00:00:00Z 3 4",
+      "2024-01-02T00:00:00Z 1 5"), s"got $uninterrupted")
+  }
+
+  test("rateLimit: the token bucket survives a checkpoint restart — output " +
+    "equals an uninterrupted run") {
+    def req(t: String) = s"""{"item": "it", "ts": "$t"}"""
+    val stages = Seq(
+      Seq.fill(3)(req("2024-01-01 00:00:00")),
+      Seq(req("2024-01-01 00:00:00"), req("2024-01-01 00:00:03")))
+    def runLimit(stopAfter: Option[Int]) =
+      fileStagedRun("item STRING, ts TIMESTAMP", stages, stopAfter) {
+        (src, ckpt, seen) =>
+          val s = spark
+          import s.implicits._
+          Streams.rateLimit(src.as[Streams.Request], rate = 1.0, burst = 2.0)
+            .writeStream.outputMode("append")
+            .option("checkpointLocation", ckpt)
+            .foreachBatch { (b: org.apache.spark.sql.Dataset[Streams.RateDecision], _: Long) =>
+              val rows = b.collect().map(r => s"${r.ts.toInstant} ${r.allowed} ${r.tokensAfter}")
+              seen.synchronized(seen ++= rows); ()
+            }
+            .start()
+      }
+    val restarted = runLimit(stopAfter = Some(0))
+    val uninterrupted = runLimit(stopAfter = None)
+    assert(restarted == uninterrupted,
+      s"restart changed the output: $restarted vs $uninterrupted")
+    // a fresh bucket after the restart would admit the fourth 00:00 request
+    assert(uninterrupted == Seq(
+      "2024-01-01T00:00:00Z false 0.0",
+      "2024-01-01T00:00:00Z false 0.0",
+      "2024-01-01T00:00:00Z true 0.0",
+      "2024-01-01T00:00:00Z true 1.0",
+      "2024-01-01T00:00:03Z true 1.0"), s"got $uninterrupted")
+  }
+
   test("quantileDailyStream ≡ batch daily quantile-histogram sketches on " +
     "real fixture events (final row per (day,key,qc), emitted once)") {
     val s = spark
@@ -990,6 +1093,40 @@ class StreamingSpec extends AnyFunSuite {
     assert(batch.map(_(0)).size >= 5, "multi-day fixture really exercised")
     assert(batch.size > batch.map(_(0)).size,
       "multiple buckets per day really exercised")
+  }
+
+  test("quantileDailyStream: a day whose end is at or below the watermark " +
+    "drops its rows; a day ending above it admits them") {
+    val s = spark
+    import s.implicits._
+    implicit val ctx = s.sqlContext
+    // batch 1 (event 2024-01-03 12:00, lateness 12h) sets the batch-2
+    // watermark to 2024-01-03 00:00; the three batch-2 probes fall in days
+    // ending 01-02 (< wm), 01-03 (== wm) and 01-04 (> wm)
+    val out = withRocksDb {
+      val in = MemoryStream[Point]
+      val q = Streams.quantileDailyStream(in.toDF(), "time", "name", "price",
+          "12 hours")
+        .writeStream.format("memory").queryName("qh_band_out")
+        .outputMode("append")
+        .option("checkpointLocation",
+          java.nio.file.Files.createTempDirectory("graft_qh_band").toString)
+        .start()
+      try {
+        in.addData(Point("seed", ts("2024-01-03 12:00:00"), 1.0))
+        q.processAllAvailable()
+        in.addData(
+          Point("end_lt", ts("2024-01-01 10:00:00"), 1.0),
+          Point("end_eq", ts("2024-01-02 10:00:00"), 1.0),
+          Point("end_gt", ts("2024-01-03 01:00:00"), 1.0))
+        q.processAllAvailable()
+        in.addData(Point("flush", ts("2030-01-01 00:00:00"), 1.0))
+        q.processAllAvailable()
+        s.table("qh_band_out").select("qkey").collect().map(_.getString(0)).toSet
+      } finally q.stop()
+    }
+    assert(out == Set("seed", "end_gt"),
+      s"expected only the day ending after the watermark admitted, got $out")
   }
 
   test("sessionizeStream ≡ batch W8 sessionizer on real fixture events") {
