@@ -29,6 +29,23 @@ object Bench {
     obs
   }
 
+  /** Runs `time` over `queries` in order and splits the outcome: the
+    * queries that returned, with what `time` gave, and the names of
+    * those that threw. A query that throws gets no timing row: it is
+    * named in `bench_failed` instead, so a fast failure never reads as
+    * a fast query and never enters `steady_total`. Any Throwable counts
+    * as a failure, so one failing query does not end the suite run. */
+  def timeAll[Q, R](queries: Seq[(String, Q)])(
+      time: (String, Q) => R): (Seq[(String, R)], Seq[String]) = {
+    val out = queries.map { case (name, q) =>
+      name -> (try Right(time(name, q)) catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        Left(name)
+      })
+    }
+    (out.collect { case (n, Right(r)) => n -> r }, out.collect { case (_, Left(n)) => n })
+  }
+
   /** The committed run of record (`bench_full.json`, the main JSON line
     * of a quiet builder run) read back as the cross-round prior: per-query
     * `steady` seconds anchor the steady pass's 3×-prior trigger and its
@@ -311,7 +328,7 @@ object Bench {
     // maps across rounds for regressions, cold maps for first-run latency.
     def timedIn(dir: String)(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try { materialize(fn(spark, dir)) } catch { case _: Throwable => () }
+      materialize(fn(spark, dir))
       (System.nanoTime() - t0) / 1e9
     }
     def timed(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
@@ -328,9 +345,8 @@ object Bench {
     // lands in bench_full.json early in the main line — cross-round
     // readers (tools/perf_row.py) diff volume FIRST (plan changes) and
     // time second (host noise).
-    val firstPass = SparkEntry.queries.toSeq
-      .filterNot { case (name, _) => benchExempt(name) }
-      .map { case (name, fn) =>
+    val (firstPass, failedFirst) = timeAll(SparkEntry.queries.toSeq
+      .filterNot { case (name, _) => benchExempt(name) }) { (_, fn) =>
         val c = timed(fn)
         val b0 = shuffleTally.drain()
         // per-query MAX single-task shuffle write rides the same drained
@@ -339,7 +355,7 @@ object Bench {
         shuffleTally.resetMaxTask()
         val s = timed(fn)
         val b1 = shuffleTally.drain()
-        (name, fn, c, s, (b1 - b0).toDouble / 1e6,
+        (fn, c, s, (b1 - b0).toDouble / 1e6,
           shuffleTally.maxTask.get().toDouble / 1e6)
       }
     // Contention self-defense (r8 verdict): a warmed second pass can only
@@ -353,7 +369,7 @@ object Bench {
     // roughly their own runtime; under load it bounds how far external
     // contention can distort the committed artifact.
     val medSteady = {
-      val v = firstPass.map(_._4).sorted
+      val v = firstPass.map(_._2._3).sorted
       if (v.isEmpty) 0.0 else v(v.size / 2)
     }
     // Cross-round anchors (r10 verdict tasks #2/#8): the prior's steady
@@ -373,20 +389,21 @@ object Bench {
     // fingerprint, so a residual row distinguishes contention from a
     // broadcast that fell off); tools/perf_row.py folds it into the
     // README residual note.
-    val steadyShuf: Seq[(String, Double)] =
-      firstPass.map { case (name, _, _, _, v, _) => name -> v }
-    val steadyTaskMax: Seq[(String, Double)] =
-      firstPass.map { case (name, _, _, _, _, mt) => name -> mt }
-    val results: Seq[(String, (Double, Double, Seq[Double], String))] =
-      firstPass.map { case (name, fn, c, s0, _, _) =>
+    val (results, failedRetime) = timeAll(firstPass) { case (name, (fn, c, s0, _, _)) =>
         val p = prior.flatMap(_.steady.get(name))
         val tried = retime(s0, () => timed(fn))(shouldRetime(c, _, medBase, p))
         // a steady above its own cold that no trigger retried still gets
         // one more run: a warmed pass slower than cold is the box, not the plan
         val obs = if (tried.size == 1 && s0 > c) tried :+ timed(fn) else tried
         val fp = if (obs.size > 1) planFingerprint(fn(spark, sfDir)) else ""
-        name -> (c, obs.min, obs, fp)
+        (c, obs.min, obs, fp)
       }
+    val failed = failedFirst ++ failedRetime
+    val timedPass = firstPass.filterNot { case (name, _) => failedRetime.contains(name) }
+    val steadyShuf: Seq[(String, Double)] =
+      timedPass.map { case (name, (_, _, _, v, _)) => name -> v }
+    val steadyTaskMax: Seq[(String, Double)] =
+      timedPass.map { case (name, (_, _, _, _, mt)) => name -> mt }
     // Planning-floor probe (r10 verdict task #7): split one warmed
     // mid-cost query into DRIVER-side planning (build the DataFrame +
     // drive analysis/optimization/physical planning via executedPlan —
@@ -1046,6 +1063,7 @@ object Bench {
       // reads as "retried under load", never silently quadratic-looking
       val exemptJson =
         benchExempt.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+      val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
       // drain first: the last scaling leg's task-end events may still be
       // in flight on the listener bus
       shuffleTally.drain()
@@ -1056,7 +1074,7 @@ object Bench {
       // round that outgrew its shuffle-partition count.
       val spillMb =
         shuffleTally.spilled.get().toDouble / 1e6 - probeSpillMb
-      val line = s"""{"metric":"total","value":${r3(coldTotal)},"unit":"sec","sf":"$sfDir","queries":$cold,"steady":$steady,"steady_shuf_mb":${jmap(steadyShuf)},"steady_task_max_mb":${jmap(steadyTaskMax)},"retimed":$retimed,"steady_total":${r3(steadyTotal)},"floor":$floorJson,"incremental":${jmap(incremental)},"scaling":$scalingJson,"scaling_retimed":${jmap(scalingRetimed)},"scaling_dropped":$droppedJson,"bench_exempt":$exemptJson,"drain_timeouts":${shuffleTally.drainTimeouts.get},"spill_mb":${r3(spillMb)}}"""
+      val line = s"""{"metric":"total","value":${r3(coldTotal)},"unit":"sec","sf":"$sfDir","queries":$cold,"steady":$steady,"steady_shuf_mb":${jmap(steadyShuf)},"steady_task_max_mb":${jmap(steadyTaskMax)},"retimed":$retimed,"steady_total":${r3(steadyTotal)},"floor":$floorJson,"incremental":${jmap(incremental)},"scaling":$scalingJson,"scaling_retimed":${jmap(scalingRetimed)},"scaling_dropped":$droppedJson,"bench_exempt":$exemptJson,"bench_failed":$failedJson,"drain_timeouts":${shuffleTally.drainTimeouts.get},"spill_mb":${r3(spillMb)}}"""
       println(line)
       // bench_full.json is the BUILDER's artifact of record (the next
       // run's [[Prior]]; the README perf row derives from it) — a

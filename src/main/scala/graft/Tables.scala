@@ -21,8 +21,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * exact semantics a shared catalog table would have. Keyed by session
   * identity because a DataFrame is unusable after its session stops
   * (test suites create/stop many). Inputs here are immutable testdata
-  * dirs; stores that mutate (PartitionedStore versions, index dirs)
-  * resolve their own paths and never go through this cache. */
+  * dirs; stores that mutate never go through this cache.
+  * [[graft.sources.PartitionedStore.read]] keeps its own memo keyed by
+  * the store's published version, and versioned tables and index dirs
+  * resolve their own paths. */
 object Tables {
   /** Cache bound: one Verify/Bench session touches well under 100
     * (dir, table) keys, but a long-lived multi-session service would

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -19,14 +19,46 @@ import scala.jdk.CollectionConverters._
   *    metadata-only operation, no data rewrite, exactly like chunk drops.
   *
   * At cluster scale the same code targets an object store; retention
-  * stays O(partitions-dropped). */
+  * stays O(partitions-dropped).
+  *
+  * Store versions: each of the store's writers ([[append]],
+  * [[overwritePartitions]], and [[dropExpired]] / [[compact]] when they
+  * change the store) publishes an empty marker file named by the new
+  * version under `<path>/_store_log/` after its data has landed, and
+  * [[read]] reuses one resolved DataFrame per (session, path, version),
+  * so a read of an unchanged store pays no file listing and no schema
+  * inference. The store's own writers are its only writers: a foreign
+  * write into a store that has a marker (a plain `spark.write`, a file
+  * moved by hand) is not seen until the next store write publishes. A
+  * path with no marker (written before the log existed, or only by
+  * plain `spark.write`) is re-resolved on every read. Paths are local.
+  * The leading `_` keeps Spark's listing out of the log directory. */
 object PartitionedStore {
 
   val DateCol = "p_date"
 
+  private val LogDir = "_store_log"
+
+  /** The resolved relation (file listing plus parquet schema inference,
+    * no data) per (session, normalized absolute path, store version),
+    * the same pattern as [[graft.Tables]]. Only the frame is memoized,
+    * never its rows; a new version is a new key, and superseded
+    * versions age out by LRU. */
+  private val resolved =
+    new graft.operators.BoundedMemo[(SparkSession, String, Long), DataFrame](
+      "store.resolved")
+
+  /** Store writers in one JVM take turns. Spark's file committer stages
+    * every write job under the output path's shared `_temporary`
+    * directory, and the first of two concurrent jobs to commit deletes
+    * the other's staged files; a compaction racing an append would also
+    * swap out the appended files. */
+  private val writing = new Object
+
   /** Append rows partitioned by the date of `tsCol`, clustered by
     * `keyCol` within each partition. */
-  def append(df: DataFrame, path: String, tsCol: String, keyCol: String): Unit =
+  def append(df: DataFrame, path: String, tsCol: String,
+             keyCol: String): Unit = writing.synchronized {
     df.withColumn(DateCol, to_date(col(tsCol)))
       .repartition(col(DateCol))
       .sortWithinPartitions(col(keyCol), col(tsCol))
@@ -34,13 +66,15 @@ object PartitionedStore {
       .option("compression", "zstd") // columnar-compression analog of the
       .partitionBy(DateCol)          // reference's Timescale policies
       .parquet(path)
+    publish(path)
+  }
 
   /** Reprocess: replace ONLY the partitions present in `df` (dynamic
     * partition overwrite), leaving all other days untouched — the
     * idempotent backfill path (re-running a day's job converges instead
     * of duplicating). */
   def overwritePartitions(df: DataFrame, path: String, tsCol: String,
-                          keyCol: String): Unit =
+                          keyCol: String): Unit = writing.synchronized {
     df.withColumn(DateCol, to_date(col(tsCol)))
       .repartition(col(DateCol))
       .sortWithinPartitions(col(keyCol), col(tsCol))
@@ -49,25 +83,73 @@ object PartitionedStore {
       .option("compression", "zstd")
       .partitionBy(DateCol)
       .parquet(path)
+    publish(path)
+  }
 
-  /** Read back with partition pruning available on DateCol. */
+  /** Read back with partition pruning available on DateCol. A store
+    * with a published version returns the frame resolved for that
+    * version; a path without one is resolved afresh. */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    storeVersion(path) match {
+      case Some(v) => resolved.computeIfAbsent(
+        (spark, Paths.get(path).toAbsolutePath.normalize.toString, v),
+        _ => spark.read.parquet(path))
+      case None => spark.read.parquet(path)
+    }
+
+  /** The latest published store version at `path`: one listing of the
+    * log directory, None when there is none. */
+  private[graft] def storeVersion(path: String): Option[Long] =
+    markers(Paths.get(path, LogDir)).map(_._2).maxOption
+
+  private def markers(log: Path): List[(Path, Long)] =
+    (try paths(Files.list(log)) catch { case _: NoSuchFileException => Nil })
+      .flatMap(p => p.getFileName.toString.toLongOption.map(p -> _))
+
+  /** Publish the next store version: create-new of its empty marker, so
+    * two writers never claim one version. A writer that loses the
+    * create, or whose marker lands below one another writer created
+    * meanwhile (a marker that stale would go unseen), re-resolves and
+    * tries the next. Older markers are then deleted, which keeps the log
+    * at one or two files. A version is never below the publish time in
+    * epoch milliseconds, so a store deleted and rebuilt at the same path
+    * never repeats a version an earlier frame was memoized under.
+    * Returns the published version. */
+  private[graft] def publish(path: String): Long = {
+    val log = Files.createDirectories(Paths.get(path, LogDir))
+    @annotation.tailrec def claim(): Long = {
+      val v = math.max(storeVersion(path).getOrElse(0L) + 1, System.currentTimeMillis())
+      val created =
+        try { Files.createFile(log.resolve(f"$v%019d")); true }
+        catch { case _: FileAlreadyExistsException => false }
+      if (created && storeVersion(path).contains(v)) v else claim()
+    }
+    val v = claim()
+    markers(log).filter(_._2 < v).foreach(m => Files.deleteIfExists(m._1))
+    v
+  }
+
+  /** The entries of a directory stream, with the stream closed: an
+    * unclosed `Files.list` / `Files.walk` holds its descriptors until
+    * the JVM exits. */
+  private def paths(stream: java.util.stream.Stream[Path]): List[Path] =
+    try stream.iterator().asScala.toList finally stream.close()
 
   /** Retention: drop partition directories strictly older than
     * `keepDays` before `asOf`. Returns dropped partition names. */
-  def dropExpired(path: String, keepDays: Int, asOf: java.time.LocalDate): Seq[String] = {
+  def dropExpired(path: String, keepDays: Int,
+                  asOf: java.time.LocalDate): Seq[String] = writing.synchronized {
     val cutoff = asOf.minusDays(keepDays)
     val root = Paths.get(path)
     if (!Files.exists(root)) return Nil
-    val dropped = Files.list(root).iterator().asScala
+    val dropped = paths(Files.list(root))
       .filter(p => p.getFileName.toString.startsWith(s"$DateCol="))
       .filter { p =>
         val d = p.getFileName.toString.stripPrefix(s"$DateCol=")
         scala.util.Try(java.time.LocalDate.parse(d)).toOption.exists(_.isBefore(cutoff))
       }
-      .toList
     dropped.foreach(deleteRecursive)
+    if (dropped.nonEmpty) publish(path)
     dropped.map(_.getFileName.toString)
   }
 
@@ -92,30 +174,30 @@ object PartitionedStore {
   def compact(spark: SparkSession, path: String, keyCol: String,
               tsCol: String, maxFiles: Int = 8,
               targetRowsPerFile: Long = 4000000L,
-              partCol: String = DateCol): Seq[String] = {
+              partCol: String = DateCol): Seq[String] = writing.synchronized {
     val root = Paths.get(path)
     if (!Files.exists(root)) return Nil
     // recover from any prior crash: a partition sitting in `.trash` with no
     // original means the crash hit between the two swap renames — restore
     // the original (always complete); orphaned trash/rewrite dirs whose
     // original exists are just stale garbage
-    Files.list(root).iterator().asScala
+    val restored = paths(Files.list(root))
       .filter(p => p.getFileName.toString.startsWith(".") &&
-        p.getFileName.toString.endsWith(".trash")).toList
-      .foreach { trash =>
+        p.getFileName.toString.endsWith(".trash"))
+      .count { trash =>
         val orig = trash.resolveSibling(
           trash.getFileName.toString.stripPrefix(".").stripSuffix(".trash"))
-        if (!Files.exists(orig)) Files.move(trash, orig)
-        else deleteRecursive(trash)
+        val restore = !Files.exists(orig)
+        if (restore) Files.move(trash, orig) else deleteRecursive(trash)
+        restore
       }
-    val offending = Files.list(root).iterator().asScala
+    val offending = paths(Files.list(root))
       .filter(p => p.getFileName.toString.startsWith(s"$partCol=") &&
         Files.isDirectory(p))
       .filter { p =>
-        Files.list(p).iterator().asScala
+        paths(Files.list(p))
           .count(_.getFileName.toString.endsWith(".parquet")) > maxFiles
       }
-      .toList
     offending.foreach { dir =>
       val name = dir.getFileName.toString
       val tmp = dir.resolveSibling(s".$name.compact")
@@ -133,6 +215,7 @@ object PartitionedStore {
       Files.move(tmp, dir)
       deleteRecursive(trash)
     }
+    if (restored > 0 || offending.nonEmpty) publish(path)
     offending.map(_.getFileName.toString)
   }
 
@@ -412,7 +495,7 @@ object PartitionedStore {
   def versions(path: String): Seq[Long] = {
     val m = Paths.get(path, "_manifests")
     if (!Files.exists(m)) return Nil
-    Files.list(m).iterator().asScala
+    paths(Files.list(m))
       .map(_.getFileName.toString)
       .filter(n => n.startsWith("v") && n.endsWith(".list"))
       .map(_.stripPrefix("v").stripSuffix(".list").toLong)
@@ -655,7 +738,7 @@ object PartitionedStore {
     }
     def sizedFiles: Int = {
       val bytes = manifestDirs(path, v).map { d =>
-        Files.walk(Paths.get(path, "data", d)).iterator().asScala
+        paths(Files.walk(Paths.get(path, "data", d)))
           .filter(Files.isRegularFile(_)).map(Files.size(_)).sum
       }.sum
       math.max(1L, (bytes + (128L << 20) - 1) / (128L << 20)).toInt
@@ -701,7 +784,7 @@ object PartitionedStore {
   def compositeVersions(path: String): Seq[Long] = {
     val m = Paths.get(path, "_manifests")
     if (!Files.exists(m)) return Nil
-    Files.list(m).iterator().asScala
+    paths(Files.list(m))
       .map(_.getFileName.toString)
       .filter(n => n.startsWith("c") && n.endsWith(".index"))
       .map(_.stripPrefix("c").stripSuffix(".index").toLong)
@@ -906,15 +989,15 @@ object PartitionedStore {
     val live = versions(path).flatMap(manifestDirs(path, _)).toSet
     val dataDir = Paths.get(path, "data")
     if (!Files.exists(dataDir)) return Nil
-    val orphans = Files.list(dataDir).iterator().asScala
-      .filter(p => !live.contains(p.getFileName.toString)).toList
+    val orphans = paths(Files.list(dataDir))
+      .filter(p => !live.contains(p.getFileName.toString))
     orphans.foreach(deleteRecursive)
     orphans.map(_.getFileName.toString)
   }
 
   private def deleteRecursive(p: Path): Unit = {
     if (Files.isDirectory(p))
-      Files.list(p).iterator().asScala.toList.foreach(deleteRecursive)
+      paths(Files.list(p)).foreach(deleteRecursive)
     Files.deleteIfExists(p)
   }
 }

@@ -270,6 +270,26 @@ class BenchSpec extends AnyFunSuite {
     } finally java.nio.file.Files.delete(f)
   }
 
+  test("timeAll: a query that throws is returned as failed (the main " +
+    "line's bench_failed list), gets no timing row and adds nothing to " +
+    "steady_total; the queries around it are timed in order") {
+    val spark = LocalSession(2)
+    val queries: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "ok_a" -> (() => spark.range(10).toDF()),
+      "boom" -> (() => spark.range(1).selectExpr("raise_error('injected') AS x")),
+      "ok_b" -> (() => spark.range(5).toDF()))
+    val timedNames = scala.collection.mutable.ListBuffer[String]()
+    val (timed, failed) = Bench.timeAll(queries) { (name, q) =>
+      q().write.format("noop").mode("overwrite").save()
+      timedNames += name
+      1.0
+    }
+    assert(failed == Seq("boom"))
+    assert(timed == Seq("ok_a" -> 1.0, "ok_b" -> 1.0))
+    assert(timedNames.toList == List("ok_a", "ok_b"), "the failure was timed")
+    assert(timed.map(_._2).sum == 2.0)
+  }
+
   test("retime: at most two retries, the trigger sees the best so far, " +
     "it stops once the trigger is false, and every observation returns") {
     // fake clock: each re-run returns the next scripted time

@@ -174,6 +174,163 @@ class WireSpec extends AnyFunSuite {
     assert(!java.nio.file.Files.exists(trash))
   }
 
+  private def storeRows(day: String, prices: Double*) = {
+    val s = spark
+    import s.implicits._
+    prices.zipWithIndex.map { case (p, i) =>
+      ("a", java.sql.Timestamp.valueOf(f"$day 10:$i%02d:00"), p)
+    }.toDF("name", "time", "price")
+  }
+
+  private def storePrices(dir: String): Seq[Double] =
+    PartitionedStore.read(spark, dir).orderBy("time", "price").collect()
+      .map(_.getAs[Double]("price")).toSeq
+
+  private def logFiles(dir: String): Int =
+    Option(new java.io.File(s"$dir/_store_log").list()).fold(0)(_.length)
+
+  /** Spark jobs `body` launches on this thread, counted by job group. A
+    * flush job in a second group is awaited, so every earlier job-start
+    * event has reached the listener when the count is read. */
+  private def jobsIn[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-flush", "flush")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.contains(s"$group-flush") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(s"$group-flush"), "listener never saw the flush job")
+      (out, seen.toArray.count(_ == group))
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("store read: a second read of an unchanged store is the memoized " +
+    "frame and launches no Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_store_memo").toString
+    PartitionedStore.append(storeRows("2024-01-01", 1.0, 2.0), dir, "time", "name")
+    val (first, coldJobs) = jobsIn(PartitionedStore.read(spark, dir))
+    assert(coldJobs >= 1, "a fresh resolve infers the schema with a job")
+    val (second, jobs) = jobsIn(PartitionedStore.read(spark, dir))
+    assert(second eq first)
+    assert(jobs == 0)
+    assert(second.count() == 2)
+  }
+
+  test("store read: every store writer publishes a version the next read " +
+    "sees (append, overwritePartitions, dropExpired, compact and its " +
+    ".trash recovery); a no-op drop or compact publishes nothing; a store " +
+    "rebuilt at the same path is read afresh") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_store_ver").toString
+    PartitionedStore.append(storeRows("2024-01-01", 1.0), dir, "time", "name")
+    assert(storePrices(dir) == Seq(1.0))
+    PartitionedStore.append(storeRows("2024-01-02", 2.0), dir, "time", "name")
+    assert(storePrices(dir) == Seq(1.0, 2.0))
+    PartitionedStore.overwritePartitions(storeRows("2024-01-02", 2.5), dir, "time", "name")
+    assert(storePrices(dir) == Seq(1.0, 2.5))
+    (1 to 3).foreach(i =>
+      PartitionedStore.append(storeRows("2024-01-03", 3.0 + i), dir, "time", "name"))
+    assert(storePrices(dir) == Seq(1.0, 2.5, 4.0, 5.0, 6.0))
+    // the rewrite deletes the files the memoized frame lists: a read
+    // that missed the new version would fail on a missing file
+    assert(PartitionedStore.compact(spark, dir, "name", "time", maxFiles = 2) ==
+      Seq("p_date=2024-01-03"))
+    assert(storePrices(dir) == Seq(1.0, 2.5, 4.0, 5.0, 6.0))
+    val v = PartitionedStore.storeVersion(dir)
+    assert(PartitionedStore.compact(spark, dir, "name", "time", maxFiles = 2).isEmpty)
+    assert(PartitionedStore.dropExpired(dir, 30, java.time.LocalDate.parse("2024-01-03")).isEmpty)
+    assert(PartitionedStore.storeVersion(dir) == v, "a no-op must not publish")
+    // a partition left in .trash by a crashed swap is restored: restore
+    // alone (nothing over maxFiles) publishes
+    val root = java.nio.file.Paths.get(dir)
+    java.nio.file.Files.move(root.resolve("p_date=2024-01-02"),
+      root.resolve(".p_date=2024-01-02.trash"))
+    PartitionedStore.append(storeRows("2024-01-04", 7.0), dir, "time", "name")
+    assert(storePrices(dir) == Seq(1.0, 4.0, 5.0, 6.0, 7.0))
+    assert(PartitionedStore.compact(spark, dir, "name", "time", maxFiles = 8).isEmpty)
+    assert(PartitionedStore.storeVersion(dir).exists(_ > v.get + 1))
+    assert(storePrices(dir) == Seq(1.0, 2.5, 4.0, 5.0, 6.0, 7.0))
+    assert(PartitionedStore.dropExpired(dir, 1, java.time.LocalDate.parse("2024-01-03")) ==
+      Seq("p_date=2024-01-01"))
+    assert(storePrices(dir) == Seq(2.5, 4.0, 5.0, 6.0, 7.0))
+    // a store deleted and rebuilt at the same path is a new store
+    val tree = java.nio.file.Files.walk(root)
+    try tree.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(p => java.nio.file.Files.delete(p))
+    finally tree.close()
+    PartitionedStore.append(storeRows("2024-01-05", 8.0), dir, "time", "name")
+    assert(storePrices(dir) == Seq(8.0))
+  }
+
+  test("store read: a path without a marker reads unmemoized, so a plain " +
+    "spark.write append into it shows on the next read") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_store_plain").toString + "/t"
+    storeRows("2024-01-01", 1.0).write.parquet(dir)
+    assert(storePrices(dir) == Seq(1.0))
+    assert(!(PartitionedStore.read(spark, dir) eq PartitionedStore.read(spark, dir)))
+    storeRows("2024-01-02", 2.0).write.mode("append").parquet(dir)
+    assert(storePrices(dir) == Seq(1.0, 2.0))
+    assert(PartitionedStore.storeVersion(dir).isEmpty, "a read never publishes")
+  }
+
+  test("store log: two threads appending concurrently land every row, " +
+    "racing publishers never share a version, and the log holds at most " +
+    "2 markers after 50 appends") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_store_race").toString
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    def racing(n: Int)(body: Int => Unit) = {
+      val ts = Seq(0, 1).map(t => new Thread(() =>
+        try (0 until n).foreach(_ => body(t)) catch { case e: Throwable => errors.add(e) }))
+      ts.foreach(_.start()); ts.foreach(_.join(120000))
+      assert(errors.isEmpty, String.valueOf(errors.peek()))
+    }
+    val next = Array(0, 0)
+    racing(25) { t =>
+      PartitionedStore.append(storeRows("2024-01-01", t * 100.0 + next(t)), dir, "time", "name")
+      next(t) += 1
+    }
+    assert(storePrices(dir).sorted ==
+      ((0 until 25).map(_.toDouble) ++ (0 until 25).map(100.0 + _)))
+    assert(logFiles(dir) <= 2, s"${logFiles(dir)} markers")
+    // publishers racing on one log: every published version is distinct
+    val log = java.nio.file.Files.createTempDirectory("graft_store_pub").toString
+    val claimed = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    racing(100)(_ => claimed.add(PartitionedStore.publish(log)))
+    val vs = claimed.toArray.toSeq.map(_.asInstanceOf[Long])
+    assert(vs.size == 200 && vs.distinct.size == 200)
+    assert(PartitionedStore.storeVersion(log) == Some(vs.max))
+    assert(logFiles(log) <= 2)
+  }
+
+  test("store listings close their streams: 200 reads and 200 versions() " +
+    "calls leave the open-descriptor count unchanged") {
+    val fds = java.nio.file.Paths.get("/proc/self/fd")
+    assume(java.nio.file.Files.isDirectory(fds), "needs /proc/self/fd")
+    def open(): Long = { val st = java.nio.file.Files.list(fds); try st.count() finally st.close() }
+    val dir = java.nio.file.Files.createTempDirectory("graft_store_fd").toString
+    PartitionedStore.append(storeRows("2024-01-01", 1.0), dir, "time", "name")
+    val table = java.nio.file.Files.createTempDirectory("graft_store_fdv").toString + "/t"
+    PartitionedStore.commitVersion(storeRows("2024-01-01", 1.0), table)
+    PartitionedStore.read(spark, dir); PartitionedStore.versions(table)
+    val before = open()
+    (1 to 200).foreach { _ =>
+      PartitionedStore.read(spark, dir)
+      PartitionedStore.versions(table)
+    }
+    // an unclosed listing holds two descriptors, so a leak would add 800
+    assert(open() == before)
+  }
+
   test("T1 deltaAppend: idempotent — replaying the same payload inserts nothing") {
     val s = spark
     import s.implicits._
