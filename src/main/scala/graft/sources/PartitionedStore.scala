@@ -57,29 +57,26 @@ object PartitionedStore {
 
   /** Append rows partitioned by the date of `tsCol`, clustered by
     * `keyCol` within each partition. */
-  def append(df: DataFrame, path: String, tsCol: String,
-             keyCol: String): Unit = writing.synchronized {
-    df.withColumn(DateCol, to_date(col(tsCol)))
-      .repartition(col(DateCol))
-      .sortWithinPartitions(col(keyCol), col(tsCol))
-      .write.mode(SaveMode.Append)
-      .option("compression", "zstd") // columnar-compression analog of the
-      .partitionBy(DateCol)          // reference's Timescale policies
-      .parquet(path)
-    publish(path)
-  }
+  def append(df: DataFrame, path: String, tsCol: String, keyCol: String): Unit =
+    write(df, path, tsCol, keyCol, SaveMode.Append)
 
   /** Reprocess: replace ONLY the partitions present in `df` (dynamic
     * partition overwrite), leaving all other days untouched — the
     * idempotent backfill path (re-running a day's job converges instead
     * of duplicating). */
-  def overwritePartitions(df: DataFrame, path: String, tsCol: String,
-                          keyCol: String): Unit = writing.synchronized {
+  def overwritePartitions(df: DataFrame, path: String, tsCol: String, keyCol: String): Unit =
+    write(df, path, tsCol, keyCol, SaveMode.Overwrite, "partitionOverwriteMode" -> "dynamic")
+
+  /** The store's one data writer: date-partitioned, `(key, ts)`-clustered
+    * zstd parquet (the columnar-compression analog of the reference's
+    * Timescale policies), written through [[LocalFs]], then published. */
+  private def write(df: DataFrame, path: String, tsCol: String, keyCol: String,
+                    mode: SaveMode, options: (String, String)*): Unit = writing.synchronized {
     df.withColumn(DateCol, to_date(col(tsCol)))
       .repartition(col(DateCol))
       .sortWithinPartitions(col(keyCol), col(tsCol))
-      .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
+      .write.mode(mode)
+      .options(LocalFs.writerOptions ++ options)
       .option("compression", "zstd")
       .partitionBy(DateCol)
       .parquet(path)

@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout,
-  ListState, MapState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode,
-  TimerValues, Trigger, ValueState}
+import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, GroupState,
+  GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig,
+  TimeMode, TimerValues, Trigger, ValueState}
 
 /** Structured Streaming re-expression of the reference's incremental
   * chains (SURVEY §2.8). The append table IS the change stream — Spark's
@@ -31,6 +32,15 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateT
   */
 object Streams {
 
+  /** Every query this object starts is built here: its session resolves
+    * `file:` checkpoint paths through [[graft.sources.LocalFs]] first, so
+    * offset logs, commit logs and state-store files are written without a
+    * child process per file. */
+  private def writer(stream: DataFrame): DataStreamWriter[Row] = {
+    graft.sources.LocalFs.useForStreams(stream.sparkSession)
+    stream.writeStream
+  }
+
   /** T1: idempotent delta append — drop duplicate (key, ts) points within
     * the watermark window; points older than the watermark are dropped by
     * construction (the reference's late-data semantics). */
@@ -40,20 +50,23 @@ object Streams {
       .dropDuplicatesWithinWatermark(keyCol, tsCol)
 
   /** T3: per-micro-batch latest-1 per key pushed to `push` (the WS seam).
-    * max_by(struct) keeps it one shuffle per batch. */
+    * max_by(struct) keeps it one shuffle per batch. The latest-1 rows are
+    * collected once (at most one per key in the batch, the size of the
+    * push itself) and handed over as a local frame; a batch without rows
+    * pushes nothing. */
   def cdcLatestPush(stream: DataFrame, keyCol: String, tsCol: String,
                     trigger: Trigger, push: DataFrame => Unit): StreamingQuery =
-    stream.writeStream
+    writer(stream)
       .outputMode(OutputMode.Update())
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val latest = batch
-            .groupBy(col(keyCol))
-            .agg(max_by(struct(batch.columns.toIndexedSeq.map(col): _*), col(tsCol)).as("row"))
-            .select(col("row.*"))
-          push(latest)
-        }
+        val latest = batch
+          .groupBy(col(keyCol))
+          .agg(max_by(struct(batch.columns.toIndexedSeq.map(col): _*), col(tsCol)).as("row"))
+          .select(col("row.*"))
+        val rows = latest.collect()
+        if (rows.nonEmpty)
+          push(batch.sparkSession.createDataFrame(rows.toSeq.asJava, latest.schema))
       }
       .start()
 
@@ -141,7 +154,7 @@ object Streams {
                     textCol: String, threshold: Double, hitsDir: String,
                     acceptedDir: String, ledgerDir: String,
                     checkpointDir: String): StreamingQuery =
-    stream.writeStream
+    writer(stream)
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -191,7 +204,7 @@ object Streams {
     * keep a serving index fresh. */
   def indexAppendStream(stream: DataFrame, checkpointDir: String)(
       append: (org.apache.spark.sql.SparkSession, DataFrame) => Unit): StreamingQuery =
-    stream.writeStream
+    writer(stream)
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -223,7 +236,7 @@ object Streams {
                    reportDir: String, acceptedDir: String,
                    quarantineDir: String, ledgerDir: String,
                    checkpointDir: String): StreamingQuery =
-    stream.writeStream
+    writer(stream)
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -309,10 +322,9 @@ object Streams {
     // never process-lifetime) and watermark-pruned in lockstep with the
     // upstream aggregation's retained windows (filterInPlace below)
     val panel = scala.collection.mutable.Map.empty[(Long, Long, String), Long]
-    stream.withWatermark(tsCol, lateness)
-      .groupBy(window(col(tsCol), windowLen, slide), col(itemCol))
-      .agg(count(lit(1)).as("n"))
-      .writeStream
+    writer(stream.withWatermark(tsCol, lateness)
+        .groupBy(window(col(tsCol), windowLen, slide), col(itemCol))
+        .agg(count(lit(1)).as("n")))
       .outputMode(OutputMode.Update())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val rows = batch.select(col("window.start").cast("long") * 1000,
@@ -910,7 +922,7 @@ object Streams {
                      push: DataFrame => Unit,
                      replanLog: DataFrame => Unit = _ => ()): StreamingQuery = {
     @volatile var live: Set[String] = Set.empty
-    ticks.writeStream
+    writer(ticks)
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val s = batch.sparkSession
@@ -1294,7 +1306,7 @@ object Streams {
                            valCol: String, storePath: String,
                            ledgerDir: String,
                            checkpointDir: String): StreamingQuery =
-    stream.writeStream
+    writer(stream)
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, id: Long) =>
@@ -1325,7 +1337,7 @@ object Streams {
     * partial output beside the second's — at-least-once. */
   def idempotentSink(stream: DataFrame, ledgerDir: String,
                      trigger: Trigger)(write: (DataFrame, Long) => Unit): StreamingQuery =
-    stream.writeStream
+    writer(stream)
       .outputMode(OutputMode.Append())
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>

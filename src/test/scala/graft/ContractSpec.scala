@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -52,6 +53,28 @@ class ContractSpec extends AnyFunSuite {
       assert(String.valueOf(e.getMessage).contains("ARITHMETIC_OVERFLOW"),
         e.getMessage)
     }
+  }
+
+  test("Verify writes failures.json beside oracle_sql.json: one " +
+    "{query, exception, message} record per selected query that threw, " +
+    "an empty list when none did") {
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    def records(out: String): Seq[java.util.Map[String, String]] = {
+      val all = json.readValue(new java.io.File(s"$out/failures.json"),
+        classOf[java.util.List[java.util.Map[String, String]]])
+      all.asScala.toSeq
+    }
+    val tmp = java.nio.file.Files.createTempDirectory("graft_verify").toString
+    Verify.dump(spark, "/root/testdata/sf0.001", s"$tmp/ok", Some(Seq("q1_")))
+    assert(records(s"$tmp/ok").isEmpty)
+    assert(new java.io.File(s"$tmp/ok/q1_pricing_summary").isDirectory)
+    // no tables under the scale-factor dir: both selected queries throw
+    Verify.dump(spark, s"$tmp/no_tables", s"$tmp/bad", Some(Seq("q1_", "q3_")))
+    val failed = records(s"$tmp/bad")
+    assert(failed.map(_.get("query")).sorted == Seq("q1_pricing_summary", "q3_shipping_priority"))
+    assert(failed.forall(r => r.get("exception").contains("Exception") &&
+      r.get("message").contains("no_tables")), failed)
+    assert(json.readTree(new java.io.File(s"$tmp/bad/oracle_sql.json")).size == 2)
   }
 
   test("flagship entry returns rows at the smoke scale factor") {

@@ -1,9 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{PartitionedStore, Wire}
+import graft.sources.{LocalFs, PartitionedStore, Wire}
 
 /** Wire bronze→silver golden semantics (FIXTURES.md §1) + partitioned
   * store with retention (S12/T12). */
@@ -329,6 +330,150 @@ class WireSpec extends AnyFunSuite {
     }
     // an unclosed listing holds two descriptors, so a leak would add 800
     assert(open() == before)
+  }
+
+  // ---- LocalFs: Hadoop's local file system without a fork per file ----
+
+  private val fileUri = java.net.URI.create("file:///")
+
+  private def initialized[F <: org.apache.hadoop.fs.FileSystem](fs: F): F = {
+    fs.initialize(fileUri, new org.apache.hadoop.conf.Configuration()); fs
+  }
+
+  private def fileContext(afs: Option[String]): org.apache.hadoop.fs.FileContext = {
+    val conf = new org.apache.hadoop.conf.Configuration()
+    afs.foreach(conf.set(LocalFs.contextKey._1, _))
+    org.apache.hadoop.fs.FileContext.getFileContext(fileUri, conf)
+  }
+
+  private def mode(p: java.nio.file.Path): String =
+    java.nio.file.attribute.PosixFilePermissions.toString(
+      java.nio.file.Files.getPosixFilePermissions(p))
+
+  /** Bytes and mode of every file and directory under `root`, by
+    * relative path. */
+  private def tree(root: java.nio.file.Path): Map[String, (Seq[Byte], String)] = {
+    val st = java.nio.file.Files.walk(root)
+    try st.iterator().asScala.filter(_ != root).map { p =>
+      root.relativize(p).toString -> (
+        if (java.nio.file.Files.isDirectory(p)) Seq.empty[Byte]
+        else java.nio.file.Files.readAllBytes(p).toSeq, mode(p))
+    }.toMap finally st.close()
+  }
+
+  test("LocalFs: files and directories written through it have the bytes, " +
+    ".crc side files and mode bits (0644 / 0755 under umask 022) of " +
+    "Hadoop's default local FileSystem and FileContext") {
+    import org.apache.hadoop.fs.{CreateFlag, LocalFileSystem, Options, Path}
+    // 3000 bytes span several 512-byte checksum chunks
+    val bytes = Array.tabulate[Byte](3000)(i => (i * 31 + 7).toByte)
+    def viaFs(fs: org.apache.hadoop.fs.FileSystem, root: java.nio.file.Path): Unit = {
+      val out = fs.create(new Path(s"$root/a/b/part-0.bin"))
+      try out.write(bytes) finally out.close()
+    }
+    def viaContext(fc: org.apache.hadoop.fs.FileContext, root: java.nio.file.Path): Unit = {
+      fc.mkdir(new Path(s"$root/offsets"),
+        org.apache.hadoop.fs.permission.FsPermission.getDirDefault, true)
+      val out = fc.create(new Path(s"$root/offsets/0"),
+        java.util.EnumSet.of(CreateFlag.CREATE, CreateFlag.OVERWRITE), Options.CreateOpts.createParent())
+      try out.write(bytes) finally out.close()
+    }
+    def written(write: java.nio.file.Path => Unit) = {
+      val root = java.nio.file.Files.createTempDirectory("graft_localfs")
+      write(root); tree(root)
+    }
+    val stockFs = written(viaFs(initialized(new LocalFileSystem()), _))
+    val ours = written(viaFs(initialized(new LocalFs.Checksummed), _))
+    assert(stockFs.keySet == Set("a", "a/b", "a/b/part-0.bin", "a/b/.part-0.bin.crc"))
+    assert(ours == stockFs)
+    assert(ours("a/b/part-0.bin")._1 == bytes.toSeq)
+    assert(ours("a/b/part-0.bin")._2 == "rw-r--r--" && ours("a/b")._2 == "rwxr-xr-x")
+    val stockFc = written(viaContext(fileContext(None), _))
+    val oursFc = written(viaContext(fileContext(Some(LocalFs.contextKey._2)), _))
+    assert(stockFc.keySet == Set("offsets", "offsets/0", "offsets/.0.crc"))
+    assert(oursFc == stockFc)
+    assert(oursFc("offsets/0")._2 == "rw-r--r--" && oursFc("offsets")._2 == "rwxr-xr-x")
+  }
+
+  test("LocalFs: a FileContext rename with OVERWRITE replaces an existing " +
+    "file, a symlink's status still comes from Hadoop's own code, and a " +
+    "missing path throws FileNotFoundException") {
+    import org.apache.hadoop.fs.{Options, Path, RawLocalFileSystem}
+    val fc = fileContext(Some(LocalFs.contextKey._2))
+    assert(fc.getDefaultFileSystem.getClass == classOf[LocalFs.Context])
+    val root = java.nio.file.Files.createTempDirectory("graft_localfs_rn")
+    def put(name: String, text: String): Path = {
+      val p = new Path(s"$root/$name")
+      val out = fc.create(p, java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE))
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+      p
+    }
+    val (tmp, dst) = (put(".1.tmp", "new"), put("1", "old"))
+    fc.rename(tmp, dst, Options.Rename.OVERWRITE)
+    assert(tree(root).keySet == Set("1", ".1.crc"))
+    assert(new String(java.nio.file.Files.readAllBytes(root.resolve("1")), "UTF-8") == "new")
+
+    val target = root.resolve("1")
+    val link = java.nio.file.Files.createSymbolicLink(root.resolve("link"), target)
+    val stock = initialized(new RawLocalFileSystem())
+    val raw = initialized(new LocalFs.Raw)
+    def status(fs: RawLocalFileSystem, p: java.nio.file.Path) = {
+      val st = fs.getFileLinkStatus(new Path(p.toString))
+      (st.getPath, st.isSymlink, if (st.isSymlink) st.getSymlink else null, st.getLen)
+    }
+    assert(status(raw, link) == status(stock, link))
+    assert(status(raw, link)._2, "the link reads as a link")
+    assert(status(raw, target) == status(stock, target))
+    val missing = new Path(s"$root/missing")
+    intercept[java.io.FileNotFoundException](raw.getFileLinkStatus(missing))
+    intercept[java.io.FileNotFoundException](raw.getFileStatus(missing))
+    intercept[java.io.FileNotFoundException](fc.getFileLinkStatus(missing))
+  }
+
+  test("LocalFs: on a session whose conf carries none of its keys, a store " +
+    "append writes with graft's FileSystem and a started stream leaves the " +
+    "session resolving FileContext paths to graft's AbstractFileSystem") {
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val s2 = spark.newSession()
+    import s2.implicits._
+    assert(s2.conf.getOption(LocalFs.contextKey._1).isEmpty)
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, String]]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit =
+        qe.logical.collectFirst { case c: InsertIntoHadoopFsRelationCommand => c.options }
+          .foreach(writes.add)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    s2.listenerManager.register(l)
+    val dir = java.nio.file.Files.createTempDirectory("graft_localfs_store").toString
+    try {
+      val rows = Seq(("a", java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 1.0))
+        .toDF("name", "time", "price")
+      PartitionedStore.append(rows, dir, "time", "name")
+      val deadline = System.nanoTime() + 30000000000L
+      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally s2.listenerManager.unregister(l)
+    val opts = writes.peek()
+    assert(opts != null, "the listener never saw the store write")
+    assert(LocalFs.writerOptions.toSet.subsetOf(opts.toSet))
+    val writeConf = s2.sessionState.newHadoopConfWithOptions(opts)
+    assert(new org.apache.hadoop.fs.Path(dir).getFileSystem(writeConf).getClass ==
+      classOf[LocalFs.Checksummed])
+
+    implicit val ctx = s2.sqlContext
+    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, java.sql.Timestamp)]
+    val q = graft.streaming.Streams.cdcLatestPush(in.toDF().toDF("name", "time"), "name", "time",
+      org.apache.spark.sql.streaming.Trigger.ProcessingTime(0), _ => ())
+    try {
+      in.addData(("a", java.sql.Timestamp.valueOf("2024-01-01 10:00:00")))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(s2.conf.getOption(LocalFs.contextKey._1).contains(LocalFs.contextKey._2))
+    assert(org.apache.hadoop.fs.AbstractFileSystem.get(fileUri, s2.sessionState.newHadoopConf())
+      .getClass == classOf[LocalFs.Context])
   }
 
   test("T1 deltaAppend: idempotent — replaying the same payload inserts nothing") {
