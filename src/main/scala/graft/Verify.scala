@@ -20,11 +20,12 @@ object Verify {
 
   /** Writes the selected queries' results, oracle_sql.json and
     * failures.json under `outDir`. */
-  def dump(spark: SparkSession, sfDir: String, outDir: String,
-           only: Option[Seq[String]]): Unit = {
+  private[graft] def dump(spark: SparkSession, sfDir: String, outDir: String,
+                          only: Option[Seq[String]]): Unit = {
     def selected(name: String) = only.forall(_.exists(name.startsWith))
     new java.io.File(outDir).mkdirs()
-    val failures = SparkEntry.queries.filter(kv => selected(kv._1)).toSeq.flatMap { case (name, fn) =>
+    val queries = SparkEntry.queries.filter(kv => selected(kv._1)).toSeq
+    val failures = queries.flatMap { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
         None
