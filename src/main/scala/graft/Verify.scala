@@ -3,7 +3,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare, and
+  * plus oracle_sql.json for the DuckDB oracle compare, and
   * failures.json: one {query, exception, message} record per query that
   * threw (an empty list when none did). */
 object Verify {
