@@ -46,6 +46,17 @@ object Bench {
     (out.collect { case (n, Right(r)) => n -> r }, out.collect { case (_, Left(n)) => n })
   }
 
+  /** Writes the main JSON line to `path`. A write that fails is named on
+    * stderr as `[bench] could not write <path>: <exception>` and the run
+    * goes on, so the compact line still prints last; a silent failure
+    * would leave the next run reading a stale prior. */
+  def writeMainLine(path: String, line: String): Unit =
+    try java.nio.file.Files.write(java.nio.file.Paths.get(path),
+      line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench] could not write $path: $e")
+    }
+
   /** The committed run of record (`bench_full.json`, the main JSON line
     * of a quiet builder run) read back as the cross-round prior: per-query
     * `steady` seconds anchor the steady pass's 3×-prior trigger and its
@@ -1084,9 +1095,7 @@ object Bench {
       // run of record opts in via SPARK_GRAFT_BENCH_OUT=bench_full.json.
       val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
         "bench_full.driver.json")
-      try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-        line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      catch { case _: Throwable => () }
+      writeMainLine(outPath, line)
     }
     val stages: Seq[(String, () => Unit)] = Seq(
       "compact_early" -> (() =>

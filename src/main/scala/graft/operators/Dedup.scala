@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.{BloomFilterAggregate
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.BinaryType
 import graft.functions.{BandKeysExpr, MinHashSigExpr, PolyHashExpr, SeqShingleHashesExpr, ShingleHashesExpr, SimHashExpr}
+import graft.sources.StoredIndex
 
 /** Deduplication operators for large-scale text corpora: exact (hash),
   * MinHash+LSH banding (Broder 1997), SimHash (Charikar, STOC 2002), and
@@ -493,10 +494,57 @@ object Dedup {
   }
 
   // ---- materialized near-dup LSH index -------------------------------------
-  // The third leg of the stored-index trilogy: BM25 (lexical,
-  // Search.writeBm25Index), IVF (vector, Similarity.writeIvfIndex), and
-  // this (near-dup) all share the same atomic composite-version lifecycle
-  // — write / probe-pruned read / delta append / loser-errors publish.
+  // The near-dup member of the stored-index families: BM25, phrase and
+  // trigram (lexical, Search), IVF (vector, Similarity.writeIvfIndex) and
+  // this one share graft.sources.StoredIndex's composite lifecycle —
+  // write / probe-pruned read / delta append / tombstone delete /
+  // compaction, loser-errors publish.
+
+  /** Per-doc minhash signatures (idCol, sig) of the docs with at least
+    * one shingle. */
+  private def lshSignatures(docs: DataFrame, idCol: String, textCol: String,
+                            k: Int): DataFrame =
+    shingleTable(docs, idCol, textCol)
+      .filter(size(col("sh")) > 0)
+      .select(col("id").as(idCol), minhashSignature(col("sh"), k).as("sig"))
+
+  /** The stats row of a [[writeLshIndex]] layout: corpus size and the
+    * band layout every probe and append must hash into. */
+  private final case class LshStats(nDocs: Long, k: Int, bands: Int,
+                                    nBuckets: Int) {
+    def rows: Int = k / bands
+
+    /** Band rows of `sig`, bucketed by key hash (a partition column). */
+    def bandRows(sig: DataFrame, idCol: String): DataFrame =
+      sig.select(col(idCol),
+          posexplode(bandKeys(col("sig"), bands, rows)).as(Seq("band", "key")))
+        .withColumn("bucket", pmod(col("key"), lit(nBuckets.toLong)))
+        .repartition(col("bucket"))
+        .sortWithinPartitions(col("band"), col("key"), col(idCol))
+
+    /** Commit as the 1-row stats component; the id column is recorded so
+      * deletes and compaction resolve it from stats. */
+    def commit(spark: org.apache.spark.sql.SparkSession, path: String,
+               idCol: String): Long =
+      StoredIndex.commit(spark.range(1).select(lit(nDocs).as("n_docs"),
+        lit(k).as("k"), lit(bands).as("bands"), lit(nBuckets).as("n_buckets"),
+        lit(idCol).as("id_col")), path, "stats")
+  }
+
+  private def lshStats(s: StoredIndex.Served): LshStats = {
+    val r = s.read("stats").collect()(0)
+    LshStats(r.getAs[Long]("n_docs"), r.getAs[Int]("k"), r.getAs[Int]("bands"),
+      r.getAs[Int]("n_buckets"))
+  }
+
+  /** The id column of a [[writeLshIndex]] layout: recorded in stats;
+    * a layout whose stats lack it resolves it from the band columns. */
+  private def lshIdCol(s: StoredIndex.Served): String = {
+    val stats = s.read("stats")
+    if (stats.columns.contains("id_col"))
+      stats.select(col("id_col")).collect()(0).getString(0)
+    else StoredIndex.idColumn(s.read("bands"), Set("band", "key", "bucket"), "bands")
+  }
 
   /** Materialize the near-dup LSH index: per-doc minhash SIGNATURES and
     * their banded KEYS as stored tables, so nightly deltas probe the
@@ -509,42 +557,28 @@ object Dedup {
     * shingles (shorter than the shingle width) are excluded: they can
     * never band-collide, and excluding them keeps stored signatures
     * well-formed. Components pinned by one composite manifest: `sig/`,
-    * `bands/`, `stats/` — a torn write can never serve mixed generations. */
+    * `bands/`, `stats/`, `bloom/` — a torn write can never serve mixed
+    * generations. */
   def writeLshIndex(docs: DataFrame, idCol: String, textCol: String,
                     path: String, k: Int = 16, bands: Int = 4,
                     nBuckets: Int = 32, bloomCap: Long = 1L << 22): Unit = {
-    import graft.sources.PartitionedStore
-    val rows = k / bands
-    val sig = shingleTable(docs, idCol, textCol)
-      .filter(size(col("sh")) > 0)
-      .select(col("id").as(idCol), minhashSignature(col("sh"), k).as("sig"))
-      .localCheckpoint()
-    val sv = PartitionedStore.commitVersion(sig, s"$path/sig")
-    val bv = PartitionedStore.commitVersion(
-      sig.select(col(idCol),
-          posexplode(bandKeys(col("sig"), bands, rows)).as(Seq("band", "key")))
-        .withColumn("bucket", pmod(col("key"), lit(nBuckets.toLong)))
-        .repartition(col("bucket"))
-        .sortWithinPartitions(col("band"), col("key"), col(idCol)),
-      s"$path/bands", partitionCols = Seq("bucket"))
-    val stv = PartitionedStore.commitVersion(
-      sig.agg(count(lit(1)).as("n_docs"))
-        .select(col("n_docs"), lit(k).as("k"), lit(bands).as("bands"),
-          lit(nBuckets).as("n_buckets"),
-          // recorded so compaction resolves the id column from stats
-          // instead of inferring it by eliminating known names
-          lit(idCol).as("id_col")),
-      s"$path/stats")
-    // id-membership Bloom sketch: what makes nightly appends O(delta) —
-    // [[appendLshIndex]] gates its re-delivery check through this sketch
-    // instead of anti-joining every standing signature id. `bloomCap`
-    // (sketch capacity) is stored alongside the bytes because OR-merge
-    // requires identical layouts; size it for the corpus's LIFETIME id
-    // count (~0.9 bytes/id at 3% fpp — 4M default ≈ 3.6 MB resident).
-    val blv = commitLshBloom(sig, idCol, bloomCap, path)
-    PartitionedStore.publishComposite(path,
-      Map("sig" -> sv, "bands" -> bv, "stats" -> stv, "bloom" -> blv))
-    Checkpoints.release(sig)
+    val sig = lshSignatures(docs, idCol, textCol, k).localCheckpoint()
+    try {
+      val sv = StoredIndex.commit(sig, path, "sig")
+      val stats = LshStats(sig.count(), k, bands, nBuckets)
+      val bv = StoredIndex.commit(stats.bandRows(sig, idCol), path, "bands",
+        Seq("bucket"))
+      val stv = stats.commit(docs.sparkSession, path, idCol)
+      // id-membership Bloom sketch: what makes nightly appends O(delta) —
+      // [[appendLshIndex]] gates its re-delivery check through this sketch
+      // instead of anti-joining every standing signature id. `bloomCap`
+      // (sketch capacity) is stored alongside the bytes because OR-merge
+      // requires identical layouts; size it for the corpus's LIFETIME id
+      // count (~0.9 bytes/id at 3% fpp — 4M default ≈ 3.6 MB resident).
+      val blv = commitLshBloom(sig, idCol, bloomCap, path)
+      StoredIndex.create(path,
+        Map("sig" -> sv, "bands" -> bv, "stats" -> stv, "bloom" -> blv))
+    } finally Checkpoints.release(sig)
   }
 
   /** Commits the 1-row (sketch, cap) `bloom/` component over `keyed`'s
@@ -553,9 +587,9 @@ object Dedup {
   private def commitLshBloom(keyed: DataFrame, idCol: String, cap: Long,
                              path: String): Long =
     withBloomCaps(keyed.sparkSession, cap) {
-      graft.sources.PartitionedStore.commitVersion(
+      StoredIndex.commit(
         keyed.select(bloomAgg(idCol, cap).as("sketch"), lit(cap).as("cap")),
-        s"$path/bloom")
+        path, "bloom")
     }
 
   /** Probe a [[writeLshIndex]] artifact with a delta: candidates from the
@@ -571,56 +605,43 @@ object Dedup {
   def probeLshIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                     delta: DataFrame, idCol: String, textCol: String,
                     threshold: Double): DataFrame = {
-    import graft.sources.PartitionedStore
-    val served = PartitionedStore.readComposite(path)
-    val statsRow = PartitionedStore
-      .readVersion(spark, s"$path/stats", Some(served("stats")))
-      .select(col("k"), col("bands"), col("n_buckets")).collect()(0)
-    val (k, bands, nBuckets) = (statsRow.getInt(0), statsRow.getInt(1), statsRow.getInt(2))
-    val rows = k / bands
+    val s = StoredIndex.served(spark, path)
+    val st = lshStats(s)
     // NOT localCheckpoint'd: the returned frame would pin the blocks with
     // no release point (a steady serving loop would accumulate storage —
     // the Checkpoints.release lesson). The delta re-signs once for the
     // bucket collect below — delta-sized, deterministic, cheap.
-    val dsig = shingleTable(delta, idCol, textCol)
-      .filter(size(col("sh")) > 0)
-      .select(col("id").as("new_id"), minhashSignature(col("sh"), k).as("nsig"))
+    val dsig = lshSignatures(delta, idCol, textCol, st.k)
+      .select(col(idCol).as("new_id"), col("sig").as("nsig"))
     val dbands = dsig.select(col("new_id"), col("nsig"),
-      posexplode(bandKeys(col("nsig"), bands, rows)).as(Seq("band", "key")))
+      posexplode(bandKeys(col("nsig"), st.bands, st.rows)).as(Seq("band", "key")))
     val buckets = dbands
-      .select(pmod(col("key"), lit(nBuckets.toLong)).as("b"))
+      .select(pmod(col("key"), lit(st.nBuckets.toLong)).as("b"))
       .distinct().collect().map(_.getLong(0)).toSeq
-    val stored0 = PartitionedStore
-      .readVersion(spark, s"$path/bands", Some(served("bands")))
-      .filter(col("bucket").isin(buckets: _*))
     // tombstoned docs never become candidates — a probe after a delete
     // is bit-identical to one against an index rebuilt without them
-    val stored = served.get("tombstones").fold(stored0) { tv =>
-      stored0.join(broadcast(PartitionedStore.readVersion(
-        spark, s"$path/tombstones", Some(tv))), Seq(idCol), "left_anti")
-    }
+    val stored = s.live(s.read("bands").filter(col("bucket").isin(buckets: _*)), idCol)
     val cand = dbands.join(stored,
         dbands("band") === stored("band") && dbands("key") === stored("key"))
       .select(col("new_id"), col("nsig"), stored(idCol).as("old_id"))
       .dropDuplicates("new_id", "old_id")
-    val osig = PartitionedStore.readVersion(spark, s"$path/sig", Some(served("sig")))
-      .select(col(idCol).as("old_id"), col("sig").as("osig"))
-    val out = cand.join(osig, "old_id")
+    val osig = s.read("sig").select(col(idCol).as("old_id"), col("sig").as("osig"))
+    cand.join(osig, "old_id")
       .withColumn("est_jaccard",
         aggregate(zip_with(col("nsig"), col("osig"),
             (a, b) => when(a === b, 1).otherwise(0)),
-          lit(0), (acc, x) => acc + x).cast("double") / lit(k.toDouble))
+          lit(0), (acc, x) => acc + x).cast("double") / lit(st.k.toDouble))
       .filter(col("est_jaccard") >= threshold)
       .select(col("new_id"), col("old_id"), col("est_jaccard"))
-    out
   }
 
   /** Delta append into a [[writeLshIndex]] layout — nightly cost tracks
     * the DELTA (shingle/sign only new docs, append their band rows into
-    * the existing buckets); the crash/idempotency contract is the BM25/
-    * IVF one verbatim: components pin the SERVED parent, re-delivered ids
-    * are filtered away, fully-duplicate deltas no-op, and readers only
-    * ever see a published generation.
+    * the existing buckets); the crash/idempotency/delete contract is
+    * [[graft.sources.StoredIndex]]'s: components pin the SERVED parent,
+    * the publish keeps the tombstone set, tombstoned ids raise,
+    * re-delivered ids are filtered away, fully-duplicate deltas no-op,
+    * and readers only ever see a published generation.
     *
     * The re-delivery check is Bloom-GATED so the append never scans the
     * standing corpus on a clean night: delta ids probe the stored `bloom/`
@@ -639,28 +660,11 @@ object Dedup {
   def appendLshIndex(spark: org.apache.spark.sql.SparkSession,
                      delta: DataFrame, idCol: String, textCol: String,
                      path: String): Unit = {
-    import graft.sources.PartitionedStore
-    val served = PartitionedStore.readComposite(path)
-    val statsRow = PartitionedStore
-      .readVersion(spark, s"$path/stats", Some(served("stats")))
-      .select(col("n_docs"), col("k"), col("bands"), col("n_buckets")).collect()(0)
-    val (k, bands, nBuckets) = (statsRow.getInt(1), statsRow.getInt(2), statsRow.getInt(3))
-    val rows = k / bands
-    // resurrection guard (see [[deleteFromLshIndex]]): a tombstoned id in
-    // the delta fails loudly — it is deleted content, not a re-delivery
-    served.get("tombstones").foreach { tv =>
-      val tomb = PartitionedStore.readVersion(
-        spark, s"$path/tombstones", Some(tv))
-      val clash = delta.join(broadcast(tomb), Seq(idCol), "left_semi")
-        .select(col(idCol)).limit(3).collect()
-      if (clash.nonEmpty) throw new IllegalStateException(
-        s"append would resurrect tombstoned ids (e.g. ${clash.mkString(", ")})" +
-          s" at $path; compact the index to reclaim them first")
-    }
-    // pre-bloom layouts (no `bloom/` component) keep the exact anti-join
-    val bloomRow = served.get("bloom").map { blv =>
-      PartitionedStore.readVersion(spark, s"$path/bloom", Some(blv)).collect()(0)
-    }
+    val s = StoredIndex.served(spark, path)
+    val st = lshStats(s)
+    s.refuseResurrection(delta, idCol)
+    // a layout without a `bloom/` component keeps the exact anti-join
+    val bloomRow = if (s.has("bloom")) Some(s.read("bloom").collect()(0)) else None
     // `flagged` is checkpointed because it is consumed twice (the isEmpty
     // gate and the exact-fallback join); released only after `sig` below
     // has materialized — the downstream lineage reads its blocks
@@ -678,41 +682,20 @@ object Dedup {
           // confirmed re-deliveries from the delta — `flagged` is tiny
           // (re-deliveries + fpp), so both joins broadcast it
           val confirmed = broadcast(flagged).join(
-            PartitionedStore.readVersion(spark, s"$path/sig",
-              Some(served("sig"))).select(col(idCol)),
-            Seq(idCol), "left_semi")
+            s.read("sig").select(col(idCol)), Seq(idCol), "left_semi")
           delta.join(broadcast(confirmed), Seq(idCol), "left_anti")
         }
       case None =>
-        val existing = PartitionedStore
-          .readVersion(spark, s"$path/sig", Some(served("sig"))).select(col(idCol))
-        delta.join(existing, Seq(idCol), "left_anti")
+        delta.join(s.read("sig").select(col(idCol)), Seq(idCol), "left_anti")
     }
-    val sig = shingleTable(fresh, idCol, textCol)
-      .filter(size(col("sh")) > 0)
-      .select(col("id").as(idCol), minhashSignature(col("sh"), k).as("sig"))
-      .localCheckpoint()
+    val sig = lshSignatures(fresh, idCol, textCol, st.k).localCheckpoint()
     if (flagged != null) Checkpoints.release(flagged)
-    if (sig.isEmpty) { Checkpoints.release(sig); return }
-    val sv = PartitionedStore.commitVersion(sig, s"$path/sig",
-      append = true, parent = Some(served("sig")))
-    val bv = PartitionedStore.commitVersion(
-      sig.select(col(idCol),
-          posexplode(bandKeys(col("sig"), bands, rows)).as(Seq("band", "key")))
-        .withColumn("bucket", pmod(col("key"), lit(nBuckets.toLong)))
-        .repartition(col("bucket"))
-        .sortWithinPartitions(col("band"), col("key"), col(idCol)),
-      s"$path/bands", append = true, parent = Some(served("bands")),
-      partitionCols = Seq("bucket"))
-    val dn = sig.count()
-    val stv = PartitionedStore.commitVersion(
-      spark.range(1).select(
-        lit(statsRow.getLong(0) + dn).as("n_docs"), lit(k).as("k"),
-        lit(bands).as("bands"), lit(nBuckets).as("n_buckets"),
-        lit(idCol).as("id_col")),
-      s"$path/stats")
-    val blMap = bloomRow match {
-      case Some(br) =>
+    try {
+      if (sig.isEmpty) return // fully re-delivered delta: no-op
+      val sv = s.append(sig, "sig")
+      val bv = s.append(st.bandRows(sig, idCol), "bands", Seq("bucket"))
+      val stv = st.copy(nDocs = st.nDocs + sig.count()).commit(spark, path, idCol)
+      val blMap = bloomRow.map { br =>
         val cap = br.getAs[Long]("cap")
         val merged = bloomMergeSketches(br.getAs[Array[Byte]]("sketch"),
           bloomBuild(sig, idCol, cap))
@@ -720,112 +703,58 @@ object Dedup {
         // a broadcast, never inside the task itself
         import spark.implicits._
         val bc = spark.sparkContext.broadcast(merged)
-        val blv = try PartitionedStore.commitVersion(
+        "bloom" -> (try StoredIndex.commit(
             spark.range(0, 1, 1, 1).map(_ => (Option(bc.value), cap)).toDF("sketch", "cap"),
-            s"$path/bloom")
-          finally bc.destroy()
-        Map("bloom" -> blv)
-      case None => Map.empty[String, Long]
-    }
-    PartitionedStore.publishComposite(path,
-      Map("sig" -> sv, "bands" -> bv, "stats" -> stv) ++ blMap)
-    Checkpoints.release(sig)
+            path, "bloom")
+          finally bc.destroy())
+      }
+      s.publish(Map("sig" -> sv, "bands" -> bv, "stats" -> stv) ++ blMap)
+    } finally Checkpoints.release(sig)
   }
 
   /** Tombstone DELETE from a [[writeLshIndex]] layout — the near-dup
-    * sibling of [[Search.deleteFromBm25Index]], same contract: O(delete
-    * set) cost (ids append into a `tombstones` component, n_docs shrinks
-    * by the count actually present, atomic republish), serving probes
-    * ([[probeLshIndex]]) anti-join the tombstones out of the stored band
-    * rows, appends raise on resurrection attempts, and
-    * [[compactLshIndex]] physically reclaims. The id-membership Bloom
-    * sketch deliberately keeps the deleted ids until compaction — a
-    * Bloom cannot unlearn — which errs on the side of flagging them at
-    * append time (exact fallback → the loud resurrection raise), never
-    * on silently re-serving deleted content. */
+    * sibling of [[Search.deleteFromBm25Index]], same contract
+    * ([[graft.sources.StoredIndex]]): O(delete set) cost (n_docs shrinks
+    * by the count actually present), serving probes ([[probeLshIndex]])
+    * anti-join the tombstones out of the stored band rows, appends raise
+    * on resurrection attempts, and [[compactLshIndex]] physically
+    * reclaims. The id-membership Bloom sketch deliberately keeps the
+    * deleted ids until compaction — a Bloom cannot unlearn — which errs
+    * on the side of flagging them at append time (exact fallback → the
+    * loud resurrection raise), never on silently re-serving deleted
+    * content. */
   def deleteFromLshIndex(spark: org.apache.spark.sql.SparkSession,
                          ids: DataFrame, path: String): Unit = {
-    import graft.sources.PartitionedStore
-    val served = PartitionedStore.readComposite(path)
-    val statsRow = PartitionedStore
-      .readVersion(spark, s"$path/stats", Some(served("stats"))).collect()(0)
-    val idCol = statsRow.getAs[String]("id_col")
-    val prior = served.get("tombstones").map(tv =>
-      PartitionedStore.readVersion(spark, s"$path/tombstones", Some(tv)))
-    val requested = ids.select(col(ids.columns.head).as(idCol)).distinct()
-    val fresh = prior.fold(requested)(p =>
-      requested.join(broadcast(p), Seq(idCol), "left_anti"))
-    val gone = PartitionedStore
-      .readVersion(spark, s"$path/sig", Some(served("sig")))
-      .select(col(idCol))
-      .join(broadcast(fresh), Seq(idCol), "left_semi")
-      .localCheckpoint()
-    try {
-      if (gone.isEmpty) return // nothing indexed-and-undeleted: no-op
-      val dn = gone.count()
-      val tv = PartitionedStore.commitVersion(gone,
-        s"$path/tombstones", append = served.contains("tombstones"),
-        parent = served.get("tombstones"))
-      val stv = PartitionedStore.commitVersion(
-        spark.range(1).select(
-          lit(statsRow.getAs[Long]("n_docs") - dn).as("n_docs"),
-          lit(statsRow.getAs[Int]("k")).as("k"),
-          lit(statsRow.getAs[Int]("bands")).as("bands"),
-          lit(statsRow.getAs[Int]("n_buckets")).as("n_buckets"),
-          lit(idCol).as("id_col")),
-        s"$path/stats")
-      PartitionedStore.publishComposite(path,
-        served ++ Map("tombstones" -> tv, "stats" -> stv))
-    } finally Checkpoints.release(gone)
+    val s = StoredIndex.served(spark, path)
+    val idCol = lshIdCol(s)
+    s.delete(ids, idCol, s.read("sig").select(col(idCol))) { gone =>
+      val st = lshStats(s)
+      Map("stats" -> st.copy(nDocs = st.nDocs - gone.count()).commit(spark, path, idCol))
+    }
   }
 
-  /** Compact a [[writeLshIndex]] layout after a run of nightly appends —
-    * the near-dup sibling of [[Search.compactBm25Index]]: bands collapse
-    * back to one bucket-clustered rewrite, signatures coalesce, the
-    * composite republishes. Probe results are bit-identical; the old
+  /** Compact a [[writeLshIndex]] layout after a run of nightly appends
+    * and deletes — the near-dup sibling of [[Search.compactBm25Index]]:
+    * bands collapse back to one bucket-clustered rewrite, signatures
+    * coalesce, tombstoned rows leave both, the composite republishes
+    * without the tombstone set. Probe results are bit-identical; the old
     * generation time-travels until vacuumed. */
   def compactLshIndex(spark: org.apache.spark.sql.SparkSession,
                       path: String): Unit = {
-    import graft.sources.PartitionedStore
-    val served = PartitionedStore.readComposite(path)
-    // the writer records its id column in stats (r8+); inference by
-    // eliminating known band columns remains only for pre-r8 artifacts
-    val stats = PartitionedStore.readVersion(spark, s"$path/stats",
-      Some(served("stats")))
-    val idCol =
-      if (stats.columns.contains("id_col"))
-        stats.select(col("id_col")).collect()(0).getString(0)
-      else PartitionedStore
-        .readVersion(spark, s"$path/bands", Some(served("bands")))
-        .columns.filterNot(Set("band", "key", "bucket")) match {
-        case Array(only) => only
-        case other => throw new IllegalArgumentException(
-          s"ambiguous band id column among ${other.mkString(", ")}")
-      }
-    // tombstone reclaim rides the rewrite (see [[Search.compactBm25Index]])
-    val minus = served.get("tombstones").map { tv =>
-      (PartitionedStore.readVersion(spark, s"$path/tombstones", Some(tv)),
-        Seq(idCol))
+    val s = StoredIndex.served(spark, path)
+    val idCol = lshIdCol(s)
+    s.compact(idCol,
+      StoredIndex.Rewrite("bands", Seq("bucket"), Seq("band", "key", idCol)),
+      StoredIndex.Rewrite("sig")) { next =>
+      // a Bloom cannot unlearn, so reclaim is the one moment the
+      // membership sketch must REBUILD — from the compacted signature
+      // ids, at the same capacity — or the re-add embargo would outlive
+      // the tombstones
+      if (s.tombstoned && s.has("bloom"))
+        Map("bloom" -> commitLshBloom(next.read("sig"), idCol,
+          s.read("bloom").collect()(0).getAs[Long]("cap"), path))
+      else Map.empty
     }
-    val bv = PartitionedStore.compactVersion(spark, s"$path/bands",
-      partitionCols = Seq("bucket"), sortCols = Seq("band", "key", idCol),
-      version = Some(served("bands")), minus = minus)
-    val sv = PartitionedStore.compactVersion(spark, s"$path/sig",
-      version = Some(served("sig")), minus = minus)
-    // a Bloom cannot unlearn, so reclaim is the one moment the membership
-    // sketch must REBUILD — from the compacted signature ids, at the same
-    // capacity — or the re-add embargo would outlive the tombstones
-    val blMap = (minus, served.get("bloom")) match {
-      case (Some(_), Some(blv)) =>
-        val cap = PartitionedStore
-          .readVersion(spark, s"$path/bloom", Some(blv))
-          .collect()(0).getAs[Long]("cap")
-        val sigNew = PartitionedStore.readVersion(spark, s"$path/sig", Some(sv))
-        Map("bloom" -> commitLshBloom(sigNew, idCol, cap, path))
-      case _ => Map.empty[String, Long]
-    }
-    PartitionedStore.publishComposite(path,
-      served - "tombstones" ++ Map("bands" -> bv, "sig" -> sv) ++ blMap)
   }
 
   /** Incremental EXACT dedup with Bloom semi-join reduction — the

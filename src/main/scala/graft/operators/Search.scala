@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.sources.StoredIndex
 
 /** Lexical retrieval over `documents` — the keyword half of a retrieval
   * stack whose vector half is [[Similarity]]. BM25 follows Robertson &
@@ -93,17 +94,16 @@ object Search {
     docs.select(col(idCol), explode(split(trim(col(textCol)), " ")).as("term"))
       .groupBy(col(idCol), col("term")).agg(count(lit(1)).as("tf"))
 
-  /** Quantized BM25 scores of every (query, doc) pair sharing ≥1 term —
-    * the scoring core behind [[bm25TopK]] and [[bm25PrfTopK]]. `qterms`
-    * is a (query_id, term) frame, small by construction (broadcast by
-    * callers). */
-  /** The scoring core against PREBUILT parts: query-vocabulary postings
-    * `tfq` (idCol, term, tf — every row of every query term, nothing
-    * else), per-doc lengths `dl` and the 1-row corpus `stats` — shared by
-    * the derive-in-run path ([[bm25Scores]]) and the materialized-index
-    * path ([[bm25IndexTopK]]), so their score expressions cannot drift.
-    * df is counted on `tfq` itself: a term's df only needs rows
-    * containing that term, which `tfq` holds in full — exact either way. */
+  /** Quantized BM25 scores of every (query, doc) pair sharing ≥1 term,
+    * computed against PREBUILT parts: query-vocabulary postings `tfq`
+    * (idCol, term, tf — every row of every query term, nothing else),
+    * per-doc lengths `dl`, the 1-row corpus `stats` and the (query_id,
+    * term) frame `qterms` (small by construction, broadcast by callers).
+    * Shared by the derive-in-run paths ([[bm25TopK]], [[bm25PrfTopK]])
+    * and the materialized-index path ([[bm25IndexTopK]]), so their score
+    * expressions cannot drift. df is counted on `tfq` itself: a term's df
+    * only needs rows containing that term, which `tfq` holds in full —
+    * exact either way. */
   private def bm25ScoresFrom(tfq: DataFrame, dl: DataFrame, stats: DataFrame,
                              qterms: DataFrame, idCol: String,
                              k1: Double, b: Double): DataFrame = {
@@ -139,7 +139,7 @@ object Search {
     * query term but co-occurring with the feedback vocabulary become
     * reachable.
     *
-    * Scale shape: both passes are [[bm25Scores]] (query vocab broadcast,
+    * Scale shape: both passes are [[bm25ScoresFrom]] (query vocab broadcast,
     * postings filtered first); the feedback-term selection works on
     * |queries|·fbDocs posting rows — a bounded CollectTopK per query,
     * never a corpus aggregation. */
@@ -210,36 +210,75 @@ object Search {
 
   // ---- materialized inverted index -----------------------------------------
 
+  /** Term-bucketed postings: bucket = pmod(xxhash64(term), nBuckets), a
+    * partition column, one write partition per bucket, rows clustered by
+    * `sortCols` — the layout every term-keyed index here stores. */
+  private def termBucketed(postings: DataFrame, nBuckets: Int,
+                           sortCols: String*): DataFrame =
+    postings
+      .withColumn("bucket", pmod(xxhash64(col("term")), lit(nBuckets.toLong)))
+      .repartition(col("bucket"))
+      .sortWithinPartitions(sortCols.map(col): _*)
+
+  /** The bucket ids `keyCol`'s values hash into — resolved driver-side
+    * (|query vocabulary| hashes, planning work) so the postings read
+    * prunes bucket directories statically. */
+  private def bucketsOf(keys: DataFrame, keyCol: String,
+                        nBuckets: Int): Seq[Long] =
+    keys.select(pmod(xxhash64(col(keyCol)), lit(nBuckets.toLong)).as("b"))
+      .distinct().collect().map(_.getLong(0)).toSeq
+
+  /** The bucket count a term-keyed layout was written with. */
+  private def nBucketsOf(s: StoredIndex.Served): Int =
+    s.read("stats").select(col("n_buckets")).collect()(0).getInt(0)
+
+  /** The 1-row stats of the layouts whose only statistic is the bucket
+    * count (phrase, trigram, symmetric-delete). */
+  private def commitBucketCount(spark: org.apache.spark.sql.SparkSession,
+                                path: String, nBuckets: Int): Long =
+    StoredIndex.commit(spark.range(1).select(lit(nBuckets).as("n_buckets")),
+      path, "stats")
+
   /** Materialize the BM25 serving state ONCE: postings written TERM-
-    * BUCKETED (bucket = pmod(xxhash64(term), nBuckets) — a partition
-    * column, so a query's vocabulary resolves to a handful of bucket
-    * directory reads and every other posting byte is never listed,
-    * opened, or scanned), per-doc lengths, and the 1-row corpus stats
-    * (which also records nBuckets, so readers can never hash into a
-    * mismatched layout). This is the store-don't-rederive shape a serving
-    * path needs at 100 TB — the analog of [[Similarity.writeIvfIndex]]
-    * for the lexical arm: [[bm25TopK]] re-derives postings from raw text
-    * per run; [[bm25IndexTopK]] reads them back and re-derives nothing. */
+    * BUCKETED ([[termBucketed]] — a query's vocabulary resolves to a
+    * handful of bucket directory reads and every other posting byte is
+    * never listed, opened, or scanned), per-doc lengths, and the 1-row
+    * corpus stats (which also records nBuckets, so readers can never hash
+    * into a mismatched layout). This is the store-don't-rederive shape a
+    * serving path needs at 100 TB — the analog of
+    * [[Similarity.writeIvfIndex]] for the lexical arm: [[bm25TopK]]
+    * re-derives postings from raw text per run; [[bm25IndexTopK]] reads
+    * them back and re-derives nothing. */
   def writeBm25Index(docs: DataFrame, idCol: String, textCol: String,
                      path: String, nBuckets: Int = 64): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive: $nBuckets")
-    import graft.sources.PartitionedStore
     // one corpus pass feeds postings, dl and stats alike
     val tf = termFrequencies(docs, idCol, textCol).localCheckpoint()
     val dl = tf.groupBy(col(idCol)).agg(sum(col("tf")).as("dl"))
       .localCheckpoint()
-    val dv = PartitionedStore.commitVersion(dl, s"$path/dl")
-    val sv = PartitionedStore.commitVersion(
-      dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_tokens"))
-        .withColumn("n_buckets", lit(nBuckets)), s"$path/stats")
-    val pv = PartitionedStore.commitVersion(
-      tf.withColumn("bucket", pmod(xxhash64(col("term")), lit(nBuckets.toLong)))
-        .repartition(col("bucket"))
-        .sortWithinPartitions(col("term"), col(idCol)),
-      s"$path/postings", partitionCols = Seq("bucket"))
-    PartitionedStore.publishComposite(path,
-      Map("postings" -> pv, "dl" -> dv, "stats" -> sv))
+    try {
+      val dv = StoredIndex.commit(dl, path, "dl")
+      val sv = StoredIndex.commit(
+        dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_tokens"))
+          .withColumn("n_buckets", lit(nBuckets)), path, "stats")
+      val pv = StoredIndex.commit(termBucketed(tf, nBuckets, "term", idCol),
+        path, "postings", Seq("bucket"))
+      StoredIndex.create(path, Map("postings" -> pv, "dl" -> dv, "stats" -> sv))
+    } finally { Checkpoints.release(tf); Checkpoints.release(dl) }
   }
+
+  /** The id column of a [[writeBm25Index]] layout: whatever the writer
+    * used, the `dl` column that is not `dl`. */
+  private def bm25IdCol(s: StoredIndex.Served): String =
+    StoredIndex.idColumn(s.read("dl"), _ == "dl", "dl")
+
+  /** Commit the 1-row BM25 corpus stats. */
+  private def commitBm25Stats(spark: org.apache.spark.sql.SparkSession,
+                              path: String, nDocs: Long, tokens: Long,
+                              nBuckets: Int): Long =
+    StoredIndex.commit(spark.range(1).select(lit(nDocs).as("n_docs"),
+      lit(tokens).as("total_tokens"), lit(nBuckets).as("n_buckets")),
+      path, "stats")
 
   /** Incremental maintenance of a [[writeBm25Index]] layout — the
     * nightly-delivery form (the lexical twin of
@@ -251,46 +290,25 @@ object Search {
     * falls out of the layout: per-term df is counted on the pruned
     * postings at query time (old + appended rows together), so a query
     * after an append is bit-identical to one against a full rebuild
-    * (the spec's claim). Small appended files are a compaction rewrite
-    * commit's job (commitVersion dropDirs), not this one's.
+    * (the spec's claim). Small appended files are [[compactBm25Index]]'s
+    * job, not this one's.
     *
-    * Crash contract — ATOMIC via the composite pointer: component
-    * commits (dl, postings, stats) land first as new UNREFERENCED
-    * versions of their stores — each append pinned to the parent the
-    * SERVED composite references, never the raw latest, so a retry
-    * after a crash cannot stack on an orphan — and the index flips to
-    * the new generation only at [[graft.sources.PartitionedStore
-    * .publishComposite]]. A crash anywhere before that leaves readers
-    * on the old generation with consistent idf/avgdl; racing appenders
-    * error at a component commit or the publish (loser-errors), never
-    * corrupt. Re-delivered doc ids are dropped by an anti-join against
-    * the served dl (idempotent delivery — without it a duplicate id
-    * would double-count n_docs and fan out the score join). */
+    * Crash and delete contract: [[graft.sources.StoredIndex]] — the
+    * components append on the served parents, the new generation
+    * publishes atomically and keeps the tombstone set, and a tombstoned
+    * id in the delta raises. Re-delivered doc ids are dropped by an
+    * anti-join against the served dl (idempotent delivery — without it a
+    * duplicate id would double-count n_docs and fan out the score
+    * join). */
   def appendBm25Index(spark: org.apache.spark.sql.SparkSession,
                       delta: DataFrame, idCol: String, textCol: String,
                       path: String): Unit = {
-    import graft.sources.PartitionedStore
-    val served = PartitionedStore.readComposite(path)
-    val statsRow = PartitionedStore
-      .readVersion(spark, s"$path/stats", Some(served("stats")))
+    val s = StoredIndex.served(spark, path)
+    val statsRow = s.read("stats")
       .select(col("n_docs"), col("total_tokens"), col("n_buckets")).collect()(0)
     val nBuckets = statsRow.getInt(2)
-    // a tombstoned id arriving in a delta is NOT a re-delivery — it is a
-    // resurrection of deleted content, and a takedown pipeline must fail
-    // loudly on it, never silently re-serve. Legitimate re-use of the id
-    // becomes possible after compaction physically reclaims it.
-    served.get("tombstones").foreach { tv =>
-      val tomb = PartitionedStore.readVersion(
-        spark, s"$path/tombstones", Some(tv))
-      val clash = delta.join(broadcast(tomb), Seq(idCol), "left_semi")
-        .select(col(idCol)).limit(3).collect()
-      if (clash.nonEmpty) throw new IllegalStateException(
-        s"append would resurrect tombstoned ids (e.g. ${clash.mkString(", ")})" +
-          s" at $path; compact the index to reclaim them first")
-    }
-    val existing = PartitionedStore
-      .readVersion(spark, s"$path/dl", Some(served("dl"))).select(col(idCol))
-    val fresh = delta.join(existing, Seq(idCol), "left_anti")
+    s.refuseResurrection(delta, idCol)
+    val fresh = delta.join(s.read("dl").select(col(idCol)), Seq(idCol), "left_anti")
     val tf = termFrequencies(fresh, idCol, textCol).localCheckpoint()
     val dl = tf.groupBy(col(idCol)).agg(sum(col("tf")).as("dl"))
       .localCheckpoint()
@@ -299,132 +317,59 @@ object Search {
     // executor storage until the session dies
     try {
       if (dl.isEmpty) return // fully re-delivered delta: the append is a no-op
-      val dv = PartitionedStore.commitVersion(dl, s"$path/dl",
-        append = true, parent = Some(served("dl")))
-      val pv = PartitionedStore.commitVersion(
-        tf.withColumn("bucket", pmod(xxhash64(col("term")), lit(nBuckets.toLong)))
-          .repartition(col("bucket"))
-          .sortWithinPartitions(col("term"), col(idCol)),
-        s"$path/postings", append = true, parent = Some(served("postings")),
-        partitionCols = Seq("bucket"))
+      val dv = s.append(dl, "dl")
+      val pv = s.append(termBucketed(tf, nBuckets, "term", idCol), "postings",
+        Seq("bucket"))
       val d = dl.agg(count(lit(1)).as("dn"), sum(col("dl")).as("dt")).collect()(0)
       val (dn, dt) = (d.getLong(0), if (d.isNullAt(1)) 0L else d.getLong(1))
-      val sv = PartitionedStore.commitVersion(
-        spark.range(1).select(
-          lit(statsRow.getLong(0) + dn).as("n_docs"),
-          lit(statsRow.getLong(1) + dt).as("total_tokens"),
-          lit(nBuckets).as("n_buckets")),
-        s"$path/stats")
-      PartitionedStore.publishComposite(path,
-        Map("postings" -> pv, "dl" -> dv, "stats" -> sv))
+      s.publish(Map("postings" -> pv, "dl" -> dv, "stats" -> commitBm25Stats(
+        spark, path, statsRow.getLong(0) + dn, statsRow.getLong(1) + dt, nBuckets)))
     } finally {
       Checkpoints.release(tf); Checkpoints.release(dl)
     }
   }
 
   /** Tombstone DELETE from a [[writeBm25Index]] layout — the takedown /
-    * right-to-be-forgotten verb that completes the stored-index CRUD
-    * story (write / append / delete / compact). Cost tracks the DELETE
-    * SET, not the corpus: the doc ids append into a `tombstones`
-    * component, corpus stats shrink by exact integer arithmetic from the
-    * deleted docs' own `dl` rows (one narrow per-doc-metadata read —
-    * postings are never touched), and the composite republishes
-    * atomically. Serving reads ([[bm25IndexTopK]]) anti-join the
-    * tombstone set (small, broadcast) out of the pruned postings BEFORE
-    * df is counted, so a query after a delete is bit-identical to one
-    * against an index rebuilt without the deleted docs — the oracle's
-    * claim (`search_bm25_deleted`). Physical rows survive, invisible,
-    * until [[compactBm25Index]] reclaims them (the Delta/Iceberg
-    * deletion-vector model); until then a tombstoned id cannot be
-    * re-appended ([[appendBm25Index]] raises — silently resurrecting
-    * deleted content is the one failure a takedown pipeline must not
-    * have). Never-indexed and already-deleted ids no-op without
+    * right-to-be-forgotten verb ([[graft.sources.StoredIndex]]'s
+    * deletion-vector model). Cost tracks the DELETE SET, not the corpus:
+    * corpus stats shrink by exact integer arithmetic from the deleted
+    * docs' own `dl` rows (one narrow per-doc-metadata read — postings are
+    * never touched). Serving reads ([[bm25IndexTopK]]) anti-join the
+    * tombstone set out of the pruned postings BEFORE df is counted, so a
+    * query after a delete is bit-identical to one against an index
+    * rebuilt without the deleted docs — the oracle's claim
+    * (`search_bm25_deleted`). Physical rows survive, invisible, until
+    * [[compactBm25Index]] reclaims them; until then [[appendBm25Index]]
+    * refuses the ids. Never-indexed and already-deleted ids no-op without
     * publishing a generation. */
   def deleteFromBm25Index(spark: org.apache.spark.sql.SparkSession,
                           ids: DataFrame, path: String): Unit = {
-    import graft.sources.PartitionedStore
-    val served = PartitionedStore.readComposite(path)
-    val statsRow = PartitionedStore
-      .readVersion(spark, s"$path/stats", Some(served("stats")))
-      .select(col("n_docs"), col("total_tokens"), col("n_buckets")).collect()(0)
-    val dl = PartitionedStore.readVersion(spark, s"$path/dl", Some(served("dl")))
-    val idCol = dl.columns.filterNot(_ == "dl") match {
-      case Array(only) => only
-      case other => throw new IllegalArgumentException(
-        s"ambiguous dl id column among ${other.mkString(", ")}")
+    val s = StoredIndex.served(spark, path)
+    s.delete(ids, bm25IdCol(s), s.read("dl")) { gone =>
+      val st = s.read("stats")
+        .select(col("n_docs"), col("total_tokens"), col("n_buckets")).collect()(0)
+      val d = gone.agg(count(lit(1)), sum(col("dl"))).collect()(0)
+      Map("stats" -> commitBm25Stats(spark, path, st.getLong(0) - d.getLong(0),
+        st.getLong(1) - d.getLong(1), st.getInt(2)))
     }
-    val prior = served.get("tombstones").map(tv =>
-      PartitionedStore.readVersion(spark, s"$path/tombstones", Some(tv)))
-    val requested = ids.select(col(ids.columns.head).as(idCol)).distinct()
-    val fresh = prior.fold(requested)(p =>
-      requested.join(broadcast(p), Seq(idCol), "left_anti"))
-    // checkpointed: consumed by the no-op gate, the stats aggregate and
-    // the tombstone commit — one evaluation of the dl semi-join
-    val gone = dl.join(broadcast(fresh), Seq(idCol), "left_semi")
-      .localCheckpoint()
-    try {
-      if (gone.isEmpty) return // nothing indexed-and-undeleted: no-op
-      val d = gone.agg(count(lit(1)).as("dn"), sum(col("dl")).as("dt"))
-        .collect()(0)
-      val tv = PartitionedStore.commitVersion(gone.select(col(idCol)),
-        s"$path/tombstones", append = served.contains("tombstones"),
-        parent = served.get("tombstones"))
-      val sv = PartitionedStore.commitVersion(
-        spark.range(1).select(
-          lit(statsRow.getLong(0) - d.getLong(0)).as("n_docs"),
-          lit(statsRow.getLong(1) - d.getLong(1)).as("total_tokens"),
-          lit(statsRow.getInt(2)).as("n_buckets")),
-        s"$path/stats")
-      PartitionedStore.publishComposite(path,
-        served ++ Map("tombstones" -> tv, "stats" -> sv))
-    } finally Checkpoints.release(gone)
   }
 
-  /** Compact a [[writeBm25Index]] layout after a run of nightly appends:
-    * every append adds a small data dir to postings and dl, and read cost
-    * creeps with file count — this collapses each back to one clustered
-    * rewrite (postings re-bucketed + term-sorted, dl coalesced) and
-    * republishes the composite. Query results are bit-identical by
-    * construction (a rewrite commit of the same rows); the PREVIOUS
-    * generation still time-travels to the uncompacted dirs until
-    * vacuumed. Compacts the SERVED generation's components — never
-    * raw-latest, which could resurrect a crashed append's orphan. */
+  /** Compact a [[writeBm25Index]] layout after a run of nightly appends
+    * and deletes: every append adds a small data dir to postings and dl,
+    * and read cost creeps with file count — this collapses each back to
+    * one clustered rewrite (postings re-bucketed + term-sorted, dl
+    * coalesced) without the tombstoned docs, and republishes without the
+    * tombstone set ([[graft.sources.StoredIndex.Served.compact]]). Query
+    * results are bit-identical; the previous generation still
+    * time-travels to the uncompacted dirs until vacuumed. */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
                        path: String): Unit = {
-    import graft.sources.PartitionedStore
-    val served = PartitionedStore.readComposite(path)
-    // the id column is whatever the writer used: the postings column that
-    // is none of the fixed ones (same by-name resolution as rollupMerge)
-    val idCol = PartitionedStore
-      .readVersion(spark, s"$path/postings", Some(served("postings")))
-      .columns.filterNot(Set("term", "tf", "bucket")) match {
-      case Array(only) => only
-      case other => throw new IllegalArgumentException(
-        s"ambiguous postings id column among ${other.mkString(", ")}")
-    }
-    // tombstone reclaim rides the rewrite for free: deleted rows are
-    // anti-joined out of both components and the tombstone set leaves
-    // the composite — serving results are unchanged (reads were already
-    // filtering those rows), the bytes and the re-add embargo are gone
-    val minus = served.get("tombstones").map { tv =>
-      (PartitionedStore.readVersion(spark, s"$path/tombstones", Some(tv)),
-        Seq(idCol))
-    }
-    val pv = PartitionedStore.compactVersion(spark, s"$path/postings",
-      partitionCols = Seq("bucket"), sortCols = Seq("term", idCol),
-      version = Some(served("postings")), minus = minus)
-    val dv = PartitionedStore.compactVersion(spark, s"$path/dl",
-      version = Some(served("dl")), minus = minus)
-    PartitionedStore.publishComposite(path,
-      served - "tombstones" ++ Map("postings" -> pv, "dl" -> dv))
+    val s = StoredIndex.served(spark, path)
+    val idCol = bm25IdCol(s)
+    s.compact(idCol, StoredIndex.Rewrite("postings", Seq("bucket"), Seq("term", idCol)),
+      StoredIndex.Rewrite("dl"))()
   }
 
-  /** BM25 top-k against a [[writeBm25Index]] layout — identical results
-    * to [[bm25TopK]] (same [[bm25ScoresFrom]] expression tree, bit for
-    * bit), different I/O shape: the query vocabulary's term buckets are
-    * resolved driver-side (|query vocab| hashes — the same justified
-    * planning-time collect as [[Similarity.ivfIndexTopK]]'s probe cells)
-    * and pushed into the postings read as a static partition filter. */
   /** [[bm25IndexTopK]] with a METADATA filter — the per-tenant /
     * per-source read ONE index serves for every filter, instead of an
     * index per tenant: `allowedDocs` (an idCol frame, derived from a
@@ -447,6 +392,12 @@ object Search {
     bm25IndexServe(spark, path, queries, idCol, queryIdCol, queryTextCol,
       k, k1, b, Some(allowedDocs))
 
+  /** BM25 top-k against a [[writeBm25Index]] layout — identical results
+    * to [[bm25TopK]] (same [[bm25ScoresFrom]] expression tree, bit for
+    * bit), different I/O shape: the query vocabulary's term buckets are
+    * resolved driver-side (|query vocab| hashes — the same justified
+    * planning-time collect as [[Similarity.ivfIndexTopK]]'s probe cells)
+    * and pushed into the postings read as a static partition filter. */
   def bm25IndexTopK(spark: org.apache.spark.sql.SparkSession, path: String,
                     queries: DataFrame, idCol: String, queryIdCol: String,
                     queryTextCol: String, k: Int,
@@ -471,28 +422,16 @@ object Search {
                           path: String, queries: DataFrame, idCol: String,
                           queryIdCol: String,
                           queryTextCol: String): DataFrame = {
-    import graft.sources.PartitionedStore
-    val served = PartitionedStore.readComposite(path)
-    val stats = PartitionedStore.readVersion(spark, s"$path/stats",
-      Some(served("stats")))
-    val nBuckets = stats.select(col("n_buckets")).collect()(0).getInt(0)
+    val s = StoredIndex.served(spark, path)
     val qterms = broadcast(queries
       .select(col(queryIdCol).as("query_id"),
         explode(split(trim(col(queryTextCol)), " ")).as("term"))
       .distinct())
     val nTerms = broadcast(qterms.groupBy(col("query_id"))
       .agg(count(lit(1)).as("n_terms")))
-    val qbuckets = qterms
-      .select(pmod(xxhash64(col("term")), lit(nBuckets.toLong)).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val tfq0 = PartitionedStore.readVersion(spark, s"$path/postings",
-        Some(served("postings")))
-      .filter(col("bucket").isin(qbuckets: _*))
-      .join(qterms, "term")
-    val tfq = served.get("tombstones").fold(tfq0) { tv =>
-      tfq0.join(broadcast(PartitionedStore.readVersion(
-        spark, s"$path/tombstones", Some(tv))), Seq(idCol), "left_anti")
-    }
+    val tfq = s.live(s.read("postings")
+      .filter(col("bucket").isin(bucketsOf(qterms, "term", nBucketsOf(s)): _*))
+      .join(qterms, "term"), idCol)
     // postings hold one row per (term, doc) already — plain count IS the
     // distinct matched-term count
     tfq.groupBy(col("query_id"), col(idCol))
@@ -502,12 +441,98 @@ object Search {
       .select(col("query_id"), col(idCol))
   }
 
+  private def bm25IndexServe(spark: org.apache.spark.sql.SparkSession,
+                             path: String, queries: DataFrame, idCol: String,
+                             queryIdCol: String, queryTextCol: String,
+                             k: Int, k1: Double, b: Double,
+                             allowed: Option[DataFrame]): DataFrame = {
+    // ONE composite resolution pins every component to the same
+    // generation — a concurrent append can publish mid-query without
+    // this read ever mixing its postings with our stats
+    val s = StoredIndex.served(spark, path)
+    val stats = s.read("stats")
+    val qterms = broadcast(queries
+      .select(col(queryIdCol).as("query_id"),
+        explode(split(trim(col(queryTextCol)), " ")).as("term"))
+      .distinct())
+    val qbuckets = bucketsOf(qterms, "term",
+      stats.select(col("n_buckets")).collect()(0).getInt(0))
+    // tombstoned docs leave the postings BEFORE df is counted, so idf,
+    // scores and ranks all see the post-delete corpus exactly as a
+    // rebuild-without would (stats were adjusted at delete time)
+    val tfq1 = s.live(s.read("postings")
+      .filter(col("bucket").isin(qbuckets: _*))
+      .join(broadcast(qterms.select(col("term")).distinct()), "term"), idCol)
+    val dl0 = s.read("dl")
+    // metadata filter: restrict postings + dl, RECOMPUTE stats over the
+    // filtered dl (dl-sized aggregation — never a corpus re-read); the
+    // unfiltered path keeps the stored 1-row stats untouched
+    val (tfq, dl, statsServe) = allowed match {
+      case Some(ids) =>
+        val keep = ids.select(col(idCol))
+        val dlF = dl0.join(keep, Seq(idCol), "left_semi")
+        (tfq1.join(keep, Seq(idCol), "left_semi"), dlF,
+          broadcast(dlF.agg(count(lit(1)).as("n_docs"),
+            sum(col("dl")).as("total_tokens"))))
+      case None =>
+        (tfq1, dl0,
+          broadcast(stats.select(col("n_docs"), col("total_tokens"))))
+    }
+    Similarity.topKPerQuery(
+      bm25ScoresFrom(tfq, dl, statsServe, qterms, idCol, k1, b),
+      idCol, "score", k)
+  }
+
   // ---- positional phrase index ---------------------------------------------
+
+  /** One `(id, pos, term)` row per token occurrence. */
+  private def positions(docs: DataFrame, idCol: String,
+                        textCol: String): DataFrame =
+    docs.select(col(idCol), posexplode(split(trim(col(textCol)), " ")))
+      .withColumnRenamed("col", "term")
+
+  /** The id column of a meta-keyed layout (phrase, trigram): the writer
+    * puts the id first in the meta row. */
+  private def metaIdCol(s: StoredIndex.Served): String =
+    s.read("meta").columns.head
+
+  /** The append both meta-keyed layouts share: ids already in the served
+    * meta drop (idempotent delivery; a fully re-delivered delta publishes
+    * nothing), tombstoned ids raise, and the fresh rows' `meta` and
+    * `postings` (built over the served bucket count) append on the
+    * served parents and publish as one generation. */
+  private def appendMetaKeyed(spark: org.apache.spark.sql.SparkSession,
+                              delta: DataFrame, idCol: String, path: String)
+                             (meta: DataFrame => DataFrame,
+                              postings: (DataFrame, Int) => DataFrame): Unit = {
+    val s = StoredIndex.served(spark, path)
+    s.refuseResurrection(delta, idCol)
+    val fresh = delta.join(s.read("meta").select(col(idCol)), Seq(idCol), "left_anti")
+      .localCheckpoint() // read twice: meta append + postings build
+    try {
+      if (!fresh.isEmpty) {
+        val mv = s.append(meta(fresh), "meta")
+        s.publish(Map("meta" -> mv, "postings" ->
+          s.append(postings(fresh, nBucketsOf(s)), "postings", Seq("bucket"))))
+      }
+    } finally Checkpoints.release(fresh)
+  }
+
+  /** Compaction of a meta-keyed layout: postings collapse back to one
+    * rewrite per bucket dir clustered by (`key`, id), meta coalesces,
+    * tombstoned rows leave both and the tombstone set leaves the
+    * composite. */
+  private def compactMetaKeyed(spark: org.apache.spark.sql.SparkSession,
+                               path: String, key: String): Unit = {
+    val s = StoredIndex.served(spark, path)
+    val idCol = metaIdCol(s)
+    s.compact(idCol, StoredIndex.Rewrite("postings", Seq("bucket"), Seq(key, idCol)),
+      StoredIndex.Rewrite("meta"))()
+  }
 
   /** Materialize a POSITIONAL inverted index: one `(id, pos, term)` row
     * per token occurrence, term-bucketed like [[writeBm25Index]]'s
-    * postings (bucket = pmod(xxhash64(term), nBuckets), a partition
-    * column), plus a narrow `meta` component carrying `metaCols` (what a
+    * postings, plus a narrow `meta` component carrying `metaCols` (what a
     * phrase hit returns without ever touching raw text) and the 1-row
     * layout stats. Positions make the index answer what the BM25
     * layout's (term, tf) rows cannot: WHERE a term sits, hence
@@ -523,23 +548,13 @@ object Search {
                        metaCols: Seq[String], path: String,
                        nBuckets: Int = 64): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive: $nBuckets")
-    import graft.sources.PartitionedStore
-    val postings = docs
-      .select(col(idCol), posexplode(split(trim(col(textCol)), " ")))
-      .withColumnRenamed("col", "term")
-    val mv = PartitionedStore.commitVersion(
-      docs.select((col(idCol) +: metaCols.map(col)): _*), s"$path/meta")
-    val sv = PartitionedStore.commitVersion(
-      docs.sparkSession.range(1).select(lit(nBuckets).as("n_buckets")),
-      s"$path/stats")
-    val pv = PartitionedStore.commitVersion(
-      postings
-        .withColumn("bucket", pmod(xxhash64(col("term")), lit(nBuckets.toLong)))
-        .repartition(col("bucket"))
-        .sortWithinPartitions(col("term"), col(idCol), col("pos")),
-      s"$path/postings", partitionCols = Seq("bucket"))
-    PartitionedStore.publishComposite(path,
-      Map("postings" -> pv, "meta" -> mv, "stats" -> sv))
+    val mv = StoredIndex.commit(
+      docs.select((col(idCol) +: metaCols.map(col)): _*), path, "meta")
+    val sv = commitBucketCount(docs.sparkSession, path, nBuckets)
+    val pv = StoredIndex.commit(
+      termBucketed(positions(docs, idCol, textCol), nBuckets, "term", idCol, "pos"),
+      path, "postings", Seq("bucket"))
+    StoredIndex.create(path, Map("postings" -> pv, "meta" -> mv, "stats" -> sv))
   }
 
   /** Incremental maintenance of a [[writePhraseIndex]] layout — the
@@ -555,78 +570,28 @@ object Search {
     * append resurrecting taken-down content must fail loudly. */
   def appendPhraseIndex(spark: org.apache.spark.sql.SparkSession,
                         delta: DataFrame, idCol: String, textCol: String,
-                        metaCols: Seq[String], path: String): Unit = {
-    import graft.sources.PartitionedStore
-    val served = PartitionedStore.readComposite(path)
-    val nBuckets = PartitionedStore
-      .readVersion(spark, s"$path/stats", Some(served("stats")))
-      .select(col("n_buckets")).collect()(0).getInt(0)
-    served.get("tombstones").foreach { tv =>
-      val tomb = PartitionedStore.readVersion(
-        spark, s"$path/tombstones", Some(tv))
-      val clash = delta.join(broadcast(tomb), Seq(idCol), "left_semi")
-        .select(col(idCol)).limit(3).collect()
-      if (clash.nonEmpty) throw new IllegalStateException(
-        s"append would resurrect tombstoned ids (e.g. ${clash.mkString(", ")})" +
-          s" at $path; compact the index to reclaim them first")
-    }
-    val existing = PartitionedStore
-      .readVersion(spark, s"$path/meta", Some(served("meta")))
-      .select(col(idCol))
-    val fresh = delta.join(existing, Seq(idCol), "left_anti")
-      .localCheckpoint() // read twice: meta append + postings explode
-    try {
-      if (fresh.isEmpty) return // fully re-delivered delta: no-op
-      val mv = PartitionedStore.commitVersion(
-        fresh.select((col(idCol) +: metaCols.map(col)): _*), s"$path/meta",
-        append = true, parent = Some(served("meta")))
-      val pv = PartitionedStore.commitVersion(
-        fresh.select(col(idCol), posexplode(split(trim(col(textCol)), " ")))
-          .withColumnRenamed("col", "term")
-          .withColumn("bucket",
-            pmod(xxhash64(col("term")), lit(nBuckets.toLong)))
-          .repartition(col("bucket"))
-          .sortWithinPartitions(col("term"), col(idCol), col("pos")),
-        s"$path/postings", append = true, parent = Some(served("postings")),
-        partitionCols = Seq("bucket"))
-      PartitionedStore.publishComposite(path,
-        served ++ Map("postings" -> pv, "meta" -> mv))
-    } finally Checkpoints.release(fresh)
-  }
+                        metaCols: Seq[String], path: String): Unit =
+    appendMetaKeyed(spark, delta, idCol, path)(
+      _.select((col(idCol) +: metaCols.map(col)): _*),
+      (fresh, nBuckets) => termBucketed(positions(fresh, idCol, textCol),
+        nBuckets, "term", idCol, "pos"))
 
-  /** Tombstone DELETE from a [[writePhraseIndex]] layout — the takedown
-    * verb in the same deletion-vector model as the other three stored
-    * index families: cost is O(delete set) (ids append into a
-    * `tombstones` component, atomic republish; the positional postings
-    * are never touched), [[phraseIndexMatch]] anti-joins the set before
-    * returning hits, so a post-delete phrase query is bit-identical to
-    * one against an index rebuilt without the deleted docs. No stats
-    * shrink — the phrase verb carries none. Physical rows survive,
-    * invisible, until [[compactPhraseIndex]] reclaims them; meanwhile
-    * [[appendPhraseIndex]] refuses the ids. Never-indexed or already-
-    * deleted ids no-op without publishing. */
+  /** Tombstone DELETE from a [[writePhraseIndex]] or
+    * [[writeTrigramIndex]] layout — the takedown verb in the same
+    * deletion-vector model as the other stored index families
+    * ([[graft.sources.StoredIndex]]): cost is O(delete set) (only `meta`
+    * ids are read; the postings are never touched), serving anti-joins
+    * the set before returning hits, so a post-delete query is
+    * bit-identical to one against an index rebuilt without the deleted
+    * docs. No stats shrink — neither verb carries any. Physical rows
+    * survive, invisible, until compaction reclaims them; meanwhile
+    * appends refuse the ids. Never-indexed or already-deleted ids no-op
+    * without publishing. */
   def deleteFromPhraseIndex(spark: org.apache.spark.sql.SparkSession,
                             ids: DataFrame, path: String): Unit = {
-    import graft.sources.PartitionedStore
-    val served = PartitionedStore.readComposite(path)
-    val meta = PartitionedStore.readVersion(spark, s"$path/meta",
-      Some(served("meta")))
-    val idCol = meta.columns.head // writer contract: id leads the meta row
-    val prior = served.get("tombstones").map(tv =>
-      PartitionedStore.readVersion(spark, s"$path/tombstones", Some(tv)))
-    val requested = ids.select(col(ids.columns.head).as(idCol)).distinct()
-    val fresh = prior.fold(requested)(p =>
-      requested.join(broadcast(p), Seq(idCol), "left_anti"))
-    val gone = meta.select(col(idCol))
-      .join(broadcast(fresh), Seq(idCol), "left_semi")
-      .localCheckpoint()
-    try {
-      if (gone.isEmpty) return // nothing indexed-and-undeleted: no-op
-      val tv = PartitionedStore.commitVersion(gone,
-        s"$path/tombstones", append = served.contains("tombstones"),
-        parent = served.get("tombstones"))
-      PartitionedStore.publishComposite(path, served + ("tombstones" -> tv))
-    } finally Checkpoints.release(gone)
+    val s = StoredIndex.served(spark, path)
+    val idCol = metaIdCol(s)
+    s.delete(ids, idCol, s.read("meta").select(col(idCol)))(_ => Map.empty)
   }
 
   /** Compact a [[writePhraseIndex]] layout after appends/deletes:
@@ -634,26 +599,10 @@ object Search {
     * meta coalesces, tombstoned rows are physically reclaimed from both
     * components and the tombstone set leaves the composite (answers
     * unchanged — serving already filtered them; the bytes and the
-    * re-append embargo are gone). Compacts the SERVED generation, never
-    * raw-latest. */
+    * re-append embargo are gone). */
   def compactPhraseIndex(spark: org.apache.spark.sql.SparkSession,
-                         path: String): Unit = {
-    import graft.sources.PartitionedStore
-    val served = PartitionedStore.readComposite(path)
-    val idCol = PartitionedStore
-      .readVersion(spark, s"$path/meta", Some(served("meta"))).columns.head
-    val minus = served.get("tombstones").map { tv =>
-      (PartitionedStore.readVersion(spark, s"$path/tombstones", Some(tv)),
-        Seq(idCol))
-    }
-    val pv = PartitionedStore.compactVersion(spark, s"$path/postings",
-      partitionCols = Seq("bucket"), sortCols = Seq("term", idCol),
-      version = Some(served("postings")), minus = minus)
-    val mv = PartitionedStore.compactVersion(spark, s"$path/meta",
-      version = Some(served("meta")), minus = minus)
-    PartitionedStore.publishComposite(path,
-      served - "tombstones" ++ Map("postings" -> pv, "meta" -> mv))
-  }
+                         path: String): Unit =
+    compactMetaKeyed(spark, path, "term")
 
   /** Exact phrase matching through a [[writePhraseIndex]] layout — the
     * anchor-join formulation: query token i at document position p
@@ -672,22 +621,14 @@ object Search {
   def phraseIndexMatch(spark: org.apache.spark.sql.SparkSession,
                        path: String, phrase: String,
                        idCol: String): DataFrame = {
-    import graft.sources.PartitionedStore
     val terms = phrase.trim.split(" ").toSeq
     require(terms.nonEmpty && terms.forall(_.nonEmpty),
       s"phrase must be non-empty single-spaced tokens: '$phrase'")
-    val served = PartitionedStore.readComposite(path)
-    val nBuckets = PartitionedStore
-      .readVersion(spark, s"$path/stats", Some(served("stats")))
-      .select(col("n_buckets")).collect()(0).getInt(0)
+    val s = StoredIndex.served(spark, path)
     import spark.implicits._
     val qdf = terms.zipWithIndex.toDF("term", "offset")
-    val qbuckets = qdf
-      .select(pmod(xxhash64(col("term")), lit(nBuckets.toLong)).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val hits0 = PartitionedStore.readVersion(spark, s"$path/postings",
-        Some(served("postings")))
-      .filter(col("bucket").isin(qbuckets: _*))
+    val hits = s.read("postings")
+      .filter(col("bucket").isin(bucketsOf(qdf, "term", nBucketsOf(s)): _*))
       .join(broadcast(qdf), "term")
       .select(col(idCol), (col("pos") - col("offset")).as("anchor"))
       .groupBy(col(idCol), col("anchor"))
@@ -696,12 +637,7 @@ object Search {
       .select(col(idCol)).distinct()
     // tombstoned docs leave before meta resolution — a post-delete query
     // is bit-identical to one against an index rebuilt without them
-    val hits = served.get("tombstones").fold(hits0) { tv =>
-      hits0.join(broadcast(PartitionedStore.readVersion(
-        spark, s"$path/tombstones", Some(tv))), Seq(idCol), "left_anti")
-    }
-    PartitionedStore.readVersion(spark, s"$path/meta", Some(served("meta")))
-      .join(hits, Seq(idCol), "left_semi")
+    s.read("meta").join(s.live(hits, idCol), Seq(idCol), "left_semi")
   }
 
   /** Unordered proximity (NEAR/k) through the SAME [[writePhraseIndex]]
@@ -726,32 +662,20 @@ object Search {
     require(termA.nonEmpty && termB.nonEmpty && termA != termB,
       s"proximity needs two distinct non-empty terms: '$termA', '$termB'")
     require(k >= 1, s"proximity window must be >= 1 token: $k")
-    import graft.sources.PartitionedStore
-    val served = PartitionedStore.readComposite(path)
-    val nBuckets = PartitionedStore
-      .readVersion(spark, s"$path/stats", Some(served("stats")))
-      .select(col("n_buckets")).collect()(0).getInt(0)
+    val s = StoredIndex.served(spark, path)
     import spark.implicits._
-    val qbuckets = Seq(termA, termB).toDF("term")
-      .select(pmod(xxhash64(col("term")), lit(nBuckets.toLong)).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val occ = PartitionedStore.readVersion(spark, s"$path/postings",
-        Some(served("postings")))
+    val qbuckets = bucketsOf(Seq(termA, termB).toDF("term"), "term", nBucketsOf(s))
+    val occ = s.read("postings")
       .filter(col("bucket").isin(qbuckets: _*))
       .filter(col("term").isin(termA, termB))
       .select(col(idCol), col("term"), col("pos"))
-    val hits0 = occ.filter(col("term") === termA)
+    val hits = occ.filter(col("term") === termA)
       .select(col(idCol), col("pos").as("pa"))
       .join(occ.filter(col("term") === termB)
         .select(col(idCol), col("pos").as("pb")), Seq(idCol))
       .filter(abs(col("pa") - col("pb")) <= k)
       .select(col(idCol)).distinct()
-    val hits = served.get("tombstones").fold(hits0) { tv =>
-      hits0.join(broadcast(PartitionedStore.readVersion(
-        spark, s"$path/tombstones", Some(tv))), Seq(idCol), "left_anti")
-    }
-    PartitionedStore.readVersion(spark, s"$path/meta", Some(served("meta")))
-      .join(hits, Seq(idCol), "left_semi")
+    s.read("meta").join(s.live(hits, idCol), Seq(idCol), "left_semi")
   }
 
   // ---- symmetric-delete (SymSpell) fuzzy vocabulary index ------------------
@@ -775,7 +699,6 @@ object Search {
   def writeSymDelIndex(docs: DataFrame, idCol: String, textCol: String,
                        path: String, nBuckets: Int = 64): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive: $nBuckets")
-    import graft.sources.PartitionedStore
     val vocab = docs
       .select(col(idCol), explode(split(trim(col(textCol)), " ")).as("term"))
       .filter(length(col("term")) > 0)
@@ -791,18 +714,15 @@ object Search {
           expr("concat(substring(term, 1, i - 1), substring(term, i + 1, length(term)))")
             .as("variant"),
           col("term"), col("df"))
-      val sv = PartitionedStore.commitVersion(
-        docs.sparkSession.range(1).select(lit(nBuckets).as("n_buckets")),
-        s"$path/stats")
-      val vv = PartitionedStore.commitVersion(
+      val sv = commitBucketCount(docs.sparkSession, path, nBuckets)
+      val vv = StoredIndex.commit(
         identity.unionByName(deletions)
           .withColumn("bucket",
             pmod(xxhash64(col("variant")), lit(nBuckets.toLong)))
           .repartition(col("bucket"))
           .sortWithinPartitions(col("variant"), col("term")),
-        s"$path/variants", partitionCols = Seq("bucket"))
-      PartitionedStore.publishComposite(path,
-        Map("variants" -> vv, "stats" -> sv))
+        path, "variants", Seq("bucket"))
+      StoredIndex.create(path, Map("variants" -> vv, "stats" -> sv))
     } finally Checkpoints.release(vocab)
   }
 
@@ -816,100 +736,24 @@ object Search {
     * evidence a ranker needs. */
   def symDelLookup(spark: org.apache.spark.sql.SparkSession, path: String,
                    query: String): DataFrame = {
-    import graft.sources.PartitionedStore
     require(query.nonEmpty && !query.contains(" "),
       s"query must be one non-empty term: '$query'")
-    val served = PartitionedStore.readComposite(path)
-    val nBuckets = PartitionedStore
-      .readVersion(spark, s"$path/stats", Some(served("stats")))
-      .select(col("n_buckets")).collect()(0).getInt(0)
+    val s = StoredIndex.served(spark, path)
     val qVariants = (query +:
       (0 until query.length).map(i =>
         query.substring(0, i) + query.substring(i + 1))).distinct
     import spark.implicits._
     val qdf = qVariants.toDF("variant")
-    val qbuckets = qdf
-      .select(pmod(xxhash64(col("variant")), lit(nBuckets.toLong)).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    PartitionedStore.readVersion(spark, s"$path/variants",
-        Some(served("variants")))
-      .filter(col("bucket").isin(qbuckets: _*))
+    s.read("variants")
+      .filter(col("bucket").isin(bucketsOf(qdf, "variant", nBucketsOf(s)): _*))
       .join(broadcast(qdf), "variant")
       .select(col("term"), col("df")).distinct()
       .withColumn("dist", levenshtein(col("term"), lit(query), 1))
-      .filter(col("dist") >= 0) // thresholded: −1 encodes dist > 1 (r17)
-  }
-
-  private def bm25IndexServe(spark: org.apache.spark.sql.SparkSession,
-                             path: String, queries: DataFrame, idCol: String,
-                             queryIdCol: String, queryTextCol: String,
-                             k: Int, k1: Double, b: Double,
-                             allowed: Option[DataFrame]): DataFrame = {
-    import graft.sources.PartitionedStore
-    // ONE composite resolution pins every component to the same
-    // generation — a concurrent append can publish mid-query without
-    // this read ever mixing its postings with our stats
-    val served = PartitionedStore.readComposite(path)
-    val stats = PartitionedStore.readVersion(spark, s"$path/stats",
-      Some(served("stats")))
-    val statsRow = stats.select(col("n_docs"), col("total_tokens"),
-      col("n_buckets")).collect()(0)
-    val nBuckets = statsRow.getInt(2)
-    val qterms = broadcast(queries
-      .select(col(queryIdCol).as("query_id"),
-        explode(split(trim(col(queryTextCol)), " ")).as("term"))
-      .distinct())
-    val qbuckets = qterms
-      .select(pmod(xxhash64(col("term")), lit(nBuckets.toLong)).as("b"))
-      .distinct().collect().map(_.getLong(0)).toSeq
-    val tfq0 = PartitionedStore.readVersion(spark, s"$path/postings",
-        Some(served("postings")))
-      .filter(col("bucket").isin(qbuckets: _*))
-      .join(broadcast(qterms.select(col("term")).distinct()), "term")
-    // tombstoned docs leave the postings BEFORE df is counted, so idf,
-    // scores and ranks all see the post-delete corpus exactly as a
-    // rebuild-without would (stats were adjusted at delete time)
-    val tfq1 = served.get("tombstones").fold(tfq0) { tv =>
-      tfq0.join(broadcast(PartitionedStore.readVersion(
-        spark, s"$path/tombstones", Some(tv))), Seq(idCol), "left_anti")
-    }
-    val dl0 = PartitionedStore.readVersion(spark, s"$path/dl", Some(served("dl")))
-    // metadata filter: restrict postings + dl, RECOMPUTE stats over the
-    // filtered dl (dl-sized aggregation — never a corpus re-read); the
-    // unfiltered path keeps the stored 1-row stats untouched
-    val (tfq, dl, statsServe) = allowed match {
-      case Some(ids) =>
-        val keep = ids.select(col(idCol))
-        val dlF = dl0.join(keep, Seq(idCol), "left_semi")
-        (tfq1.join(keep, Seq(idCol), "left_semi"), dlF,
-          broadcast(dlF.agg(count(lit(1)).as("n_docs"),
-            sum(col("dl")).as("total_tokens"))))
-      case None =>
-        (tfq1, dl0,
-          broadcast(stats.select(col("n_docs"), col("total_tokens"))))
-    }
-    Similarity.topKPerQuery(
-      bm25ScoresFrom(tfq, dl, statsServe, qterms, idCol, k1, b),
-      idCol, "score", k)
+      .filter(col("dist") >= 0) // thresholded: −1 encodes dist > 1
   }
 
   // ---- character-trigram substring index -------------------------------------
 
-  /** Materialize a CHARACTER-TRIGRAM substring index (the pg_trgm idea:
-    * Postgres `contrib/pg_trgm` serves arbitrary `LIKE '%x%'` predicates
-    * from a trigram inverted index): one `(id, h)` row per DISTINCT
-    * char-3-gram hash of the text, hash-bucketed like the other stored
-    * families (bucket = pmod(h, nBuckets), a partition column), plus a
-    * `meta` component that carries `metaCols` AND the text itself — the
-    * stored-field copy the exact-confirm stage reads so serving never
-    * touches the raw corpus. Trigram hashing runs in the codegen kernel
-    * ([[graft.functions.CharNgramHashesExpr]]) — the same polynomial the
-    * serve side replays driver-side, so build and lookup can never skew.
-    * ~len(text) rows per doc: the storage price of substring search that
-    * no tokenized index (BM25/phrase) can answer — a needle crossing a
-    * token boundary ("ta str" inside "data stream") has no term to look
-    * up. Deletes reuse the layout-generic deletion-vector verb
-    * ([[deleteFromPhraseIndex]] touches only `meta` + `tombstones`). */
   /** Intra-batch duplicate-id normalization for the trigram layout,
     * where a doubled id is not merely wasteful but CORRUPTING:
     * [[substringIndexLookup]]'s candidate test is `n_hit ==
@@ -937,31 +781,50 @@ object Search {
       .drop("_nid")
   }
 
+  /** The trigram layout's two components for `docs`: the meta rows
+    * (`metaCols` plus the stored-field text) and the distinct-gram
+    * postings, bucket = pmod(h, nBuckets). */
+  private def trigramMeta(docs: DataFrame, idCol: String, textCol: String,
+                          metaCols: Seq[String]): DataFrame =
+    docs.select((col(idCol) +: metaCols.map(col) :+ col(textCol)): _*)
+
+  private def trigramPostings(docs: DataFrame, idCol: String, textCol: String,
+                              nBuckets: Int): DataFrame = {
+    import org.apache.spark.sql.graftExpr
+    val grams = graftExpr.column(graft.functions.CharNgramHashesExpr(
+      graftExpr.expression(col(textCol)), 3, distinct = true))
+    docs.select(col(idCol), explode(grams).as("h"))
+      .withColumn("bucket", pmod(col("h"), lit(nBuckets.toLong)))
+      .repartition(col("bucket"))
+      .sortWithinPartitions(col("h"), col(idCol))
+  }
+
+  /** Materialize a CHARACTER-TRIGRAM substring index (the pg_trgm idea:
+    * Postgres `contrib/pg_trgm` serves arbitrary `LIKE '%x%'` predicates
+    * from a trigram inverted index): one `(id, h)` row per DISTINCT
+    * char-3-gram hash of the text, hash-bucketed like the other stored
+    * families (bucket = pmod(h, nBuckets), a partition column), plus a
+    * `meta` component that carries `metaCols` AND the text itself — the
+    * stored-field copy the exact-confirm stage reads so serving never
+    * touches the raw corpus. Trigram hashing runs in the codegen kernel
+    * ([[graft.functions.CharNgramHashesExpr]]) — the same polynomial the
+    * serve side replays driver-side, so build and lookup can never skew.
+    * ~len(text) rows per doc: the storage price of substring search that
+    * no tokenized index (BM25/phrase) can answer — a needle crossing a
+    * token boundary ("ta str" inside "data stream") has no term to look
+    * up. Deletes reuse the layout-generic deletion-vector verb
+    * ([[deleteFromPhraseIndex]] touches only `meta` + `tombstones`). */
   def writeTrigramIndex(docs0: DataFrame, idCol: String, textCol: String,
                         metaCols: Seq[String], path: String,
                         nBuckets: Int = 64): Unit = {
     require(nBuckets > 0, s"nBuckets must be positive: $nBuckets")
-    import graft.sources.PartitionedStore
-    import org.apache.spark.sql.graftExpr
     val docs = uniqueIdsOrRaise(docs0, idCol, textCol, "writeTrigramIndex")
-    val grams = graftExpr.column(graft.functions.CharNgramHashesExpr(
-      graftExpr.expression(col(textCol)), 3, distinct = true))
-    val postings = docs
-      .select(col(idCol), explode(grams).as("h"))
-    val mv = PartitionedStore.commitVersion(
-      docs.select((col(idCol) +: metaCols.map(col) :+ col(textCol)): _*),
-      s"$path/meta")
-    val sv = PartitionedStore.commitVersion(
-      docs.sparkSession.range(1).select(lit(nBuckets).as("n_buckets")),
-      s"$path/stats")
-    val pv = PartitionedStore.commitVersion(
-      postings
-        .withColumn("bucket", pmod(col("h"), lit(nBuckets.toLong)))
-        .repartition(col("bucket"))
-        .sortWithinPartitions(col("h"), col(idCol)),
-      s"$path/postings", partitionCols = Seq("bucket"))
-    PartitionedStore.publishComposite(path,
-      Map("postings" -> pv, "meta" -> mv, "stats" -> sv))
+    val mv = StoredIndex.commit(trigramMeta(docs, idCol, textCol, metaCols),
+      path, "meta")
+    val sv = commitBucketCount(docs.sparkSession, path, nBuckets)
+    val pv = StoredIndex.commit(trigramPostings(docs, idCol, textCol, nBuckets),
+      path, "postings", Seq("bucket"))
+    StoredIndex.create(path, Map("postings" -> pv, "meta" -> mv, "stats" -> sv))
   }
 
   /** Incremental maintenance of a [[writeTrigramIndex]] layout — the
@@ -973,54 +836,18 @@ object Search {
     * the phrase index there are no corpus-level statistics (substring
     * matching is exact, not scored), so append-equals-rebuild falls out
     * of the layout with no arithmetic. Re-delivered ids drop via an
-    * anti-join against the served meta (idempotent delivery); a
+    * anti-join against the served meta (idempotent delivery); INTRA-batch
+    * duplicates (the same id twice in one delta) would slip past it and
+    * double-write postings, so they are normalized or raised first; a
     * tombstoned id RAISES — an append resurrecting taken-down content
     * must fail loudly. */
   def appendTrigramIndex(spark: org.apache.spark.sql.SparkSession,
                          delta: DataFrame, idCol: String, textCol: String,
-                         metaCols: Seq[String], path: String): Unit = {
-    import graft.sources.PartitionedStore
-    import org.apache.spark.sql.graftExpr
-    val served = PartitionedStore.readComposite(path)
-    val nBuckets = PartitionedStore
-      .readVersion(spark, s"$path/stats", Some(served("stats")))
-      .select(col("n_buckets")).collect()(0).getInt(0)
-    served.get("tombstones").foreach { tv =>
-      val tomb = PartitionedStore.readVersion(
-        spark, s"$path/tombstones", Some(tv))
-      val clash = delta.join(broadcast(tomb), Seq(idCol), "left_semi")
-        .select(col(idCol)).limit(3).collect()
-      if (clash.nonEmpty) throw new IllegalStateException(
-        s"append would resurrect tombstoned ids (e.g. ${clash.mkString(", ")})" +
-          s" at $path; compact the index to reclaim them first")
-    }
-    val existing = PartitionedStore
-      .readVersion(spark, s"$path/meta", Some(served("meta")))
-      .select(col(idCol))
-    // cross-BATCH re-delivery drops via the anti-join; INTRA-batch
-    // duplicates (the same id twice in one delta) would slip past it
-    // and double-write postings — normalized/raised by the shared guard
-    val fresh = uniqueIdsOrRaise(delta, idCol, textCol, "appendTrigramIndex")
-      .join(existing, Seq(idCol), "left_anti")
-      .localCheckpoint() // read twice: meta append + postings explode
-    try {
-      if (fresh.isEmpty) return // fully re-delivered delta: no-op
-      val mv = PartitionedStore.commitVersion(
-        fresh.select((col(idCol) +: metaCols.map(col) :+ col(textCol)): _*),
-        s"$path/meta", append = true, parent = Some(served("meta")))
-      val grams = graftExpr.column(graft.functions.CharNgramHashesExpr(
-        graftExpr.expression(col(textCol)), 3, distinct = true))
-      val pv = PartitionedStore.commitVersion(
-        fresh.select(col(idCol), explode(grams).as("h"))
-          .withColumn("bucket", pmod(col("h"), lit(nBuckets.toLong)))
-          .repartition(col("bucket"))
-          .sortWithinPartitions(col("h"), col(idCol)),
-        s"$path/postings", append = true, parent = Some(served("postings")),
-        partitionCols = Seq("bucket"))
-      PartitionedStore.publishComposite(path,
-        served ++ Map("postings" -> pv, "meta" -> mv))
-    } finally Checkpoints.release(fresh)
-  }
+                         metaCols: Seq[String], path: String): Unit =
+    appendMetaKeyed(spark,
+      uniqueIdsOrRaise(delta, idCol, textCol, "appendTrigramIndex"), idCol, path)(
+      trigramMeta(_, idCol, textCol, metaCols),
+      trigramPostings(_, idCol, textCol, _))
 
   /** Compact a [[writeTrigramIndex]] layout after appends/deletes —
     * [[compactPhraseIndex]]'s discipline on the trigram layout: postings
@@ -1028,25 +855,10 @@ object Search {
     * tombstoned rows are physically reclaimed from both components and
     * the tombstone set leaves the composite (answers unchanged — serving
     * already filtered them; the bytes and the re-append embargo are
-    * gone). Compacts the SERVED generation, never raw-latest. */
+    * gone). */
   def compactTrigramIndex(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Unit = {
-    import graft.sources.PartitionedStore
-    val served = PartitionedStore.readComposite(path)
-    val idCol = PartitionedStore
-      .readVersion(spark, s"$path/meta", Some(served("meta"))).columns.head
-    val minus = served.get("tombstones").map { tv =>
-      (PartitionedStore.readVersion(spark, s"$path/tombstones", Some(tv)),
-        Seq(idCol))
-    }
-    val pv = PartitionedStore.compactVersion(spark, s"$path/postings",
-      partitionCols = Seq("bucket"), sortCols = Seq("h", idCol),
-      version = Some(served("postings")), minus = minus)
-    val mv = PartitionedStore.compactVersion(spark, s"$path/meta",
-      version = Some(served("meta")), minus = minus)
-    PartitionedStore.publishComposite(path,
-      served - "tombstones" ++ Map("postings" -> pv, "meta" -> mv))
-  }
+                          path: String): Unit =
+    compactMetaKeyed(spark, path, "h")
 
   /** Arbitrary-substring lookup through a [[writeTrigramIndex]] layout —
     * candidate-then-confirm, the pg_trgm serving shape: the needle's
@@ -1067,15 +879,12 @@ object Search {
                            path: String, needle: String, idCol: String,
                            textCol: String,
                            maxProbeTrigrams: Int = 16): DataFrame = {
-    import graft.sources.PartitionedStore
     require(needle.length >= 3,
       s"needle must be at least 3 chars for trigram lookup: '$needle'")
     require(maxProbeTrigrams >= 1,
       s"maxProbeTrigrams must be positive: $maxProbeTrigrams")
-    val served = PartitionedStore.readComposite(path)
-    val nBuckets = PartitionedStore
-      .readVersion(spark, s"$path/stats", Some(served("stats")))
-      .select(col("n_buckets")).collect()(0).getInt(0)
+    val s = StoredIndex.served(spark, path)
+    val nBuckets = nBucketsOf(s)
     // A long needle (a whole pasted paragraph) carries hundreds of
     // trigrams; requiring ALL of them would widen the probe to most
     // bucket dirs for no recall gain — any SUBSET of the needle's
@@ -1090,19 +899,14 @@ object Search {
       .toLongArray().toSeq.sorted.take(maxProbeTrigrams)
     val buckets = hashes.map(h => java.lang.Math.floorMod(h, nBuckets.toLong))
       .distinct
-    val cand0 = PartitionedStore.readVersion(spark, s"$path/postings",
-        Some(served("postings")))
+    val cand = s.read("postings")
       .filter(col("bucket").isin(buckets: _*))
       .filter(col("h").isin(hashes: _*))
       .groupBy(col(idCol)).agg(count(lit(1)).as("n_hit"))
       .filter(col("n_hit") === hashes.length)
       .select(col(idCol))
-    val cand = served.get("tombstones").fold(cand0) { tv =>
-      cand0.join(broadcast(PartitionedStore.readVersion(
-        spark, s"$path/tombstones", Some(tv))), Seq(idCol), "left_anti")
-    }
-    PartitionedStore.readVersion(spark, s"$path/meta", Some(served("meta")))
-      .join(cand, Seq(idCol), "left_semi")
+    s.read("meta")
+      .join(s.live(cand, idCol), Seq(idCol), "left_semi")
       .filter(contains(col(textCol), lit(needle)))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{graftExpr, Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.aggregate.CollectTopK
 import org.apache.spark.sql.functions._
 import graft.functions.{CosineSimExpr, SignLshBandKeysExpr, SignLshBucketExpr}
+import graft.sources.StoredIndex
 
 /** Approximate-nearest-neighbor search and embedding near-dup detection
   * over an embedding column. Sign-LSH follows Charikar's random-hyperplane
@@ -307,30 +308,29 @@ object Similarity {
     * Components (centroids, cells) commit as unreferenced versions of
     * their stores first; readers flip at the composite publish, so a
     * crashed build/retrain never serves cells assigned under one
-    * quantizer with another generation's centroid table. */
+    * quantizer with another generation's centroid table. A (re)build is
+    * a fresh generation of exactly these components. */
   def writeIvfIndexFrom(corpus: DataFrame, cents: DataFrame, idCol: String,
                         vecCol: String, path: String): Unit = {
-    import graft.sources.PartitionedStore
     val assigned = nearestCells(corpus.select(col(idCol), col(vecCol)),
         broadcast(cents), idCol, vecCol, keep = 1)
       .localCheckpoint() // feeds the cells commit AND the quality aggregate
     try {
-      val cv = PartitionedStore.commitVersion(cents, s"$path/centroids")
-      val lv = PartitionedStore.commitVersion(
+      val cv = StoredIndex.commit(cents, path, "centroids")
+      val lv = StoredIndex.commit(
         assigned.repartition(col("cell")).sortWithinPartitions(col(idCol)),
-        s"$path/cells", partitionCols = Seq("cell"))
+        path, "cells", Seq("cell"))
       val (n, qsum) = assignQuality(assigned, cents, vecCol)
       // train-time quality doubles as the drift BASELINE (base_*): the
       // running pair advances with every append, the baseline only at a
       // (re)train — their gap is the drift metric, maintained by integer
       // arithmetic alone (never a standing-index scan; see [[ivfDrift]])
-      val sv = PartitionedStore.commitVersion(
+      val sv = StoredIndex.commit(
         corpus.sparkSession.range(1).select(
           lit(n).as("n_vecs"), lit(qsum).as("qcos_sum"),
           lit(n).as("base_n"), lit(qsum).as("base_qcos_sum")),
-        s"$path/stats")
-      PartitionedStore.publishComposite(path,
-        Map("centroids" -> cv, "cells" -> lv, "stats" -> sv))
+        path, "stats")
+      StoredIndex.create(path, Map("centroids" -> cv, "cells" -> lv, "stats" -> sv))
     } finally Checkpoints.release(assigned) // build-loop hygiene: no leak per (re)train
   }
 
@@ -346,121 +346,86 @@ object Similarity {
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
   }
 
+  /** Commit the drift account with its running pair moved by (dn, dq);
+    * the train-time baseline is untouched. */
+  private def commitDrift(s: StoredIndex.Served, dn: Long, dq: Long): Long = {
+    val s0 = s.read("stats").collect()(0)
+    StoredIndex.commit(s.spark.range(1).select(
+        lit(s0.getAs[Long]("n_vecs") + dn).as("n_vecs"),
+        lit(s0.getAs[Long]("qcos_sum") + dq).as("qcos_sum"),
+        lit(s0.getAs[Long]("base_n")).as("base_n"),
+        lit(s0.getAs[Long]("base_qcos_sum")).as("base_qcos_sum")),
+      s.path, "stats")
+  }
+
+  /** The (id, vector) columns of a [[writeIvfIndex]] cells table: the
+    * vector is its array column, the id the one column left beside it
+    * and `cell`. */
+  private def ivfColumns(cells: DataFrame): (String, String) = {
+    val vecCol = cells.schema.fields.collectFirst {
+      case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] =>
+        f.name
+    }.getOrElse(throw new IllegalArgumentException(
+      s"no vector column among ${cells.columns.mkString(", ")}"))
+    (StoredIndex.idColumn(cells, Set(vecCol, "cell"), "cells"), vecCol)
+  }
+
   /** Incremental maintenance of a [[writeIvfIndex]] layout: assign ONLY
     * the delta vectors against the index's EXISTING centroid table (the
     * coarse quantizer stays fixed — the standard IVF maintenance contract;
     * re-training is a deliberate rebuild — [[retrainIvfIndex]]) and
     * append them into their cell directories. Cost tracks the delta:
     * |delta| assignment rows, appends touch only the delta's cells, and
-    * queries see old+new at the atomic composite publish (a crashed
-    * append leaves readers on the old generation; re-delivered ids are
-    * anti-joined away against the served cells, so delivery is
-    * idempotent). Small appended files are a compaction rewrite commit's
-    * job, not this one's. */
+    * queries see old+new at the atomic composite publish, which keeps the
+    * tombstone set ([[graft.sources.StoredIndex]]; a crashed append
+    * leaves readers on the old generation, a tombstoned id in the delta
+    * raises, re-delivered ids are anti-joined away against the served
+    * cells, so delivery is idempotent). Small appended files are
+    * [[compactIvfIndex]]'s job, not this one's. */
   def appendIvfIndex(spark: org.apache.spark.sql.SparkSession,
                      delta: DataFrame, idCol: String, vecCol: String,
                      path: String): Unit = {
-    import graft.sources.PartitionedStore
-    val served = PartitionedStore.readComposite(path)
-    // resurrection guard (see [[deleteFromIvfIndex]]): a tombstoned id in
-    // the delta fails loudly — it is deleted content, not a re-delivery
-    served.get("tombstones").foreach { tv =>
-      val tomb = PartitionedStore.readVersion(
-        spark, s"$path/tombstones", Some(tv))
-      val clash = delta.join(broadcast(tomb), Seq(idCol), "left_semi")
-        .select(col(idCol)).limit(3).collect()
-      if (clash.nonEmpty) throw new IllegalStateException(
-        s"append would resurrect tombstoned ids (e.g. ${clash.mkString(", ")})" +
-          s" at $path; compact the index to reclaim them first")
-    }
-    val cents = broadcast(PartitionedStore.readVersion(
-      spark, s"$path/centroids", Some(served("centroids"))))
-    val existing = PartitionedStore.readVersion(
-      spark, s"$path/cells", Some(served("cells"))).select(col(idCol))
-    val assigned = nearestCells(delta.join(existing, Seq(idCol), "left_anti")
-        .select(col(idCol), col(vecCol)),
+    val s = StoredIndex.served(spark, path)
+    s.refuseResurrection(delta, idCol)
+    val cents = broadcast(s.read("centroids"))
+    val assigned = nearestCells(
+        delta.join(s.read("cells").select(col(idCol)), Seq(idCol), "left_anti")
+          .select(col(idCol), col(vecCol)),
         cents, idCol, vecCol, keep = 1)
       .localCheckpoint()
     // release on every exit — nightly-append hygiene, same as the BM25 twin
     try {
       if (assigned.isEmpty) return // fully re-delivered delta: no-op
-      val lv = PartitionedStore.commitVersion(
+      val lv = s.append(
         assigned.repartition(col("cell")).sortWithinPartitions(col(idCol)),
-        s"$path/cells", append = true, parent = Some(served("cells")),
-        partitionCols = Seq("cell"))
+        "cells", Seq("cell"))
       // the drift account advances by the DELTA's own quality — exact
       // integer folds, the standing index is never re-scanned
       val (dn, dq) = assignQuality(assigned, cents, vecCol)
-      val s0 = PartitionedStore.readVersion(spark, s"$path/stats",
-        Some(served("stats"))).collect()(0)
-      val sv = PartitionedStore.commitVersion(
-        spark.range(1).select(
-          lit(s0.getAs[Long]("n_vecs") + dn).as("n_vecs"),
-          lit(s0.getAs[Long]("qcos_sum") + dq).as("qcos_sum"),
-          lit(s0.getAs[Long]("base_n")).as("base_n"),
-          lit(s0.getAs[Long]("base_qcos_sum")).as("base_qcos_sum")),
-        s"$path/stats")
-      PartitionedStore.publishComposite(path,
-        Map("centroids" -> served("centroids"), "cells" -> lv, "stats" -> sv))
+      s.publish(Map("cells" -> lv, "stats" -> commitDrift(s, dn, dq)))
     } finally Checkpoints.release(assigned)
   }
 
   /** Tombstone DELETE from a [[writeIvfIndex]] layout — the vector
-    * sibling of [[Search.deleteFromBm25Index]], same contract: the ids
-    * append into a `tombstones` component and the composite republishes
-    * atomically; [[ivfIndexTopK]] anti-joins them out of the probed
-    * cells, [[appendIvfIndex]] raises on resurrection attempts, and
-    * [[compactIvfIndex]] physically reclaims. The drift account stays
-    * exact: the deleted vectors' own assignment quality (one narrow
-    * cells read, semi-joined to the delete set) is SUBTRACTED from the
-    * running (n_vecs, qcos_sum) by integer arithmetic — the train-time
-    * baseline is untouched, so post-delete drift still measures corpus
-    * movement against the same frozen quantizer. */
+    * sibling of [[Search.deleteFromBm25Index]], same contract
+    * ([[graft.sources.StoredIndex]]): [[ivfIndexTopK]] anti-joins the
+    * deleted ids out of the probed cells, [[appendIvfIndex]] raises on
+    * resurrection attempts, and [[compactIvfIndex]] physically reclaims.
+    * The drift account stays exact: the deleted vectors' own assignment
+    * quality (one narrow cells read, semi-joined to the delete set) is
+    * SUBTRACTED from the running (n_vecs, qcos_sum) by integer
+    * arithmetic — the train-time baseline is untouched, so post-delete
+    * drift still measures corpus movement against the same frozen
+    * quantizer. */
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
                          ids: DataFrame, path: String): Unit = {
-    import graft.sources.PartitionedStore
-    val served = PartitionedStore.readComposite(path)
-    val cells = PartitionedStore.readVersion(
-      spark, s"$path/cells", Some(served("cells")))
-    val vecCol = cells.schema.fields.collectFirst {
-      case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType] =>
-        f.name
-    }.getOrElse(throw new IllegalArgumentException(
-      s"no vector column among ${cells.columns.mkString(", ")}"))
-    val idCol = cells.columns.filterNot(Set(vecCol, "cell")) match {
-      case Array(only) => only
-      case other => throw new IllegalArgumentException(
-        s"ambiguous cells id column among ${other.mkString(", ")}")
+    val s = StoredIndex.served(spark, path)
+    val cells = s.read("cells")
+    val (idCol, vecCol) = ivfColumns(cells)
+    s.delete(ids, idCol, cells) { gone =>
+      val (dn, dq) = assignQuality(gone, broadcast(s.read("centroids")), vecCol)
+      Map("stats" -> commitDrift(s, -dn, -dq))
     }
-    val prior = served.get("tombstones").map(tv =>
-      PartitionedStore.readVersion(spark, s"$path/tombstones", Some(tv)))
-    val requested = ids.select(col(ids.columns.head).as(idCol)).distinct()
-    val fresh = prior.fold(requested)(p =>
-      requested.join(broadcast(p), Seq(idCol), "left_anti"))
-    // the deleted rows themselves (with vectors): feeds the no-op gate,
-    // the quality subtraction and the tombstone commit — one evaluation
-    val gone = cells.join(broadcast(fresh), Seq(idCol), "left_semi")
-      .localCheckpoint()
-    try {
-      if (gone.isEmpty) return // nothing indexed-and-undeleted: no-op
-      val cents = broadcast(PartitionedStore.readVersion(
-        spark, s"$path/centroids", Some(served("centroids"))))
-      val (dn, dq) = assignQuality(gone, cents, vecCol)
-      val s0 = PartitionedStore.readVersion(spark, s"$path/stats",
-        Some(served("stats"))).collect()(0)
-      val tv = PartitionedStore.commitVersion(gone.select(col(idCol)),
-        s"$path/tombstones", append = served.contains("tombstones"),
-        parent = served.get("tombstones"))
-      val sv = PartitionedStore.commitVersion(
-        spark.range(1).select(
-          lit(s0.getAs[Long]("n_vecs") - dn).as("n_vecs"),
-          lit(s0.getAs[Long]("qcos_sum") - dq).as("qcos_sum"),
-          lit(s0.getAs[Long]("base_n")).as("base_n"),
-          lit(s0.getAs[Long]("base_qcos_sum")).as("base_qcos_sum")),
-        s"$path/stats")
-      PartitionedStore.publishComposite(path,
-        served ++ Map("tombstones" -> tv, "stats" -> sv))
-    } finally Checkpoints.release(gone)
   }
 
   /** Physically reclaim tombstoned vectors from a [[writeIvfIndex]]
@@ -471,26 +436,9 @@ object Similarity {
     * exact (adjusted at delete time) and pass through untouched. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
                       path: String): Unit = {
-    import graft.sources.PartitionedStore
-    val served = PartitionedStore.readComposite(path)
-    val cells = PartitionedStore.readVersion(
-      spark, s"$path/cells", Some(served("cells")))
-    val idCol = cells.columns.filterNot(c =>
-      c == "cell" || cells.schema(c).dataType
-        .isInstanceOf[org.apache.spark.sql.types.ArrayType]) match {
-      case Array(only) => only
-      case other => throw new IllegalArgumentException(
-        s"ambiguous cells id column among ${other.mkString(", ")}")
-    }
-    val minus = served.get("tombstones").map { tv =>
-      (PartitionedStore.readVersion(spark, s"$path/tombstones", Some(tv)),
-        Seq(idCol))
-    }
-    val lv = PartitionedStore.compactVersion(spark, s"$path/cells",
-      partitionCols = Seq("cell"), sortCols = Seq(idCol),
-      version = Some(served("cells")), minus = minus)
-    PartitionedStore.publishComposite(path,
-      served - "tombstones" ++ Map("cells" -> lv))
+    val s = StoredIndex.served(spark, path)
+    val idCol = ivfColumns(s.read("cells"))._1
+    s.compact(idCol, StoredIndex.Rewrite("cells", Seq("cell"), Seq(idCol)))()
   }
 
   /** The frozen-quantizer drift account, 1 row: mean assignment cosine
@@ -501,16 +449,13 @@ object Similarity {
     * costs one row at any index size, because both sums are maintained
     * incrementally at write/append time. A maintenance job thresholds
     * `drift_micro` and calls [[retrainIvfIndex]]. */
-  def ivfDrift(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
-    import graft.sources.PartitionedStore
-    val served = PartitionedStore.readComposite(path)
-    PartitionedStore.readVersion(spark, s"$path/stats", Some(served("stats")))
+  def ivfDrift(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+    StoredIndex.served(spark, path).read("stats")
       .select(col("n_vecs"),
         (col("base_qcos_sum") / col("base_n")).as("base_mean_micro"),
         (col("qcos_sum") / col("n_vecs")).as("mean_micro"),
         (col("base_qcos_sum") / col("base_n") -
           col("qcos_sum") / col("n_vecs")).as("drift_micro"))
-  }
 
   /** Deliberate rebuild for a drifted index: re-train the coarse
     * quantizer with the Lloyd loop ([[kmeansIterate]]) over the CURRENT
@@ -535,25 +480,17 @@ object Similarity {
   def ivfIndexTopK(spark: org.apache.spark.sql.SparkSession, path: String,
                    queries: DataFrame, idCol: String, vecCol: String,
                    k: Int, nProbe: Int): DataFrame = {
-    import graft.sources.PartitionedStore
     // one composite resolution: probes against THIS generation's
     // centroids only ever read THIS generation's cells
-    val served = PartitionedStore.readComposite(path)
-    val cents = broadcast(PartitionedStore.readVersion(
-      spark, s"$path/centroids", Some(served("centroids"))))
+    val s = StoredIndex.served(spark, path)
+    val cents = broadcast(s.read("centroids"))
     val probes = nearestCells(queries.select(col(idCol).as("query_id"),
       col(vecCol).as("q_vec")), cents, "query_id", "q_vec", keep = nProbe)
     val probeCells = probes.select(col("cell").cast("long")).distinct()
       .collect().map(_.getLong(0)).toSeq
-    val cells0 = PartitionedStore.readVersion(
-        spark, s"$path/cells", Some(served("cells")))
-      .filter(col("cell").isin(probeCells: _*))
     // tombstoned vectors never reach scoring — a query after a delete is
     // bit-identical to one against an index rebuilt without them
-    val cells = served.get("tombstones").fold(cells0) { tv =>
-      cells0.join(broadcast(PartitionedStore.readVersion(
-        spark, s"$path/tombstones", Some(tv))), Seq(idCol), "left_anti")
-    }
+    val cells = s.live(s.read("cells").filter(col("cell").isin(probeCells: _*)), idCol)
     val scored = cells.join(broadcast(probes), cells("cell") === probes("cell"))
       .filter(col(idCol) =!= col("query_id"))
       .select(col("query_id"), col(idCol),

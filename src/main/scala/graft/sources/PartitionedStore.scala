@@ -331,8 +331,9 @@ object PartitionedStore {
     * WHICH committed version an append builds on (default: latest) — an
     * index appender must pass the version its readers serve, never the
     * raw latest, or a retry after a crashed-but-committed append would
-    * silently stack on the orphan. Returns the new version number. */
-  /** SCHEMA GATE (the Delta transaction-log discipline reduced to a
+    * silently stack on the orphan. Returns the new version number.
+    *
+    * SCHEMA GATE (the Delta transaction-log discipline reduced to a
     * manifest header): each manifest carries its version's non-partition
     * schema as a `#schema=` JSON line, and an APPEND whose DataFrame
     * schema drifts from the served version fails HERE — before a byte of
@@ -349,28 +350,24 @@ object PartitionedStore {
     * parquet-footer pass over parent dirs — except the one-time
     * headerless-parent case below.
     *
-    * Two r12-ADVICE refinements:
-    *  - HEADERLESS PARENT: a manifest published before the header
-    *    existed has no `#schema=` line; r12's gate silently skipped the
-    *    comparison there, so a drifting append onto a legacy parent
-    *    published AND read silently null-filled — the loud-failure
-    *    property gone exactly where the gate couldn't see. Now the
-    *    served schema is derived ONCE from the parent dirs' parquet
-    *    footers (planning cost bounded by the manifest length, paid only
-    *    on the first append onto a legacy parent) and recorded on the
-    *    new manifest so it is never repaid.
-    *  - SETTLED SHAPE after a removal evolution: the served header must
-    *    keep removed columns forever (old dirs still carry their values;
-    *    reads null-fill the new side), but r12's gate compared appends
-    *    against that superset, so every later append of the settled
-    *    narrower schema re-tripped the drift gate indefinitely. The
-    *    manifest now records the declared forward shape as a second
-    *    `#append_schema=` line (written only when it differs from the
-    *    served schema): an append matching EITHER the served schema
-    *    (rewrites — compaction, upserts touching wide dirs) or the
-    *    settled shape (the normal delta) passes without the flag;
-    *    anything else still requires explicit evolution, which
-    *    re-declares the settled shape as the new delta's schema. */
+    *  - HEADERLESS PARENT: a manifest with no `#schema=` line (published
+    *    before the header existed) still gates: the served schema is
+    *    derived ONCE from the parent dirs' parquet footers (planning cost
+    *    bounded by the manifest length, paid only on the first append
+    *    onto such a parent) and recorded on the new manifest so it is
+    *    never repaid. Skipping the comparison there would let a drifting
+    *    append publish and read silently null-filled.
+    *  - SETTLED SHAPE after a removal evolution: the served header keeps
+    *    removed columns forever (old dirs still carry their values;
+    *    reads null-fill the new side), so the manifest also records the
+    *    declared forward shape as a second `#append_schema=` line
+    *    (written only when it differs from the served schema). An append
+    *    matching EITHER the served schema (rewrites — compaction, upserts
+    *    touching wide dirs) or the settled shape (the normal delta)
+    *    passes without the flag, so appends of the settled narrower
+    *    schema never re-trip the gate; anything else still requires
+    *    explicit evolution, which re-declares the settled shape as the
+    *    new delta's schema. */
   def commitVersion(df: DataFrame, path: String,
                     append: Boolean = false,
                     dropDirs: Seq[String] = Nil,
@@ -750,6 +747,8 @@ object PartitionedStore {
   }
 
   // ---- composite indexes: one atomic pointer over several versioned tables --
+  // The stored-index families reach these through StoredIndex, which owns
+  // their served-generation lifecycle (append, tombstone delete, compaction).
 
   /** Atomically publish a new version of a COMPOSITE index: a manifest
     * pinning each component table (itself a versioned store under
@@ -847,9 +846,6 @@ object PartitionedStore {
     removed
   }
 
-  /** Reclaim data directories no LIVE manifest references (crash orphans,
-    * or history truncated by deleting old manifest files). Returns the
-    * removed directory names. */
   /** RESTORE: publish a NEW version whose manifest is a byte-copy of an
     * older version's — the Delta-Lake `RESTORE TABLE ... TO VERSION`
     * semantics, completing the snapshot verb set (commit / append /
@@ -982,6 +978,9 @@ object PartitionedStore {
     (nv, dirty)
   }
 
+  /** Reclaim data directories no LIVE manifest references (crash orphans,
+    * or history truncated by deleting old manifest files). Returns the
+    * removed directory names. */
   def vacuum(path: String): Seq[String] = {
     val live = versions(path).flatMap(manifestDirs(path, _)).toSet
     val dataDir = Paths.get(path, "data")

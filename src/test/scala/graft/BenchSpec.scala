@@ -290,6 +290,24 @@ class BenchSpec extends AnyFunSuite {
     assert(timed.map(_._2).sum == 2.0)
   }
 
+  test("writeMainLine: a write that fails is named on stderr and does not " +
+    "throw; a write that succeeds lands the line") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bench_out")
+    val blocker = java.nio.file.Files.createFile(dir.resolve("not_a_dir"))
+    val bad = blocker.resolve("bench_full.json").toString
+    val captured = new java.io.ByteArrayOutputStream()
+    val err0 = System.err
+    System.setErr(new java.io.PrintStream(captured, true, "UTF-8"))
+    try Bench.writeMainLine(bad, "{}")
+    finally System.setErr(err0)
+    val msg = captured.toString("UTF-8")
+    assert(msg.contains(s"[bench] could not write $bad: "), msg)
+    val good = dir.resolve("bench_full.json")
+    Bench.writeMainLine(good.toString, """{"metric":"total"}""")
+    assert(new String(java.nio.file.Files.readAllBytes(good), "UTF-8") ==
+      """{"metric":"total"}""")
+  }
+
   test("retime: at most two retries, the trigger sees the best so far, " +
     "it stops once the trigger is false, and every observation returns") {
     // fake clock: each re-run returns the next scripted time

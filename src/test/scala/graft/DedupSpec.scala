@@ -640,6 +640,21 @@ class DedupSpec extends AnyFunSuite {
         "doc_id", "text", path)
     }
     assert(ex.getMessage.contains("resurrect"), ex.getMessage)
+    // an append of a fresh id while tombstones stand keeps them: the
+    // deleted doc stays unpaired, and probes equal a rebuild without it
+    // plus the fresh doc (a near dup of the probe, so it pairs)
+    val fresh = Seq((5L, "the quick brown fox jumps over the lazy dog tonight", 51))
+      .toDF("doc_id", "text", "n_chars")
+    Dedup.appendLshIndex(s, fresh, "doc_id", "text", path)
+    assert(PartitionedStore.readComposite(path).contains("tombstones"),
+      "an append must keep the tombstone set")
+    assert(!hits(path).exists(_._2 == 0L),
+      "tombstoned doc must stay unpaired after an append")
+    val rebuiltFresh = tmp()
+    Dedup.writeLshIndex(standing.filter(col("doc_id") =!= 0L).unionByName(fresh),
+      "doc_id", "text", rebuiltFresh)
+    assert(hits(path) == hits(rebuiltFresh))
+    assert(hits(path).exists(_._2 == 5L), "the appended doc must pair")
     // compaction reclaims rows AND rebuilds the membership sketch from
     // the survivors — the deleted id must probe Bloom-negative after
     val before = PartitionedStore.readComposite(path)
@@ -651,7 +666,7 @@ class DedupSpec extends AnyFunSuite {
     assert(PartitionedStore.readVersion(
       s, s"$path/sig", Some(after("sig"))).count() < sigBefore,
       "compaction must physically drop tombstoned signatures")
-    assert(hits(path) == hits(rebuilt), "reclaim must not change any answer")
+    assert(hits(path) == hits(rebuiltFresh), "reclaim must not change any answer")
     val bloomRow = PartitionedStore.readVersion(
       s, s"$path/bloom", Some(after("bloom"))).collect()(0)
     assert(Dedup.bloomProbe(Seq(0L).toDF("doc_id"), "doc_id",

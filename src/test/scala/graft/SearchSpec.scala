@@ -396,6 +396,22 @@ class SearchSpec extends AnyFunSuite {
       Search.appendBm25Index(s, Seq((7L, "x y z")).toDF("doc_id", "text"), "doc_id", "text", path)
     }
     assert(ex.getMessage.contains("resurrect"), ex.getMessage)
+    // an append of a fresh id while tombstones stand keeps them: the
+    // deleted docs stay unreachable and answers equal BM25 over the
+    // corpus without them plus the fresh doc (a copy of query doc 0's
+    // text, so it ranks)
+    val fresh = docs.filter(col("doc_id") === 0L).select(lit(100L).as("doc_id"), col("text"))
+    Search.appendBm25Index(s, fresh, "doc_id", "text", path)
+    assert(PartitionedStore.readComposite(path).contains("tombstones"),
+      "an append must keep the tombstone set")
+    val directFresh = Search.bm25TopK(
+      docs.filter(!col("doc_id").isin(delIds: _*)).union(fresh),
+      qs, "doc_id", "text", "query_id", "qtext", 10)
+    val servedFresh = rows(Search.bm25IndexTopK(s, path, qs, "doc_id", "query_id", "qtext", 10))
+    assert(servedFresh == rows(directFresh))
+    assert(!servedFresh.exists(r => delIds.contains(r._2)),
+      "tombstoned docs must stay unreachable after an append")
+    assert(servedFresh.exists(_._2 == 100L), "the appended doc must be reachable")
     // compaction physically reclaims: fewer postings rows, tombstone
     // component gone, answers unchanged
     val before = PartitionedStore.readComposite(path)
@@ -409,7 +425,7 @@ class SearchSpec extends AnyFunSuite {
       s, s"$path/postings", Some(after("postings"))).count() < rowsBefore,
       "compaction must physically drop tombstoned postings")
     assert(rows(Search.bm25IndexTopK(s, path, qs, "doc_id", "query_id", "qtext", 10))
-      == rows(direct), "reclaim must not change any answer")
+      == rows(directFresh), "reclaim must not change any answer")
     // after reclaim the id is free again: the same id appends cleanly
     Search.appendBm25Index(s, Seq((7L, "x y z")).toDF("doc_id", "text"), "doc_id", "text", path)
     val comp2 = PartitionedStore.readComposite(path)
@@ -574,10 +590,14 @@ class SearchSpec extends AnyFunSuite {
       nBuckets = 8)
     assert(serve(inc) == serve(full))
     assert(serve(inc) == Seq((1L, "a"), (2L, "b"), (4L, "d")))
-    // re-delivered delta is a no-op (idempotent delivery)
+    // re-delivered delta is a no-op (idempotent delivery) and publishes
+    // no generation
+    def gens = graft.sources.PartitionedStore.compositeVersions(inc).size
+    val nAppended = gens
     Search.appendPhraseIndex(s, all.filter($"doc_id" > 2), "doc_id",
       "text", Seq("source"), inc)
     assert(serve(inc) == serve(full))
+    assert(gens == nAppended, "a fully re-delivered append must not publish")
     // --- tombstone delete == rebuild-without
     Search.deleteFromPhraseIndex(s, Seq(2L).toDF("doc_id"), inc)
     val without = graft.Scratch.dir("graft_phrase_wo")
@@ -585,6 +605,10 @@ class SearchSpec extends AnyFunSuite {
       Seq("source"), without, nBuckets = 8)
     assert(serve(inc) == serve(without))
     assert(serve(inc) == Seq((1L, "a"), (4L, "d")))
+    // already-deleted plus never-indexed ids: no-op, no generation
+    val nDeleted = gens
+    Search.deleteFromPhraseIndex(s, Seq(2L, 9999L).toDF("doc_id"), inc)
+    assert(gens == nDeleted, "already-deleted and never-indexed ids must no-op")
     // resurrection refused while the tombstone stands
     val boom = intercept[IllegalStateException] {
       Search.appendPhraseIndex(s,
@@ -628,10 +652,14 @@ class SearchSpec extends AnyFunSuite {
       nBuckets = 8)
     assert(serve(inc) == serve(full))
     assert(serve(inc) == Seq((1L, "a"), (2L, "b"), (4L, "d")))
-    // re-delivered delta is a no-op (idempotent delivery)
+    // re-delivered delta is a no-op (idempotent delivery) and publishes
+    // no generation
+    def gens = graft.sources.PartitionedStore.compositeVersions(inc).size
+    val nAppended = gens
     Search.appendTrigramIndex(s, all.filter($"doc_id" > 2), "doc_id",
       "text", Seq("source"), inc)
     assert(serve(inc) == serve(full))
+    assert(gens == nAppended, "a fully re-delivered append must not publish")
     // --- tombstone delete == rebuild-without (layout-generic verb)
     Search.deleteFromPhraseIndex(s, Seq(2L).toDF("doc_id"), inc)
     val without = graft.Scratch.dir("graft_trgm_wo")
@@ -639,6 +667,10 @@ class SearchSpec extends AnyFunSuite {
       Seq("source"), without, nBuckets = 8)
     assert(serve(inc) == serve(without))
     assert(serve(inc) == Seq((1L, "a"), (4L, "d")))
+    // already-deleted plus never-indexed ids: no-op, no generation
+    val nDeleted = gens
+    Search.deleteFromPhraseIndex(s, Seq(2L, 9999L).toDF("doc_id"), inc)
+    assert(gens == nDeleted, "already-deleted and never-indexed ids must no-op")
     // resurrection refused while the tombstone stands
     val boom = intercept[IllegalStateException] {
       Search.appendTrigramIndex(s,

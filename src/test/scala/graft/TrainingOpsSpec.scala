@@ -1228,6 +1228,22 @@ class TrainingOpsSpec extends AnyFunSuite {
         "vec_id", "embedding", path)
     }
     assert(ex.getMessage.contains("resurrect"), ex.getMessage)
+    // an append of a fresh id while tombstones stand keeps them: the
+    // deleted vectors stay unreachable, and answers equal a rebuild
+    // without them plus the fresh vector (a copy of query 1's vector, so
+    // it ranks; its id sits above the seed range, so centroids match)
+    val fresh = emb.filter(col("vec_id") === 1L)
+      .select(lit(200L).as("vec_id"), col("embedding"))
+    Similarity.appendIvfIndex(s, fresh, "vec_id", "embedding", path)
+    assert(PartitionedStore.readComposite(path).contains("tombstones"),
+      "an append must keep the tombstone set")
+    assert(!top(path).exists(r => delIds.contains(r._2)),
+      "tombstoned vectors must stay unreachable after an append")
+    val rebuiltFresh = tmp()
+    Similarity.writeIvfIndex(emb.filter(!col("vec_id").isin(delIds: _*)).union(fresh),
+      "vec_id", "embedding", nCentroids = 8, rebuiltFresh)
+    assert(top(path) == top(rebuiltFresh))
+    assert(top(path).exists(_._2 == 200L), "the appended vector must be reachable")
     // compaction reclaims: rows physically gone, tombstones cleared,
     // answers unchanged, and the reclaimed id can append again
     val before = PartitionedStore.readComposite(path)
@@ -1238,7 +1254,7 @@ class TrainingOpsSpec extends AnyFunSuite {
     assert(!after.contains("tombstones"))
     assert(PartitionedStore.readVersion(
       s, s"$path/cells", Some(after("cells"))).count() == cellsBefore - 4)
-    assert(top(path) == top(rebuilt), "reclaim must not change any answer")
+    assert(top(path) == top(rebuiltFresh), "reclaim must not change any answer")
     Similarity.appendIvfIndex(s, emb.filter(col("vec_id") === 40L),
       "vec_id", "embedding", path)
     val ids = PartitionedStore.readVersion(s, s"$path/cells",
