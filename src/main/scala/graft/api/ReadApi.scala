@@ -83,11 +83,6 @@ object ReadApi {
     !tracked.filter(col("enabled") && col("market_hash_name") === name)
       .limit(1).isEmpty
 
-  /** GET /tracked-items — deterministic registry listing (W5). */
-  def trackedItems(tracked: DataFrame): DataFrame =
-    tracked.filter(col("enabled"))
-      .orderBy(col("market_hash_name"), col("stream"))
-
   /** GET /meta — tracked count + last ingest + window request count
     * (A3/A4/A5) over the three live tables. */
   def meta(tracked: DataFrame, liveTables: Seq[DataFrame],

@@ -51,11 +51,6 @@ object Relational {
   def topN(df: DataFrame, order: Seq[Column], n: Int): DataFrame =
     df.orderBy(order: _*).limit(n)
 
-  /** O2 — range-bounded scan; the predicate is pushed to the parquet scan
-    * (partition pruning when the table is date-partitioned). */
-  def rangeScan(df: DataFrame, tsCol: Column, lo: Column, hi: Column): DataFrame =
-    df.filter(tsCol >= lo && tsCol < hi)
-
   /** J2 — reconcile diff (reference src/snoozerScheduler.py:85-127):
     * full-outer join old vs new keyed sets, classifying survivors / added /
     * removed. Both sides shuffle on the key; for control-plane-sized inputs

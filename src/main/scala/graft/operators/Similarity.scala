@@ -187,21 +187,6 @@ object Similarity {
     topKPerQuery(scored, idCol, "cos", k)
   }
 
-  /** IVF-flat ANN: coarse-quantize the corpus into `nCentroids` cells
-    * (centroids = the `nCentroids` lowest-id corpus vectors — seeded,
-    * replayable; a k-means refinement would slot in here without changing
-    * the query shape), then each query probes its `nProbe` nearest cells
-    * and re-ranks exactly within them.
-    *
-    * Scale tuning, explicit because it changes with n: cell count must
-    * grow ~√n (classic IVF balance: probe cost ≈ nProbe·n/cells +
-    * cells), and nProbe > 1 is what buys recall once cells are small.
-    * Fixed constants here would leave each probe scanning n/cells vectors
-    * — a linear scan in disguise at 100× the data. At cluster scale the
-    * corpus is written bucketed by cell id, so a probe reads nProbe
-    * buckets and nothing else.
-    *
-    * Output: (query_id, vec_id, cos, rank), rank 1..k by (cos desc, id). */
   /** Seed centroids (the nCentroids lowest-id vectors) — the single
     * definition both the IVF index and its k-means refinement share, so
     * seeding can never desynchronize between them. */
@@ -253,6 +238,21 @@ object Similarity {
     }
   }
 
+  /** IVF-flat ANN: coarse-quantize the corpus into `nCentroids` cells
+    * (centroids = the `nCentroids` lowest-id corpus vectors — seeded,
+    * replayable; a k-means refinement would slot in here without changing
+    * the query shape), then each query probes its `nProbe` nearest cells
+    * and re-ranks exactly within them.
+    *
+    * Scale tuning, explicit because it changes with n: cell count must
+    * grow ~√n (classic IVF balance: probe cost ≈ nProbe·n/cells +
+    * cells), and nProbe > 1 is what buys recall once cells are small.
+    * Fixed constants here would leave each probe scanning n/cells vectors
+    * — a linear scan in disguise at 100× the data. At cluster scale the
+    * corpus is written bucketed by cell id, so a probe reads nProbe
+    * buckets and nothing else.
+    *
+    * Output: (query_id, vec_id, cos, rank), rank 1..k by (cos desc, id). */
   def ivfTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, nCentroids: Int,
               nProbe: Int): DataFrame =
@@ -498,21 +498,6 @@ object Similarity {
     topKPerQuery(scored, idCol, "cos", k)
   }
 
-  /** One distributed Lloyd (k-means) refinement step for the IVF coarse
-    * quantizer: assign every vector to its max-cosine centroid, then
-    * recompute each centroid as the per-dimension mean of its cell.
-    * Output: (cent_id, dim, centroid) — long form, ready to re-assemble
-    * or feed the next iteration.
-    *
-    * The mean is computed over 1e-6-QUANTIZED coordinates: each value
-    * becomes floor(v·10⁶) — an exact long — so the per-cell sums are
-    * integer math, which makes the result independent of partitioning and
-    * summation order. A plain double sum varies with the shuffle layout
-    * (floating-point addition isn't associative), i.e. the same data on a
-    * different cluster would give different centroids; quantized sums are
-    * bit-stable everywhere, at a 10⁻⁶ precision cost no quantizer cares
-    * about. Shuffle shape: one groupBy on (cell, dim) with map-side
-    * partial sums — nCentroids·dim result rows. */
   /** Cluster-quality report over the seed assignment: per cell, the
     * member count and exact cohesion statistics of the member→centroid
     * cosine — the evaluation read beside [[kmeansRefine]]'s training
@@ -546,6 +531,21 @@ object Similarity {
         expr("(qcos_sum - pmod(qcos_sum, n)) DIV n").as("mean_cos_ppm"))
   }
 
+  /** One distributed Lloyd (k-means) refinement step for the IVF coarse
+    * quantizer: assign every vector to its max-cosine centroid, then
+    * recompute each centroid as the per-dimension mean of its cell.
+    * Output: (cent_id, dim, centroid) — long form, ready to re-assemble
+    * or feed the next iteration.
+    *
+    * The mean is computed over 1e-6-QUANTIZED coordinates: each value
+    * becomes floor(v·10⁶) — an exact long — so the per-cell sums are
+    * integer math, which makes the result independent of partitioning and
+    * summation order. A plain double sum varies with the shuffle layout
+    * (floating-point addition isn't associative), i.e. the same data on a
+    * different cluster would give different centroids; quantized sums are
+    * bit-stable everywhere, at a 10⁻⁶ precision cost no quantizer cares
+    * about. Shuffle shape: one groupBy on (cell, dim) with map-side
+    * partial sums — nCentroids·dim result rows. */
   def kmeansRefine(corpus: DataFrame, idCol: String, vecCol: String,
                    nCentroids: Int): DataFrame = {
     val cents = seedCentroids(corpus, idCol, vecCol, nCentroids)

@@ -21,32 +21,51 @@ import scala.jdk.CollectionConverters._
   * At cluster scale the same code targets an object store; retention
   * stays O(partitions-dropped).
   *
-  * Store versions: each of the store's writers ([[append]],
-  * [[overwritePartitions]], and [[dropExpired]] / [[compact]] when they
-  * change the store) publishes an empty marker file named by the new
-  * version under `<path>/_store_log/` after its data has landed, and
-  * [[read]] reuses one resolved DataFrame per (session, path, version),
-  * so a read of an unchanged store pays no file listing and no schema
-  * inference. The store's own writers are its only writers: a foreign
-  * write into a store that has a marker (a plain `spark.write`, a file
-  * moved by hand) is not seen until the next store write publishes. A
-  * path with no marker (written before the log existed, or only by
-  * plain `spark.write`) is re-resolved on every read. Paths are local.
-  * The leading `_` keeps Spark's listing out of the log directory. */
+  * Resolution: every stored frame this object serves — a date store, a
+  * z-order layout, each data dir of a versioned table — is resolved
+  * (file listing plus parquet schema inference, no data) once per
+  * session through one memo, `resolved`, so a read of unchanged data
+  * pays no listing and no inference job.
+  *  - A versioned table's data dir is written once under a fresh
+  *    `v<N>-<uuid>` name and never modified, so it is keyed by its
+  *    path alone; a table deleted and rebuilt at the same path gets new
+  *    dir names and can never hit a stale frame.
+  *  - A date store or z-order layout is mutable at its root, so it is
+  *    keyed by its published store version: each of its writers
+  *    ([[append]], [[overwritePartitions]], [[zorderWrite]], and
+  *    [[dropExpired]] / [[compact]] when they change the store)
+  *    publishes an empty marker named by the new version under
+  *    `<path>/_store_log/` after its data has landed. The store's own
+  *    writers are its only writers: a foreign write into a store that
+  *    has a marker (a plain `spark.write`, a file moved by hand) is not
+  *    seen until the next store write publishes. A path with no marker
+  *    (only ever written by plain `spark.write`) is re-resolved on
+  *    every read. The leading `_` keeps Spark's listing out of the log.
+  * Paths are local. */
 object PartitionedStore {
 
   val DateCol = "p_date"
 
   private val LogDir = "_store_log"
 
-  /** The resolved relation (file listing plus parquet schema inference,
-    * no data) per (session, normalized absolute path, store version),
-    * the same pattern as [[graft.Tables]]. Only the frame is memoized,
-    * never its rows; a new version is a new key, and superseded
-    * versions age out by LRU. */
+  /** The resolved frame per (session, normalized absolute path, store
+    * version — None for an immutable data dir), the same pattern as
+    * [[graft.Tables]]. Only the frame is memoized, never its rows; a new
+    * version is a new key, and superseded versions age out by LRU. An
+    * LRU smaller than a cyclic working set never hits, so the bound sits
+    * well above what the query suite resolves: 61 distinct keys per
+    * session over repeat runs at sf0.01 (60 data dirs and one store
+    * root; the suite builds each stored table once per corpus, so the
+    * count does not grow with runs), with room for the bench's scaling
+    * legs, which build and serve stored indexes over more corpus dirs. */
   private val resolved =
-    new graft.operators.BoundedMemo[(SparkSession, String, Long), DataFrame](
-      "store.resolved")
+    new graft.operators.BoundedMemo[(SparkSession, String, Option[Long]), DataFrame](
+      "store.resolved", maxEntries = 256)
+
+  private def resolve(spark: SparkSession, path: String, version: Option[Long]): DataFrame =
+    resolved.computeIfAbsent(
+      (spark, Paths.get(path).toAbsolutePath.normalize.toString, version),
+      _ => spark.read.parquet(path))
 
   /** Store writers in one JVM take turns. Spark's file committer stages
     * every write job under the output path's shared `_temporary`
@@ -87,12 +106,7 @@ object PartitionedStore {
     * with a published version returns the frame resolved for that
     * version; a path without one is resolved afresh. */
   def read(spark: SparkSession, path: String): DataFrame =
-    storeVersion(path) match {
-      case Some(v) => resolved.computeIfAbsent(
-        (spark, Paths.get(path).toAbsolutePath.normalize.toString, v),
-        _ => spark.read.parquet(path))
-      case None => spark.read.parquet(path)
-    }
+    storeVersion(path).fold(spark.read.parquet(path))(v => resolve(spark, path, Some(v)))
 
   /** The latest published store version at `path`: one listing of the
     * log directory, None when there is none. */
@@ -258,7 +272,7 @@ object PartitionedStore {
   def zorderWrite(df: DataFrame, path: String,
                   xCol: String, yCol: String,
                   xLo: Double, xHi: Double, yLo: Double, yHi: Double,
-                  bits: Int = 8, prefixBits: Int = 3): Unit = {
+                  bits: Int = 8, prefixBits: Int = 3): Unit = writing.synchronized {
     require(bits <= 30 && prefixBits <= bits,
       s"need prefixBits <= bits <= 30, got bits=$bits prefixBits=$prefixBits")
     val xb = bucketize(col(xCol), xLo, xHi, bits)
@@ -273,6 +287,7 @@ object PartitionedStore {
       .option("compression", "zstd")
       .partitionBy(ZCol)
       .parquet(path)
+    publish(path)
   }
 
   /** Rectangle scan over a [[zorderWrite]] layout: enumerate the Morton
@@ -300,7 +315,7 @@ object PartitionedStore {
       xp <- cell(qxLo, xLo, xHi) to cell(qxHi, xLo, xHi)
       yp <- cell(qyLo, yLo, yHi) to cell(qyHi, yLo, yHi)
     } yield mortonL(xp, yp)
-    spark.read.parquet(path)
+    read(spark, path)
       .filter(col(ZCol).isin(cells: _*))
       .filter(col(xCol) >= qxLo && col(xCol) <= qxHi &&
         col(yCol) >= qyLo && col(yCol) <= qyHi)
@@ -408,7 +423,7 @@ object PartitionedStore {
           s"append retypes column(s) ${retyped.mkString(", ")} vs the served " +
             s"version at $path — a union cannot serve two types under one " +
             "name; write a fresh snapshot (append = false) instead")
-        val settled = base.flatMap(pv => manifestAppendSchema(path, pv))
+        val settled = base.flatMap(pv => manifestSchema(path, pv, "append_schema"))
           .getOrElse(ps)
         val settledNames = settled.map(_.name).toSet
         val matches =
@@ -486,14 +501,17 @@ object PartitionedStore {
 
   /** All committed versions, ascending. Unpublished data (a crash before
     * the manifest rename) is invisible here by construction. */
-  def versions(path: String): Seq[Long] = {
+  def versions(path: String): Seq[Long] = manifestNumbers(path, "v", ".list")
+
+  /** The numbers of the `<prefix>N<suffix>` manifests at `path`, ascending. */
+  private def manifestNumbers(path: String, prefix: String, suffix: String): Seq[Long] = {
     val m = Paths.get(path, "_manifests")
     if (!Files.exists(m)) return Nil
     paths(Files.list(m))
       .map(_.getFileName.toString)
-      .filter(n => n.startsWith("v") && n.endsWith(".list"))
-      .map(_.stripPrefix("v").stripSuffix(".list").toLong)
-      .toSeq.sorted
+      .filter(n => n.startsWith(prefix) && n.endsWith(suffix))
+      .map(_.stripPrefix(prefix).stripSuffix(suffix).toLong)
+      .sorted
   }
 
   /** Recursive nullability widening for the schema-gate comparison —
@@ -511,58 +529,58 @@ object PartitionedStore {
     }
   }
 
-  private def manifestContent(path: String, v: Long): String =
-    new String(Files.readAllBytes(
-      Paths.get(path, "_manifests", s"v$v.list")),
+  /** The manifest file `name` (`vN.list` or `cN.index`) as written. */
+  private def manifestContent(path: String, name: String): String =
+    new String(Files.readAllBytes(Paths.get(path, "_manifests", name)),
       java.nio.charset.StandardCharsets.UTF_8)
 
   private def manifestDirs(path: String, v: Long): Seq[String] =
-    manifestContent(path, v)
-      .split("\n").toSeq.filter(l => l.nonEmpty && !l.startsWith("#"))
+    manifestContent(path, s"v$v.list").split("\n").toSeq
+      .filter(l => l.nonEmpty && !l.startsWith("#"))
 
-  /** The non-partition schema a committed version was published with
-    * (the `#schema=` manifest header) — None for manifests published
-    * before the header existed. */
-  private[graft] def manifestSchema(
-      path: String, v: Long): Option[org.apache.spark.sql.types.StructType] =
-    manifestContent(path, v).split("\n")
-      .find(_.startsWith("#schema="))
+  /** A schema header of a committed version's manifest: `schema`, the
+    * non-partition schema the version was published with (None for
+    * manifests published before the header existed), or `append_schema`,
+    * the SETTLED delta schema, present only after a removal evolution,
+    * where the served superset and the expected delta shape diverge. */
+  private[graft] def manifestSchema(path: String, v: Long, header: String = "schema")
+      : Option[org.apache.spark.sql.types.StructType] =
+    manifestContent(path, s"v$v.list").split("\n").find(_.startsWith(s"#$header="))
       .map(l => org.apache.spark.sql.types.DataType
-        .fromJson(l.stripPrefix("#schema="))
+        .fromJson(l.stripPrefix(s"#$header="))
         .asInstanceOf[org.apache.spark.sql.types.StructType])
 
-  /** The SETTLED delta schema a version declared (the `#append_schema=`
-    * manifest line) — present only after a removal evolution, where the
-    * served superset and the expected delta shape diverge. */
-  private[graft] def manifestAppendSchema(
-      path: String, v: Long): Option[org.apache.spark.sql.types.StructType] =
-    manifestContent(path, v).split("\n")
-      .find(_.startsWith("#append_schema="))
-      .map(l => org.apache.spark.sql.types.DataType
-        .fromJson(l.stripPrefix("#append_schema="))
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-
-  /** Time-travel read: the table as of `version` (latest when None).
-    * Each manifest dir is scanned as its own root and unioned — a
-    * multi-root read would make Spark's partition discovery reject the
-    * vN-prefixed dir names as conflicting structures; per-root scans
-    * keep `partitionBy` column discovery (and thus directory-level
-    * pruning: a partition filter pushes through the Union into every
-    * child scan). */
+  /** Time-travel read: the table as of `version` (latest when None),
+    * the union of its manifest's data dirs. Each dir is resolved once
+    * per session and memoized by its path alone (dirs are immutable; see
+    * the object doc), so a repeat read costs one manifest read and no
+    * Spark job, and a read after an append resolves only the new dir.
+    * Reads of one version are therefore the same relation: join two of
+    * them on using-columns (`Seq(key)`), or alias each side. Each dir is
+    * scanned as its own root — a multi-root read would make Spark's
+    * partition discovery reject the vN-prefixed dir names as conflicting
+    * structures; per-root scans keep `partitionBy` column discovery, so
+    * a partition filter pushes through the Union into every child scan. */
   def readVersion(spark: SparkSession, path: String,
                   version: Option[Long] = None): DataFrame = {
     val vs = versions(path)
     require(vs.nonEmpty, s"no committed versions at $path")
     val v = version.getOrElse(vs.last)
     require(vs.contains(v), s"version $v not in $vs")
-    // allowMissingColumns: under explicit schema evolution (see the
-    // commitVersion gate) dirs may differ by ADDED/REMOVED columns — the
-    // union serves the superset schema with nulls for the lacking side.
-    // Drift never reaches here undeclared: the commit gate rejects it.
-    manifestDirs(path, v)
-      .map(d => spark.read.parquet(Paths.get(path, "data", d).toString))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+    dirsFrame(spark, path, manifestDirs(path, v))
   }
+
+  /** The memoized frame of one data dir of the versioned table at `path`. */
+  private def dirFrame(spark: SparkSession, path: String, dir: String): DataFrame =
+    resolve(spark, Paths.get(path, "data", dir).toString, None)
+
+  /** The union by name of data dirs. Under declared schema evolution (see
+    * the [[commitVersion]] gate) dirs may differ by added or removed
+    * columns; the union serves the superset with nulls for the side that
+    * lacks a column. Undeclared drift never reaches here: the gate
+    * rejects it. */
+  private def dirsFrame(spark: SparkSession, path: String, dirs: Seq[String]): DataFrame =
+    dirs.map(dirFrame(spark, path, _)).reduce(_.unionByName(_, allowMissingColumns = true))
 
   /** The data directories a committed version comprises — the manifest
     * contents, public so callers can diff versions at the METADATA level
@@ -599,10 +617,7 @@ object PartitionedStore {
     def readOnly(dirs: Seq[String], hcol: String): Option[DataFrame] = {
       val d = dirs.filterNot(shared)
       if (d.isEmpty) None
-      else Some(d
-        .map(x => spark.read.parquet(Paths.get(path, "data", x).toString))
-        .reduce(_.unionByName(_))
-        .select(col(idCol), hashOf.as(hcol)))
+      else Some(dirsFrame(spark, path, d).select(col(idCol), hashOf.as(hcol)))
     }
     (readOnly(oldDirs, "old_hash"), readOnly(newDirs, "new_hash")) match {
       case (None, None) => // identical manifests: zero rows, zero DATA read
@@ -610,8 +625,7 @@ object PartitionedStore {
         // (metadata-only) so the empty frame unions with every other
         // branch — a hardcoded long would break tables with string ids
         oldDirs.headOption match {
-          case Some(d0) => spark.read
-            .parquet(Paths.get(path, "data", d0).toString).limit(0)
+          case Some(d0) => dirFrame(spark, path, d0).limit(0)
             .select(col(idCol), lit("").as("op"),
               lit(null).cast("string").as("old_hash"),
               lit(null).cast("string").as("new_hash"))
@@ -660,7 +674,7 @@ object PartitionedStore {
                  vOld: Long, vNew: Long): Seq[(String, String, String, String)] = {
     def schemaOf(v: Long): Map[String, org.apache.spark.sql.types.StructField] =
       versionDirs(path, v)
-        .map(d => spark.read.parquet(Paths.get(path, "data", d).toString).schema)
+        .map(dirFrame(spark, path, _).schema)
         .flatMap(_.fields)
         .groupBy(_.name)
         // a field nullable in ANY contributing dir is nullable in the
@@ -777,15 +791,7 @@ object PartitionedStore {
   }
 
   /** All published composite versions at `path`, ascending. */
-  def compositeVersions(path: String): Seq[Long] = {
-    val m = Paths.get(path, "_manifests")
-    if (!Files.exists(m)) return Nil
-    paths(Files.list(m))
-      .map(_.getFileName.toString)
-      .filter(n => n.startsWith("c") && n.endsWith(".index"))
-      .map(_.stripPrefix("c").stripSuffix(".index").toLong)
-      .toSeq.sorted
-  }
+  def compositeVersions(path: String): Seq[Long] = manifestNumbers(path, "c", ".index")
 
   /** Resolve a composite version (latest when None) to its pinned
     * component→version map. */
@@ -794,9 +800,7 @@ object PartitionedStore {
     require(vs.nonEmpty, s"no published composite versions at $path")
     val v = version.getOrElse(vs.last)
     require(vs.contains(v), s"composite version $v not in $vs")
-    new String(Files.readAllBytes(Paths.get(path, "_manifests", s"c$v.index")),
-      java.nio.charset.StandardCharsets.UTF_8)
-      .split("\n").toSeq.filter(_.nonEmpty)
+    manifestContent(path, s"c$v.index").split("\n").toSeq.filter(_.nonEmpty)
       .map { line =>
         val Array(n, cv) = line.split("=", 2)
         n -> cv.toLong
@@ -863,7 +867,7 @@ object PartitionedStore {
     // byte-copy of the WHOLE manifest (incl. the #schema header), so the
     // restored version keeps its schema lineage for later append gates
     publishManifest(Paths.get(path), s"v$v.list",
-      manifestContent(path, version),
+      manifestContent(path, s"v$version.list"),
       s"concurrent commit lost the race: version $v already published at $path")
     v
   }
@@ -901,20 +905,11 @@ object PartitionedStore {
                  partitionCols: Seq[String] = Nil,
                  version: Option[Long] = None): (Long, Seq[String]) = {
     val v = version.getOrElse(versions(path).last)
-    val dirs = manifestDirs(path, v)
     val matches = coalesce(predicate, lit(false))
-    val dirty = dirs.filter { d =>
-      !spark.read.parquet(Paths.get(path, "data", d).toString)
-        .filter(matches).isEmpty
-    }
+    val dirty = manifestDirs(path, v)
+      .filter(d => !dirFrame(spark, path, d).filter(matches).isEmpty)
     if (dirty.isEmpty) return (v, Nil)
-    // allowMissingColumns: under declared schema evolution dirty dirs may
-    // legitimately differ by added/removed columns — serve-identical
-    // null-fill, same as readVersion
-    val survivors = dirty
-      .map(d => spark.read.parquet(Paths.get(path, "data", d).toString))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
-      .filter(!matches)
+    val survivors = dirsFrame(spark, path, dirty).filter(!matches)
     val nv = commitVersion(survivors, path, append = true,
       dropDirs = dirty, partitionCols = partitionCols, parent = Some(v))
     (nv, dirty)
@@ -946,33 +941,25 @@ object PartitionedStore {
     val v = version.getOrElse(versions(path).last)
     if (updates.isEmpty) return (v, Nil)
     val keys = broadcast(updates.select(col(keyCol)).distinct())
-    val dirs = manifestDirs(path, v)
-    val dirty = dirs.filter { dd =>
-      !spark.read.parquet(Paths.get(path, "data", dd).toString)
-        .join(keys, Seq(keyCol), "left_semi").isEmpty
-    }
+    val dirty = manifestDirs(path, v).filter(d =>
+      !dirFrame(spark, path, d).join(keys, Seq(keyCol), "left_semi").isEmpty)
     // a drifting updates frame must fail loudly HERE, not null-fill its
     // way into the store: the delta's shape must match one of the
     // store's DECLARED shapes (served superset or settled delta schema)
     // before any tolerant union runs. Headerless legacy stores have no
     // declaration — there the merged result still passes through the
     // commit gate's footer-derived comparison.
-    val declared = Seq(manifestSchema(path, v), manifestAppendSchema(path, v))
+    val declared = Seq(manifestSchema(path, v), manifestSchema(path, v, "append_schema"))
       .flatten.map(_.map(_.name).toSet)
     val upN = updates.schema.map(_.name).filterNot(partitionCols.contains).toSet
     require(declared.isEmpty || declared.contains(upN),
       s"upsert delta columns ${upN.mkString(", ")} match neither the served " +
         s"nor the settled schema at $path — align the delta, or evolve " +
         "deliberately via commitVersion(allowSchemaEvolution = true)")
-    // dirty-dir + merge unions tolerate declared evolution (dirs differ
-    // by evolved columns; null-fill is serve-identical — see deleteRows)
-    val survivors = dirty
-      .map(dd => spark.read.parquet(Paths.get(path, "data", dd).toString))
-      .reduceOption(_.unionByName(_, allowMissingColumns = true))
-      .map(_.join(keys, Seq(keyCol), "left_anti"))
-    val merged = survivors
-      .map(_.unionByName(updates, allowMissingColumns = true))
-      .getOrElse(updates)
+    val merged =
+      if (dirty.isEmpty) updates
+      else dirsFrame(spark, path, dirty).join(keys, Seq(keyCol), "left_anti")
+        .unionByName(updates, allowMissingColumns = true)
     val nv = commitVersion(merged, path, append = true,
       dropDirs = dirty, partitionCols = partitionCols, parent = Some(v))
     (nv, dirty)

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.PartitionedStore
+import JobCount.jobsIn
 
 /** Versioned-snapshot semantics: atomic manifest publish, time travel,
   * append commits, orphan invisibility, vacuum. */
@@ -399,7 +400,7 @@ class VersionedStoreSpec extends AnyFunSuite {
     // the settled line records the narrow forward shape
     assert(PartitionedStore.manifestSchema(path, v2).exists(
       _.map(_.name).toSet == Set("id", "payload", "score")))
-    assert(PartitionedStore.manifestAppendSchema(path, v2).exists(
+    assert(PartitionedStore.manifestSchema(path, v2, "append_schema").exists(
       _.map(_.name).toSet == Set("id", "payload")))
     // r12 behavior: this next narrow append re-tripped the gate forever
     val v3 = PartitionedStore.commitVersion(
@@ -412,11 +413,11 @@ class VersionedStoreSpec extends AnyFunSuite {
     assert(served.filter(col("id") === 3L)
       .select(col("score")).collect()(0).isNullAt(0))
     // the settled line carries forward across plain appends
-    assert(PartitionedStore.manifestAppendSchema(path, v3).isDefined)
+    assert(PartitionedStore.manifestSchema(path, v3, "append_schema").isDefined)
     // a rewrite producing the full SERVED shape (compaction) passes too
     val v4 = PartitionedStore.compactVersion(s, path)
     assert(PartitionedStore.readVersion(s, path, Some(v4)).count() == 3)
-    assert(PartitionedStore.manifestAppendSchema(path, v4).exists(
+    assert(PartitionedStore.manifestSchema(path, v4, "append_schema").exists(
       _.map(_.name).toSet == Set("id", "payload")),
       "compaction must not un-settle the declared delta shape")
     // ...so a narrow append STILL passes after compaction
@@ -517,5 +518,73 @@ class VersionedStoreSpec extends AnyFunSuite {
     PartitionedStore.vacuumComposite(base, keepFrom = c4)            // drops c3
     assert(PartitionedStore.versions(comp).contains(v3))
     assert(PartitionedStore.readVersion(spark, comp, Some(v3)).count() == 5)
+  }
+
+  private def ids(frame: org.apache.spark.sql.DataFrame): Seq[Long] =
+    frame.collect().map(_.getLong(0)).toSeq.sorted
+
+  test("readVersion resolves each data dir once: a repeat read launches no " +
+    "job, and a read after one more append launches exactly one") {
+    val path = Files.createTempDirectory("vstore").toString
+    PartitionedStore.commitVersion(df(0 until 3), path)
+    (1 to 3).foreach(r =>
+      PartitionedStore.commitVersion(df(r * 10 until r * 10 + 2), path, append = true))
+    assert(PartitionedStore.versionDirs(path, 4L).size == 4)
+    PartitionedStore.readVersion(spark, path, Some(4L))
+    val (again, repeatJobs) = jobsIn(spark)(PartitionedStore.readVersion(spark, path, Some(4L)))
+    assert(repeatJobs == 0, "all four dirs are already resolved")
+    assert(again.count() == 9)
+    PartitionedStore.commitVersion(df(40 until 42), path, append = true)
+    val (next, appendJobs) = jobsIn(spark)(PartitionedStore.readVersion(spark, path))
+    assert(appendJobs == 1, "only the appended dir is new")
+    assert(ids(next) == ids(again) ++ Seq(40L, 41L))
+  }
+
+  test("readVersion: a table deleted and rebuilt at the same path serves " +
+    "only the new rows") {
+    val path = Files.createTempDirectory("vstore").toString
+    PartitionedStore.commitVersion(df(0 until 3), path)
+    assert(ids(PartitionedStore.readVersion(spark, path)) == Seq(0L, 1L, 2L))
+    Files.walk(Paths.get(path)).sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => Files.delete(p))
+    assert(PartitionedStore.commitVersion(df(10 until 12), path) == 1L,
+      "the rebuilt table restarts at version 1")
+    assert(ids(PartitionedStore.readVersion(spark, path)) == Seq(10L, 11L))
+  }
+
+  test("readVersion: a join of two reads of one version on using-columns " +
+    "equals the same join over unmemoized reads") {
+    val path = Files.createTempDirectory("vstore").toString
+    PartitionedStore.commitVersion(df(0 until 6), path)
+    val v = PartitionedStore.commitVersion(df(3 until 9), path, append = true)
+    def raw = PartitionedStore.versionDirs(path, v)
+      .map(d => spark.read.parquet(Paths.get(path, "data", d).toString))
+      .reduce(_.unionByName(_))
+    def rows(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
+      a.filter(org.apache.spark.sql.functions.col("id") % 2 === 0)
+        .join(b, Seq("id")).collect().map(_.toString).toSeq.sorted
+    val memoized = rows(PartitionedStore.readVersion(spark, path, Some(v)),
+      PartitionedStore.readVersion(spark, path, Some(v)))
+    assert(memoized == rows(raw, raw))
+    assert(memoized.size == 8, "ids 3, 4 and 5 sit in both dirs: 0, 2, 6, 8 once and 4 four times")
+  }
+
+  test("zorderScan reads through the store memo: a repeat scan launches no " +
+    "job, and a zorderWrite rewrite of the same path is seen by the next scan") {
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("zorder").toString + "/store"
+    def write(n: Int): Unit = PartitionedStore.zorderWrite(
+      (0 until n).map(i => (i.toLong, (i % 10).toDouble, (i / 10).toDouble)).toDF("id", "x", "y"),
+      dir, "x", "y", 0.0, 10.0, 0.0, 10.0, bits = 4, prefixBits = 2)
+    def scan = PartitionedStore.zorderScan(spark, dir, "x", "y",
+      0.0, 10.0, 0.0, 10.0, 0.0, 9.0, 0.0, 9.0, bits = 4, prefixBits = 2)
+    write(50)
+    assert(scan.count() == 50)
+    val (again, jobs) = jobsIn(spark)(scan)
+    assert(jobs == 0, "the layout is unchanged since the last scan")
+    assert(again.count() == 50)
+    write(100)
+    assert(scan.count() == 100)
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{LocalFs, PartitionedStore, Wire}
+import JobCount.jobsIn
 
 /** Wire bronze→silver golden semantics (FIXTURES.md §1) + partitioned
   * store with retention (S12/T12). */
@@ -190,39 +191,13 @@ class WireSpec extends AnyFunSuite {
   private def logFiles(dir: String): Int =
     Option(new java.io.File(s"$dir/_store_log").list()).fold(0)(_.length)
 
-  /** Spark jobs `body` launches on this thread, counted by job group. A
-    * flush job in a second group is awaited, so every earlier job-start
-    * event has reached the listener when the count is read. */
-  private def jobsIn[A](body: => A): (A, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"jobs-${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup(group, "counted")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-flush", "flush")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!seen.contains(s"$group-flush") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(s"$group-flush"), "listener never saw the flush job")
-      (out, seen.toArray.count(_ == group))
-    } finally sc.removeSparkListener(l)
-  }
-
   test("store read: a second read of an unchanged store is the memoized " +
     "frame and launches no Spark job") {
     val dir = java.nio.file.Files.createTempDirectory("graft_store_memo").toString
     PartitionedStore.append(storeRows("2024-01-01", 1.0, 2.0), dir, "time", "name")
-    val (first, coldJobs) = jobsIn(PartitionedStore.read(spark, dir))
+    val (first, coldJobs) = jobsIn(spark)(PartitionedStore.read(spark, dir))
     assert(coldJobs >= 1, "a fresh resolve infers the schema with a job")
-    val (second, jobs) = jobsIn(PartitionedStore.read(spark, dir))
+    val (second, jobs) = jobsIn(spark)(PartitionedStore.read(spark, dir))
     assert(second eq first)
     assert(jobs == 0)
     assert(second.count() == 2)
