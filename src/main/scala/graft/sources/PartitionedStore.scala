@@ -53,14 +53,15 @@ object PartitionedStore {
     * [[graft.Tables]]. Only the frame is memoized, never its rows; a new
     * version is a new key, and superseded versions age out by LRU. An
     * LRU smaller than a cyclic working set never hits, so the bound sits
-    * well above what the query suite resolves: 61 distinct keys per
-    * session over repeat runs at sf0.01 (60 data dirs and one store
-    * root; the suite builds each stored table once per corpus, so the
-    * count does not grow with runs), with room for the bench's scaling
-    * legs, which build and serve stored indexes over more corpus dirs. */
+    * a third above the largest session measured: a whole `graft.Bench`
+    * run at sf0.1 resolves 96 distinct keys (95 data dirs and one store
+    * root: 61 from the query suite's passes, 11 from the incremental
+    * legs, 24 from the trigram, LSH and BM25 scaling curves), each
+    * exactly once. The suite builds each stored table once per corpus,
+    * so the count does not grow with repeat runs. */
   private val resolved =
     new graft.operators.BoundedMemo[(SparkSession, String, Option[Long]), DataFrame](
-      "store.resolved", maxEntries = 256)
+      "store.resolved", maxEntries = 128)
 
   private def resolve(spark: SparkSession, path: String, version: Option[Long]): DataFrame =
     resolved.computeIfAbsent(
@@ -555,8 +556,11 @@ object PartitionedStore {
     * per session and memoized by its path alone (dirs are immutable; see
     * the object doc), so a repeat read costs one manifest read and no
     * Spark job, and a read after an append resolves only the new dir.
-    * Reads of one version are therefore the same relation: join two of
-    * them on using-columns (`Seq(key)`), or alias each side. Each dir is
+    * A union takes its columns from its first child, so any two reads
+    * of one table whose manifests start with the same dir — two reads
+    * of one version, or of a version and a later append — carry the
+    * same column identities: join them on using-columns (`Seq(key)`),
+    * or alias each side, never on `r1(key) === r2(key)`. Each dir is
     * scanned as its own root — a multi-root read would make Spark's
     * partition discovery reject the vN-prefixed dir names as conflicting
     * structures; per-root scans keep `partitionBy` column discovery, so

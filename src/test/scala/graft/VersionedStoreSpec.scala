@@ -272,6 +272,15 @@ class VersionedStoreSpec extends AnyFunSuite {
       org.apache.spark.sql.functions.md5(col("payload")))
     assert(appendDiff.select($"op").distinct().as[String].collect().toSeq == Seq("added"))
     assert(appendDiff.count() == 3)
+    // declared evolution: v5 adds a column, so v3 → v5 unions a dir
+    // without `score` and one with it; the side that lacks it null-fills
+    PartitionedStore.commitVersion(Seq((400L, "row-400", 7)).toDF("id", "payload", "score"),
+      path, append = true, allowSchemaEvolution = true)
+    val evolvedDiff = PartitionedStore.diffVersions(spark, path, 3L, 5L, "id",
+      org.apache.spark.sql.functions.md5(
+        org.apache.spark.sql.functions.concat_ws("|", col("payload"), col("score"))))
+    assert(evolvedDiff.select($"id", $"op").as[(Long, String)].collect().toMap ==
+      Map(300L -> "added", 301L -> "added", 302L -> "added", 400L -> "added"))
   }
 
   test("schemaDiff: added/removed/retyped/nullability columns between versions, metadata-only") {
@@ -552,21 +561,25 @@ class VersionedStoreSpec extends AnyFunSuite {
     assert(ids(PartitionedStore.readVersion(spark, path)) == Seq(10L, 11L))
   }
 
-  test("readVersion: a join of two reads of one version on using-columns " +
-    "equals the same join over unmemoized reads") {
+  test("readVersion: a join of two reads of one version, or of a version " +
+    "and the next, on using-columns equals the same join over unmemoized reads") {
     val path = Files.createTempDirectory("vstore").toString
     PartitionedStore.commitVersion(df(0 until 6), path)
     val v = PartitionedStore.commitVersion(df(3 until 9), path, append = true)
-    def raw = PartitionedStore.versionDirs(path, v)
+    val next = PartitionedStore.commitVersion(df(6 until 9), path, append = true)
+    def raw(version: Long) = PartitionedStore.versionDirs(path, version)
       .map(d => spark.read.parquet(Paths.get(path, "data", d).toString))
       .reduce(_.unionByName(_))
+    def read(version: Long) = PartitionedStore.readVersion(spark, path, Some(version))
     def rows(a: org.apache.spark.sql.DataFrame, b: org.apache.spark.sql.DataFrame) =
       a.filter(org.apache.spark.sql.functions.col("id") % 2 === 0)
         .join(b, Seq("id")).collect().map(_.toString).toSeq.sorted
-    val memoized = rows(PartitionedStore.readVersion(spark, path, Some(v)),
-      PartitionedStore.readVersion(spark, path, Some(v)))
-    assert(memoized == rows(raw, raw))
-    assert(memoized.size == 8, "ids 3, 4 and 5 sit in both dirs: 0, 2, 6, 8 once and 4 four times")
+    val same = rows(read(v), read(v))
+    assert(same == rows(raw(v), raw(v)))
+    assert(same.size == 8, "ids 3, 4 and 5 sit in both dirs: 0, 2, 6, 8 once and 4 four times")
+    val pair = rows(read(v), read(next))
+    assert(pair == rows(raw(v), raw(next)))
+    assert(pair.size == 10, "the next version holds 6 and 8 twice")
   }
 
   test("zorderScan reads through the store memo: a repeat scan launches no " +
