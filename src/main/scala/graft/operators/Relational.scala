@@ -51,6 +51,14 @@ object Relational {
   def topN(df: DataFrame, order: Seq[Column], n: Int): DataFrame =
     df.orderBy(order: _*).limit(n)
 
+  /** Total order of a result bounded by a schema fact (one item's series,
+    * bounded by retention): one single-partition exchange, then a sort
+    * within it. `orderBy` range-partitions instead, which costs a sampling
+    * job to pick the bounds and a range shuffle, for rows one task sorts.
+    * Never `orderBy(...).limit(bound)`: a wrong bound would drop rows. */
+  def orderSmall(df: DataFrame, order: Seq[Column]): DataFrame =
+    df.repartition(1).sortWithinPartitions(order: _*)
+
   /** J2 — reconcile diff (reference src/snoozerScheduler.py:85-127):
     * full-outer join old vs new keyed sets, classifying survivors / added /
     * removed. Both sides shuffle on the key; for control-plane-sized inputs

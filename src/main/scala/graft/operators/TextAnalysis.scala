@@ -613,13 +613,16 @@ object TextAnalysis {
     * contexts the model never saw take c2 = 0 / c1 = 0 through the LEFT
     * joins (priced as 1/(0+V), not dropped), a case the self-scored
     * variant never encounters. Output: (idCol, n_bigrams, lm_score) —
-    * identical contract to [[bigramLmScore]]. */
+    * identical contract to [[bigramLmScore]]. The model's tables are read
+    * as immutable ([[graft.sources.PartitionedStore.readImmutable]]):
+    * write a retrained model to a new path. */
   def bigramLmScoreIndexed(spark: org.apache.spark.sql.SparkSession,
                            df: DataFrame, idCol: String, textCol: String,
                            path: String): DataFrame = {
-    val c2 = spark.read.parquet(s"$path/c2")
-    val c1 = spark.read.parquet(s"$path/c1")
-    val vocab = broadcast(spark.read.parquet(s"$path/vocab"))
+    def model(t: String) = graft.sources.PartitionedStore.readImmutable(spark, s"$path/$t")
+    val c2 = model("c2")
+    val c1 = model("c1")
+    val vocab = broadcast(model("vocab"))
     val toks = df.select(col(idCol), split(trim(col(textCol)), " ").as("t"))
     val big = toks.filter(size(col("t")) >= 2)
       .select(col(idCol), col("t"),

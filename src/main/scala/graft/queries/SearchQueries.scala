@@ -417,7 +417,7 @@ object SearchQueries {
       .select(col("doc_id").as("query_id"), col("text").as("qtext"))
     val bm25 = Search.bm25IndexTopK(s, bm25Path, queries,
       "doc_id", "query_id", "qtext", K)
-    val emb = s.read.parquet(embPath)
+    val emb = graft.sources.PartitionedStore.readImmutable(s, embPath)
     val ann = Similarity.bruteForceTopK(
       emb, emb.filter(col("doc_id") < NQ), "doc_id", "embedding", K)
     ragAssemble(bm25, ann, docs)

@@ -500,10 +500,10 @@ object TrainingQueries {
       val p = graft.Scratch.dir("bloom_standing")
       chunks(docs.filter(col("doc_id") % 5 =!= 0))
         .write.parquet(s"$p/chunks.parquet")
-      val written = s.read.parquet(s"$p/chunks.parquet")
+      val written = graft.sources.PartitionedStore.readImmutable(s, s"$p/chunks.parquet")
       (p, Dedup.bloomBuild(written, "chunk_hash", expectedItems = 100000L))
     })
-    val oldKeyed = s.read.parquet(s"$path/chunks.parquet")
+    val oldKeyed = graft.sources.PartitionedStore.readImmutable(s, s"$path/chunks.parquet")
     Dedup.bloomMembershipWith(
         chunks(docs.filter(col("doc_id") % 5 === 0)),
         oldKeyed, "doc_id", "chunk_hash", sketch)

@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path, Paths}
+import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
@@ -38,9 +39,15 @@ import scala.jdk.CollectionConverters._
   *    `<path>/_store_log/` after its data has landed. The store's own
   *    writers are its only writers: a foreign write into a store that
   *    has a marker (a plain `spark.write`, a file moved by hand) is not
-  *    seen until the next store write publishes. A path with no marker
-  *    (only ever written by plain `spark.write`) is re-resolved on
-  *    every read. The leading `_` keeps Spark's listing out of the log.
+  *    seen until the next store write publishes. The leading `_` keeps
+  *    Spark's listing out of the log.
+  *  - A path with no marker (only ever written by plain `spark.write`)
+  *    is keyed by its exact file listing: the relative path, size and
+  *    mtime of every regular file, so any write into it is a new key.
+  *    A rewrite that keeps one file's name, size and mtime is not a
+  *    case: Spark's writers name every file by a fresh UUID.
+  * Every state of a path therefore reads as one frame instance, which
+  * per-frame snapshots ([[graft.api.ReadApi]]) key on.
   * Paths are local. */
 object PartitionedStore {
 
@@ -49,8 +56,9 @@ object PartitionedStore {
   private val LogDir = "_store_log"
 
   /** The resolved frame per (session, normalized absolute path, store
-    * version — None for an immutable data dir), the same pattern as
-    * [[graft.Tables]]. Only the frame is memoized, never its rows; a new
+    * version, file listing), the same pattern as [[graft.Tables]]: an
+    * immutable data dir has neither version nor listing, a date store
+    * its version, an unmarked path its listing. Only the frame is memoized, never its rows; a new
     * version is a new key, and superseded versions age out by LRU. An
     * LRU smaller than a cyclic working set never hits, so the bound sits
     * a third above the largest session measured: a whole `graft.Bench`
@@ -60,13 +68,22 @@ object PartitionedStore {
     * exactly once. The suite builds each stored table once per corpus,
     * so the count does not grow with repeat runs. */
   private val resolved =
-    new graft.operators.BoundedMemo[(SparkSession, String, Option[Long]), DataFrame](
+    new graft.operators.BoundedMemo[(SparkSession, String, Option[Long], Listing), DataFrame](
       "store.resolved", maxEntries = 128)
 
-  private def resolve(spark: SparkSession, path: String, version: Option[Long]): DataFrame =
+  private type Listing = Seq[(String, Long, FileTime)]
+
+  private def resolve(spark: SparkSession, path: String, version: Option[Long],
+                      listing: Listing = Nil): DataFrame =
     resolved.computeIfAbsent(
-      (spark, Paths.get(path).toAbsolutePath.normalize.toString, version),
+      (spark, Paths.get(path).toAbsolutePath.normalize.toString, version, listing),
       _ => spark.read.parquet(path))
+
+  /** A parquet directory written once and never modified afterwards (a
+    * scratch artifact, a versioned table's data dir), resolved once per
+    * session and keyed by its path alone. New data goes to a new path. */
+  def readImmutable(spark: SparkSession, path: String): DataFrame =
+    resolve(spark, path, None)
 
   /** Store writers in one JVM take turns. Spark's file committer stages
     * every write job under the output path's shared `_temporary`
@@ -105,9 +122,24 @@ object PartitionedStore {
 
   /** Read back with partition pruning available on DateCol. A store
     * with a published version returns the frame resolved for that
-    * version; a path without one is resolved afresh. */
+    * version; a path without one returns the frame resolved for its
+    * current file listing, so a plain `spark.write` into it shows on
+    * the next read. A missing path fails with Spark's own error. */
   def read(spark: SparkSession, path: String): DataFrame =
-    storeVersion(path).fold(spark.read.parquet(path))(v => resolve(spark, path, Some(v)))
+    storeVersion(path) match {
+      case Some(v) => resolve(spark, path, Some(v))
+      case None => listing(Paths.get(path))
+        .fold(spark.read.parquet(path))(l => resolve(spark, path, None, l))
+    }
+
+  /** (relative path, size, mtime) of every regular file under `root`,
+    * sorted by path; None when `root` is missing. */
+  private def listing(root: Path): Option[Listing] =
+    try Some(paths(Files.walk(root)).flatMap { p =>
+      val a = Files.readAttributes(p, classOf[BasicFileAttributes])
+      if (a.isRegularFile) Some((root.relativize(p).toString, a.size, a.lastModifiedTime)) else None
+    }.sortBy(_._1))
+    catch { case _: NoSuchFileException => None }
 
   /** The latest published store version at `path`: one listing of the
     * log directory, None when there is none. */
@@ -576,7 +608,7 @@ object PartitionedStore {
 
   /** The memoized frame of one data dir of the versioned table at `path`. */
   private def dirFrame(spark: SparkSession, path: String, dir: String): DataFrame =
-    resolve(spark, Paths.get(path, "data", dir).toString, None)
+    readImmutable(spark, Paths.get(path, "data", dir).toString)
 
   /** The union by name of data dirs. Under declared schema evolution (see
     * the [[commitVersion]] gate) dirs may differ by added or removed

@@ -145,6 +145,26 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(q.collect().map(_.getDouble(1)).toSeq == Seq(2.0))
   }
 
+  test("history sorts one item's series in one partition: no range " +
+    "partitioning, so no sampling job") {
+    val s = spark
+    import s.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_hist_sort").toString
+    val rows = Seq(
+      ("itemA", java.sql.Timestamp.valueOf("2024-02-20 10:00:00"), 2.0, 2),
+      ("itemA", java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 1.0, 1),
+      ("itemB", java.sql.Timestamp.valueOf("2024-01-05 10:00:00"), 3.0, 3))
+      .toDF("market_hash_name", "time", "price", "volume")
+    graft.sources.PartitionedStore.append(rows, tmp, "time", "market_hash_name")
+    val stored = graft.sources.PartitionedStore.read(s, tmp)
+    val q = graft.api.ReadApi.history(stored, "itemA", "all",
+      org.apache.spark.sql.functions.lit("2024-02-21 00:00:00").cast("timestamp"))
+    val p = q.queryExecution.executedPlan.toString
+    assert(!p.toLowerCase.contains("rangepartitioning"), p)
+    assert(p.contains("SinglePartition"), p)
+    assert(q.collect().map(_.getDouble(1)).toSeq == Seq(1.0, 2.0))
+  }
+
   test("text_hash_embed: fused-kernel projection — zero hash exchanges") {
     val p = plan("text_hash_embed")
     assert(countOf(p, "Exchange hashpartitioning") == 0, p)

@@ -1,10 +1,13 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.api.ReadApi
+import graft.operators.Relational
+import graft.sources.PartitionedStore
+import JobCount.jobsIn
 
 /** REST-surface parity: each endpoint function returns the reference's
   * shapes (limits, ordering, 404 seam, no-op suppression). */
@@ -71,6 +74,104 @@ class ReadApiSpec extends AnyFunSuite {
     assert(ReadApi.itemExists(tracked, "itemA"))
     assert(!ReadApi.itemExists(tracked, "itemB")) // disabled → 404
     assert(!ReadApi.itemExists(tracked, "nope"))
+  }
+
+  /** The per-request window the snapshot readers must agree with: the
+    * latest row of the item's rows, ties broken on the whole row. */
+  private def latestOf(df: DataFrame, name: String): DataFrame = {
+    val one = df.filter(col("market_hash_name") === name)
+    Relational.latestPerKeyWindow(one, Seq(lit(1)),
+      Seq(col("timestamp").desc) ++ one.columns.filter(_ != "timestamp").map(col(_).desc))
+  }
+
+  private def assertSame(got: DataFrame, want: DataFrame, what: String): Unit = {
+    assert(got.schema == want.schema, s"$what: schema")
+    assert(got.collect().toSeq == want.collect().toSeq, what)
+  }
+
+  test("snapshot readers equal the per-item latest window on adversarial " +
+    "inputs: timestamp ties, a null name, an absent item, a one-row group, " +
+    "activity tails under and over 50 events") {
+    val s = spark
+    import s.implicits._
+    val book = Seq(
+      ("itemA", ts("2024-01-01 10:00:00"), 5.0, 6.0, 3),
+      ("itemA", ts("2024-01-01 10:00:00"), 5.5, 6.0, 3), // same ts, higher bid
+      ("itemA", ts("2024-01-01 09:00:00"), 9.0, 9.5, 8),
+      (null, ts("2024-01-02 00:00:00"), 1.0, 2.0, 1),
+      ("itemB", ts("2024-01-01 08:00:00"), 2.0, 2.5, 4))
+      .toDF("market_hash_name", "timestamp", "highest_buy_order", "lowest_sell_order",
+        "buy_order_count")
+    for (n <- Seq("itemA", "itemB", "absent", null))
+      assertSame(ReadApi.orderbook(book, n), latestOf(book, n), s"orderbook $n")
+    assert(ReadApi.orderbook(book, "itemA").collect().map(_.getDouble(2)).toSeq == Seq(5.5))
+    assert(ReadApi.orderbook(book, "absent").count() == 0)
+
+    def events(n: Int, price: Double) = (1 to n).map(i => (price + i, s"e$i"))
+    val act = Seq(
+      ("itemA", ts("2024-01-01 10:00:00"), events(3, 1.0)),
+      ("itemA", ts("2024-01-01 10:00:00"), events(3, 2.0)), // same ts, later prices
+      ("itemA", ts("2024-01-01 09:00:00"), events(70, 0.0)),
+      ("itemB", ts("2024-01-01 10:00:00"), events(60, 0.0)),
+      (null, ts("2024-01-03 00:00:00"), events(1, 0.0)))
+      .toDF("market_hash_name", "timestamp", "parsed_activities")
+    for (n <- Seq("itemA", "itemB", "absent", null))
+      assertSame(ReadApi.activity(act, n),
+        latestOf(act, n).withColumn("parsed_activities",
+          ReadApi.tailClamped(col("parsed_activities"), ReadApi.ActivityTail)),
+        s"activity $n")
+    val b = ReadApi.activity(act, "itemB").collect()(0)
+    assert(b.getSeq[AnyRef](2).length == ReadApi.ActivityTail)
+
+    val tracked = Seq(("itemA", true), ("itemB", false), (null, true))
+      .toDF("market_hash_name", "enabled")
+    for (n <- Seq("itemA", "itemB", "absent", null))
+      assert(ReadApi.itemExists(tracked, n) ==
+        !tracked.filter(col("enabled") && col("market_hash_name") === n).isEmpty, String.valueOf(n))
+  }
+
+  test("snapshot readers: a second call on the same frame launches no job") {
+    val s = spark
+    import s.implicits._
+    val book = Seq(("itemA", ts("2024-01-01 10:00:00"), 5.0))
+      .toDF("market_hash_name", "timestamp", "highest_buy_order")
+    val act = Seq(("itemA", ts("2024-01-01 10:00:00"), Seq("e1")))
+      .toDF("market_hash_name", "timestamp", "parsed_activities")
+    val tracked = Seq(("itemA", true)).toDF("market_hash_name", "enabled")
+    ReadApi.orderbook(book, "itemA").collect()
+    ReadApi.activity(act, "itemA").collect()
+    ReadApi.itemExists(tracked, "itemA")
+    val (answers, jobs) = jobsIn(spark)((
+      ReadApi.orderbook(book, "itemB").collect().length,
+      ReadApi.activity(act, "itemA").collect().length,
+      ReadApi.itemExists(tracked, "itemA")))
+    assert(answers == ((0, 1, true)))
+    assert(jobs == 0)
+  }
+
+  test("snapshot readers see every store write: after an append the next " +
+    "read and orderbook show the new latest row; a plain write into the " +
+    "tracked set shows on the next itemExists") {
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_read_snap").toString
+    def book(t: String, bid: Double) = Seq(("itemA", ts(t), bid))
+      .toDF("market_hash_name", "timestamp", "highest_buy_order")
+    def bid(df: DataFrame) =
+      ReadApi.orderbook(df, "itemA").collect().map(_.getAs[Double]("highest_buy_order")).toSeq
+    PartitionedStore.append(book("2024-01-01 10:00:00", 5.0), dir, "timestamp", "market_hash_name")
+    val before = PartitionedStore.read(spark, dir)
+    assert(bid(before) == Seq(5.0))
+    PartitionedStore.append(book("2024-01-02 10:00:00", 7.0), dir, "timestamp", "market_hash_name")
+    val after = PartitionedStore.read(spark, dir)
+    assert(!(after eq before))
+    assert(bid(after) == Seq(7.0))
+
+    val tracked = java.nio.file.Files.createTempDirectory("graft_read_tracked").toString + "/t"
+    Seq(("itemA", true)).toDF("market_hash_name", "enabled").write.parquet(tracked)
+    assert(!ReadApi.itemExists(PartitionedStore.read(spark, tracked), "itemB"))
+    Seq(("itemB", true)).toDF("market_hash_name", "enabled").write.mode("append").parquet(tracked)
+    assert(ReadApi.itemExists(PartitionedStore.read(spark, tracked), "itemB"))
   }
 
   test("meta: tracked count + last ingest + window request count") {

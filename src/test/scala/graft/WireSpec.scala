@@ -248,12 +248,16 @@ class WireSpec extends AnyFunSuite {
     assert(storePrices(dir) == Seq(8.0))
   }
 
-  test("store read: a path without a marker reads unmemoized, so a plain " +
+  test("store read: a path without a marker is keyed by its file listing: " +
+    "an unchanged path reads the same frame with no job, and a plain " +
     "spark.write append into it shows on the next read") {
     val dir = java.nio.file.Files.createTempDirectory("graft_store_plain").toString + "/t"
     storeRows("2024-01-01", 1.0).write.parquet(dir)
     assert(storePrices(dir) == Seq(1.0))
-    assert(!(PartitionedStore.read(spark, dir) eq PartitionedStore.read(spark, dir)))
+    val first = PartitionedStore.read(spark, dir)
+    val (second, jobs) = jobsIn(spark)(PartitionedStore.read(spark, dir))
+    assert(second eq first)
+    assert(jobs == 0)
     storeRows("2024-01-02", 2.0).write.mode("append").parquet(dir)
     assert(storePrices(dir) == Seq(1.0, 2.0))
     assert(PartitionedStore.storeVersion(dir).isEmpty, "a read never publishes")
