@@ -29,23 +29,20 @@ import graft.operators.{BoundedMemo, Relational}
   * table, 120–175 ms on the benchmark's serve store); an answer can never
   * be older than its frame. A frame built afresh for each request pays
   * that whole-table pass on each request. The driver holds one row per
-  * key per (frame, endpoint) snapshot, at most [[SnapshotEntries]]
-  * snapshots; `overview` stays a query because its snapshot would hold
-  * 200 rows per key. */
+  * key per (frame, endpoint) snapshot, at most 16 snapshots; `overview`
+  * stays a query because its snapshot would hold 200 rows per key. */
 object ReadApi {
 
   val OverviewLimit = 200 // api/main.py:79
   val ActivityTail = 50   // api/main.py:80
 
-  /** A store serves three snapshots (one per endpoint) per published
-    * state; superseded states age out by LRU. */
-  val SnapshotEntries = 16
-
-  /** (frame, endpoint) → (answer row per `market_hash_name`, answer schema).
-    * A DataFrame key compares by instance. */
+  /** (frame, endpoint) → (answer row per `market_hash_name`, answer
+    * schema). A DataFrame key compares by instance. A store needs three
+    * entries (one per endpoint) per published state; superseded states
+    * age out by LRU. */
   private val snapshots =
     new BoundedMemo[(DataFrame, String), (Map[String, Row], StructType)](
-      "api.latest", SnapshotEntries)
+      "api.latest", maxEntries = 16)
 
   /** The snapshot of `frame` for `endpoint`: `answers` (one row per name)
     * collected once, null names dropped. */

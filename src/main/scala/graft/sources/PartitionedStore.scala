@@ -57,16 +57,19 @@ object PartitionedStore {
 
   /** The resolved frame per (session, normalized absolute path, store
     * version, file listing), the same pattern as [[graft.Tables]]: an
-    * immutable data dir has neither version nor listing, a date store
-    * its version, an unmarked path its listing. Only the frame is memoized, never its rows; a new
-    * version is a new key, and superseded versions age out by LRU. An
-    * LRU smaller than a cyclic working set never hits, so the bound sits
-    * a third above the largest session measured: a whole `graft.Bench`
-    * run at sf0.1 resolves 96 distinct keys (95 data dirs and one store
-    * root: 61 from the query suite's passes, 11 from the incremental
-    * legs, 24 from the trigram, LSH and BM25 scaling curves), each
-    * exactly once. The suite builds each stored table once per corpus,
-    * so the count does not grow with repeat runs. */
+    * immutable dir has neither version nor listing, a date store its
+    * version, an unmarked path its listing. Only the frame is memoized,
+    * never its rows; a new version or listing is a new key, and
+    * superseded ones age out by LRU. An LRU smaller than a cyclic
+    * working set never hits, so the bound sits a quarter above the largest
+    * session counted: a whole `graft.Bench` run at sf0.1 resolved 96
+    * distinct keys (95 data dirs and one store root: 61 from the query
+    * suite's passes, 11 from the incremental legs, 24 from the trigram,
+    * LSH and BM25 scaling curves), each exactly once, and the suite's
+    * five stored artifacts read through [[readImmutable]] since add one
+    * key each (its passes at sf0.01 resolve 66). The suite builds each
+    * stored table once per corpus, so the count does not grow with
+    * repeat runs. */
   private val resolved =
     new graft.operators.BoundedMemo[(SparkSession, String, Option[Long], Listing), DataFrame](
       "store.resolved", maxEntries = 128)

@@ -109,6 +109,7 @@ class CacheAuditSpec extends AnyFunSuite {
     identity(graft.queries.GraphQueries)
     identity(Tables.MaxResolved) // Tables registers at object init
     identity(graft.sources.PartitionedStore)
+    identity(graft.api.ReadApi)
     val entries = CacheRegistry.all
     val names = entries.map(_.name).toSet
     // the three historic leak fixes stay pinned by name…
@@ -119,7 +120,7 @@ class CacheAuditSpec extends AnyFunSuite {
     // in source today; a new cache raises this by construction)
     for (n <- Seq("search.bm25IndexCache", "core.snapDiffCache",
       "text.cmsStoreCache", "training.bloomStanding", "dq.bloomReduceCache",
-      "sim.ivfDelCache", "sources.graftClocks", "store.resolved"))
+      "sim.ivfDelCache", "sources.graftClocks", "store.resolved", "api.latest"))
       assert(names.contains(n), s"missing $n in $names")
     assert(entries.size >= 28, s"inventory shrank: ${entries.size} $names")
     entries.foreach { e =>
