@@ -261,6 +261,7 @@ class WireSpec extends AnyFunSuite {
     storeRows("2024-01-02", 2.0).write.mode("append").parquet(dir)
     assert(storePrices(dir) == Seq(1.0, 2.0))
     assert(PartitionedStore.storeVersion(dir).isEmpty, "a read never publishes")
+    intercept[org.apache.spark.sql.AnalysisException](PartitionedStore.read(spark, s"$dir-missing"))
   }
 
   test("store log: two threads appending concurrently land every row, " +
