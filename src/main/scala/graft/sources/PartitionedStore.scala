@@ -23,14 +23,16 @@ import scala.jdk.CollectionConverters._
   * stays O(partitions-dropped).
   *
   * Resolution: every stored frame this object serves — a date store, a
-  * z-order layout, each data dir of a versioned table — is resolved
+  * z-order layout, each data dir of a versioned table, a path without a
+  * store marker, a dir read through [[readImmutable]] — is resolved
   * (file listing plus parquet schema inference, no data) once per
-  * session through one memo, `resolved`, so a read of unchanged data
-  * pays no listing and no inference job.
+  * session and state through one memo, `resolved`, so a read of
+  * unchanged data pays no inference job.
   *  - A versioned table's data dir is written once under a fresh
   *    `v<N>-<uuid>` name and never modified, so it is keyed by its
-  *    path alone; a table deleted and rebuilt at the same path gets new
-  *    dir names and can never hit a stale frame.
+  *    path alone, like every [[readImmutable]] dir; a table deleted and
+  *    rebuilt at the same path gets new dir names and can never hit a
+  *    stale frame.
   *  - A date store or z-order layout is mutable at its root, so it is
   *    keyed by its published store version: each of its writers
   *    ([[append]], [[overwritePartitions]], [[zorderWrite]], and
