@@ -30,10 +30,10 @@ import graft.operators.{BoundedMemo, Relational}
   * benchmark's serve store (4 vCPUs) the first orderbook or activity
   * request after an append took 206–326 ms, the store's re-resolve
   * included, and a repeat 9–17 ms. A frame built afresh for each
-  * request pays that whole-table pass on each request. The driver holds
-  * one row per key per (frame, endpoint) snapshot, at most 16 snapshots;
-  * `overview` stays a query because its snapshot would hold 200 rows per
-  * key. */
+  * request pays that whole-table pass on each request. Spark's driver
+  * holds one row per key per (frame, endpoint) snapshot, at most 16
+  * snapshots; `overview` stays a query because its snapshot would hold
+  * 200 rows per key. */
 object ReadApi {
 
   val OverviewLimit = 200 // api/main.py:79
