@@ -809,7 +809,7 @@ object Bench {
           val trgmFn = SparkEntry.queries("search_substring_indexed")
           Seq(
             "search_substring_indexed_build" -> dirs.map { case (n, dir) =>
-              val docs = spark.read.parquet(s"$dir/documents.parquet")
+              val docs = Tables.documents(spark, dir)
                 .select(col("doc_id"), col("text"), col("source"))
               s"x$n" -> volPoint("search_substring_indexed_build", s"x$n")(
                 timedOp(graft.operators.Search.writeTrigramIndex(
@@ -831,7 +831,7 @@ object Bench {
         // the corpus.
         "lsh_curve" -> (() => {
           val lshCurve = dirs.map { case (n, dir) =>
-            val docs = spark.read.parquet(s"$dir/documents.parquet")
+            val docs = Tables.documents(spark, dir)
               .select(col("doc_id"), col("text"))
             val rb = volPoint("lsh_rebuild", s"x$n")(
               timedOp(graft.operators.Dedup.writeLshIndex(
@@ -963,7 +963,7 @@ object Bench {
           val bmFn = SparkEntry.queries("search_bm25_indexed")
           Seq(
             "search_bm25_indexed_build" -> dirs.map { case (n, dir) =>
-              val docs = spark.read.parquet(s"$dir/documents.parquet")
+              val docs = Tables.documents(spark, dir)
                 .select(col("doc_id"), col("text"))
               s"x$n" -> volPoint("search_bm25_indexed_build", s"x$n")(
                 timedOp(graft.operators.Search.writeBm25Index(

@@ -12,36 +12,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The RESOLVED DataFrame (the analyzed logical plan — file listing +
   * parquet-footer schema inference, NOT data) IS memoized per
-  * (session, dir, table): `spark.read.parquet` pays both eagerly on
-  * every call, and across a 246-query suite that planning-floor tax was
-  * re-paid hundreds of times for the same immutable inputs (r10 verdict
-  * task #7). Reusing the unresolved-relation-free plan changes no
+  * (session, path) through [[graft.sources.PartitionedStore.readImmutable]],
+  * the one memo that maps a parquet path to a resolved frame:
+  * `spark.read.parquet` pays both eagerly on every call, and across the
+  * query suite that planning-floor tax was re-paid hundreds of times for
+  * the same immutable inputs. Reusing the resolved plan changes no
   * per-query physics — each query still gets its own Catalyst
   * optimization, pushdown, and pruning against the shared relation, the
-  * exact semantics a shared catalog table would have. Keyed by session
-  * identity because a DataFrame is unusable after its session stops
-  * (test suites create/stop many). Inputs here are immutable testdata
-  * dirs; stores that mutate never go through this cache.
-  * [[graft.sources.PartitionedStore.read]] keeps its own memo keyed by
-  * the store's published version, and versioned tables and index dirs
-  * resolve their own paths. */
+  * exact semantics a shared catalog table would have. */
 object Tables {
-  /** Cache bound: one Verify/Bench session touches well under 100
-    * (dir, table) keys, but a long-lived multi-session service would
-    * otherwise accumulate resolved plans (each pinning its session)
-    * without limit. LRU by ACCESS order so the hot suite keys survive
-    * churn; planning-path frequency (a few hundred lookups per suite),
-    * not per-row. */
-  private[graft] val MaxResolved = 256
-  private val resolved =
-    new graft.operators.BoundedMemo[(SparkSession, String, String), DataFrame](
-      "tables.resolved", MaxResolved)
-
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    resolved.computeIfAbsent((spark, dir, name),
-      _ => spark.read.parquet(s"$dir/$name.parquet"))
-
-  private[graft] def cachedCount: Int = resolved.size
+    graft.sources.PartitionedStore.readImmutable(spark, s"$dir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

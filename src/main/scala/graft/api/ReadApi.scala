@@ -24,7 +24,7 @@ import graft.operators.{BoundedMemo, Relational}
   *
   * The snapshot contract: pass the frame
   * [[graft.sources.PartitionedStore.read]] returns. That is one instance
-  * per published store state, so every store write yields a new frame,
+  * per file listing, so every write into the store yields a new frame,
   * and the first request on it rebuilds the snapshot with one pass over
   * the table; an answer can never be older than its frame. On the
   * benchmark's serve store (4 vCPUs) the first orderbook or activity
@@ -41,7 +41,7 @@ object ReadApi {
 
   /** (frame, endpoint) → (answer row per `market_hash_name`, answer
     * schema). A DataFrame key compares by instance. A store needs three
-    * entries (one per endpoint) per published state; superseded states
+    * entries (one per endpoint) per file listing; superseded listings
     * age out by LRU. */
   private val snapshots =
     new BoundedMemo[(DataFrame, String), (Map[String, Row], StructType)](

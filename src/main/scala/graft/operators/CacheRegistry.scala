@@ -3,7 +3,7 @@ package graft.operators
 /** Process-wide inventory of every process-lifetime mutable cache in main
   * source — the structural closure of the r12/r13 leak-fix arc (r13
   * verdict task #3). Three memo leaks were fixed one at a time across two
-  * rounds (`Tables` LRU-256, `overlapCache`, `DupEdges`); this registry
+  * rounds (`Tables`' resolved plans, `overlapCache`, `DupEdges`); this registry
   * plus `CacheAuditSpec`'s source sweep makes the NEXT one a CI failure
   * instead of a judge finding:
   *

@@ -975,11 +975,7 @@ object Dedup {
     * then follows its label one hop through the label table (pointer
     * jumping), so convergence takes ~log₂(diameter) rounds; labels are
     * (long, long) pairs and are locally checkpointed so the plan doesn't
-    * grow with rounds. [[connectedComponentsStar]] is the alternative
-    * implementation with a different per-round shape (edge-set
-    * contraction instead of a label table) — kept as the parity check
-    * and for graphs where shrinking the EDGE set beats shrinking the
-    * round count.
+    * grow with rounds.
     *
     * SHUFFLE shape (reworked r16 — the volume twins caught the old form
     * re-exchanging the full symmetric edge set EVERY round, Θ(E·rounds)
@@ -1006,8 +1002,7 @@ object Dedup {
     * non-increasing (a shortcut target labels(rep) is always in the
     * same component and ≤ rep), every improvement re-propagates, so the
     * converged labels are the component minima (parity vs the unblocked
-    * oracle is graded on every cluster query; DedupSpec pins star-CC
-    * parity).
+    * oracle is graded on every cluster query).
     *
     * Output: (id, rep) for EVERY vertex, rep = min id of its component. */
   def connectedComponents(vertices: DataFrame, edges: DataFrame,
@@ -1146,72 +1141,6 @@ object Dedup {
     * timed run; concurrent CC runs racing the write is benign for that
     * use and tolerated (telemetry, never a correctness input). */
   @volatile var lastCcRounds: Int = 0
-
-  /** Large-star/small-star connected components (Kiveris, Lattanzi,
-    * Mirrokni, Rastogi, Vassilvitskii — "Connected Components in
-    * MapReduce and Beyond", SoCC 2014): the edge-contraction
-    * alternative to [[connectedComponents]]' min-label propagation.
-    * (Since the r16 pointer-jumping shortcut, min-label also converges
-    * in O(log d) rounds on deep chains — the two now differ in per-round
-    * SHAPE, label-table hops vs edge-set contraction, not in whether
-    * deep graphs converge; the parity spec pins they agree.) Alternating
-    * large-star (attach each node's LARGER neighbors to its neighborhood
-    * minimum) and small-star (attach its smaller-or-equal neighbors
-    * likewise) converges to min-rooted stars in O(log²n) rounds
-    * regardless of diameter — each round is two aggregate+join passes
-    * over narrow (long, long) edge rows, locally checkpointed.
-    *
-    * Same contract as [[connectedComponents]]: (id, rep) for every
-    * vertex, rep = component minimum; fails loudly if not converged
-    * (the parity spec pins label equality on random graphs, and
-    * convergence on chains where min-label's default round cap throws). */
-  def connectedComponentsStar(vertices: DataFrame, edges: DataFrame,
-                              maxIter: Int = 40): DataFrame = {
-    def canon(e: DataFrame) = e
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b")).distinct()
-    def sym(e: DataFrame) = e.union(
-      e.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
-    var e = canon(edges.filter(col("id_a") =!= col("id_b"))).localCheckpoint()
-    var converged = e.isEmpty
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // LARGE-STAR: per node u, every STRICTLY LARGER neighbor re-attaches
-      // to m(u) = min(N(u) ∪ {u}); relational (agg + join), never a
-      // collected neighborhood — hot nodes have unbounded degree
-      val s1 = sym(e).localCheckpoint()
-      val m1 = s1.groupBy(col("id_a").as("u"))
-        .agg(min(least(col("id_b"), col("id_a"))).as("m")) // min(N(u) ∪ {u})
-      val ls = s1.join(m1, s1("id_a") === m1("u"))
-        .filter(col("id_b") > col("u"))
-        .select(col("id_b").as("id_a"), col("m").as("id_b"))
-        .filter(col("id_a") =!= col("id_b")).distinct()
-        .localCheckpoint()
-      // SMALL-STAR: key each edge by its LARGER endpoint; its smaller
-      // neighbors (and itself) re-attach to the minimum
-      val dir = ls.select(greatest(col("id_a"), col("id_b")).as("u"),
-        least(col("id_a"), col("id_b")).as("v"))
-      val m2 = dir.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val ss = dir.join(m2, "u")
-        .select(col("v").as("id_a"), col("m").as("id_b"))
-        .union(m2.select(col("u").as("id_a"), col("m").as("id_b")))
-        .filter(col("id_a") =!= col("id_b")).distinct()
-        .localCheckpoint()
-      val next = canon(ss).localCheckpoint()
-      converged = next.exceptAll(e).limit(1).isEmpty &&
-        e.exceptAll(next).limit(1).isEmpty
-      Seq(e, s1, ls, ss).foreach(Checkpoints.release)
-      e = next
-      iter += 1
-    }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponentsStar did not converge in $maxIter rounds")
-    // fixed point = stars centered at each component's minimum: every
-    // canonical edge is (root, child)
-    val labels = e.groupBy(col("id_b").as("id")).agg(min(col("id_a")).as("rep"))
-    vertices.join(labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("rep"), col("id")).as("rep"))
-  }
 
   /** SimHash fingerprint over distinct whitespace tokens: per-bit majority
     * vote (+1/-1) over token hashes, packed little-endian. nBits ≤ 62

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, Path, Paths}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths}
 import java.nio.file.attribute.{BasicFileAttributes, FileTime}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -23,31 +23,29 @@ import scala.jdk.CollectionConverters._
   * stays O(partitions-dropped).
   *
   * Resolution: every stored frame this object serves — a date store, a
-  * z-order layout, each data dir of a versioned table, a path without a
-  * store marker, a dir read through [[readImmutable]] — is resolved
-  * (file listing plus parquet schema inference, no data) once per
-  * session and state through one memo, `resolved`, so a read of
-  * unchanged data pays no inference job.
-  *  - A versioned table's data dir is written once under a fresh
-  *    `v<N>-<uuid>` name and never modified, so it is keyed by its
-  *    path alone, like every [[readImmutable]] dir; a table deleted and
-  *    rebuilt at the same path gets new dir names and can never hit a
-  *    stale frame.
-  *  - A date store or z-order layout is mutable at its root, so it is
-  *    keyed by its published store version: each of its writers
-  *    ([[append]], [[overwritePartitions]], [[zorderWrite]], and
-  *    [[dropExpired]] / [[compact]] when they change the store)
-  *    publishes an empty marker named by the new version under
-  *    `<path>/_store_log/` after its data has landed. The store's own
-  *    writers are its only writers: a foreign write into a store that
-  *    has a marker (a plain `spark.write`, a file moved by hand) is not
-  *    seen until the next store write publishes. The leading `_` keeps
-  *    Spark's listing out of the log.
-  *  - A path with no marker (only ever written by plain `spark.write`)
-  *    is keyed by its exact file listing: the relative path, size and
-  *    mtime of every regular file, so any write into it is a new key.
-  *    A rewrite that keeps one file's name, size and mtime is not a
-  *    case: Spark's writers name every file by a fresh UUID.
+  * z-order layout, any other path [[read]] serves, each data dir of a
+  * versioned table, a dir read through [[readImmutable]] (every
+  * [[graft.Tables]] input among them) — is resolved (file listing plus
+  * parquet schema inference, no data) once per session and state
+  * through one memo, `resolved`, so a read of unchanged data pays no
+  * inference job.
+  *  - A dir written once and never modified (a versioned table's
+  *    `v<N>-<uuid>` data dir, a testdata table, a scratch artifact) is
+  *    keyed by its path alone; a table deleted and rebuilt at the same
+  *    path gets new dir names and can never hit a stale frame.
+  *  - A path [[read]] serves is keyed by its exact file listing: the
+  *    relative path, size and mtime of every regular file under it.
+  *    Every store writer ([[append]], [[overwritePartitions]],
+  *    [[zorderWrite]], and [[dropExpired]] / [[compact]] when they
+  *    change the store) changes that listing, and so does any foreign
+  *    write (a plain `spark.write`, a file moved by hand), so the next
+  *    read sees every write. A rewrite that keeps one file's name, size
+  *    and mtime is not a case: Spark's writers name every file by a
+  *    fresh UUID.
+  *  - The trade: each read walks its path once, O(files) — in a warm
+  *    JVM on 4 vCPUs, 0.55 ms on a 62-file store and 0.03–0.07 ms on a
+  *    few files, against a history request's 50–180 ms — and
+  *    [[compact]] bounds the file count per partition.
   * Every state of a path therefore reads as one frame instance, which
   * per-frame snapshots ([[graft.api.ReadApi]]) key on.
   * Paths are local. */
@@ -55,40 +53,38 @@ object PartitionedStore {
 
   val DateCol = "p_date"
 
-  private val LogDir = "_store_log"
+  /** The bound of `resolved`. An LRU smaller than a cyclic working set
+    * never hits, so it sits a third above the largest session counted:
+    * a whole `graft.Bench` run at sf0.1 (query suite, incremental and
+    * scaling legs) resolved 124 distinct keys, each exactly once — 95
+    * versioned data dirs, 23 testdata tables (10 of the sf0.1 dir, the
+    * flagship query's sf0.001 `events`, 12 of the amplified scaling
+    * dirs), 5 stored artifacts and one store state. The suite builds each stored table once per corpus, so the
+    * count does not grow with repeat runs. */
+  private[graft] val MaxResolved = 166
 
-  /** The resolved frame per (session, normalized absolute path, store
-    * version, file listing), the same pattern as [[graft.Tables]]: an
-    * immutable dir has neither version nor listing, a date store its
-    * version, an unmarked path its listing. Only the frame is memoized,
-    * never its rows; a new version or listing is a new key, and
-    * superseded ones age out by LRU. An LRU smaller than a cyclic
-    * working set never hits, so the bound sits a quarter above the largest
-    * session counted: a whole `graft.Bench` run at sf0.1 resolved 96
-    * distinct keys (95 data dirs and one store root: 61 from the query
-    * suite's passes, 11 from the incremental legs, 24 from the trigram,
-    * LSH and BM25 scaling curves), each exactly once, and the suite's
-    * five stored artifacts read through [[readImmutable]] since add one
-    * key each (its passes at sf0.01 resolve 66). The suite builds each
-    * stored table once per corpus, so the count does not grow with
-    * repeat runs. */
+  /** The resolved frame per (session, normalized absolute path, file
+    * listing); an immutable dir has an empty listing. The session is in
+    * the key because a frame is unusable once its session stops. Only
+    * the frame is memoized, never its rows; a new listing is a new key,
+    * and superseded ones age out by LRU. */
   private val resolved =
-    new graft.operators.BoundedMemo[(SparkSession, String, Option[Long], Listing), DataFrame](
-      "store.resolved", maxEntries = 128)
+    new graft.operators.BoundedMemo[(SparkSession, String, Listing), DataFrame](
+      "store.resolved", MaxResolved)
 
   private type Listing = Seq[(String, Long, FileTime)]
 
-  private def resolve(spark: SparkSession, path: String, version: Option[Long],
-                      listing: Listing = Nil): DataFrame =
+  private def resolve(spark: SparkSession, path: String, listing: Listing): DataFrame =
     resolved.computeIfAbsent(
-      (spark, Paths.get(path).toAbsolutePath.normalize.toString, version, listing),
+      (spark, Paths.get(path).toAbsolutePath.normalize.toString, listing),
       _ => spark.read.parquet(path))
 
   /** A parquet directory written once and never modified afterwards (a
-    * scratch artifact, a versioned table's data dir), resolved once per
-    * session and keyed by its path alone. New data goes to a new path. */
+    * testdata table, a scratch artifact, a versioned table's data dir),
+    * resolved once per session and keyed by its path alone. New data
+    * goes to a new path. */
   def readImmutable(spark: SparkSession, path: String): DataFrame =
-    resolve(spark, path, None)
+    resolve(spark, path, Nil)
 
   /** Store writers in one JVM take turns. Spark's file committer stages
     * every write job under the output path's shared `_temporary`
@@ -111,7 +107,8 @@ object PartitionedStore {
 
   /** The store's one data writer: date-partitioned, `(key, ts)`-clustered
     * zstd parquet (the columnar-compression analog of the reference's
-    * Timescale policies), written through [[LocalFs]], then published. */
+    * Timescale policies), written through [[LocalFs]]. The write's new
+    * files are the new listing the next [[read]] keys on. */
   private def write(df: DataFrame, path: String, tsCol: String, keyCol: String,
                     mode: SaveMode, options: (String, String)*): Unit = writing.synchronized {
     df.withColumn(DateCol, to_date(col(tsCol)))
@@ -122,20 +119,14 @@ object PartitionedStore {
       .option("compression", "zstd")
       .partitionBy(DateCol)
       .parquet(path)
-    publish(path)
   }
 
-  /** Read back with partition pruning available on DateCol. A store
-    * with a published version returns the frame resolved for that
-    * version; a path without one returns the frame resolved for its
-    * current file listing, so a plain `spark.write` into it shows on
-    * the next read. A missing path fails with Spark's own error. */
+  /** Read back with partition pruning available on DateCol: the frame
+    * resolved for the path's current file listing, so any write into it,
+    * a store writer's or a foreign one, shows on the next read. A missing
+    * path fails with Spark's own error. */
   def read(spark: SparkSession, path: String): DataFrame =
-    storeVersion(path) match {
-      case Some(v) => resolve(spark, path, Some(v))
-      case None => listing(Paths.get(path))
-        .fold(spark.read.parquet(path))(l => resolve(spark, path, None, l))
-    }
+    listing(Paths.get(path)).fold(spark.read.parquet(path))(resolve(spark, path, _))
 
   /** (relative path, size, mtime) of every regular file under `root`,
     * sorted by path; None when `root` is missing. */
@@ -145,38 +136,6 @@ object PartitionedStore {
       if (a.isRegularFile) Some((root.relativize(p).toString, a.size, a.lastModifiedTime)) else None
     }.sortBy(_._1))
     catch { case _: NoSuchFileException => None }
-
-  /** The latest published store version at `path`: one listing of the
-    * log directory, None when there is none. */
-  private[graft] def storeVersion(path: String): Option[Long] =
-    markers(Paths.get(path, LogDir)).map(_._2).maxOption
-
-  private def markers(log: Path): List[(Path, Long)] =
-    (try paths(Files.list(log)) catch { case _: NoSuchFileException => Nil })
-      .flatMap(p => p.getFileName.toString.toLongOption.map(p -> _))
-
-  /** Publish the next store version: create-new of its empty marker, so
-    * two writers never claim one version. A writer that loses the
-    * create, or whose marker lands below one another writer created
-    * meanwhile (a marker that stale would go unseen), re-resolves and
-    * tries the next. Older markers are then deleted, which keeps the log
-    * at one or two files. A version is never below the publish time in
-    * epoch milliseconds, so a store deleted and rebuilt at the same path
-    * never repeats a version an earlier frame was memoized under.
-    * Returns the published version. */
-  private[graft] def publish(path: String): Long = {
-    val log = Files.createDirectories(Paths.get(path, LogDir))
-    @annotation.tailrec def claim(): Long = {
-      val v = math.max(storeVersion(path).getOrElse(0L) + 1, System.currentTimeMillis())
-      val created =
-        try { Files.createFile(log.resolve(f"$v%019d")); true }
-        catch { case _: FileAlreadyExistsException => false }
-      if (created && storeVersion(path).contains(v)) v else claim()
-    }
-    val v = claim()
-    markers(log).filter(_._2 < v).foreach(m => Files.deleteIfExists(m._1))
-    v
-  }
 
   /** The entries of a directory stream, with the stream closed: an
     * unclosed `Files.list` / `Files.walk` holds its descriptors until
@@ -198,7 +157,6 @@ object PartitionedStore {
         scala.util.Try(java.time.LocalDate.parse(d)).toOption.exists(_.isBefore(cutoff))
       }
     dropped.foreach(deleteRecursive)
-    if (dropped.nonEmpty) publish(path)
     dropped.map(_.getFileName.toString)
   }
 
@@ -230,15 +188,13 @@ object PartitionedStore {
     // original means the crash hit between the two swap renames — restore
     // the original (always complete); orphaned trash/rewrite dirs whose
     // original exists are just stale garbage
-    val restored = paths(Files.list(root))
+    paths(Files.list(root))
       .filter(p => p.getFileName.toString.startsWith(".") &&
         p.getFileName.toString.endsWith(".trash"))
-      .count { trash =>
+      .foreach { trash =>
         val orig = trash.resolveSibling(
           trash.getFileName.toString.stripPrefix(".").stripSuffix(".trash"))
-        val restore = !Files.exists(orig)
-        if (restore) Files.move(trash, orig) else deleteRecursive(trash)
-        restore
+        if (Files.exists(orig)) deleteRecursive(trash) else Files.move(trash, orig)
       }
     val offending = paths(Files.list(root))
       .filter(p => p.getFileName.toString.startsWith(s"$partCol=") &&
@@ -258,13 +214,13 @@ object PartitionedStore {
       part.repartition(nFiles)
         .sortWithinPartitions(col(keyCol), col(tsCol))
         .write.mode(SaveMode.Overwrite)
+        .options(LocalFs.writerOptions)
         .option("compression", "zstd")
         .parquet(tmp.toString)
       Files.move(dir, trash) // original stays whole until the rewrite is live
       Files.move(tmp, dir)
       deleteRecursive(trash)
     }
-    if (restored > 0 || offending.nonEmpty) publish(path)
     offending.map(_.getFileName.toString)
   }
 
@@ -322,10 +278,10 @@ object PartitionedStore {
       .sortWithinPartitions(col("_z"))
       .drop("_z")
       .write.mode(SaveMode.Overwrite)
+      .options(LocalFs.writerOptions)
       .option("compression", "zstd")
       .partitionBy(ZCol)
       .parquet(path)
-    publish(path)
   }
 
   /** Rectangle scan over a [[zorderWrite]] layout: enumerate the Morton

@@ -107,20 +107,20 @@ class CacheAuditSpec extends AnyFunSuite {
     // but is only otherwise touched when a graph query first RUNS)
     identity(graft.queries.DupEdges)
     identity(graft.queries.GraphQueries)
-    identity(Tables.MaxResolved) // Tables registers at object init
     identity(graft.sources.PartitionedStore)
     identity(graft.api.ReadApi)
     val entries = CacheRegistry.all
     val names = entries.map(_.name).toSet
-    // the three historic leak fixes stay pinned by name…
-    for (n <- Seq("tables.resolved", "graph.overlapCache", "queries.dupEdges"))
+    // the three historic leak fixes stay pinned by name (Tables' resolved
+    // plans live in store.resolved)…
+    for (n <- Seq("store.resolved", "graph.overlapCache", "queries.dupEdges"))
       assert(names.contains(n), s"missing historic-leak entry $n in $names")
     // …and the converted per-dir memo fleet is present (spot keys from
     // each pack + the exact count of BoundedMemo sites
     // in source today; a new cache raises this by construction)
     for (n <- Seq("search.bm25IndexCache", "core.snapDiffCache",
       "text.cmsStoreCache", "training.bloomStanding", "dq.bloomReduceCache",
-      "sim.ivfDelCache", "sources.graftClocks", "store.resolved", "api.latest"))
+      "sim.ivfDelCache", "sources.graftClocks", "api.latest"))
       assert(names.contains(n), s"missing $n in $names")
     assert(entries.size >= 28, s"inventory shrank: ${entries.size} $names")
     entries.foreach { e =>

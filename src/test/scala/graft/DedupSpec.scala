@@ -427,29 +427,14 @@ class DedupSpec extends AnyFunSuite {
     graft.operators.Checkpoints.release(ck)
   }
 
-  test("connectedComponentsStar: labels match min-label CC on random graphs; deep chains converge") {
+  test("connectedComponents: a 200-hop chain collapses to rep 0 in O(log d) rounds") {
     val s = spark
     import s.implicits._
-    // seeded random graphs: star CC must agree with min-label exactly
-    for (seed <- Seq(3, 17)) {
-      val rnd = new scala.util.Random(seed)
-      val n = 120
-      val edges = (0 until 150).map(_ => (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter(p => p._1 != p._2).toDF("id_a", "id_b")
-      val verts = s.range(n).select(col("id"))
-      def labels(df: org.apache.spark.sql.DataFrame) =
-        df.orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      assert(labels(Dedup.connectedComponentsStar(verts, edges)) ==
-        labels(Dedup.connectedComponents(verts, edges)),
-        s"seed $seed: star CC diverged from min-label CC")
-    }
-    // a 200-hop chain: pre-r16 min-label needed one round per hop and
-    // threw at its default 25-round cap; the r16 pointer-jumping
-    // shortcut doubles propagation distance per round, so BOTH
-    // implementations now converge well inside the cap — pin that, and
-    // pin the log-law (≤ 12 rounds for diameter 200, vs 200 without
-    // jumping) since it is exactly the volume claim the scaling rows
-    // make for giant components
+    // pre-r16 min-label needed one round per hop and threw at its default
+    // 25-round cap; the r16 pointer-jumping shortcut doubles propagation
+    // distance per round — pin the log-law (≤ 12 rounds for diameter 200,
+    // vs 200 without jumping), the volume claim the scaling rows make for
+    // giant components
     val chain = (0L until 200L).map(i => (i, i + 1)).toDF("id_a", "id_b")
     val verts = s.range(201).select(col("id"))
     val ml = Dedup.connectedComponents(verts, chain)
@@ -458,9 +443,6 @@ class DedupSpec extends AnyFunSuite {
     assert(Dedup.lastCcRounds <= 12,
       s"pointer jumping must converge diameter-200 in O(log d) rounds, " +
         s"got ${Dedup.lastCcRounds}")
-    val star = Dedup.connectedComponentsStar(verts, chain)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(star.forall(_._2 == 0L), "whole chain must collapse to rep 0")
   }
 
   test("minhashPairsAgainst: new-vs-old pairs only, no within-side pairs") {

@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the [[Tables]] resolved-plan memo's BOUND (r11 verdict nit: the
-  * unbounded (session, dir, table) map would leak resolved plans — each
-  * pinning its session — in a long-lived multi-session service). */
+/** Pins the BOUND of the resolved-plan memo [[Tables]] reads through,
+  * `store.resolved` (an unbounded (session, path) map would leak resolved
+  * plans — each pinning its session — in a long-lived multi-session
+  * service). */
 class TablesSpec extends AnyFunSuite {
 
   private lazy val spark: SparkSession = LocalSession(2)
@@ -21,7 +22,10 @@ class TablesSpec extends AnyFunSuite {
     // distinct (dir) cache keys over ONE physical parquet via symlinks —
     // each miss pays real file-listing + footer inference, the thing the
     // memo exists to amortize
-    val dirs = (0 until Tables.MaxResolved + 4).map { i =>
+    val bound = graft.sources.PartitionedStore.MaxResolved
+    def cachedCount =
+      graft.operators.CacheRegistry.all.find(_.name == "store.resolved").get.size()
+    val dirs = (0 until bound + 4).map { i =>
       val link = java.nio.file.Paths.get(s"$base-ln-$i")
       java.nio.file.Files.createSymbolicLink(link, base)
       link.toString
@@ -32,8 +36,7 @@ class TablesSpec extends AnyFunSuite {
       Tables.table(s, d, "t")
       Tables.table(s, hot, "t") // re-touch: access order keeps it MRU
     }
-    assert(Tables.cachedCount <= Tables.MaxResolved,
-      s"cache grew past the bound: ${Tables.cachedCount}")
+    assert(cachedCount <= bound, s"cache grew past the bound: $cachedCount")
     // the hot key survived the full churn (same resolved instance)
     assert(Tables.table(s, hot, "t") eq hotPlan, "hot key was evicted")
     // an early cold key was evicted; a fresh call re-resolves and reads

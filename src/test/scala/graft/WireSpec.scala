@@ -188,9 +188,6 @@ class WireSpec extends AnyFunSuite {
     PartitionedStore.read(spark, dir).orderBy("time", "price").collect()
       .map(_.getAs[Double]("price")).toSeq
 
-  private def logFiles(dir: String): Int =
-    Option(new java.io.File(s"$dir/_store_log").list()).fold(0)(_.length)
-
   test("store read: a second read of an unchanged store is the memoized " +
     "frame and launches no Spark job") {
     val dir = java.nio.file.Files.createTempDirectory("graft_store_memo").toString
@@ -203,49 +200,66 @@ class WireSpec extends AnyFunSuite {
     assert(second.count() == 2)
   }
 
-  test("store read: every store writer publishes a version the next read " +
-    "sees (append, overwritePartitions, dropExpired, compact and its " +
-    ".trash recovery); a no-op drop or compact publishes nothing; a store " +
-    "rebuilt at the same path is read afresh") {
+  test("store read: every store writer changes the listing the next read " +
+    "keys on (append, overwritePartitions, dropExpired, compact and its " +
+    ".trash recovery); a no-op drop or compact reads the same frame; a " +
+    "store rebuilt at the same path is read afresh") {
     val dir = java.nio.file.Files.createTempDirectory("graft_store_ver").toString
+    var last: org.apache.spark.sql.DataFrame = null
+    /** The store's frame is a new instance holding `prices`. */
+    def changed(prices: Double*): Unit = {
+      val frame = PartitionedStore.read(spark, dir)
+      assert(!(frame eq last), "a write must yield a new frame")
+      assert(storePrices(dir) == prices)
+      last = frame
+    }
     PartitionedStore.append(storeRows("2024-01-01", 1.0), dir, "time", "name")
-    assert(storePrices(dir) == Seq(1.0))
+    changed(1.0)
     PartitionedStore.append(storeRows("2024-01-02", 2.0), dir, "time", "name")
-    assert(storePrices(dir) == Seq(1.0, 2.0))
+    changed(1.0, 2.0)
     PartitionedStore.overwritePartitions(storeRows("2024-01-02", 2.5), dir, "time", "name")
-    assert(storePrices(dir) == Seq(1.0, 2.5))
+    changed(1.0, 2.5)
     (1 to 3).foreach(i =>
       PartitionedStore.append(storeRows("2024-01-03", 3.0 + i), dir, "time", "name"))
-    assert(storePrices(dir) == Seq(1.0, 2.5, 4.0, 5.0, 6.0))
+    changed(1.0, 2.5, 4.0, 5.0, 6.0)
     // the rewrite deletes the files the memoized frame lists: a read
-    // that missed the new version would fail on a missing file
+    // that missed the new listing would fail on a missing file
     assert(PartitionedStore.compact(spark, dir, "name", "time", maxFiles = 2) ==
       Seq("p_date=2024-01-03"))
-    assert(storePrices(dir) == Seq(1.0, 2.5, 4.0, 5.0, 6.0))
-    val v = PartitionedStore.storeVersion(dir)
+    changed(1.0, 2.5, 4.0, 5.0, 6.0)
     assert(PartitionedStore.compact(spark, dir, "name", "time", maxFiles = 2).isEmpty)
     assert(PartitionedStore.dropExpired(dir, 30, java.time.LocalDate.parse("2024-01-03")).isEmpty)
-    assert(PartitionedStore.storeVersion(dir) == v, "a no-op must not publish")
+    assert(PartitionedStore.read(spark, dir) eq last, "a no-op must not change the frame")
     // a partition left in .trash by a crashed swap is restored: restore
-    // alone (nothing over maxFiles) publishes
+    // alone (nothing over maxFiles) is a change
     val root = java.nio.file.Paths.get(dir)
     java.nio.file.Files.move(root.resolve("p_date=2024-01-02"),
       root.resolve(".p_date=2024-01-02.trash"))
     PartitionedStore.append(storeRows("2024-01-04", 7.0), dir, "time", "name")
-    assert(storePrices(dir) == Seq(1.0, 4.0, 5.0, 6.0, 7.0))
+    changed(1.0, 4.0, 5.0, 6.0, 7.0)
     assert(PartitionedStore.compact(spark, dir, "name", "time", maxFiles = 8).isEmpty)
-    assert(PartitionedStore.storeVersion(dir).exists(_ > v.get + 1))
-    assert(storePrices(dir) == Seq(1.0, 2.5, 4.0, 5.0, 6.0, 7.0))
+    changed(1.0, 2.5, 4.0, 5.0, 6.0, 7.0)
     assert(PartitionedStore.dropExpired(dir, 1, java.time.LocalDate.parse("2024-01-03")) ==
       Seq("p_date=2024-01-01"))
-    assert(storePrices(dir) == Seq(2.5, 4.0, 5.0, 6.0, 7.0))
+    changed(2.5, 4.0, 5.0, 6.0, 7.0)
     // a store deleted and rebuilt at the same path is a new store
     val tree = java.nio.file.Files.walk(root)
     try tree.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
       .forEach(p => java.nio.file.Files.delete(p))
     finally tree.close()
     PartitionedStore.append(storeRows("2024-01-05", 8.0), dir, "time", "name")
-    assert(storePrices(dir) == Seq(8.0))
+    changed(8.0)
+  }
+
+  test("store read: a plain spark.write append into a store written by " +
+    "PartitionedStore.append shows on the next read") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_store_foreign").toString
+    PartitionedStore.append(storeRows("2024-01-01", 1.0), dir, "time", "name")
+    assert(storePrices(dir) == Seq(1.0))
+    storeRows("2024-01-02", 2.0)
+      .withColumn(PartitionedStore.DateCol, to_date(col("time")))
+      .write.mode("append").partitionBy(PartitionedStore.DateCol).parquet(dir)
+    assert(storePrices(dir) == Seq(1.0, 2.0))
   }
 
   test("store read: a path without a marker is keyed by its file listing: " +
@@ -260,37 +274,20 @@ class WireSpec extends AnyFunSuite {
     assert(jobs == 0)
     storeRows("2024-01-02", 2.0).write.mode("append").parquet(dir)
     assert(storePrices(dir) == Seq(1.0, 2.0))
-    assert(PartitionedStore.storeVersion(dir).isEmpty, "a read never publishes")
     intercept[org.apache.spark.sql.AnalysisException](PartitionedStore.read(spark, s"$dir-missing"))
   }
 
-  test("store log: two threads appending concurrently land every row, " +
-    "racing publishers never share a version, and the log holds at most " +
-    "2 markers after 50 appends") {
+  test("store writers: two threads appending concurrently land every row") {
     val dir = java.nio.file.Files.createTempDirectory("graft_store_race").toString
     val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    def racing(n: Int)(body: Int => Unit) = {
-      val ts = Seq(0, 1).map(t => new Thread(() =>
-        try (0 until n).foreach(_ => body(t)) catch { case e: Throwable => errors.add(e) }))
-      ts.foreach(_.start()); ts.foreach(_.join(120000))
-      assert(errors.isEmpty, String.valueOf(errors.peek()))
-    }
-    val next = Array(0, 0)
-    racing(25) { t =>
-      PartitionedStore.append(storeRows("2024-01-01", t * 100.0 + next(t)), dir, "time", "name")
-      next(t) += 1
-    }
+    val ts = Seq(0, 1).map(t => new Thread(() =>
+      try (0 until 25).foreach(i =>
+        PartitionedStore.append(storeRows("2024-01-01", t * 100.0 + i), dir, "time", "name"))
+      catch { case e: Throwable => errors.add(e) }))
+    ts.foreach(_.start()); ts.foreach(_.join(120000))
+    assert(errors.isEmpty, String.valueOf(errors.peek()))
     assert(storePrices(dir).sorted ==
       ((0 until 25).map(_.toDouble) ++ (0 until 25).map(100.0 + _)))
-    assert(logFiles(dir) <= 2, s"${logFiles(dir)} markers")
-    // publishers racing on one log: every published version is distinct
-    val log = java.nio.file.Files.createTempDirectory("graft_store_pub").toString
-    val claimed = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    racing(100)(_ => claimed.add(PartitionedStore.publish(log)))
-    val vs = claimed.toArray.toSeq.map(_.asInstanceOf[Long])
-    assert(vs.size == 200 && vs.distinct.size == 200)
-    assert(PartitionedStore.storeVersion(log) == Some(vs.max))
-    assert(logFiles(log) <= 2)
   }
 
   test("store listings close their streams: 200 reads and 200 versions() " +
@@ -429,16 +426,25 @@ class WireSpec extends AnyFunSuite {
     }
     s2.listenerManager.register(l)
     val dir = java.nio.file.Files.createTempDirectory("graft_localfs_store").toString
-    try {
-      val rows = Seq(("a", java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 1.0))
-        .toDF("name", "time", "price")
-      PartitionedStore.append(rows, dir, "time", "name")
+    def awaitWrites(n: Int): Unit = {
       val deadline = System.nanoTime() + 30000000000L
-      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(10)
+      while (writes.size < n && System.nanoTime() < deadline) Thread.sleep(10)
+    }
+    try {
+      // three appends into one day, then a compact that rewrites it
+      (1 to 3).foreach { i =>
+        val rows = Seq(("a", java.sql.Timestamp.valueOf(s"2024-01-01 10:0$i:00"), i.toDouble))
+          .toDF("name", "time", "price")
+        PartitionedStore.append(rows, dir, "time", "name")
+      }
+      awaitWrites(3)
+      assert(PartitionedStore.compact(s2, dir, "name", "time", maxFiles = 2) ==
+        Seq("p_date=2024-01-01"))
+      awaitWrites(4)
     } finally s2.listenerManager.unregister(l)
+    assert(writes.size == 4, s"the listener saw ${writes.size} of 4 store writes")
+    writes.asScala.foreach(o => assert(LocalFs.writerOptions.toSet.subsetOf(o.toSet), o))
     val opts = writes.peek()
-    assert(opts != null, "the listener never saw the store write")
-    assert(LocalFs.writerOptions.toSet.subsetOf(opts.toSet))
     val writeConf = s2.sessionState.newHadoopConfWithOptions(opts)
     assert(new org.apache.hadoop.fs.Path(dir).getFileSystem(writeConf).getClass ==
       classOf[LocalFs.Checksummed])
